@@ -13,6 +13,10 @@ Scale notes, per operator:
 * Scan: pruned columns + pushed filters are applied adjacent to the read
   so Catalyst turns them into parquet ``PushedFilters``/``ReadSchema`` —
   verified by ``tests/test_execute.py::test_scan_pushdown_reaches_parquet``.
+  Every parquet read passes an explicit schema (``sources.parquet_read``:
+  the one Spark would infer, read from the footer in this process), so
+  building a scan starts no schema-inference job; the unpruned scan is
+  kept per session and table stamp, which saves the file-index listing.
 * BroadcastHashJoin → ``F.broadcast`` (no shuffle of the probe side).
 * HashJoin → ``shuffle_hash`` hint; SortMergeJoin → ``merge`` hint.
 * TopK → ``.orderBy().limit()`` which Spark executes as
@@ -31,11 +35,12 @@ from .operators import physical as P
 from .operators.logical import JoinType
 from .plans.plan import Plan, PlanNode
 from .sources.catalog import Catalog
+from .sources.parquet_read import read_parquet, table_stamp
 
-#: (session id, path, fmt, mtime) → (session, base DataFrame); see
-#: Executor._base_scan.  Bounded; cleared wholesale when it outgrows
-#: any realistic catalog (the entries are tiny plan handles, the bound
-#: exists only to keep dead sessions from pinning the gateway).
+#: (session id, fmt, table stamp, schema override) → (session, base
+#: DataFrame); see Executor._base_scan.  Bounded; cleared wholesale when
+#: it outgrows any realistic catalog (the entries are tiny plan handles,
+#: the bound exists only to keep dead sessions from pinning the gateway).
 _SCAN_CACHE: dict = {}
 
 
@@ -77,7 +82,7 @@ def apply_dv(spark, df, path):
 
     if not has_dv(path):
         return df.drop("__dv_file", "__dv_row")
-    dv = spark.read.parquet(dv_path(path)).select(
+    dv = read_parquet(spark, dv_path(path)).select(
         F.col("file_name").alias("__dv_file"),
         F.col("row_index").alias("__dv_row"),
     )
@@ -130,12 +135,9 @@ def dv_scan(spark, path, schema=None):
     from .sources.dml import data_files, dv_path, has_dv
 
     def _plain(rd_files=None):
-        rd = spark.read
-        if schema is not None:
-            rd = rd.schema(schema)
         if rd_files is None:
-            return rd.parquet(path)
-        return rd.option("basePath", path).parquet(*rd_files)
+            return read_parquet(spark, path, schema=schema)
+        return read_parquet(spark, *rd_files, base=path, schema=schema)
 
     if not has_dv(path):
         return _plain()
@@ -169,15 +171,10 @@ def scan_with_rowid(spark, path, schema=None, files=None, base=None):
     explicit list (basePath = ``base`` keeps hive partition-column
     derivation).  The caller either applies the DV (apply_dv) or uses
     the key columns to WRITE a DV (the merge-on-read DELETE)."""
-    rd = spark.read
-    if schema is not None:
-        rd = rd.schema(schema)
     if files is not None:
-        if base is not None:
-            rd = rd.option("basePath", base)
-        df = rd.parquet(*files)
+        df = read_parquet(spark, *files, base=base, schema=schema)
     else:
-        df = rd.parquet(path)
+        df = read_parquet(spark, path, schema=schema)
     fn, ri = dv_row_key()
     return df.select(
         "*", fn.alias("__dv_file"), ri.alias("__dv_row")
@@ -245,59 +242,41 @@ class SparkExecutor:
         )
 
     def _base_scan(self, table_name: str, fmt: str):
-        """The unpruned source DataFrame, cached per (session, path,
-        root mtime): ``spark.read.parquet`` eagerly builds a JVM file
-        index + reads footer schemas (~0.1 s per call locally), which
-        is pure constant overhead when the same tables are scanned by
-        every query in a run.  DataFrames are immutable so reuse is
-        safe; the mtime in the key invalidates the entry when the path
-        is rewritten (overwrite recreates the file/directory)."""
-        import os
-
+        """The unpruned source DataFrame, cached per (session, table
+        stamp, schema override): ``spark.read`` still builds a JVM file
+        index per call (~50 ms locally), pure constant overhead when the
+        same tables are scanned by every query in a run.  DataFrames are
+        immutable so reuse is safe; the stamp (``table_stamp``: root and
+        data files' ns-mtime and size) invalidates the entry when any
+        backing file is rewritten.  Parquet reads carry the schema Spark
+        would infer, derived from the footer in this process
+        (``sources.parquet_read``), so building a scan starts no Spark
+        job."""
         path = self.catalog.path(table_name)
-        try:
-            st = os.stat(path)
-            # nanosecond mtime + size: plain mtime is 1s-granular on
-            # some filesystems, which would serve a stale listing for a
-            # same-second rewrite
-            stamp = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            stamp = (-1, -1)
         override = (
             self.catalog.schema_override(table_name)
             if hasattr(self.catalog, "schema_override")
             else None
         )
-        key = (id(self.spark), path, fmt, stamp, override)
+        key = (id(self.spark), fmt, table_stamp(path), override)
         hit = _SCAN_CACHE.get(key)
         if hit is not None and hit[0] is self.spark:
             return hit[1]
         if fmt == "parquet":
             from .sources.dml import has_dv
 
+            # schema evolution (ALTER TABLE): an override wins — files
+            # written before an ADD COLUMN null-fill the new column,
+            # dropped columns are ignored
+            schema = override.to_struct_type() if override else None
             if has_dv(path):
                 # merge-on-read: the version carries a deletion vector —
                 # marked rows filter out via a broadcast anti-join on
                 # the physical row identity, CONFINED to the files the
                 # sidecar names; clean files scan plainly (dv_scan)
-                df = dv_scan(
-                    self.spark,
-                    path,
-                    schema=(
-                        override.to_struct_type()
-                        if override is not None
-                        else None
-                    ),
-                )
-            elif override is not None:
-                # schema evolution (ALTER TABLE): the explicit schema
-                # wins — files written before an ADD COLUMN null-fill
-                # the new column, dropped columns are ignored
-                df = self.spark.read.schema(
-                    override.to_struct_type()
-                ).parquet(path)
+                df = dv_scan(self.spark, path, schema=schema)
             else:
-                df = self.spark.read.parquet(path)
+                df = read_parquet(self.spark, path, schema=schema)
         else:
             # explicit schema (sniffed at registration) — no Spark
             # inference pass, no type drift vs the oracle engine
@@ -714,7 +693,7 @@ class SparkExecutor:
             self._register_mv_metadata(op.table_name, node.inputs[0])
         # downstream reads the PERSISTED bytes, not the live pipeline
         if op.format == "parquet":
-            return self.spark.read.parquet(path)
+            return read_parquet(self.spark, path)
         return (
             self.spark.read.format(op.format)
             .schema(df.schema)

@@ -281,15 +281,31 @@ def ann_index_build(
 
 
 def ann_index_add(batch_df, index_dir: str, id_col: str, vec_col: str,
-                  batch_label: str, batch_rows: float | int | None = None) -> int:
+                  batch_label: str, batch_rows: float | int | None = None,
+                  corpus_rows: float | int | None = None) -> int:
     """FAISS add(): encode a new batch with the PERSISTED model — no
     retraining, the build-once contract — and append batch-labeled code
     rows.  A batch label already in the ingest history raises (the
     idempotency guard the signature index uses); the history rides the
     meta so retention policies can count batches.  Returns rows
-    appended."""
+    appended.  ``corpus_rows`` is the deprecated name of ``batch_rows``
+    (accepted with a ``DeprecationWarning``)."""
     import json
     import os
+    import warnings
+
+    if corpus_rows is not None:
+        if batch_rows is not None:
+            raise TypeError(
+                "ann_index_add: pass batch_rows only (corpus_rows is its "
+                "deprecated name)"
+            )
+        warnings.warn(
+            "ann_index_add(corpus_rows=...) is deprecated; use batch_rows=",
+            DeprecationWarning,
+            stacklevel=2,
+        )
+        batch_rows = corpus_rows
 
     from pyspark.sql import functions as F
 

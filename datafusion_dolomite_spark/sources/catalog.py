@@ -24,6 +24,7 @@ from ..operators.properties import (
     Schema,
     Statistics,
 )
+from .parquet_read import footer_schema, spark_schema, spark_type, table_stamp
 
 __all__ = ["Catalog", "testdata_catalog", "TESTDATA_TABLES"]
 
@@ -51,41 +52,12 @@ TESTDATA_TABLES = (
 
 
 def _arrow_to_ddl(t) -> str:
-    import pyarrow as pa
-
-    if pa.types.is_int8(t):
-        return "tinyint"
-    if pa.types.is_int16(t):
-        return "smallint"
-    if pa.types.is_int32(t):
-        return "int"
-    if pa.types.is_int64(t):
-        return "bigint"
-    if pa.types.is_float32(t):
-        return "float"
-    if pa.types.is_float64(t):
-        return "double"
-    if pa.types.is_boolean(t):
-        return "boolean"
-    if pa.types.is_date(t):
-        return "date"
-    if pa.types.is_timestamp(t):
-        if t.unit == "ns":
-            # matches spark.sql.legacy.parquet.nanosAsLong=true (session.py)
-            return "bigint"
-        return "timestamp_ntz" if t.tz is None else "timestamp"
-    if pa.types.is_decimal(t):
-        return f"decimal({t.precision},{t.scale})"
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        return "binary"
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return f"array<{_arrow_to_ddl(t.value_type)}>"
-    if pa.types.is_struct(t):
-        inner = ",".join(f"{f.name}:{_arrow_to_ddl(f.type)}" for f in t)
-        return f"struct<{inner}>"
-    if pa.types.is_map(t):
-        return f"map<{_arrow_to_ddl(t.key_type)},{_arrow_to_ddl(t.item_type)}>"
-    return "string"
+    """Spark's DDL type name for an Arrow type (``parquet_read.spark_type``,
+    the rules scans read with); ``string`` for a type it cannot name."""
+    try:
+        return spark_type(t).simpleString()
+    except Exception:
+        return "string"
 
 
 _DUCK_TO_DDL = {
@@ -114,6 +86,9 @@ class Catalog:
         self._formats: Dict[str, str] = {}
         self._options: Dict[str, Dict[str, str]] = {}
         self._schemas: Dict[str, Schema] = {}
+        #: table → table_stamp its footer-derived parquet schema was
+        #: read under; a data file rewritten in place re-derives it
+        self._schema_stamps: Dict[str, tuple] = {}
         self._stats: Dict[str, Statistics] = {}
         self._warehouse = warehouse
         #: (table, vec_col) → persisted ANN index dir (r11)
@@ -355,6 +330,7 @@ class Catalog:
         elif options:
             self._options[name] = dict(options)
         self._schemas.pop(name, None)
+        self._schema_stamps.pop(name, None)
         self._stats.pop(name, None)
         if not keep_schema_override:
             # a FRESH registration replaces the table wholesale; only
@@ -389,6 +365,7 @@ class Catalog:
         injects per-column ``ColumnStatistics`` (ndv), and
         ``avg_row_bytes`` a row width, for cost-model tests."""
         self._schemas[name] = schema
+        self._schema_stamps.pop(name, None)
         self._stats[name] = Statistics(
             row_count=row_count,
             columns=tuple(columns),
@@ -408,23 +385,14 @@ class Catalog:
         override = self._schema_overrides.get(name)
         if override is not None:
             return override
+        stamp = self._schema_stamps.get(name)
+        if stamp is not None and stamp != table_stamp(self.path(name)):
+            self._schemas.pop(name, None)
         if name not in self._schemas:
             fmt = self.format(name)
             if fmt == "parquet":
-                import pyarrow.dataset as ds
-
-                # dataset discovery (hive partitioning) so partition
-                # columns — which live in directory names, not footers —
-                # appear in the schema
-                arrow = ds.dataset(
-                    self.path(name), format="parquet", partitioning="hive"
-                ).schema
-                self._schemas[name] = Schema(
-                    tuple(
-                        Field(f.name, _arrow_to_ddl(f.type), f.nullable, qualifier=name)
-                        for f in arrow
-                    )
-                )
+                self._schema_stamps[name] = table_stamp(self.path(name))
+                self._schemas[name] = self._parquet_schema(name)
             elif fmt == "orc":
                 import pyarrow.orc as po
 
@@ -438,6 +406,46 @@ class Catalog:
             else:
                 self._schemas[name] = self._sniff_schema(name, fmt)
         return self._schemas[name]
+
+    def _parquet_schema(self, name: str) -> Schema:
+        """The schema Spark reads the table with: the footer-derived
+        ``StructType`` the executor's scans pass to Spark
+        (``parquet_read.spark_schema``), so planner and executor agree
+        on every type.  Hive-partitioned directories, whose partition
+        columns live in directory names, go through Arrow's dataset
+        discovery; their data columns still take the footer's types."""
+        path = self.path(name)
+        struct = spark_schema(path)
+        if struct is None:
+            import pyarrow.dataset as ds
+
+            from .dml import data_files
+
+            files = data_files(path)
+            try:
+                footer = {f.name: f.dataType for f in footer_schema(files[0])}
+            except Exception:
+                footer = {}
+            arrow = ds.dataset(path, format="parquet", partitioning="hive")
+            return Schema(
+                tuple(
+                    Field(
+                        f.name,
+                        footer[f.name].simpleString()
+                        if f.name in footer
+                        else _arrow_to_ddl(f.type),
+                        True,
+                        qualifier=name,
+                    )
+                    for f in arrow.schema
+                )
+            )
+        return Schema(
+            tuple(
+                Field(f.name, f.dataType.simpleString(), True, qualifier=name)
+                for f in struct
+            )
+        )
 
     def _sniff_schema(self, name: str, fmt: str) -> Schema:
         import duckdb

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 import os
 
+from .parquet_read import read_parquet
+
 __all__ = ["ensure_partitioned"]
 
 
@@ -50,7 +52,7 @@ def ensure_partitioned(
         and read_marker(dest_dir) == sig
     ):
         return dest_dir
-    df = spark.read.parquet(src_path)
+    df = read_parquet(spark, src_path)
     (
         df.repartition(partition_by)  # one task → one file per partition value
         .write.mode("overwrite")

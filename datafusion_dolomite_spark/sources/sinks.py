@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
+from .parquet_read import read_parquet
+
 __all__ = [
     "write_parquet",
     "write_csv",
@@ -95,7 +97,7 @@ def ensure_bucketed_table(
     ):
         ddl = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}"
-            for f in spark.read.parquet(loc).schema
+            for f in read_parquet(spark, loc).schema
         )
         sort_clause = f" SORTED BY ({', '.join(sort_by)})" if sort_by else ""
         spark.sql(
@@ -105,7 +107,7 @@ def ensure_bucketed_table(
         )
         return name
     write_bucketed_table(
-        spark.read.parquet(src_parquet), name, bucket_by, n_buckets, sort_by
+        read_parquet(spark, src_parquet), name, bucket_by, n_buckets, sort_by
     )
     write_marker(loc, sig)
     return name

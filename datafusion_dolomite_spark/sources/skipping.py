@@ -33,6 +33,8 @@ import json
 import os
 from typing import Optional, Sequence, Tuple
 
+from .parquet_read import read_parquet
+
 __all__ = [
     "write_file_stats",
     "select_files",
@@ -280,8 +282,8 @@ def skipping_scan_eq(spark, path: str, column: str, values):
     one of ``values``; the caller re-applies the exact IN predicate."""
     files, _total = select_files_eq(path, column, values)
     if not files:
-        return spark.read.parquet(path).filter("1=0")
-    return spark.read.parquet(*files)
+        return read_parquet(spark, path).filter("1=0")
+    return read_parquet(spark, *files)
 
 
 def skipping_scan(spark, path: str, column: str, lower=None, upper=None):
@@ -292,8 +294,8 @@ def skipping_scan(spark, path: str, column: str, lower=None, upper=None):
     files, _total = select_files(path, column, lower, upper)
     if not files:
         # empty relation with the right schema
-        return spark.read.parquet(path).filter("1=0")
-    return spark.read.parquet(*files)
+        return read_parquet(spark, path).filter("1=0")
+    return read_parquet(spark, *files)
 
 
 def dynamic_skip_scan(
@@ -321,9 +323,9 @@ def dynamic_skip_scan(
     rows = keys_df.select(key_col).distinct().limit(max_keys + 1).collect()
     all_files = _part_files(path)
     if len(rows) > max_keys:
-        return spark.read.parquet(path), len(all_files), len(all_files)
+        return read_parquet(spark, path), len(all_files), len(all_files)
     keys = [r[0] for r in rows]
     files, total = select_files_eq(path, column, keys)
     if not files:
-        return spark.read.parquet(path).filter("1=0"), 0, total
-    return spark.read.parquet(*files), len(files), total
+        return read_parquet(spark, path).filter("1=0"), 0, total
+    return read_parquet(spark, *files), len(files), total

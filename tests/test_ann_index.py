@@ -99,6 +99,31 @@ def test_add_batch_then_probe_sees_it(tmp_path, emb):
     assert any(i % 2 == 1 for i in ids)  # added batch is probe-visible
 
 
+def test_add_accepts_deprecated_corpus_rows(tmp_path, emb):
+    """``corpus_rows=`` (the keyword's old name) still works as an
+    alias of ``batch_rows`` and warns; passing both is an error."""
+    from datafusion_dolomite_spark.functions.ann_index import (
+        ann_index_add,
+        ann_index_build,
+        read_ann_meta,
+    )
+
+    idx = str(tmp_path / "annidx_alias")
+    ann_index_build(
+        emb.filter("vec_id % 2 = 0"), idx, "vec_id", "embedding", m=8,
+        ksub=16, ncells=8, residual=True, kmeans_iters=1,
+    )
+    batch = emb.filter("vec_id % 2 = 1")
+    with pytest.raises(TypeError, match="batch_rows only"):
+        ann_index_add(batch, idx, "vec_id", "embedding", "b2",
+                      batch_rows=10, corpus_rows=10)
+    with pytest.warns(DeprecationWarning, match="batch_rows"):
+        n = ann_index_add(batch, idx, "vec_id", "embedding", "b2",
+                          corpus_rows=batch.count())
+    assert n == batch.count()
+    assert read_ann_meta(idx)["batches"] == ["base", "b2"]
+
+
 def test_probe_requires_index_and_matching_params(tmp_path, emb):
     from datafusion_dolomite_spark.functions.ann_index import (
         ann_index_build,

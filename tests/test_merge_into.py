@@ -69,3 +69,28 @@ def test_update_expressions_mix_both_sides(qp):
     )
     rows = {r["k"]: r["v"] for r in out.collect()}
     assert rows == {1: 100, 2: 1199, 3: 1188, 9: 111}
+
+
+def test_insert_star_names_missing_source_columns(qp, spark, tmp_path):
+    """INSERT * fills every target column from the source: a source
+    without some of them is rejected up front, naming the columns (not
+    with Spark's unresolved ``s.<col>``), and the target keeps its
+    version.  Without an INSERT arm the narrower source merges fine."""
+    spark.createDataFrame([(2, 5), (9, 7)], "k bigint, v bigint").coalesce(
+        1
+    ).write.parquet(str(tmp_path / "narrow"))
+    qp.catalog.register("narrow", str(tmp_path / "narrow"))
+    before = qp.catalog.path("target")
+    with pytest.raises(ValueError, match=r"lacks \['n'\]"):
+        qp.sql(
+            "merge into target t using narrow s on t.k = s.k "
+            "when matched then update set v = s.v "
+            "when not matched then insert *"
+        )
+    assert qp.catalog.path("target") == before
+    out = qp.sql(
+        "merge into target t using narrow s on t.k = s.k "
+        "when matched then update set v = s.v"
+    )
+    rows = {r["k"]: (r["v"], r["n"]) for r in out.collect()}
+    assert rows == {1: (100, 0), 2: (5, 0), 3: (300, 0)}
