@@ -45,12 +45,16 @@ class CascadesOptimizer:
         self.memo: Optional[Memo] = None  # exposed for tests / explain
         #: filled per find_best_plan call: planning seconds + memo size
         #: + transformation count — the planning-time observability the
-        #: memo budget (tasks.TaskRunner.MAX_MEMO_*) is judged against
+        #: memo budget (tasks.TaskRunner.MAX_MEMO_*) is judged against.
+        #: ``catalog_stats_seconds`` is the part of ``seconds`` spent
+        #: computing cold table statistics (group stats derive lazily)
         self.planning_stats: dict = {}
 
     def find_best_plan(self, plan: Plan) -> Plan:
         import time as _time
 
+        catalog = getattr(self.ctx, "catalog", None)
+        stats0 = getattr(catalog, "stats_seconds", 0.0)
         t0 = _time.perf_counter()
         self.memo = Memo.from_plan(
             plan, self.ctx, enable_group_merge=self.enable_group_merge
@@ -62,6 +66,8 @@ class CascadesOptimizer:
             "groups": len(self.memo.groups),
             "exprs": self.memo.n_exprs,
             "transformations": runner.transformations_created,
+            "catalog_stats_seconds": getattr(catalog, "stats_seconds", 0.0)
+            - stats0,
         }
         best = self.memo.best_plan(self.required)
         if best is None:

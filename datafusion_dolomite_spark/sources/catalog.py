@@ -15,7 +15,10 @@ them.  On a real cluster the same numbers come from the metastore or
 from __future__ import annotations
 
 import os
+import time
 from typing import Dict, Optional
+
+import numpy as np
 
 from ..operators.properties import (
     ColumnStatistics,
@@ -28,8 +31,9 @@ from .parquet_read import footer_schema, spark_schema, spark_type, table_stamp
 
 __all__ = ["Catalog", "testdata_catalog", "TESTDATA_TABLES"]
 
-#: process-wide ndv cache — testdata_catalog() builds a fresh Catalog per
-#: query, but the underlying files (and so their ndv) don't change.
+#: process-wide per-column statistics cache, keyed on ``table_stamp`` —
+#: testdata_catalog() builds a fresh Catalog per query, but a table
+#: version's files (and so their statistics) don't change.
 _NDV_CACHE: Dict[tuple, tuple] = {}
 
 #: equi-height histogram bins per numeric column (B+1 quantile edges);
@@ -58,6 +62,44 @@ def _arrow_to_ddl(t) -> str:
         return spark_type(t).simpleString()
     except Exception:
         return "string"
+
+
+def _longest_run(values) -> int:
+    """Length of the longest run of equal values in a sorted numpy array
+    without NULLs — the largest group a ``GROUP BY`` would form.  NaNs,
+    which ``np.sort`` puts last, count as equal to each other."""
+    nans = int(np.isnan(values).sum()) if values.dtype.kind == "f" else 0
+    values = values[: len(values) - nans]
+    if not len(values):
+        return nans
+    cuts = np.flatnonzero(values[1:] != values[:-1])
+    runs = np.diff(np.concatenate(([-1], cuts, [len(values) - 1])))
+    return max(int(runs.max()), nans)
+
+
+def _equi_height_edges(values) -> tuple:
+    """The ``_HISTOGRAM_BINS + 1`` quantiles at 0, 1/B, …, 1 of a sorted,
+    non-empty numpy array, computed exactly as DuckDB's ``quantile_cont``
+    does: position ``rn = (n-1)·q``, the value there when ``rn`` is
+    whole, else interpolation between its neighbours ``lo``/``hi`` with
+    ``d = rn - floor(rn)`` — ``lo·(1-d) + hi·d`` in double precision for
+    doubles and integers, ``lo + (hi-lo)·d`` for floats, with ``hi-lo``
+    and the result rounded to float.  (``np.quantile`` differs from both
+    in the last ulp.)"""
+    n = len(values)
+    rn = (n - 1) * (np.arange(_HISTOGRAM_BINS + 1) / _HISTOGRAM_BINS)
+    lo_i = np.floor(rn).astype(np.int64)
+    hi_i = np.ceil(rn).astype(np.int64)
+    d = rn - lo_i
+    with np.errstate(invalid="ignore", over="ignore"):
+        if values.dtype == np.float32:
+            lo = values[lo_i]
+            step = (values[hi_i] - lo).astype(np.float64)
+            mid = (lo + step * d).astype(np.float32)
+        else:
+            lo = values[lo_i].astype(np.float64)
+            mid = lo * (1.0 - d) + values[hi_i].astype(np.float64) * d
+    return tuple(float(e) for e in np.where(lo_i == hi_i, lo, mid))
 
 
 _DUCK_TO_DDL = {
@@ -90,6 +132,9 @@ class Catalog:
         #: read under; a data file rewritten in place re-derives it
         self._schema_stamps: Dict[str, tuple] = {}
         self._stats: Dict[str, Statistics] = {}
+        #: wall seconds spent filling ``_stats`` (cold statistics);
+        #: Cascades reports its share as ``catalog_stats_seconds``
+        self.stats_seconds = 0.0
         self._warehouse = warehouse
         #: (table, vec_col) → persisted ANN index dir (r11)
         self._ann_indexes: Dict = {}
@@ -188,22 +233,16 @@ class Catalog:
         """ANALYZE TABLE: force-recompute this table's statistics (row
         count, per-column ndv/min/max/top_count, row width), bypassing
         both the per-catalog cache and the process-wide ndv cache.  The
-        automatic derivation is mtime-keyed, so this only matters when a
-        table was rewritten IN PLACE within the cache's key resolution
-        or when the user wants stats refreshed on demand — the same
+        process-wide cache is keyed on ``table_stamp`` (ns-mtime and size
+        of the root and its data files), so this matters when a catalog
+        instance holds statistics from before an in-place rewrite, or
+        when the user wants stats refreshed on demand — the same
         contract as Spark's ``ANALYZE TABLE … COMPUTE STATISTICS``
         against a metastore.  Also clears this table's adaptive
         selectivity corrections: fresh statistics supersede learned
         patches."""
         self._stats.pop(name, None)
-        try:
-            key = tuple(
-                (f, os.path.getmtime(f), os.path.getsize(f))
-                for f in self._files(name)
-            )
-            _NDV_CACHE.pop(key, None)
-        except OSError:
-            pass
+        _NDV_CACHE.pop(table_stamp(self.path(name)), None)
         self._load_corrections_once()
         stale = [k for k in self._sel_corrections if k[0] == name]
         for k in stale:
@@ -465,21 +504,30 @@ class Catalog:
 
     def statistics(self, name: str) -> Statistics:
         """Exact row count — parquet footers (no data read) or a DuckDB
-        count for csv/json (cheap at catalog scale, cached)."""
+        count for csv/json (cheap at catalog scale, cached).  A parquet
+        table's footers are read once and shared with ``_column_ndv``.
+        The time spent filling this per-instance cache accumulates in
+        ``stats_seconds``."""
         if name not in self._stats:
+            t0 = time.perf_counter()
             fmt = self.format(name)
             raw_bytes = 0.0
+            columns = ()
             if fmt == "parquet":
                 import pyarrow.parquet as pq
 
-                rows = 0
-                for f in self._files(name):
-                    md = pq.ParquetFile(f).metadata
-                    rows += md.num_rows
-                    # uncompressed in-memory size from the footer — what a
-                    # broadcast of this table would actually cost
-                    for rg in range(md.num_row_groups):
-                        raw_bytes += md.row_group(rg).total_byte_size
+                footers = [pq.read_metadata(f) for f in self._files(name)]
+                rows = sum(md.num_rows for md in footers)
+                # uncompressed in-memory size from the footer — what a
+                # broadcast of this table would actually cost
+                raw_bytes = float(
+                    sum(
+                        md.row_group(rg).total_byte_size
+                        for md in footers
+                        for rg in range(md.num_row_groups)
+                    )
+                )
+                columns = self._column_ndv(name, footers)
             elif fmt == "orc":
                 import pyarrow.orc as po
 
@@ -504,37 +552,50 @@ class Catalog:
                     raw_bytes = 0.0
             self._stats[name] = Statistics(
                 row_count=float(rows),
-                columns=self._column_ndv(name),
+                columns=columns,
                 avg_row_bytes=(raw_bytes / rows) if rows else 0.0,
             )
+            self.stats_seconds += time.perf_counter() - t0
         return self._stats[name]
 
-    def _column_ndv(self, name: str):
-        """Per-column ndv for scalar columns.  Parquet footers carry
-        ``distinct_count`` when the writer recorded it; otherwise one
-        DuckDB ``approx_count_distinct`` pass fills the gaps.  Cached
-        process-wide by (path, mtime, size) — on a cluster these numbers
-        come from ANALYZE/metastore, the interface is identical."""
+    def _column_ndv(self, name: str, footers=None):
+        """Per-column statistics of a parquet table's scalar columns
+        (ndv, numeric min/max, top_count, equi-height histogram) from one
+        read of the table version:
+
+        * the footers (``footers``, as ``statistics`` read them, else
+          read here) give numeric min/max over the first 64 files and
+          the first file's ``distinct_count`` where the writer recorded
+          it;
+        * one DuckDB ``approx_count_distinct`` query fills the ndv of
+          every other column;
+        * each column is then read alone through ``pyarrow.dataset``, so
+          peak memory is one column: a numeric column is sorted once for
+          its ``top_count`` and histogram edges, any other takes
+          ``top_count`` from ``value_counts``.
+
+        Cached process-wide under the table's ``table_stamp`` — on a
+        cluster these numbers come from ANALYZE/metastore, the interface
+        is identical."""
         if self.format(name) != "parquet":
             return ()
         try:
             files = self._files(name)
             if not files or not os.path.isfile(files[0]):
                 return ()
-            key = tuple(
-                (f, os.path.getmtime(f), os.path.getsize(f)) for f in files
-            )
         except OSError:
             return ()
+        key = table_stamp(self.path(name))
         cached = _NDV_CACHE.get(key)
         if cached is not None:
             return cached
 
+        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        meta = pq.ParquetFile(files[0])
-        arrow_schema = meta.schema_arrow
-        import pyarrow as pa
+        if footers is None:
+            footers = [pq.read_metadata(f) for f in files[:64]]
+        arrow_schema = footers[0].schema.to_arrow_schema()
 
         def _scalar(t):
             return not (
@@ -552,31 +613,26 @@ class Catalog:
         ndv: Dict[str, float] = {}
         # numeric min/max folded over every file's footer (free at
         # catalog time; feeds range-predicate selectivity in the cost
-        # model — on a cluster, ANALYZE/metastore serves the same role)
+        # model — on a cluster, ANALYZE/metastore serves the same role),
+        # plus the first file's distinct_count (exact, free) where the
+        # writer recorded it
         vmin: Dict[str, float] = {}
         vmax: Dict[str, float] = {}
-        for fpath in files[:64]:
-            fmd = pq.ParquetFile(fpath).metadata
-            for rg in range(fmd.num_row_groups):
-                for ci in range(fmd.num_columns):
-                    col = fmd.row_group(rg).column(ci)
-                    path = col.path_in_schema
+        for i, md in enumerate(footers[:64]):
+            for rg in range(md.num_row_groups):
+                row_group = md.row_group(rg)
+                for ci in range(md.num_columns):
+                    col = row_group.column(ci)
                     st = col.statistics
-                    if st is None or path not in numeric_cols:
+                    if st is None:
                         continue
-                    if st.has_min_max:
+                    path = col.path_in_schema
+                    if path in numeric_cols and st.has_min_max:
                         lo, hi = float(st.min), float(st.max)
                         vmin[path] = min(vmin.get(path, lo), lo)
                         vmax[path] = max(vmax.get(path, hi), hi)
-        # footer distinct_count (exact, free) where the writer recorded it
-        md = meta.metadata
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                st = col.statistics
-                if st is not None and st.has_distinct_count and st.distinct_count:
-                    path = col.path_in_schema
-                    ndv[path] = ndv.get(path, 0.0) + float(st.distinct_count)
+                    if i == 0 and st.has_distinct_count and st.distinct_count:
+                        ndv[path] = ndv.get(path, 0.0) + float(st.distinct_count)
         missing = [c for c in scalar_cols if c not in ndv]
         if missing and len(files) <= 64:  # bounded catalog-time work
             try:
@@ -594,45 +650,34 @@ class Catalog:
             except Exception:
                 pass
         # mode counts (top-key frequency) — the SKEW signal the salted
-        # aggregate alternative is cost-picked on.  One grouped count per
-        # scalar column; bounded the same way as the ndv fill and cached
-        # process-wide.  On a cluster this is ANALYZE/metastore's job —
-        # the interface (ColumnStatistics.top_count) is identical.
+        # aggregate alternative is cost-picked on — and equi-height
+        # histograms (r9): quantiles at 0, 1/B, …, 1 of numeric columns,
+        # so range selectivity reads the value DISTRIBUTION instead of
+        # assuming uniform [min, max].  Same bound as the ndv fill.
         topc: Dict[str, float] = {}
         hists: Dict[str, tuple] = {}
         if len(files) <= 64:
             try:
-                import duckdb
+                import pyarrow.compute as pc
+                import pyarrow.dataset as ds
 
-                flist = ", ".join(f"'{f}'" for f in files)
+                dataset = ds.dataset(files, format="parquet")
                 for c in scalar_cols:
                     if c not in ndv:
                         continue
-                    v = duckdb.sql(
-                        f'SELECT max(n) FROM (SELECT count(*) AS n '
-                        f'FROM read_parquet([{flist}]) GROUP BY "{c}")'
-                    ).fetchone()[0]
-                    topc[c] = float(v or 0.0)
-                # equi-height histograms (r9): exact quantiles at
-                # 0, 1/B, …, 1 for numeric columns — each bin holds 1/B
-                # of the rows, so range selectivity reads the value
-                # DISTRIBUTION instead of assuming uniform [min, max].
-                # One quantile aggregate per column, same bounded +
-                # process-cached regime as ndv/top_count; ANALYZE/
-                # metastore serves this role on a cluster.
-                nb = _HISTOGRAM_BINS
-                probes = "[" + ", ".join(
-                    f"{i / nb!r}" for i in range(nb + 1)
-                ) + "]"
-                for c in scalar_cols:
-                    if c not in ndv or c not in numeric_cols:
+                    column = dataset.to_table(columns=[c]).column(0)
+                    if c not in numeric_cols:
+                        # value_counts counts NULL as one group, as
+                        # GROUP BY does
+                        counts = pc.value_counts(column).field("counts")
+                        topc[c] = float(pc.max(counts).as_py() or 0)
                         continue
-                    edges = duckdb.sql(
-                        f'SELECT quantile_cont("{c}", {probes}) '
-                        f"FROM read_parquet([{flist}])"
-                    ).fetchone()[0]
-                    if edges and all(e is not None for e in edges):
-                        hists[c] = tuple(float(e) for e in edges)
+                    values = np.sort(column.drop_null().to_numpy())
+                    topc[c] = float(
+                        max(_longest_run(values), column.null_count)
+                    )
+                    if len(values):
+                        hists[c] = _equi_height_edges(values)
             except Exception:
                 pass
         out = tuple(
