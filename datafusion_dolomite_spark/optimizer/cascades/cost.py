@@ -107,7 +107,7 @@ class SparkCostModel(CostModel):
         out = _output_rows(op, rows, ctx, input_stats)
 
         if getattr(op, "forced", False):
-            # a user hint pinned this strategy (sql.py _strip_comments →
+            # a user hint pinned this strategy (sql.py _tokenize →
             # join rules): near-zero cost wins the group's race — the
             # Spark-hint contract that the user's word beats the model,
             # including the broadcast byte budget

@@ -101,80 +101,23 @@ def default_cascades_rules(enable_join_exploration: bool = True) -> list[Rule]:
     return rules
 
 
-def _top_level_mask(text: str) -> list:
-    """Per-character flags: True where the character sits at paren depth
-    0 and OUTSIDE a single-quoted SQL literal (``''`` escapes).  The
-    shared scanner behind MERGE's WHEN-clause splitting and ON-predicate
-    conjunction analysis — regex alone is blind to quotes, so a literal
-    containing ``when matched`` or ``or`` must not act as syntax."""
-    mask = [False] * len(text)
-    depth = 0
-    in_quote = False
-    i = 0
-    n = len(text)
-    while i < n:
-        ch = text[i]
-        if in_quote:
-            if ch == "'":
-                if i + 1 < n and text[i + 1] == "'":
-                    i += 2
-                    continue
-                in_quote = False
-        elif ch == "'":
-            in_quote = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth = max(0, depth - 1)
-        elif depth == 0:
-            mask[i] = True
-        i += 1
-    return mask
-
-
-def _on_conjunction_parts(on: str):
-    """Split a MERGE ON predicate into its top-level AND conjuncts, or
-    return ``None`` when the predicate is NOT a pure conjunction (a
-    top-level OR exists) — the safety gate for source-range file
-    pruning: pruning by one equality is only sound when that equality
-    is a NECESSARY condition of ON, i.e. a top-level conjunct of a
-    conjunction.  Quote/paren-aware, so ORs inside parens or string
-    literals don't disqualify (they stay inside their conjunct)."""
-    import re as _re
-
-    mask = _top_level_mask(on)
-    if any(mask[m.start()] for m in _re.finditer(r"(?i)\bor\b", on)):
-        return None
-    cuts = [m for m in _re.finditer(r"(?i)\band\b", on) if mask[m.start()]]
-    parts = []
-    prev = 0
-    for m in cuts:
-        parts.append(on[prev:m.start()])
-        prev = m.end()
-    parts.append(on[prev:])
-    return [p.strip() for p in parts if p.strip()]
-
-
-def _strip_outer_parens(s: str) -> str:
-    """Remove balanced wrapping parens: ``(t.k = s.k)`` → ``t.k = s.k``.
-    Only strips when the opening paren closes at the very end; a failed
-    strip just means a pruning equality isn't recognized (safe)."""
-    s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        wraps = True
-        for i, ch in enumerate(s):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i != len(s) - 1:
-                    wraps = False
-                    break
-        if not wraps:
-            break
-        s = s[1:-1].strip()
-    return s
+def _with_options(what: str, given: Optional[dict], defaults: dict) -> dict:
+    """``defaults`` overridden by a statement's ``WITH (k = v, ...)``
+    options (``given``, values as text): ``location`` stays text,
+    ``residual`` is a boolean, every other option an integer."""
+    opts = dict(defaults)
+    for k, v in (given or {}).items():
+        if k not in opts:
+            raise ValueError(
+                f"unknown {what} option {k!r} (known: {sorted(opts)})"
+            )
+        if k == "location":
+            opts[k] = v
+        elif k == "residual":
+            opts[k] = v.lower() in ("true", "1")
+        else:
+            opts[k] = int(v)
+    return opts
 
 
 class QueryPlanner:
@@ -694,34 +637,6 @@ class QueryPlanner:
             )
         return hist
 
-    def _read_table_version(self, table: str, ver: int):
-        """DataFrame over a recorded version dir, DV-aware (a DV'd
-        version's content is files MINUS its sidecar; dv_scan confines
-        the anti-join to the sidecar's files).  A recorded version
-        whose directory no longer exists was VACUUMED (possibly by a
-        concurrent planner racing this reader's stale lineage) —
-        deterministic ``VersionVacuumedError`` instead of whatever
-        filesystem error the scan would have surfaced."""
-        import os
-
-        from .sources.dml import VersionVacuumedError, has_dv
-
-        hist = self._checked_history(table, "time travel")
-        path = hist[ver]
-        if not os.path.exists(path):
-            raise VersionVacuumedError(
-                f"table {table!r} version {ver} ({path}) was removed by "
-                f"VACUUM — time travel to it is gone; keep versions "
-                f"readable longer with 'VACUUM {table} RETAIN n HOURS' "
-                f"(the retention window keeps every version committed "
-                f"inside it)"
-            )
-        if has_dv(path):
-            from .execute import dv_scan
-
-            return dv_scan(self.spark, path)
-        return read_parquet(self.spark, path)
-
     def _version_at_timestamp(self, table: str, ts_text: str) -> int:
         """The LATEST version committed at or before ``ts_text`` —
         ``TIMESTAMP AS OF`` resolution.  Naive literals are UTC (the
@@ -820,7 +735,7 @@ class QueryPlanner:
                     f"({text}) — statement aborted, no version written"
                 )
 
-    def _set_tblproperties(self, table: str, props_text: str):
+    def _set_tblproperties(self, table: str, properties: dict):
         """``ALTER TABLE t SET TBLPROPERTIES ('k'='v', …)`` — the
         per-table knob store (persisted in the version log, copied into
         shallow clones).  The one property the engine interprets today:
@@ -828,21 +743,11 @@ class QueryPlanner:
         DELETE/UPDATE from copy-on-write file rewrites to
         deletion-vector writes (``_dml_mor``); ``copy-on-write`` (or
         unsetting) restores the default."""
-        import re as _re
-
-        pairs = _re.findall(r"'([^']*)'\s*=\s*'([^']*)'", props_text)
-        if not pairs:
-            raise ValueError(
-                f"SET TBLPROPERTIES: expected 'key'='value' pairs, got "
-                f"{props_text!r}"
-            )
-        store = self._table_props.setdefault(table, {})
-        for k, v in pairs:
-            store[k] = v
+        self._table_props.setdefault(table, {}).update(properties)
         if table in self._table_history:
             self._persist_versions(table)
         return self.spark.createDataFrame(
-            [(table, k, v) for k, v in pairs],
+            [(table, k, v) for k, v in properties.items()],
             "table_name string, key string, value string",
         )
 
@@ -911,8 +816,7 @@ class QueryPlanner:
                 ),
             )
 
-    def _dml_mor(self, table, delete_where=None, set_clause=None,
-                 where=None):
+    def _dml_mor(self, table, delete_where=None, sets=None, where=None):
         """Merge-on-read DELETE/UPDATE — deletion vectors instead of
         file rewrites (Delta's DVs; opted in per table via
         ``delete_mode='merge-on-read'``).  DELETE: mark the matched
@@ -1000,8 +904,7 @@ class QueryPlanner:
         data_cols = [c for c in df.columns if c not in ("__dv_file",
                                                         "__dv_row")]
         new_rows = None
-        if set_clause is not None:
-            sets = self._parse_set_clause(set_clause)
+        if sets is not None:
             new_rows = matched.select(
                 *[
                     (
@@ -1017,7 +920,7 @@ class QueryPlanner:
             self._enforce_constraints(table, new_rows)
         dest = self._cow_dest(
             table,
-            op="delete (dv)" if set_clause is None else "update (dv)",
+            op="delete (dv)" if sets is None else "update (dv)",
         )
         files = data_files(old_path)
         pcols = partition_columns(old_path) if files else []
@@ -1553,22 +1456,19 @@ class QueryPlanner:
         return df
 
     def _version_path(self, table: str, ver: int) -> str:
-        """Validated version-dir path for time travel (shared by the
-        dedicated ``SELECT *`` fast path and the general FROM/JOIN
-        rewrite): history must exist for the current registration, the
-        version must be recorded, and the dir must survive VACUUM."""
+        """Validated version-dir path for time travel (the
+        whole-statement ``SELECT * … AS OF`` form and the general
+        FROM/JOIN splice): history must exist for the current
+        registration and the version must be recorded.  A recorded
+        version whose directory no longer exists was VACUUMED (possibly
+        by a concurrent planner racing this reader's stale lineage) —
+        deterministic ``VersionVacuumedError`` instead of whatever
+        filesystem error the scan would have surfaced."""
         import os
 
         from .sources.dml import VersionVacuumedError
 
-        hist = self._table_history.get(table)
-        if hist is not None and hist[-1] != self.catalog.path(table):
-            hist = None
-        if hist is None:
-            raise ValueError(
-                f"table {table!r} has no version history (no DML/MERGE "
-                "rewrites recorded for its current registration)"
-            )
+        hist = self._checked_history(table, "time travel")
         if ver >= len(hist):
             raise ValueError(
                 f"table {table!r} has versions 0..{len(hist) - 1}, "
@@ -1579,32 +1479,26 @@ class QueryPlanner:
             raise VersionVacuumedError(
                 f"table {table!r} version {ver} ({path}) was removed by "
                 f"VACUUM — time travel to it is gone; keep versions "
-                f"readable longer with 'VACUUM {table} RETAIN n HOURS'"
+                f"readable longer with 'VACUUM {table} RETAIN n HOURS' "
+                f"(the retention window keeps every version committed "
+                f"inside it)"
             )
         return path
 
-    def _rewrite_time_travel(self, query: str) -> str:
-        """GENERAL time travel (r10): any ``FROM/JOIN t VERSION AS OF
-        n`` inside a larger query rewrites to a catalog registration of
-        that version dir (``__tt_<t>_v<n>``), so projections, joins,
-        aggregates and CTEs compose with time travel — previously only
-        the whole-statement ``SELECT * FROM t VERSION AS OF n`` form
-        existed.  DV-carrying versions keep requiring that dedicated
-        form (their content is files MINUS the sidecar — a plain
-        registration would resurrect deleted rows), and the regex keys
-        on FROM/JOIN so RESTORE/CLONE's own ``VERSION AS OF`` text
-        never matches."""
-        import re as _re
-
+    def _splice_time_travel(self, query: str, versions) -> str:
+        """GENERAL time travel: each ``FROM/JOIN t VERSION AS OF n``
+        reference (``Statement.versions``, found by the lexer, so never
+        inside a literal or comment) is replaced by a catalog
+        registration of that version dir (``__tt_<t>_v<n>``), so
+        projections, joins, aggregates and CTEs compose with time
+        travel.  DV-carrying versions keep requiring the
+        whole-statement ``SELECT * FROM t VERSION AS OF n`` form (their
+        content is files MINUS the sidecar — a plain registration would
+        resurrect deleted rows)."""
         from .sources.dml import has_dv
 
-        pat = _re.compile(
-            r"\b(from|join)\s+([A-Za-z_]\w*)\s+version\s+as\s+of\s+(\d+)",
-            _re.IGNORECASE,
-        )
-
-        def sub(m):
-            kw, name, ver = m.group(1), m.group(2), int(m.group(3))
+        out, prev = [], 0
+        for start, end, name, ver in versions:
             path = self._version_path(name, ver)
             if has_dv(path):
                 raise ValueError(
@@ -1615,12 +1509,12 @@ class QueryPlanner:
                 )
             alias = f"__tt_{name}_v{ver}"
             self.catalog.register(alias, path)
-            return f"{kw} {alias}"
-
-        return pat.sub(sub, query)
+            out += [query[prev:start], alias]
+            prev = end
+        return "".join(out) + query[prev:]
 
     def _create_vector_index(self, replace: bool, table: str,
-                             vec_col: str, opts_str):
+                             vec_col: str, options: Optional[dict] = None):
         """``CREATE [OR REPLACE] VECTOR INDEX ON t (col) [WITH (m=8,
         ksub=16, ncells=32, residual=true, kmeans_iters=2,
         train_iters=0, location='<dir>')]`` (r11) — the SQL front door
@@ -1633,7 +1527,6 @@ class QueryPlanner:
         discipline); ``OR REPLACE`` forces the rebuild.  Default
         location: ``<warehouse>/vector_index/<table>__<col>``."""
         import os
-        import re as _re
 
         from .functions.ann_index import (
             ann_index_build,
@@ -1642,32 +1535,9 @@ class QueryPlanner:
         )
         from .plans.plan import LogicalPlanBuilder
 
-        opts = {"m": 8, "ksub": 16, "ncells": 32, "residual": True,
-                "kmeans_iters": 2, "train_iters": 0, "location": None}
-        if opts_str:
-            for part in opts_str.split(","):
-                if not part.strip():
-                    continue
-                mm = _re.match(
-                    r"\s*(\w+)\s*=\s*('(?:[^']|'')*'|\S+)\s*$", part
-                )
-                if not mm:
-                    raise ValueError(
-                        f"bad VECTOR INDEX option {part.strip()!r}"
-                    )
-                k = mm.group(1).lower()
-                v = mm.group(2)
-                if k not in opts:
-                    raise ValueError(
-                        f"unknown VECTOR INDEX option {k!r} "
-                        f"(known: {sorted(opts)})"
-                    )
-                if k == "location":
-                    opts[k] = v[1:-1].replace("''", "'") if v.startswith("'") else v
-                elif k == "residual":
-                    opts[k] = v.lower() in ("true", "1")
-                else:
-                    opts[k] = int(v)
+        opts = _with_options("VECTOR INDEX", options, {
+            "m": 8, "ksub": 16, "ncells": 32, "residual": True,
+            "kmeans_iters": 2, "train_iters": 0, "location": None})
         idx = opts["location"] or os.path.join(
             self.catalog.warehouse_root(), "vector_index",
             f"{table}__{vec_col}",
@@ -1711,7 +1581,7 @@ class QueryPlanner:
         )
 
     def _create_tokenizer(self, replace: bool, table: str,
-                          text_col: str, opts_str):
+                          text_col: str, options: Optional[dict] = None):
         """``CREATE [OR REPLACE] TOKENIZER ON t (col) [WITH (merges=16,
         max_vocab=65536, location='<dir>')]`` (r12, VERDICT r11 item
         1) — the SQL front door of the persisted BPE tokenizer
@@ -1724,7 +1594,6 @@ class QueryPlanner:
         registered without retraining; ``OR REPLACE`` forces it.
         Default location: ``<warehouse>/tokenizer/<table>__<col>``."""
         import os
-        import re as _re
 
         from .functions.bpe import (
             bpe_meta_matches,
@@ -1733,29 +1602,8 @@ class QueryPlanner:
         )
         from .plans.plan import LogicalPlanBuilder
 
-        opts = {"merges": 16, "max_vocab": 65536, "location": None}
-        if opts_str:
-            for part in opts_str.split(","):
-                if not part.strip():
-                    continue
-                mm = _re.match(
-                    r"\s*(\w+)\s*=\s*('(?:[^']|'')*'|\S+)\s*$", part
-                )
-                if not mm:
-                    raise ValueError(
-                        f"bad TOKENIZER option {part.strip()!r}"
-                    )
-                k = mm.group(1).lower()
-                v = mm.group(2)
-                if k not in opts:
-                    raise ValueError(
-                        f"unknown TOKENIZER option {k!r} "
-                        f"(known: {sorted(opts)})"
-                    )
-                if k == "location":
-                    opts[k] = v[1:-1].replace("''", "'") if v.startswith("'") else v
-                else:
-                    opts[k] = int(v)
+        opts = _with_options("TOKENIZER", options, {
+            "merges": 16, "max_vocab": 65536, "location": None})
         tok = opts["location"] or os.path.join(
             self.catalog.warehouse_root(), "tokenizer",
             f"{table}__{text_col}",
@@ -1780,702 +1628,70 @@ class QueryPlanner:
             "action: string",
         )
 
+    #: statement kind (``sql.parse_statement``) → handler method, called
+    #: with the statement's fields as keyword arguments
+    _STATEMENT_HANDLERS = {
+        "query": "_query",
+        "explain": "_explain",
+        "explain_dml": "_explain_dml",
+        "create_vector_index": "_create_vector_index",
+        "drop_vector_index": "_drop_vector_index",
+        "create_tokenizer": "_create_tokenizer",
+        "drop_tokenizer": "_drop_tokenizer",
+        "describe": "_describe",
+        "describe_history": "_describe_history",
+        "describe_detail": "_describe_detail",
+        "analyze": "_analyze_table",
+        "create_function": "_create_function",
+        "create_view": "_create_view",
+        "drop_view": "_drop_view",
+        "show_views": "_show_views",
+        "select_as_of": "_select_as_of",
+        "table_changes": "_table_changes",
+        "delete": "_delete",
+        "update": "_update",
+        "insert": "_insert",
+        "insert_overwrite": "_insert_overwrite",
+        "merge": "_merge_into",
+        "show_tables": "_show_tables",
+        "show_materialized_views": "_show_materialized_views",
+        "drop_materialized_view": "_drop_materialized_view",
+        "truncate": "_truncate",
+        "set_tblproperties": "_set_tblproperties",
+        "show_tblproperties": "_show_tblproperties",
+        "add_constraint": "_add_constraint",
+        "drop_constraint": "_drop_constraint",
+        "show_constraints": "_show_constraints",
+        "add_column": "_add_column",
+        "drop_column": "_drop_column",
+        "optimize": "_optimize_table",
+        "vacuum": "_vacuum_table",
+        "restore": "_restore",
+        "shallow_clone": "_shallow_clone",
+    }
+
     def sql(self, query: str):
-        """SQL front door: parse → optimize → execute (entry point A of
-        the reference, SURVEY §3)."""
+        """SQL front door (entry point A of the reference, SURVEY §3).
+        ``sql.parse_statement`` runs the one lexer over the text once and
+        returns a ``Statement`` record; its ``kind`` picks the handler
+        from ``_STATEMENT_HANDLERS``.  A query (kind ``query``) goes
+        parse → optimize → execute through ``parse_sql``; DDL, DML and
+        utility statements go to their handlers with fields cut from the
+        source at token boundaries, so a quoted literal or a comment is
+        never taken for syntax.  ``FROM/JOIN t VERSION AS OF n`` inside
+        any statement other than the whole-statement ``SELECT * FROM t
+        VERSION AS OF n`` is spliced to a registration of that version
+        first (``_splice_time_travel``)."""
+        from .sql import parse_statement
+
+        st = parse_statement(query)
+        if st.versions and st.kind != "select_as_of":
+            st = parse_statement(self._splice_time_travel(query, st.versions))
+        return getattr(self, self._STATEMENT_HANDLERS[st.kind])(**st.args)
+
+    def _query(self, query: str):
         from .operators.extensions import LogicalSink
         from .sql import parse_sql
-
-        import re as _re
-
-        m = _re.match(
-            r"\s*explain\s+analyze\s+(.+)$", query, _re.IGNORECASE | _re.DOTALL
-        )
-        if m:
-            text = self.explain_analyze(
-                parse_sql(m.group(1), self.catalog, macros=self._sql_macros,
-                          views=self._sql_views)
-            )
-            return self.spark.createDataFrame(
-                [(line,) for line in text.splitlines()], "plan: string"
-            )
-
-        m = _re.match(r"\s*explain\s+(.+)$", query, _re.IGNORECASE | _re.DOTALL)
-        if m:
-            inner = m.group(1)
-            dm = _re.match(
-                r"\s*delete\s+from\s+([A-Za-z_]\w*)(?:\s+where\s+(.+?))?\s*$"
-                r"|\s*update\s+([A-Za-z_]\w*)\s+set\s+.+?"
-                r"(?:\s+where\s+(.+?))?\s*$",
-                inner,
-                _re.IGNORECASE | _re.DOTALL,
-            )
-            if dm:
-                # EXPLAIN <DML>: report the file-pruning decision
-                # WITHOUT executing — which files the predicate can
-                # touch (footer/partition bands vs its conjuncts) and
-                # which carry forward untouched
-                return self._explain_dml(
-                    dm.group(1) or dm.group(3),
-                    dm.group(2) or dm.group(4),
-                    "DELETE" if dm.group(1) else "UPDATE",
-                )
-            # EXPLAIN <query> — THIS engine's optimized logical +
-            # physical plan as a one-column DataFrame (Spark's own plan
-            # is a df.explain() away; this shows ours)
-            text = self.explain(
-                parse_sql(inner, self.catalog, macros=self._sql_macros,
-                          views=self._sql_views)
-            )
-            return self.spark.createDataFrame(
-                [(line,) for line in text.splitlines()], "plan: string"
-            )
-
-        m = _re.match(
-            r"\s*create\s+(or\s+replace\s+)?vector\s+index\s+on\s+"
-            r"([A-Za-z_]\w*)\s*\(\s*([A-Za-z_]\w*)\s*\)"
-            r"(?:\s+with\s*\((.*?)\))?\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            return self._create_vector_index(
-                bool(m.group(1)), m.group(2), m.group(3), m.group(4)
-            )
-        m = _re.match(
-            r"\s*drop\s+vector\s+index\s+on\s+([A-Za-z_]\w*)\s*"
-            r"\(\s*([A-Za-z_]\w*)\s*\)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            self.catalog.deregister_ann_index(m.group(1), m.group(2))
-            return self.spark.createDataFrame(
-                [(m.group(1), m.group(2), "dropped")],
-                "table: string, vec_col: string, action: string",
-            )
-        m = _re.match(
-            r"\s*create\s+(or\s+replace\s+)?tokenizer\s+on\s+"
-            r"([A-Za-z_]\w*)\s*\(\s*([A-Za-z_]\w*)\s*\)"
-            r"(?:\s+with\s*\((.*?)\))?\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            return self._create_tokenizer(
-                bool(m.group(1)), m.group(2), m.group(3), m.group(4)
-            )
-        m = _re.match(
-            r"\s*drop\s+tokenizer\s+on\s+([A-Za-z_]\w*)\s*"
-            r"\(\s*([A-Za-z_]\w*)\s*\)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            self.catalog.deregister_bpe_tokenizer(m.group(1), m.group(2))
-            return self.spark.createDataFrame(
-                [(m.group(1), m.group(2), "dropped")],
-                "table: string, text_col: string, action: string",
-            )
-        m = _re.match(
-            r"\s*desc(?:ribe)?\s+(?:table\s+)?([A-Za-z_]\w*)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            # DESCRIBE [TABLE] <t> — the catalog's schema as a
-            # DataFrame (Spark DDL type strings, the engine's lingua
-            # franca)
-            sch = self.catalog.schema(m.group(1))
-            return self.spark.createDataFrame(
-                [(f.name, f.dtype, bool(f.nullable)) for f in sch.fields],
-                "col_name: string, data_type: string, nullable: boolean",
-            )
-        m = _re.match(
-            r"\s*analyze\s+table\s+([A-Za-z_][A-Za-z_0-9]*)"
-            r"(?:\s+compute\s+statistics)?\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            # ANALYZE TABLE <t> [COMPUTE STATISTICS] — force-refresh the
-            # catalog's statistics for <t> and return them as a
-            # DataFrame (column-level ndv / top_count / min / max, plus
-            # a __table__ row carrying row count and avg width).  The
-            # same stats the cost model plans on — surfaced to the user
-            # the way Spark/metastore ANALYZE does.
-            name = m.group(1)
-            st = (
-                self.catalog.analyze(name)
-                if hasattr(self.catalog, "analyze")
-                else self.catalog.statistics(name)
-            )
-            rows = [
-                (
-                    "__table__",
-                    int(st.row_count),
-                    0,
-                    None,
-                    None,
-                    float(st.avg_row_bytes),
-                )
-            ] + [
-                (
-                    c,
-                    int(cs.ndv),
-                    int(cs.top_count),
-                    None if cs.min is None else float(cs.min),
-                    None if cs.max is None else float(cs.max),
-                    None,
-                )
-                for c, cs in st.columns
-            ]
-            return self.spark.createDataFrame(
-                rows,
-                "column_name string, ndv bigint, top_count bigint, "
-                "min_v double, max_v double, avg_row_bytes double",
-            )
-
-        m = _re.match(
-            r"\s*create\s+(?:or\s+replace\s+)?function\s+([A-Za-z_]\w*)"
-            r"\s*\(([^)]*)\)\s+as\s+(.+?)\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            # CREATE [OR REPLACE] FUNCTION name(p1, p2) AS <expr> — a
-            # SQL MACRO (DuckDB's CREATE MACRO).  The body is parsed to
-            # expression IR HERE, once (nested macro calls freeze at
-            # definition time, so expansion can never cycle); every
-            # later call site substitutes its parsed arguments into the
-            # body structurally inside the parser (sql.py ``_call`` /
-            # ``_substitute_params``) — the r7 textual pre-pass and its
-            # whole class of quoting/precedence bugs are gone (VERDICT
-            # r7 item 5).  Macros cost nothing at run time.
-            from .sql import _Parser
-
-            name = m.group(1).lower()
-            params = [p.strip() for p in m.group(2).split(",") if p.strip()]
-            bp = _Parser(m.group(3).strip(), self.catalog,
-                         macros=self._sql_macros)
-            body = bp._expr()
-            if bp.peek().kind != "eof":
-                raise ValueError(
-                    f"CREATE FUNCTION {name}: trailing input after body"
-                )
-            self._sql_macros[name] = (params, body)
-            return self.spark.createDataFrame(
-                [(name, len(params))], "function string, n_args int"
-            )
-
-        m = _re.match(
-            r"\s*create\s+(or\s+replace\s+)?view\s+([A-Za-z_]\w*)"
-            r"\s+as\s+(.+?)\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            # CREATE [OR REPLACE] VIEW name AS <query> — a LOGICAL view
-            # (vs the engine's MATERIALIZED views): the text re-parses
-            # at each reference (late binding, standard SQL), costs
-            # nothing until queried, and pushes filters/pruning through
-            # because the reference inlines the view's plan subtree.
-            # Persisted in <warehouse>/_views.json across sessions.
-            replace, name, body = (
-                bool(m.group(1)),
-                m.group(2).lower(),
-                m.group(3),
-            )
-            if name in self._sql_views and not replace:
-                raise ValueError(
-                    f"view {name!r} already exists "
-                    "(use CREATE OR REPLACE VIEW)"
-                )
-            try:
-                self.catalog.path(name)
-            except Exception:
-                pass
-            else:
-                raise ValueError(
-                    f"view name {name!r} collides with a registered table"
-                )
-            if _re.match(r"\s*create\b", body, _re.IGNORECASE):
-                raise ValueError(
-                    f"CREATE VIEW {name}: body must be a query, not DDL"
-                )
-            # validate NOW, with the view itself invisible (a view
-            # cannot reference itself; replace-cycles through other
-            # views are caught by the parser's nesting bound)
-            probe = dict(self._sql_views)
-            probe.pop(name, None)
-            parse_sql(
-                body, self.catalog, macros=self._sql_macros, views=probe
-            )
-            self._sql_views[name] = body.strip()
-            self._save_views()
-            return self.spark.createDataFrame([(name,)], "view string")
-
-        m = _re.match(
-            r"\s*drop\s+view\s+(if\s+exists\s+)?([A-Za-z_]\w*)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            name = m.group(2).lower()
-            if name in self._sql_views:
-                del self._sql_views[name]
-                self._save_views()
-            elif not m.group(1):
-                raise ValueError(f"view {name!r} does not exist")
-            return self.spark.createDataFrame([(name,)], "view string")
-
-        m = _re.match(r"\s*show\s+views\s*$", query, _re.IGNORECASE)
-        if m:
-            return self.spark.createDataFrame(
-                sorted(self._sql_views.items()),
-                "view string, definition string",
-            )
-
-        m = _re.match(
-            r"\s*select\s+\*\s+from\s+([A-Za-z_]\w*)\s+timestamp\s+as\s+of"
-            r"\s+'([^']+)'\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            # TIMESTAMP AS OF (Delta's second time-travel form): the
-            # latest version committed at or before the given instant
-            # (session timezone is pinned UTC, so naive literals are
-            # UTC).  Commit times ride in the persisted version log;
-            # logs from before timestamping fall back to dir mtimes.
-            name = m.group(1)
-            ver = self._version_at_timestamp(name, m.group(2))
-            return self._read_table_version(name, ver)
-
-        m = _re.match(
-            r"\s*select\s+\*\s+from\s+([A-Za-z_]\w*)\s+version\s+as\s+of"
-            r"\s+(\d+)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            # TIME TRAVEL over the copy-on-write lineage: version 0 is
-            # the snapshot before the first rewrite, each DML/MERGE adds
-            # one.  Old version dirs are never touched by later rewrites
-            # (the COW contract), so any recorded version reads back
-            # exactly — Delta's VERSION AS OF over our version dirs.
-            name, ver = m.group(1), int(m.group(2))
-            hist = self._table_history.get(name)
-            if hist is not None and hist[-1] != self.catalog.path(name):
-                hist = None  # table re-registered since — lineage is dead
-            if hist is None:
-                raise ValueError(
-                    f"table {name!r} has no version history (no DML/MERGE "
-                    "rewrites recorded for its current registration)"
-                )
-            if ver >= len(hist):
-                raise ValueError(
-                    f"table {name!r} has versions 0..{len(hist) - 1}, "
-                    f"asked for {ver}"
-                )
-            return self._read_table_version(name, ver)
-
-        # general time travel (r10): VERSION AS OF composing with
-        # projections/joins/aggregates — rewrite and fall through
-        if _re.search(
-            r"\b(from|join)\s+[A-Za-z_]\w*\s+version\s+as\s+of\s+\d+",
-            query,
-            _re.IGNORECASE,
-        ):
-            query = self._rewrite_time_travel(query)
-
-        m = _re.match(
-            r"\s*delete\s+from\s+([A-Za-z_]\w*)(?:\s+where\s+(.+?))?\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            # DELETE without WHERE = remove every row (SQL semantics)
-            t, wh_ = m.group(1), m.group(2)
-            return self._retry_dml(
-                t,
-                lambda: self._dml_rewrite(t, delete_all=wh_ is None,
-                                          delete_where=wh_),
-                pred_text=wh_,
-            )
-
-        m = _re.match(
-            r"\s*update\s+([A-Za-z_]\w*)\s+set\s+(.+?)"
-            r"(?:\s+where\s+(.+?))?\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m and not _re.match(r"\s*update\s+set\b", query, _re.IGNORECASE):
-            t, sc, wh_ = m.group(1), m.group(2), m.group(3)
-            return self._retry_dml(
-                t,
-                lambda: self._dml_rewrite(t, set_clause=sc, where=wh_),
-                pred_text=wh_,
-            )
-
-        m = _re.match(
-            r"\s*insert\s+into\s+([A-Za-z_]\w*)\s*"
-            r"(?:\(([^()]*)\)\s*)?"
-            r"((?:select|with|values)\b.+?)\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            t, sel, cols_ = m.group(1), m.group(3), m.group(2)
-            return self._retry_dml(
-                t,
-                lambda: self._dml_insert(t, sel, columns=cols_),
-                append_only=True,
-            )
-
-        m = _re.match(
-            r"\s*insert\s+overwrite\s+(?:table\s+)?([A-Za-z_]\w*)\s*"
-            r"(?:\(([^()]*)\)\s*)?"
-            r"((?:select|with|values)\b.+?)\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            t, sel, cols_ = m.group(1), m.group(3), m.group(2)
-            return self._retry_dml(
-                t,
-                lambda: self._dml_insert(t, sel, columns=cols_,
-                                         overwrite=True),
-            )
-
-        if _re.match(r"\s*show\s+tables\s*$", query, _re.IGNORECASE):
-            rows = sorted(
-                (t, self.catalog.format(t), self.catalog.path(t))
-                for t in self.catalog.table_names()
-            ) if hasattr(self.catalog, "table_names") else []
-            return self.spark.createDataFrame(
-                rows or [("", "", "")],
-                "table_name string, format string, location string",
-            ).filter("table_name <> ''")
-
-        m = _re.match(
-            r"\s*describe\s+history\s+([A-Za-z_]\w*)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            # DESCRIBE HISTORY t — the version lineage from the
-            # (persisted) log: version number, operation tag, location.
-            # Delta's DESCRIBE HISTORY surface over our version dirs.
-            name = m.group(1)
-            hist = self._table_history.get(name)
-            if hist is not None and hist[-1] != self.catalog.path(name):
-                hist = None  # stale lineage
-            if hist is None:
-                hist = [self.catalog.path(name)]  # raises if unregistered
-                ops = ["base"]
-            else:
-                ops = self._table_ops.get(name) or ["base"] + ["write"] * (
-                    len(hist) - 1
-                )
-            import datetime as _dt
-            import os as _os
-
-            cts = self._table_commit_ts.get(name)
-            if not cts or len(cts) != len(hist):
-                cts = [_os.path.getmtime(p) for p in hist]
-            iso = [
-                _dt.datetime.fromtimestamp(t, _dt.timezone.utc)
-                .isoformat(timespec="seconds")
-                for t in cts
-            ]
-            return self.spark.createDataFrame(
-                [
-                    (i, o, ts, p)
-                    for i, (p, o, ts) in enumerate(zip(hist, ops, iso))
-                ],
-                "version int, operation string, commit_ts string, "
-                "location string",
-            )
-
-        m = _re.match(
-            r"\s*describe\s+detail\s+([A-Za-z_]\w*)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            # DESCRIBE DETAIL t (Delta's surface): one row of table
-            # metadata, all from LOCAL file/state inspection — no scan.
-            import json as _json
-            import os as _os
-
-            from .sources.dml import data_files, has_dv, partition_columns
-
-            name = m.group(1)
-            path = self.catalog.path(name)  # raises if unregistered
-            files = data_files(path)
-            size = 0
-            for f in files:
-                try:
-                    size += _os.path.getsize(f)
-                except OSError:
-                    pass
-            hist = self._table_history.get(name)
-            if hist is not None and hist[-1] != path:
-                hist = None
-            return self.spark.createDataFrame(
-                [
-                    (
-                        name,
-                        self.catalog.format(name),
-                        path,
-                        len(files),
-                        size,
-                        len(hist) if hist else 1,
-                        ",".join(partition_columns(path)),
-                        has_dv(path),
-                        _json.dumps(
-                            self._table_props.get(name, {}), sort_keys=True
-                        ),
-                        _json.dumps(
-                            self._table_constraints.get(name, {}),
-                            sort_keys=True,
-                        ),
-                    )
-                ],
-                "table_name string, format string, location string, "
-                "num_files int, size_bytes bigint, num_versions int, "
-                "partition_columns string, has_dv boolean, "
-                "properties string, constraints string",
-            )
-
-        m = _re.match(
-            r"\s*describe\s+(?:table\s+)?([A-Za-z_]\w*)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            sch = self.catalog.schema(m.group(1))
-            return self.spark.createDataFrame(
-                [(f.name, f.dtype, f.nullable) for f in sch.fields],
-                "col_name string, data_type string, nullable boolean",
-            )
-
-        m = _re.match(
-            r"\s*merge\s+into\s+([A-Za-z_]\w*)\s+(?:as\s+)?([A-Za-z_]\w*)\s+"
-            r"using\s+([A-Za-z_]\w*)\s+(?:as\s+)?([A-Za-z_]\w*)\s+"
-            r"on\s+(.+?)\s+(when\s+.+?)\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            return self._merge_into(
-                m.group(1),
-                m.group(2),
-                m.group(3),
-                m.group(4),
-                m.group(5),
-                self._parse_merge_clauses(m.group(6)),
-            )
-
-        if _re.match(
-            r"\s*show\s+materialized\s+views\s*$", query, _re.IGNORECASE
-        ):
-            rows = [
-                (
-                    mv.name,
-                    mv.source_table or "<subtree>",
-                    ", ".join(mv.group_cols),
-                    ", ".join(c for c, _ in mv.agg_defs),
-                )
-                for mv in getattr(self.catalog, "materialized_views", tuple)()
-            ]
-            return self.spark.createDataFrame(
-                rows,
-                "name: string, source: string, group_cols: string, partials: string",
-            )
-
-        m = _re.match(
-            r"\s*drop\s+materialized\s+view\s+([A-Za-z_][A-Za-z_0-9]*)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            # metadata-only: the rewrite rule stops matching; the backing
-            # table files stay (a warehouse would garbage-collect them)
-            if hasattr(self.catalog, "drop_materialized_view"):
-                self.catalog.drop_materialized_view(m.group(1))
-            return self.spark.range(0)
-
-        m = _re.match(
-            r"\s*truncate\s+table\s+([A-Za-z_]\w*)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            # TRUNCATE TABLE = versioned delete-all (time travel keeps
-            # the pre-truncate versions, exactly like DELETE FROM t)
-            return self._dml_rewrite(m.group(1), delete_all=True)
-
-        m = _re.match(
-            r"\s*alter\s+table\s+([A-Za-z_]\w*)\s+set\s+tblproperties\s*"
-            r"\((.+)\)\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            return self._set_tblproperties(m.group(1), m.group(2))
-
-        m = _re.match(
-            r"\s*show\s+tblproperties\s+([A-Za-z_]\w*)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            table = m.group(1)
-            rows = sorted(self._table_props.get(table, {}).items())
-            return self.spark.createDataFrame(
-                rows or [("", "")], "key string, value string"
-            ).filter("key <> ''")
-
-        m = _re.match(
-            r"\s*alter\s+table\s+([A-Za-z_]\w*)\s+add\s+constraint\s+"
-            r"([A-Za-z_]\w*)\s+check\s*\((.+)\)\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            return self._add_constraint(m.group(1), m.group(2), m.group(3))
-
-        m = _re.match(
-            r"\s*alter\s+table\s+([A-Za-z_]\w*)\s+drop\s+constraint\s+"
-            r"([A-Za-z_]\w*)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            table, name = m.group(1), m.group(2)
-            cons = self._table_constraints.get(table, {})
-            if name not in cons:
-                raise ValueError(
-                    f"table {table!r} has no constraint {name!r}"
-                )
-            del cons[name]
-            if table in self._table_history:
-                self._persist_versions(table)
-            return self.spark.createDataFrame(
-                [(table, name)], "table_name string, dropped string"
-            )
-
-        m = _re.match(
-            r"\s*show\s+constraints\s+(?:for\s+)?([A-Za-z_]\w*)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            table = m.group(1)
-            rows = sorted(self._table_constraints.get(table, {}).items())
-            return self.spark.createDataFrame(
-                rows or [("", "")],
-                "constraint_name string, check_expr string",
-            ).filter("constraint_name <> ''")
-
-        m = _re.match(
-            r"\s*alter\s+table\s+([A-Za-z_]\w*)\s+add\s+column\s+"
-            r"([A-Za-z_]\w*)\s+([A-Za-z_][A-Za-z_0-9 ]*(?:\([0-9, ]*\))?"
-            r"(?:<[^>]*>)?)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            return self._alter_table(
-                m.group(1), add=(m.group(2), m.group(3).strip().lower())
-            )
-
-        m = _re.match(
-            r"\s*alter\s+table\s+([A-Za-z_]\w*)\s+drop\s+column\s+"
-            r"([A-Za-z_]\w*)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            return self._alter_table(m.group(1), drop=m.group(2))
-
-        m = _re.match(
-            r"\s*optimize\s+table\s+([A-Za-z_]\w*)"
-            r"(?:\s+where\s+(.+?))?"
-            r"(?:\s+zorder\s+by\s*\(([^)]*)\))?\s*$",
-            query,
-            _re.IGNORECASE | _re.DOTALL,
-        )
-        if m:
-            return self._optimize_table(
-                m.group(1), zorder=m.group(3), where=m.group(2)
-            )
-
-        m = _re.match(
-            r"\s*vacuum\s+(?:table\s+)?([A-Za-z_]\w*)"
-            r"(?:\s+retain\s+(\d+(?:\.\d+)?)\s+hours?)?"
-            r"(\s+dry\s+run)?\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            return self._vacuum_table(
-                m.group(1),
-                dry_run=bool(m.group(3)),
-                retain_hours=(
-                    float(m.group(2)) if m.group(2) is not None else None
-                ),
-            )
-
-        m = _re.match(
-            r"\s*restore\s+table\s+([A-Za-z_]\w*)\s+to\s+version\s+as\s+of"
-            r"\s+(\d+)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            return self._restore_table(m.group(1), int(m.group(2)))
-
-        m = _re.match(
-            r"\s*restore\s+table\s+([A-Za-z_]\w*)\s+to\s+timestamp\s+as"
-            r"\s+of\s+'([^']+)'\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            # RESTORE to an instant: resolve like TIMESTAMP AS OF, then
-            # the version-addressed restore does the rest
-            name = m.group(1)
-            return self._restore_table(
-                name, self._version_at_timestamp(name, m.group(2))
-            )
-
-        m = _re.match(
-            r"\s*create\s+table\s+([A-Za-z_]\w*)\s+shallow\s+clone\s+"
-            r"([A-Za-z_]\w*)(?:\s+version\s+as\s+of\s+(\d+))?\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            return self._shallow_clone(
-                m.group(1),
-                m.group(2),
-                None if m.group(3) is None else int(m.group(3)),
-            )
-
-        m = _re.match(
-            r"\s*select\s+\*\s+from\s+table_changes\s*\(\s*"
-            r"(?:'([A-Za-z_]\w*)'|([A-Za-z_]\w*))\s*,\s*(\d+)\s*,\s*(\d+)"
-            r"\s*\)\s*$",
-            query,
-            _re.IGNORECASE,
-        )
-        if m:
-            return self._table_changes(
-                m.group(1) or m.group(2), int(m.group(3)), int(m.group(4))
-            )
 
         plan = parse_sql(query, self.catalog, macros=self._sql_macros,
                          views=self._sql_views)
@@ -2502,6 +1718,374 @@ class QueryPlanner:
                 self.optimize_physical(logical), self.spark, self.catalog
             )
         return self.dataframe(plan)
+
+    def _explain(self, query: str, analyze: bool):
+        """``EXPLAIN [ANALYZE] <query>`` — THIS engine's optimized
+        logical + physical plan (with ANALYZE: annotated with actual
+        rows) as a one-column DataFrame; Spark's own plan is a
+        ``df.explain()`` away."""
+        from .sql import parse_sql
+
+        plan = parse_sql(query, self.catalog, macros=self._sql_macros,
+                         views=self._sql_views)
+        text = self.explain_analyze(plan) if analyze else self.explain(plan)
+        return self.spark.createDataFrame(
+            [(line,) for line in text.splitlines()], "plan: string"
+        )
+
+    def _drop_vector_index(self, table: str, vec_col: str):
+        self.catalog.deregister_ann_index(table, vec_col)
+        return self.spark.createDataFrame(
+            [(table, vec_col, "dropped")],
+            "table: string, vec_col: string, action: string",
+        )
+
+    def _drop_tokenizer(self, table: str, text_col: str):
+        self.catalog.deregister_bpe_tokenizer(table, text_col)
+        return self.spark.createDataFrame(
+            [(table, text_col, "dropped")],
+            "table: string, text_col: string, action: string",
+        )
+
+    def _describe(self, table: str):
+        """``DESCRIBE [TABLE] t`` — the catalog's schema as a DataFrame
+        (Spark DDL type strings, the engine's lingua franca)."""
+        sch = self.catalog.schema(table)
+        return self.spark.createDataFrame(
+            [(f.name, f.dtype, bool(f.nullable)) for f in sch.fields],
+            "col_name: string, data_type: string, nullable: boolean",
+        )
+
+    def _analyze_table(self, table: str):
+        """``ANALYZE TABLE t [COMPUTE STATISTICS]`` — force-refresh the
+        catalog's statistics for ``t`` and return them as a DataFrame
+        (column-level ndv / top_count / min / max, plus a __table__ row
+        carrying row count and avg width).  The same stats the cost
+        model plans on — surfaced to the user the way Spark/metastore
+        ANALYZE does."""
+        st = (
+            self.catalog.analyze(table)
+            if hasattr(self.catalog, "analyze")
+            else self.catalog.statistics(table)
+        )
+        rows = [
+            (
+                "__table__",
+                int(st.row_count),
+                0,
+                None,
+                None,
+                float(st.avg_row_bytes),
+            )
+        ] + [
+            (
+                c,
+                int(cs.ndv),
+                int(cs.top_count),
+                None if cs.min is None else float(cs.min),
+                None if cs.max is None else float(cs.max),
+                None,
+            )
+            for c, cs in st.columns
+        ]
+        return self.spark.createDataFrame(
+            rows,
+            "column_name string, ndv bigint, top_count bigint, "
+            "min_v double, max_v double, avg_row_bytes double",
+        )
+
+    def _create_function(self, name: str, body: str, params: str = ""):
+        """``CREATE [OR REPLACE] FUNCTION name(p1, p2) AS <expr>`` — a
+        SQL MACRO (DuckDB's CREATE MACRO).  The body is parsed to
+        expression IR HERE, once (nested macro calls freeze at
+        definition time, so expansion can never cycle); every later
+        call site substitutes its parsed arguments into the body
+        structurally inside the parser (sql.py ``_call`` /
+        ``_substitute_params``).  Macros cost nothing at run time."""
+        from .sql import _Parser
+
+        name = name.lower()
+        params = [p.strip() for p in params.split(",") if p.strip()]
+        bp = _Parser(body, self.catalog, macros=self._sql_macros)
+        expr = bp._expr()
+        if bp.peek().kind != "eof":
+            raise ValueError(
+                f"CREATE FUNCTION {name}: trailing input after body"
+            )
+        self._sql_macros[name] = (params, expr)
+        return self.spark.createDataFrame(
+            [(name, len(params))], "function string, n_args int"
+        )
+
+    def _create_view(self, replace: bool, name: str, body: str):
+        """``CREATE [OR REPLACE] VIEW name AS <query>`` — a LOGICAL view
+        (vs the engine's MATERIALIZED views): the text re-parses at each
+        reference (late binding, standard SQL), costs nothing until
+        queried, and pushes filters/pruning through because the
+        reference inlines the view's plan subtree.  Persisted in
+        <warehouse>/_views.json across sessions."""
+        from .operators.extensions import LogicalSink
+        from .sql import parse_statement, parse_sql
+
+        name = name.lower()
+        if name in self._sql_views and not replace:
+            raise ValueError(
+                f"view {name!r} already exists "
+                "(use CREATE OR REPLACE VIEW)"
+            )
+        try:
+            self.catalog.path(name)
+        except Exception:
+            pass
+        else:
+            raise ValueError(
+                f"view name {name!r} collides with a registered table"
+            )
+        # validate NOW, with the view itself invisible (a view cannot
+        # reference itself; replace-cycles through other views are
+        # caught by the parser's nesting bound)
+        plan = None
+        if parse_statement(body).kind == "query":
+            probe = dict(self._sql_views)
+            probe.pop(name, None)
+            plan = parse_sql(body, self.catalog, macros=self._sql_macros,
+                             views=probe)
+        if plan is None or isinstance(plan.root.operator, LogicalSink):
+            raise ValueError(
+                f"CREATE VIEW {name}: body must be a query, not DDL"
+            )
+        self._sql_views[name] = body.strip()
+        self._save_views()
+        return self.spark.createDataFrame([(name,)], "view string")
+
+    def _drop_view(self, if_exists: bool, name: str):
+        name = name.lower()
+        if name in self._sql_views:
+            del self._sql_views[name]
+            self._save_views()
+        elif not if_exists:
+            raise ValueError(f"view {name!r} does not exist")
+        return self.spark.createDataFrame([(name,)], "view string")
+
+    def _show_views(self):
+        return self.spark.createDataFrame(
+            sorted(self._sql_views.items()),
+            "view string, definition string",
+        )
+
+    def _select_as_of(self, table: str, version: Optional[int] = None,
+                      timestamp: Optional[str] = None):
+        """``SELECT * FROM t VERSION AS OF n`` / ``TIMESTAMP AS OF 'ts'``
+        — TIME TRAVEL over the copy-on-write lineage: version 0 is the
+        snapshot before the first rewrite, each DML/MERGE adds one.  Old
+        version dirs are never touched by later rewrites (the COW
+        contract), so any recorded version reads back exactly — Delta's
+        VERSION AS OF over our version dirs, DV-aware.  TIMESTAMP AS OF
+        reads the latest version committed at or before the instant
+        (``_version_at_timestamp``).  DV-carrying versions read only
+        through this form."""
+        from .sources.dml import has_dv
+
+        if timestamp is not None:
+            version = self._version_at_timestamp(table, timestamp)
+        path = self._version_path(table, version)
+        if has_dv(path):
+            # a DV'd version's content is files MINUS its sidecar;
+            # dv_scan confines the anti-join to the sidecar's files
+            from .execute import dv_scan
+
+            return dv_scan(self.spark, path)
+        return read_parquet(self.spark, path)
+
+    def _delete(self, table: str, where: Optional[str] = None):
+        """``DELETE FROM t [WHERE p]`` — without WHERE every row goes
+        (SQL semantics)."""
+        return self._retry_dml(
+            table,
+            lambda: self._dml_rewrite(table, delete_all=where is None,
+                                      delete_where=where),
+            pred_text=where,
+        )
+
+    def _update(self, table: str, sets: dict, where: Optional[str] = None):
+        return self._retry_dml(
+            table,
+            lambda: self._dml_rewrite(table, sets=sets, where=where),
+            pred_text=where,
+        )
+
+    def _insert(self, table: str, source: str, values: bool,
+                columns: Optional[str] = None):
+        return self._retry_dml(
+            table,
+            lambda: self._dml_insert(table, source, columns=columns,
+                                     values=values),
+            append_only=True,
+        )
+
+    def _insert_overwrite(self, table: str, source: str, values: bool,
+                          columns: Optional[str] = None):
+        return self._retry_dml(
+            table,
+            lambda: self._dml_insert(table, source, columns=columns,
+                                     overwrite=True, values=values),
+        )
+
+    def _show_tables(self):
+        rows = sorted(
+            (t, self.catalog.format(t), self.catalog.path(t))
+            for t in self.catalog.table_names()
+        ) if hasattr(self.catalog, "table_names") else []
+        return self.spark.createDataFrame(
+            rows or [("", "", "")],
+            "table_name string, format string, location string",
+        ).filter("table_name <> ''")
+
+    def _describe_history(self, table: str):
+        """``DESCRIBE HISTORY t`` — the version lineage from the
+        (persisted) log: version number, operation tag, commit time,
+        location.  Delta's DESCRIBE HISTORY surface over our version
+        dirs."""
+        import datetime as _dt
+        import os as _os
+
+        hist = self._table_history.get(table)
+        if hist is not None and hist[-1] != self.catalog.path(table):
+            hist = None  # stale lineage
+        if hist is None:
+            hist = [self.catalog.path(table)]  # raises if unregistered
+            ops = ["base"]
+        else:
+            ops = self._table_ops.get(table) or ["base"] + ["write"] * (
+                len(hist) - 1
+            )
+        cts = self._table_commit_ts.get(table)
+        if not cts or len(cts) != len(hist):
+            cts = [_os.path.getmtime(p) for p in hist]
+        iso = [
+            _dt.datetime.fromtimestamp(t, _dt.timezone.utc)
+            .isoformat(timespec="seconds")
+            for t in cts
+        ]
+        return self.spark.createDataFrame(
+            [
+                (i, o, ts, p)
+                for i, (p, o, ts) in enumerate(zip(hist, ops, iso))
+            ],
+            "version int, operation string, commit_ts string, "
+            "location string",
+        )
+
+    def _describe_detail(self, table: str):
+        """``DESCRIBE DETAIL t`` (Delta's surface): one row of table
+        metadata, all from LOCAL file/state inspection — no scan."""
+        import json as _json
+        import os as _os
+
+        from .sources.dml import data_files, has_dv, partition_columns
+
+        path = self.catalog.path(table)  # raises if unregistered
+        files = data_files(path)
+        size = 0
+        for f in files:
+            try:
+                size += _os.path.getsize(f)
+            except OSError:
+                pass
+        hist = self._table_history.get(table)
+        if hist is not None and hist[-1] != path:
+            hist = None
+        return self.spark.createDataFrame(
+            [
+                (
+                    table,
+                    self.catalog.format(table),
+                    path,
+                    len(files),
+                    size,
+                    len(hist) if hist else 1,
+                    ",".join(partition_columns(path)),
+                    has_dv(path),
+                    _json.dumps(
+                        self._table_props.get(table, {}), sort_keys=True
+                    ),
+                    _json.dumps(
+                        self._table_constraints.get(table, {}),
+                        sort_keys=True,
+                    ),
+                )
+            ],
+            "table_name string, format string, location string, "
+            "num_files int, size_bytes bigint, num_versions int, "
+            "partition_columns string, has_dv boolean, "
+            "properties string, constraints string",
+        )
+
+    def _show_materialized_views(self):
+        rows = [
+            (
+                mv.name,
+                mv.source_table or "<subtree>",
+                ", ".join(mv.group_cols),
+                ", ".join(c for c, _ in mv.agg_defs),
+            )
+            for mv in getattr(self.catalog, "materialized_views", tuple)()
+        ]
+        return self.spark.createDataFrame(
+            rows,
+            "name: string, source: string, group_cols: string, partials: string",
+        )
+
+    def _drop_materialized_view(self, name: str):
+        # metadata-only: the rewrite rule stops matching; the backing
+        # table files stay (a warehouse would garbage-collect them)
+        if hasattr(self.catalog, "drop_materialized_view"):
+            self.catalog.drop_materialized_view(name)
+        return self.spark.range(0)
+
+    def _truncate(self, table: str):
+        """``TRUNCATE TABLE t`` = versioned delete-all (time travel keeps
+        the pre-truncate versions, exactly like DELETE FROM t)."""
+        return self._dml_rewrite(table, delete_all=True)
+
+    def _show_tblproperties(self, table: str):
+        rows = sorted(self._table_props.get(table, {}).items())
+        return self.spark.createDataFrame(
+            rows or [("", "")], "key string, value string"
+        ).filter("key <> ''")
+
+    def _drop_constraint(self, table: str, name: str):
+        cons = self._table_constraints.get(table, {})
+        if name not in cons:
+            raise ValueError(f"table {table!r} has no constraint {name!r}")
+        del cons[name]
+        if table in self._table_history:
+            self._persist_versions(table)
+        return self.spark.createDataFrame(
+            [(table, name)], "table_name string, dropped string"
+        )
+
+    def _show_constraints(self, table: str):
+        rows = sorted(self._table_constraints.get(table, {}).items())
+        return self.spark.createDataFrame(
+            rows or [("", "")],
+            "constraint_name string, check_expr string",
+        ).filter("constraint_name <> ''")
+
+    def _add_column(self, table: str, column: str, dtype: str):
+        return self._alter_table(table, add=(column, dtype.strip().lower()))
+
+    def _drop_column(self, table: str, column: str):
+        return self._alter_table(table, drop=column)
+
+    def _restore(self, table: str, version: Optional[int] = None,
+                 timestamp: Optional[str] = None):
+        """``RESTORE TABLE t TO VERSION AS OF n`` / ``TO TIMESTAMP AS OF
+        'ts'`` — an instant resolves like TIMESTAMP AS OF, then the
+        version-addressed restore does the rest."""
+        if timestamp is not None:
+            version = self._version_at_timestamp(table, timestamp)
+        return self._restore_table(table, version)
 
     def _retry_dml(self, table, stmt_fn, pred_text=None,
                    append_only=False):
@@ -2769,29 +2353,6 @@ class QueryPlanner:
             "files_rewritten int",
         )
 
-    @staticmethod
-    def _parse_set_clause(set_clause: str) -> dict:
-        """``SET c1 = e1, c2 = e2`` → {col: expr_text}, splitting on
-        top-level commas only (parens nest)."""
-        parts, depth, cur = [], 0, ""
-        for ch in set_clause:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append(cur)
-                cur = ""
-            else:
-                cur += ch
-        if cur.strip():
-            parts.append(cur)
-        sets = {}
-        for part in parts:
-            c, e = part.split("=", 1)
-            sets[c.strip()] = e.strip()
-        return sets
-
     def _prune_rewrite_set(self, table, fmt, schema, pred_text):
         """File-level pruning for a predicated rewrite (VERDICT r7 item
         3): returns ``(kept_files, rewrite_df)`` where ``kept_files``
@@ -2855,7 +2416,7 @@ class QueryPlanner:
         return kept, df
 
     def _dml_rewrite(
-        self, table, delete_where=None, set_clause=None, where=None,
+        self, table, delete_where=None, sets=None, where=None,
         delete_all=False,
     ):
         """``DELETE FROM t WHERE …`` / ``UPDATE t SET … [WHERE …]`` —
@@ -2888,7 +2449,7 @@ class QueryPlanner:
             # merge-on-read: write a deletion vector, rewrite nothing
             # (predicate-less UPDATE falls through — rewriting every
             # row is the honest cost there, and CoW does it in place)
-            return self._dml_mor(table, delete_where, set_clause, where)
+            return self._dml_mor(table, delete_where, sets, where)
         pcols = partition_columns(old_path) if fmt == "parquet" else []
         df = ex._base_scan(table, fmt)
         pred_text = delete_where if delete_where is not None else where
@@ -2904,7 +2465,6 @@ class QueryPlanner:
                 ~self._sql_expr_column(delete_where).eqNullSafe(F.lit(True))
             )
         else:
-            sets = self._parse_set_clause(set_clause)
             cond = self._sql_expr_column(where) if where else F.lit(True)
             out = df.select(
                 *[
@@ -2918,7 +2478,7 @@ class QueryPlanner:
                     for f in df.schema.fields
                 ]
             )
-        if set_clause is not None:
+        if sets is not None:
             # UPDATE can break a CHECK; DELETE never can — validate the
             # rewritten slice (the only rows whose values change)
             self._enforce_constraints(table, out)
@@ -2940,7 +2500,7 @@ class QueryPlanner:
         return self.dataframe(LogicalPlanBuilder().scan(table).build())
 
     def _dml_insert(self, table, select_sql, columns=None,
-                    overwrite=False):
+                    overwrite=False, values=False):
         """``INSERT INTO t [(c1, …)] SELECT …|VALUES (…), …`` —
         DELTA-SIZED append (VERDICT r7 item 2): the source query runs
         through the full optimizer pipeline and its rows are written as
@@ -2961,9 +2521,8 @@ class QueryPlanner:
         REPLACES the table's contents as a new ``overwrite``-tagged
         version — no previous file is carried forward, previous
         versions stay time-travelable, and the same positional column
-        mapping / NULL fill / schema cast applies."""
-        import re as _re
-
+        mapping / NULL fill / schema cast applies.  ``values`` says
+        ``select_sql`` is a ``VALUES (…), …`` list."""
         from .execute import SparkExecutor
         from .sql import parse_sql
 
@@ -2979,12 +2538,9 @@ class QueryPlanner:
         # unknown-column validation happens in insert_dataframe, which
         # also owns the schema_evolution='auto' path (r9) — explicitly
         # listed new columns auto-ADD there instead of erroring here
-        vm = _re.match(r"\s*values\b(.+)$", select_sql,
-                       _re.IGNORECASE | _re.DOTALL)
-        if vm:
+        if values:
             select_sql = (
-                f"select * from (values {vm.group(1)}) "
-                f"__ins({', '.join(target)})"
+                f"select * from ({select_sql}) __ins({', '.join(target)})"
             )
         new_rows = self.dataframe(
             parse_sql(select_sql, self.catalog, macros=self._sql_macros,
@@ -3161,106 +2717,8 @@ class QueryPlanner:
         self.catalog.register(table, hist[-1], keep_schema_override=True)
         self._persist_versions(table)
 
-    def _parse_merge_clauses(self, text: str):
-        """Split a MERGE statement's WHEN section into ordered clauses
-        ``(kind, condition_or_None, action)`` — Delta's multi-clause
-        grammar: any number of
-
-        * ``WHEN MATCHED [AND cond] THEN UPDATE SET … | DELETE``
-          (kind ``"m"``),
-        * ``WHEN NOT MATCHED [BY TARGET] [AND cond] THEN INSERT *``
-          (kind ``"nmt"``), and
-        * ``WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET … |
-          DELETE`` (kind ``"nms"``, r9) — target rows with NO source
-          match, Delta's sync-deletion arm,
-
-        evaluated in statement order, first applicable clause wins.
-        Clause boundaries are TOP-LEVEL ``WHEN … MATCHED`` tokens only
-        (quote/paren-aware scan): a string literal or parenthesized
-        subexpression containing the text 'when matched' no longer
-        splits the statement mid-literal."""
-        import re as _re
-
-        mask = _top_level_mask(text)
-        starts = [
-            m.start()
-            for m in _re.finditer(
-                r"(?i)\bwhen\s+(?:not\s+)?matched\b", text
-            )
-            if mask[m.start()]
-        ]
-        if starts and text[: starts[0]].strip():
-            raise ValueError(
-                f"MERGE: unexpected text before first WHEN clause: "
-                f"{text[: starts[0]].strip()!r}"
-            )
-        bounds = starts + [len(text)]
-        chunks = [
-            text[bounds[i]:bounds[i + 1]]
-            for i in range(len(starts))
-            if text[bounds[i]:bounds[i + 1]].strip()
-        ]
-        clauses = []
-        for ch in chunks:
-            cmask = _top_level_mask(ch)
-            tm = next(
-                (
-                    m
-                    for m in _re.finditer(r"(?i)\bthen\b", ch)
-                    if cmask[m.start()]
-                ),
-                None,
-            )
-            if tm is None:
-                raise ValueError(f"MERGE: cannot parse clause {ch!r}")
-            head, action = ch[: tm.start()], ch[tm.end():].strip()
-            cm = _re.match(
-                r"\s*when\s+(not\s+)?matched"
-                r"(?:\s+by\s+(source|target))?"
-                r"(?:\s+and\s+(.+?))?\s*$",
-                head,
-                _re.IGNORECASE | _re.DOTALL,
-            )
-            if not cm:
-                raise ValueError(f"MERGE: cannot parse clause {ch!r}")
-            negated = cm.group(1) is not None
-            by = (cm.group(2) or "").lower()
-            cond = cm.group(3)
-            if not negated and by:
-                raise ValueError(
-                    f"MERGE: WHEN MATCHED takes no BY {by.upper()} "
-                    "qualifier (only NOT MATCHED does)"
-                )
-            if negated and by == "source":
-                kind = "nms"
-            elif negated:
-                kind = "nmt"  # BY TARGET is the default NOT MATCHED
-            else:
-                kind = "m"
-            al = " ".join(action.lower().split())
-            if kind in ("m", "nms") and al != "delete" and not al.startswith(
-                "update set "
-            ):
-                which = (
-                    "WHEN MATCHED"
-                    if kind == "m"
-                    else "WHEN NOT MATCHED BY SOURCE"
-                )
-                raise ValueError(
-                    f"MERGE: {which} supports UPDATE SET … or DELETE, "
-                    f"got {action!r}"
-                )
-            if kind == "nmt" and al != "insert *":
-                raise ValueError(
-                    "MERGE: WHEN NOT MATCHED supports INSERT *, "
-                    f"got {action!r}"
-                )
-            clauses.append((kind, cond, action))
-        if not clauses:
-            raise ValueError("MERGE: at least one WHEN clause required")
-        return clauses
-
-    def _merge_into(self, target, t_alias, source, s_alias, on, clauses):
+    def _merge_into(self, target, t_alias, source, s_alias, on, clauses,
+                    keys, prune_keys):
         """SQL ``MERGE INTO`` — the Delta/Iceberg upsert surface, built
         from the engine's primitives: ONE full-outer equi-join between
         target and source, per-column CASE (matched → UPDATE SET exprs
@@ -3272,8 +2730,9 @@ class QueryPlanner:
         table.  Contract: the ON condition's key columns are non-null
         (they define row presence), and INSERT * requires the source to
         carry every target column by name.  ``clauses`` is the ordered
-        multi-clause WHEN list (``_parse_merge_clauses``, Delta's
-        grammar): any number of ``WHEN MATCHED [AND cond] THEN UPDATE
+        multi-clause WHEN list of ``(kind, cond, sets)`` (sql.py
+        ``_merge_clause``, Delta's grammar): any number of ``WHEN
+        MATCHED [AND cond] THEN UPDATE
         SET … | DELETE`` — first applicable clause wins, a matched row
         no clause covers keeps its values — ``WHEN NOT MATCHED [AND
         cond] THEN INSERT *`` — a source-only row no clause covers is
@@ -3281,9 +2740,11 @@ class QueryPlanner:
         — and (r9) ``WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE
         SET … | DELETE`` — target rows with no source match (Delta's
         sync-deletion arm; its presence disables source-range file
-        pruning, since every file can hold unmatched rows)."""
-        import re as _re
-
+        pruning, since every file can hold unmatched rows).  ``keys``
+        is the ``(target, source)`` column pair of ON's first
+        cross-alias equality, which defines row presence;
+        ``prune_keys`` is such a pair only when it is a necessary
+        condition of ON (sql.py ``_merge_on``), else None."""
         from pyspark.sql import functions as F
 
         from .execute import SparkExecutor
@@ -3340,20 +2801,13 @@ class QueryPlanner:
             wanted: list = []
             if any(kind == "nmt" for kind, _c, _a in clauses):
                 wanted += [c for c in s_types if c not in tcols]
-            for kind, _c, action in clauses:
-                if kind not in ("m", "nms"):
+            for kind, _c, sets in clauses:
+                if kind not in ("m", "nms") or sets is None:
                     continue
-                al = " ".join(action.lower().split())
-                if al == "delete":
-                    continue
-                body = _re.sub(
-                    r"^update\s+set\s+", "", action.strip(),
-                    flags=_re.IGNORECASE,
-                )
-                if body.strip() == "*":
+                if sets == "*":
                     wanted += [c for c in s_types if c not in tcols]
                 else:
-                    for key in self._parse_set_clause(body):
+                    for key in sets:
                         bare = key.split(".")[-1].strip()
                         if bare not in tcols and bare in s_types:
                             wanted.append(bare)
@@ -3364,20 +2818,7 @@ class QueryPlanner:
             if added:
                 tbase = ex._base_scan(target, tfmt)
                 tschema = tbase.schema
-        # presence keys: first `t.x = s.y` equality in the ON condition
-        km = _re.search(
-            rf"\b{t_alias}\.([A-Za-z_]\w*)\s*=\s*{s_alias}\.([A-Za-z_]\w*)"
-            rf"|\b{s_alias}\.([A-Za-z_]\w*)\s*=\s*{t_alias}\.([A-Za-z_]\w*)",
-            on,
-            _re.IGNORECASE,
-        )
-        if not km:
-            raise ValueError(
-                "MERGE INTO needs an equality between target and source "
-                f"keys in ON (got {on!r})"
-            )
-        tk = km.group(1) or km.group(4)
-        sk = km.group(3) or km.group(2)
+        tk, sk = keys
         # file pruning by the SOURCE's key range (VERDICT r7 item 3):
         # a target file whose key band cannot intersect [min(sk),
         # max(sk)] has no matched row, and inserts only create NEW
@@ -3386,28 +2827,12 @@ class QueryPlanner:
         # typically key-clustered deltas, so this confines the
         # full-outer join to the overlapping slice of the target.
         #
-        # SAFETY GATE (r9, ADVICE): pruning by an equality is only
-        # sound when that equality is a NECESSARY condition of ON —
-        # i.e. ON is a pure conjunction and the equality is a
-        # top-level conjunct.  Under a disjunctive ON (``t.k = s.k OR
-        # t.alt = s.alt``) a file outside the k-band can still hold
-        # matched rows via the other disjunct; pruning it would
-        # silently skip their UPDATE/DELETE.  ``_on_conjunction_parts``
-        # returns None on any top-level OR → full-table join.
-        eq_rx = _re.compile(
-            rf"^\s*(?:{t_alias}\.([A-Za-z_]\w*)\s*=\s*{s_alias}\.([A-Za-z_]\w*)"
-            rf"|{s_alias}\.([A-Za-z_]\w*)\s*=\s*{t_alias}\.([A-Za-z_]\w*))\s*$",
-            _re.IGNORECASE,
-        )
-        prune_tk = prune_sk = None
-        conj_parts = _on_conjunction_parts(on)
-        if conj_parts is not None:
-            for part in conj_parts:
-                em = eq_rx.match(_strip_outer_parens(part))
-                if em:
-                    prune_tk = em.group(1) or em.group(4)
-                    prune_sk = em.group(3) or em.group(2)
-                    break
+        # SAFETY GATE (r9, ADVICE): ``prune_keys`` is None unless ON is
+        # a pure conjunction with a ``t.x = s.y`` top-level conjunct —
+        # under a disjunctive ON a file outside the k-band can still
+        # hold matched rows; pruning it would silently skip their
+        # UPDATE/DELETE.
+        prune_tk, prune_sk = prune_keys or (None, None)
         if any(kind == "nms" for kind, _c, _a in clauses):
             # WHEN NOT MATCHED BY SOURCE touches target rows with NO
             # source match — every file can hold them, so source-range
@@ -3482,44 +2907,27 @@ class QueryPlanner:
                 else F.lit(True)
             )
 
-        def _parse_update_or_delete(action, kind="m"):
-            al = " ".join(action.lower().split())
-            if al == "delete":
-                return None
-            body = _re.sub(
-                r"^update\s+set\s+",
-                "",
-                action.strip(),
-                flags=_re.IGNORECASE,
-            )
-            if body.strip() == "*":
-                # UPDATE SET * (Delta): every target column the source
-                # carries by name takes the source value; target-only
-                # columns keep.  Meaningless for BY SOURCE (no source
-                # row to read) — Delta rejects it too.
-                if kind == "nms":
-                    raise ValueError(
-                        "MERGE: WHEN NOT MATCHED BY SOURCE cannot "
-                        "UPDATE SET * (no source row)"
-                    )
-                tcols_now = {f.name for f in tschema.fields}
-                return {
-                    f.name: f"{s_alias}.{f.name}"
-                    for f in sbase.schema.fields
-                    if f.name in tcols_now
-                }
-            return self._parse_set_clause(body)
+        def _set_map(sets):
+            # UPDATE SET * (Delta): every target column the source
+            # carries by name takes the source value; target-only
+            # columns keep
+            if sets != "*":
+                return sets
+            tcols_now = {f.name for f in tschema.fields}
+            return {
+                f.name: f"{s_alias}.{f.name}"
+                for f in sbase.schema.fields
+                if f.name in tcols_now
+            }
 
         m_clauses = []  # (cond Column, sets dict | None-for-delete)
         nm_conds = []  # insert-clause conditions, in order
         nms_clauses = []  # not-matched-BY-SOURCE: (cond, sets|None)
-        for kind, cond, action in clauses:
+        for kind, cond, sets in clauses:
             if kind == "m":
-                m_clauses.append((ccond(cond), _parse_update_or_delete(action)))
+                m_clauses.append((ccond(cond), _set_map(sets)))
             elif kind == "nms":
-                nms_clauses.append(
-                    (ccond(cond), _parse_update_or_delete(action, "nms"))
-                )
+                nms_clauses.append((ccond(cond), _set_map(sets)))
             else:
                 nm_conds.append(ccond(cond))
 

@@ -27,6 +27,7 @@ from ..operators.properties import (
     Schema,
     Statistics,
 )
+from .dml import data_files
 from .parquet_read import footer_schema, spark_schema, spark_type, table_stamp
 
 __all__ = ["Catalog", "testdata_catalog", "TESTDATA_TABLES"]
@@ -458,8 +459,6 @@ class Catalog:
         if struct is None:
             import pyarrow.dataset as ds
 
-            from .dml import data_files
-
             files = data_files(path)
             try:
                 footer = {f.name: f.dataType for f in footer_schema(files[0])}
@@ -511,12 +510,13 @@ class Catalog:
         if name not in self._stats:
             t0 = time.perf_counter()
             fmt = self.format(name)
+            files = self._files(name)
             raw_bytes = 0.0
             columns = ()
             if fmt == "parquet":
                 import pyarrow.parquet as pq
 
-                footers = [pq.read_metadata(f) for f in self._files(name)]
+                footers = [pq.read_metadata(f) for f in files]
                 rows = sum(md.num_rows for md in footers)
                 # uncompressed in-memory size from the footer — what a
                 # broadcast of this table would actually cost
@@ -527,26 +527,24 @@ class Catalog:
                         for rg in range(md.num_row_groups)
                     )
                 )
-                columns = self._column_ndv(name, footers)
+                columns = self._column_ndv(name, footers, files)
             elif fmt == "orc":
                 import pyarrow.orc as po
 
-                rows = 0
-                for f in self._files(name):
-                    rows += po.ORCFile(f).nrows
+                rows = sum(po.ORCFile(f).nrows for f in files)
             else:
                 import duckdb
 
                 reader = "read_csv_auto" if fmt == "csv" else "read_json_auto"
                 rows = sum(
                     duckdb.sql(f"select count(*) from {reader}('{f}')").fetchone()[0]
-                    for f in self._files(name)
+                    for f in files
                 )
             if not raw_bytes:
                 # csv/json/orc: file size on disk approximates row width
                 try:
                     raw_bytes = float(
-                        sum(os.path.getsize(f) for f in self._files(name))
+                        sum(os.path.getsize(f) for f in files)
                     )
                 except OSError:
                     raw_bytes = 0.0
@@ -558,13 +556,13 @@ class Catalog:
             self.stats_seconds += time.perf_counter() - t0
         return self._stats[name]
 
-    def _column_ndv(self, name: str, footers=None):
+    def _column_ndv(self, name: str, footers=None, files=None):
         """Per-column statistics of a parquet table's scalar columns
         (ndv, numeric min/max, top_count, equi-height histogram) from one
         read of the table version:
 
-        * the footers (``footers``, as ``statistics`` read them, else
-          read here) give numeric min/max over the first 64 files and
+        * the footers (``footers`` of ``files``, as ``statistics`` read
+          them, else read here) give numeric min/max over the first 64 files and
           the first file's ``distinct_count`` where the writer recorded
           it;
         * one DuckDB ``approx_count_distinct`` query fills the ndv of
@@ -580,7 +578,8 @@ class Catalog:
         if self.format(name) != "parquet":
             return ()
         try:
-            files = self._files(name)
+            if files is None:
+                files = self._files(name)
             if not files or not os.path.isfile(files[0]):
                 return ()
         except OSError:
@@ -698,27 +697,12 @@ class Catalog:
         return out
 
     def _files(self, name: str):
+        """The table's data files (``dml.data_files``: hidden paths such
+        as deletion-vector sidecars are not table data; recursive, so
+        hive-partitioned sinks' ``key=value`` dirs are listed)."""
         p = self.path(name)
-        suffix = {"parquet": ".parquet", "orc": ".orc", "csv": ".csv", "json": ".json"}[
-            self.format(name)
-        ]
         if os.path.isdir(p):
-            # recursive: hive-partitioned sinks nest files under key=value dirs
-            import glob as _glob
-
-            files = sorted(
-                f
-                for f in _glob.glob(os.path.join(p, "**", f"*{suffix}"), recursive=True)
-                if os.path.isfile(f)
-            )
-            if files:
-                return files
-            # spark sinks write part-* files without tidy suffixes sometimes
-            return sorted(
-                f
-                for f in _glob.glob(os.path.join(p, "**", "part-*"), recursive=True)
-                if os.path.isfile(f) and not f.endswith(".crc")
-            )
+            return data_files(p, "." + self.format(name))
         return [p]
 
     def _first_file(self, name: str) -> str:

@@ -165,26 +165,24 @@ def _under_hidden_dir(path: str, root: str) -> bool:
     )
 
 
-def data_files(path: str) -> list:
-    """The parquet data files of a table directory (sorted; sidecars,
+def data_files(path: str, suffix: str = ".parquet") -> list:
+    """The data files of a table directory (sorted; sidecars,
     _SUCCESS, checksums and ``_``-prefixed dirs like the ``_dv``
     deletion-vector sidecar excluded — the same hidden-path convention
-    Spark's own listing applies).  A single-file registration returns
-    that file."""
+    Spark's own listing applies): the ``*<suffix>`` files, else the
+    ``part-*`` files of a sink that wrote no suffix.  A single-file
+    registration returns that file."""
     if not os.path.isdir(path):
         return [path] if os.path.isfile(path) else []
-    files = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f) and not _under_hidden_dir(f, path)
-    ]
-    if not files:
+    for pattern in (f"*{suffix}", "part-*"):
         files = [
             f
-            for f in glob.glob(os.path.join(path, "**", "part-*"), recursive=True)
+            for f in glob.glob(os.path.join(path, "**", pattern), recursive=True)
             if os.path.isfile(f) and not f.endswith(".crc")
             and not _under_hidden_dir(f, path)
         ]
+        if files:
+            break
     return sorted(files)
 
 

@@ -18,33 +18,43 @@ Expressions: qualified columns, numeric/string literals, arithmetic,
 comparisons, AND/OR, function calls (incl. aggregates), ``COUNT(*)``,
 ``expr AS alias``, parentheses.  ``SELECT *`` expands through the
 catalog like the reference's scan binding (``operator/table_scan.rs:61``).
+
+``parse_statement`` reads the same tokens for the planner's front door:
+DDL, DML and utility statements match a table of statement forms
+(``_STATEMENT_FORMS``); anything else is a query for ``parse_sql``.
 """
 
 from __future__ import annotations
 
 import re
-from typing import List, Optional
+from typing import List, NamedTuple, Optional
 
 from .expr import Alias, BinOp, Cast, Col, Expr, Func, Lit, SortKey
 from .operators.logical import JoinType, LogicalFilter, WindowExprDef
 from .plans.plan import LogicalPlanBuilder, Plan
 
-__all__ = ["parse_sql", "SqlError"]
+__all__ = ["parse_sql", "parse_statement", "Statement", "SqlError"]
 
 
 class SqlError(ValueError):
     pass
 
 
+# ``other`` is the catch-all: a quoted identifier or any one character the
+# grammar has no token for (``|``, ``;``, ...).  No parser rule accepts it,
+# so a query holding one is rejected, while a DML expression holding one
+# still reaches Spark's own parser through ``F.expr``.
 _TOKEN_RE = re.compile(
     r"""
     (?P<ws>\s+)
+  | (?P<comment>--[^\n]*|/\*.*?\*/)
   | (?P<number>\d+(?:\.\d+)?)
   | (?P<string>'(?:[^']|'')*')
   | (?P<ident>[A-Za-z_][A-Za-z_0-9]*)
   | (?P<op><=>|<=|>=|<>|!=|::|=|<|>|\(|\)|,|\.|\*|\+|-|/|%)
+  | (?P<other>"(?:[^"]|"")*"|`[^`]*`|\S)
     """,
-    re.VERBOSE,
+    re.VERBOSE | re.DOTALL,
 )
 
 _KEYWORDS = {
@@ -279,68 +289,56 @@ def _expand_ign_window(func, partition_by, order_by, frame):
 
 
 class _Tok:
-    __slots__ = ("kind", "value")
+    __slots__ = ("kind", "value", "pos")
 
-    def __init__(self, kind: str, value: str):
+    def __init__(self, kind: str, value: str, pos: int):
         self.kind = kind
         self.value = value
+        #: offset of the token's first character in the source text
+        self.pos = pos
 
     def __repr__(self):
         return f"{self.kind}:{self.value}"
 
 
-def _tokenize(sql: str) -> List[_Tok]:
+def _tokenize(sql: str, hints: Optional[dict] = None) -> List[_Tok]:
+    """The engine's one SQL lexer.  Comments are dropped; the join
+    strategy hints of a ``/*+ ... */`` comment (the Spark hint surface:
+    ``BROADCAST(t)``, ``MERGE(t)`` / ``SHUFFLEMERGE(t)``,
+    ``SHUFFLE_HASH(t)``) are added to ``hints`` when it is given.  A
+    quote inside a comment, or a comment marker inside a literal, is
+    never syntax: each is part of one token."""
     out: List[_Tok] = []
-    pos = 0
-    while pos < len(sql):
-        m = _TOKEN_RE.match(sql, pos)
-        if not m:
-            raise SqlError(f"cannot tokenize at: {sql[pos:pos + 20]!r}")
-        pos = m.end()
-        kind = m.lastgroup
+    for m in _TOKEN_RE.finditer(sql):
+        kind, v = m.lastgroup, m.group()
         if kind == "ws":
             continue
-        v = m.group()
+        if kind == "comment":
+            if hints is not None and v.startswith("/*+"):
+                for hm in re.finditer(
+                    r"(broadcast|shufflemerge|merge|shuffle_hash)\s*\(([^)]*)\)",
+                    v,
+                    re.IGNORECASE,
+                ):
+                    hk = hm.group(1).lower()
+                    hk = "merge" if hk == "shufflemerge" else hk
+                    for t in hm.group(2).split(","):
+                        if t.strip():
+                            hints[hk].add(t.strip().lower())
+            continue
         if kind == "ident" and v.lower() in _KEYWORDS:
-            out.append(_Tok("kw", v.lower()))
+            out.append(_Tok("kw", v.lower(), m.start()))
         else:
-            out.append(_Tok(kind, v))
-    out.append(_Tok("eof", ""))
+            out.append(_Tok(kind, v, m.start()))
+    out.append(_Tok("eof", "", len(sql)))
     return out
-
-
-
-def _strip_comments(sql: str):
-    """Remove ``--`` line and ``/* */`` block comments, extracting join
-    strategy HINTS from ``/*+ ... */`` blocks first (the Spark hint
-    surface): ``BROADCAST(t)``, ``MERGE(t)`` / ``SHUFFLEMERGE(t)``,
-    ``SHUFFLE_HASH(t)``.  Returns (clean sql, hints dict)."""
-    hints = {"broadcast": set(), "merge": set(), "shuffle_hash": set()}
-
-    def _take(m):
-        for hm in re.finditer(
-            r"(broadcast|shufflemerge|merge|shuffle_hash)\s*\(([^)]*)\)",
-            m.group(1),
-            re.IGNORECASE,
-        ):
-            kind = hm.group(1).lower()
-            kind = "merge" if kind == "shufflemerge" else kind
-            for t in hm.group(2).split(","):
-                if t.strip():
-                    hints[kind].add(t.strip().lower())
-        return " "
-
-    sql = re.sub(r"/\*\+(.*?)\*/", _take, sql, flags=re.S)
-    sql = re.sub(r"/\*.*?\*/", " ", sql, flags=re.S)
-    sql = re.sub(r"--[^\n]*", " ", sql)
-    return sql, hints
 
 
 class _Parser:
     def __init__(self, sql: str, catalog=None, macros=None, views=None,
                  view_depth=0):
-        sql, self.hints = _strip_comments(sql)
-        self.toks = _tokenize(sql)
+        self.hints = {"broadcast": set(), "merge": set(), "shuffle_hash": set()}
+        self.toks = _tokenize(sql, self.hints)
         self.i = 0
         self.catalog = catalog
         self.ctes: dict[str, Plan] = {}
@@ -5183,3 +5181,400 @@ def parse_sql(sql: str, catalog=None, macros=None, views=None) -> Plan:
     plan = p.parse()
     plan.hints = p.hints
     return plan
+
+
+# -- statements ---------------------------------------------------------
+
+
+class Statement(NamedTuple):
+    """One parsed statement.  ``kind`` selects the planner's handler and
+    ``args`` are its keyword arguments.  Text fields (predicates,
+    expressions, queries) are spans of the source cut at token
+    boundaries.  ``versions`` lists each ``FROM/JOIN t VERSION AS OF n``
+    reference as ``(start, end, t, n)``, with the character offsets of
+    ``t VERSION AS OF n``."""
+
+    kind: str
+    args: dict
+    versions: tuple = ()
+
+
+# Statement forms, tried in order: the first that matches the whole token
+# stream wins, and a statement no form matches is a query for
+# ``parse_sql``.  A lowercase word matches that keyword or identifier
+# (``a|b``: either); ``( ) , = *`` match themselves; ``[ ... ]`` is
+# optional, and ``[name: ... ]`` also sets ``name`` to whether it was
+# taken.  ``@x`` captures an identifier, ``#x`` an integer, ``%x`` a
+# number, ``'x`` a string literal's contents, and ``*x`` the shortest
+# non-empty span, balanced in parentheses and CASE ... END, that lets
+# the rest of the form match.
+_STATEMENT_FORMS = (
+    ("explain", "explain [analyze: analyze ] *query"),
+    ("create_vector_index", "create [replace: or replace ] vector index on "
+     "@table ( @vec_col ) [ with ( *options ) ]"),
+    ("drop_vector_index", "drop vector index on @table ( @vec_col )"),
+    ("create_tokenizer", "create [replace: or replace ] tokenizer on "
+     "@table ( @text_col ) [ with ( *options ) ]"),
+    ("drop_tokenizer", "drop tokenizer on @table ( @text_col )"),
+    ("describe", "desc|describe [ table ] @table"),
+    ("analyze", "analyze table @table [ compute statistics ]"),
+    ("create_function", "create [ or replace ] function @name "
+     "( [ *params ] ) as *body"),
+    ("create_view", "create [replace: or replace ] view @name as *body"),
+    ("drop_view", "drop view [if_exists: if exists ] @name"),
+    ("show_views", "show views"),
+    ("select_as_of", "select * from @table timestamp as of 'timestamp"),
+    ("select_as_of", "select * from @table version as of #version"),
+    ("delete", "delete from @table [ where *where ]"),
+    ("update", "update @table set *sets [ where *where ]"),
+    ("insert", "insert into @table [ ( *columns ) ] *source"),
+    ("insert_overwrite",
+     "insert overwrite [ table ] @table [ ( *columns ) ] *source"),
+    ("show_tables", "show tables"),
+    ("describe_history", "describe history @table"),
+    ("describe_detail", "describe detail @table"),
+    ("merge", "merge into @target [ as ] @t_alias using @source [ as ] "
+     "@s_alias on *on"),
+    ("show_materialized_views", "show materialized views"),
+    ("drop_materialized_view", "drop materialized view @name"),
+    ("truncate", "truncate table @table"),
+    ("set_tblproperties",
+     "alter table @table set tblproperties ( *properties )"),
+    ("show_tblproperties", "show tblproperties @table"),
+    ("add_constraint",
+     "alter table @table add constraint @name check ( *expr_text )"),
+    ("drop_constraint", "alter table @table drop constraint @name"),
+    ("show_constraints", "show constraints [ for ] @table"),
+    ("add_column", "alter table @table add column @column *dtype"),
+    ("drop_column", "alter table @table drop column @column"),
+    ("optimize", "optimize table @table [ where *where ] "
+     "[ zorder by ( *zorder ) ]"),
+    ("vacuum", "vacuum [ table ] @table [ retain %retain_hours hour|hours ] "
+     "[dry_run: dry run ]"),
+    ("restore", "restore table @table to version as of #version"),
+    ("restore", "restore table @table to timestamp as of 'timestamp"),
+    ("shallow_clone", "create table @clone shallow clone @source "
+     "[ version as of #ver ]"),
+    ("table_changes",
+     "select * from table_changes ( @table , #v1 , #v2 )"),
+    ("table_changes",
+     "select * from table_changes ( 'table , #v1 , #v2 )"),
+)
+
+_MERGE_CLAUSE = ("when [negated: not ] matched [ by @by ] [ and *cond ] "
+                 "then *action")
+
+_NEST = {("op", "("): 1, ("op", ")"): -1, ("kw", "case"): 1, ("kw", "end"): -1}
+
+
+def _compile_form(form: str) -> list:
+    out: list = []
+    stack: list = []
+    for w in form.split():
+        if w.startswith("["):
+            stack.append((out, w[1:-1] or None))
+            out = []
+        elif w == "]":
+            group = out
+            out, label = stack.pop()
+            out.append((label, group))
+        else:
+            out.append(w)
+    return out
+
+
+_FORMS = tuple((kind, _compile_form(f)) for kind, f in _STATEMENT_FORMS)
+_MERGE_CLAUSE_FORM = _compile_form(_MERGE_CLAUSE)
+
+
+def _match(els, toks, src, i, caps):
+    """The captures when form elements ``els`` match ``toks[i:]`` up to
+    eof, else None.  A span is captured as a ``slice`` of token indexes."""
+    if not els:
+        return caps if toks[i].kind == "eof" else None
+    e, rest = els[0], els[1:]
+    if isinstance(e, tuple):
+        label, group = e
+        for taken, tail in ((True, group + rest), (False, rest)):
+            got = _match(tail, toks, src, i,
+                         {**caps, label: taken} if label else caps)
+            if got is not None:
+                return got
+        return None
+    t = toks[i]
+    sigil, name = e[0], e[1:]
+    if sigil == "*" and name:
+        depth = 0
+        for j in range(i, len(toks) - 1):
+            depth += _NEST.get((toks[j].kind, toks[j].value), 0)
+            if depth < 0:
+                return None
+            if depth == 0:
+                got = _match(rest, toks, src, j + 1,
+                             {**caps, name: slice(i, j + 1)})
+                if got is not None:
+                    return got
+        return None
+    if sigil == "@" and t.kind in ("ident", "kw"):
+        caps = {**caps, name: _word(t, src)}
+    elif sigil == "#" and t.kind == "number" and t.value.isdigit():
+        caps = {**caps, name: int(t.value)}
+    elif sigil == "%" and t.kind == "number":
+        caps = {**caps, name: float(t.value)}
+    elif sigil == "'" and t.kind == "string":
+        caps = {**caps, name: _unquote(t)}
+    elif not (t.value == e if t.kind == "op"
+              else t.kind in ("ident", "kw")
+              and t.value.lower() in e.split("|")):
+        return None
+    return _match(rest, toks, src, i + 1, caps)
+
+
+def _word(t: _Tok, src: str) -> str:
+    return src[t.pos:t.pos + len(t.value)]
+
+
+def _unquote(t: _Tok) -> str:
+    return t.value[1:-1].replace("''", "'")
+
+
+def _is(t: _Tok, word: str) -> bool:
+    return t.kind in ("ident", "kw") and t.value.lower() == word
+
+
+def _text(toks, src, span: slice) -> str:
+    if span.start >= span.stop:
+        return ""
+    return src[toks[span.start].pos:toks[span.stop - 1].pos
+               + len(toks[span.stop - 1].value)]
+
+
+def _literal(toks, src, span: slice) -> str:
+    """A span's text, or a lone string literal's contents."""
+    if span.stop - span.start == 1 and toks[span.start].kind == "string":
+        return _unquote(toks[span.start])
+    return _text(toks, src, span)
+
+
+def _top_level(toks, i, j):
+    """Indexes in ``[i, j)`` outside any parentheses or CASE ... END."""
+    depth = 0
+    for k in range(i, j):
+        if depth == 0:
+            yield k
+        depth += _NEST.get((toks[k].kind, toks[k].value), 0)
+
+
+def _assignments(toks, src, span: slice) -> list:
+    """``k = v, ...`` → ``[(key span, value span)]``, cut at top-level
+    commas and at each item's first ``=``."""
+    cuts = [k for k in _top_level(toks, span.start, span.stop)
+            if toks[k].kind == "op" and toks[k].value == ","]
+    out = []
+    for a, b in zip([span.start] + [c + 1 for c in cuts], cuts + [span.stop]):
+        eq = next((k for k in range(a, b)
+                   if toks[k].kind == "op" and toks[k].value == "="), None)
+        if eq is None or eq == a or eq + 1 == b:
+            raise SqlError(f"expected name = value, got "
+                           f"{_text(toks, src, slice(a, b))!r}")
+        out.append((slice(a, eq), slice(eq + 1, b)))
+    return out
+
+
+def _set_map(toks, src, span: slice) -> dict:
+    """``SET c1 = e1, c2 = e2`` → ``{c1: e1 text, c2: e2 text}``."""
+    return {_text(toks, src, k): _text(toks, src, v)
+            for k, v in _assignments(toks, src, span)}
+
+
+def _equality(toks, src, a, b, t_alias, s_alias):
+    """``(target col, source col)`` when ``toks[a:b]`` is exactly
+    ``t_alias.x = s_alias.y`` (either side first), else None."""
+    if b - a != 7 or not all(
+        toks[k].kind == "op" and toks[k].value == v
+        for k, v in ((a + 1, "."), (a + 3, "="), (a + 5, "."))
+    ) or not all(toks[k].kind in ("ident", "kw") for k in (a, a + 2, a + 4, a + 6)):
+        return None
+    l_alias, l_col = _word(toks[a], src).lower(), _word(toks[a + 2], src)
+    r_alias, r_col = _word(toks[a + 4], src).lower(), _word(toks[a + 6], src)
+    if (l_alias, r_alias) == (t_alias.lower(), s_alias.lower()):
+        return l_col, r_col
+    if (l_alias, r_alias) == (s_alias.lower(), t_alias.lower()):
+        return r_col, l_col
+    return None
+
+
+def _merge_on(toks, src, on: slice, t_alias, s_alias):
+    """MERGE's join keys: ``keys``, the first ``t.x = s.y`` anywhere in
+    ON, which define row presence; and ``prune_keys``, the first such
+    equality that is a top-level conjunct of an ON with no top-level OR,
+    else None.  Only a necessary condition of ON may prune target files
+    by the source's key range: under a disjunctive ON a file outside
+    the key band can still hold matched rows."""
+    keys = next(
+        (kv for a in range(on.start, on.stop - 6)
+         if (kv := _equality(toks, src, a, a + 7, t_alias, s_alias))),
+        None,
+    )
+    if keys is None:
+        raise SqlError("MERGE INTO needs an equality between target and "
+                       f"source keys in ON (got {_text(toks, src, on)!r})")
+    top = list(_top_level(toks, on.start, on.stop))
+    if any(_is(toks[k], "or") for k in top):
+        return keys, None
+    cuts = [k for k in top if _is(toks[k], "and")]
+    for a, b in zip([on.start] + [c + 1 for c in cuts], cuts + [on.stop]):
+        while (b - a > 2 and toks[a].value == "(" and toks[a].kind == "op"
+               and list(_top_level(toks, a, b))[-1] == a):
+            a, b = a + 1, b - 1
+        kv = _equality(toks, src, a, b, t_alias, s_alias)
+        if kv:
+            return keys, kv
+    return keys, None
+
+
+def _merge_clause(toks, src, a, b):
+    """One ``WHEN [NOT] MATCHED [BY SOURCE|TARGET] [AND cond] THEN
+    action`` → ``(kind, cond text or None, sets)``: kind ``m`` (matched),
+    ``nmt`` (not matched by target) or ``nms`` (not matched by source);
+    ``sets`` is None for DELETE and INSERT *, ``"*"`` for UPDATE SET *,
+    else the SET map."""
+    sub = toks[a:b] + [toks[-1]]
+    caps = _match(_MERGE_CLAUSE_FORM, sub, src, 0, {})
+    by = (caps or {}).get("by", "").lower()
+    if caps is None or by not in ("", "source", "target"):
+        raise SqlError(f"MERGE: cannot parse clause "
+                       f"{_text(toks, src, slice(a, b))!r}")
+    if not caps["negated"] and by:
+        raise SqlError(f"MERGE: WHEN MATCHED takes no BY {by.upper()} "
+                       "qualifier (only NOT MATCHED does)")
+    kind = ("nms" if by == "source" else "nmt") if caps["negated"] else "m"
+    act = caps["action"]
+    words = [t.value.lower() for t in sub[act]]
+    action = _text(sub, src, act)
+    cond = _text(sub, src, caps["cond"]) if "cond" in caps else None
+    if kind == "nmt":
+        if words != ["insert", "*"]:
+            raise SqlError("MERGE: WHEN NOT MATCHED supports INSERT *, "
+                           f"got {action!r}")
+        return kind, cond, None
+    which = "WHEN MATCHED" if kind == "m" else "WHEN NOT MATCHED BY SOURCE"
+    if words == ["delete"]:
+        return kind, cond, None
+    if words[:2] != ["update", "set"] or len(words) < 3:
+        raise SqlError(f"MERGE: {which} supports UPDATE SET … or DELETE, "
+                       f"got {action!r}")
+    if words[2:] == ["*"]:
+        if kind == "nms":
+            raise SqlError("MERGE: WHEN NOT MATCHED BY SOURCE cannot "
+                           "UPDATE SET * (no source row)")
+        return kind, cond, "*"
+    return kind, cond, _set_map(sub, src, slice(act.start + 2, act.stop))
+
+
+def _merge(caps, toks, src):
+    on = caps["on"]
+    starts = [
+        k for k in _top_level(toks, on.start, on.stop)
+        if _is(toks[k], "when") and (
+            _is(toks[k + 1], "matched")
+            or _is(toks[k + 1], "not") and _is(toks[k + 2], "matched"))
+    ]
+    if not starts or starts[0] == on.start:
+        raise SqlError("MERGE needs ON <condition> followed by WHEN "
+                       "[NOT] MATCHED clauses")
+    on = slice(on.start, starts[0])
+    keys, prune_keys = _merge_on(toks, src, on, caps["t_alias"],
+                                 caps["s_alias"])
+    clauses = [_merge_clause(toks, src, a, b)
+               for a, b in zip(starts, starts[1:] + [caps["on"].stop])]
+    return {**caps, "on": on, "clauses": clauses, "keys": keys,
+            "prune_keys": prune_keys}
+
+
+def _explain(caps, toks, src):
+    q = caps["query"]
+    if not caps["analyze"]:
+        inner = _statement(toks[q.start:], src)
+        if inner.kind in ("delete", "update"):
+            return "explain_dml", {"table": inner.args["table"],
+                                   "pred_text": inner.args.get("where"),
+                                   "kind": inner.kind.upper()}
+    return "explain", caps
+
+
+def _insert(caps, toks, src):
+    head = toks[caps["source"].start]
+    if head.kind != "kw" or head.value not in ("select", "with", "values"):
+        return None
+    return {**caps, "values": head.value == "values"}
+
+
+def _options(caps, toks, src):
+    if "options" in caps:
+        caps = {**caps, "options": {
+            _text(toks, src, k).lower(): _literal(toks, src, v)
+            for k, v in _assignments(toks, src, caps["options"])}}
+    return caps
+
+
+def _tblproperties(caps, toks, src):
+    props = {}
+    for k, v in _assignments(toks, src, caps["properties"]):
+        if not all(s.stop - s.start == 1 and toks[s.start].kind == "string"
+                   for s in (k, v)):
+            raise SqlError(
+                "SET TBLPROPERTIES: expected 'key'='value' pairs, got "
+                f"{_text(toks, src, caps['properties'])!r}")
+        props[_unquote(toks[k.start])] = _unquote(toks[v.start])
+    return {**caps, "properties": props}
+
+
+#: per-kind refinement of a form's captures: returns the new args (or
+#: ``(kind, args)``), or None when the statement is not of this form
+_REFINE = {
+    "explain": _explain,
+    "update": lambda c, toks, src: {**c, "sets": _set_map(toks, src, c["sets"])},
+    "insert": _insert,
+    "insert_overwrite": _insert,
+    "merge": _merge,
+    "create_vector_index": _options,
+    "create_tokenizer": _options,
+    "set_tblproperties": _tblproperties,
+}
+
+
+def _statement(toks, src, versions=()) -> Statement:
+    for kind, form in _FORMS:
+        caps = _match(form, toks, src, 0, {})
+        if caps is None:
+            continue
+        if kind in _REFINE:
+            caps = _REFINE[kind](caps, toks, src)
+            if caps is None:
+                continue
+            if isinstance(caps, tuple):
+                kind, caps = caps
+        return Statement(kind, {
+            k: _text(toks, src, v) if isinstance(v, slice) else v
+            for k, v in caps.items()
+        }, versions)
+    return Statement("query", {"query": src}, versions)
+
+
+def parse_statement(sql: str) -> Statement:
+    """Classify one SQL statement by its leading keywords and extract its
+    fields (see ``_STATEMENT_FORMS``); anything that is not one of those
+    statements is ``Statement("query", {"query": sql})``.  One pass of
+    the lexer, so literals and comments are never taken for syntax."""
+    toks = _tokenize(sql)
+    versions = tuple(
+        (toks[i + 1].pos, toks[i + 5].pos + len(toks[i + 5].value),
+         _word(toks[i + 1], sql), int(toks[i + 5].value))
+        for i in range(len(toks) - 6)
+        if toks[i].kind == "kw" and toks[i].value in ("from", "join")
+        and toks[i + 1].kind in ("ident", "kw") and _is(toks[i + 2], "version")
+        and _is(toks[i + 3], "as") and _is(toks[i + 4], "of")
+        and toks[i + 5].kind == "number" and toks[i + 5].value.isdigit()
+    )
+    return _statement(toks, sql, versions)

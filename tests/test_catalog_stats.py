@@ -125,6 +125,25 @@ def test_four_file_table_matches_duckdb_oracle(monkeypatch, tmp_path):
     assert Catalog({"t": str(d)}).statistics("t").row_count == src.num_rows
 
 
+def test_deletion_vector_sidecar_is_not_table_data(monkeypatch, tmp_path):
+    """A version dir carrying a ``_dv/`` sidecar: ``row_count`` counts
+    the data files only, and the column statistics are the data files'
+    (the sidecar, which sorts first, has another schema)."""
+    d = tmp_path / "v1"
+    (d / "_dv").mkdir(parents=True)
+    data = pa.table({"k": np.arange(100, dtype=np.int64),
+                     "v": np.arange(100, dtype=np.float64) / 4})
+    pq.write_table(data, str(d / "part-00000.parquet"))
+    pq.write_table(
+        pa.table({"file_name": ["part-00000.parquet"] * 5,
+                  "row_index": np.arange(5, dtype=np.int64)}),
+        str(d / "_dv" / "part-00000.parquet"),
+    )
+    got = _fresh_stats(monkeypatch, str(d))
+    assert got and got == _oracle([str(d / "part-00000.parquet")])
+    assert Catalog({"t": str(d)}).statistics("t").row_count == 100
+
+
 def _crafted(n=240, seed=7):
     rng = np.random.default_rng(seed)
 

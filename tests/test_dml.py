@@ -222,3 +222,53 @@ def test_truncate_table(qp):
     assert qp.sql("select * from t version as of 0").count() == 10
     hist = [r["operation"] for r in qp.sql("describe history t").collect()]
     assert hist == ["base", "delete"]
+
+
+# -- statement text: literals and comments are never syntax ----------------
+
+
+def _rows(qp):
+    return {r["k"]: (r["v"], r["tag"]) for r in qp.sql("select * from t").collect()}
+
+
+def test_update_literal_holding_where(qp):
+    qp.sql("update t set tag = 'a where b' where k = 1").count()
+    rows = _rows(qp)
+    assert rows[1] == (10, "a where b") and rows[2] == (20, "x")
+
+
+def test_update_literal_holding_comma(qp):
+    qp.sql("update t set tag = 'a,b', v = 1 where k = 1").count()
+    rows = _rows(qp)
+    assert rows[1] == (1, "a,b") and rows[2] == (20, "x")
+
+
+def test_delete_after_leading_comment(qp):
+    assert qp.sql("/* c */ delete from t where k = 1 -- trailing").count() == 9
+    assert 1 not in _rows(qp)
+
+
+def test_literal_holding_version_as_of_is_not_time_travel(qp):
+    assert qp.sql("select k from t where tag = 'from t version as of 0'").count() == 0
+    qp.sql("update t set tag = 'from t version as of 0' where k = 4").count()
+    got = qp.sql("select k from t where tag = 'from t version as of 0'").collect()
+    assert [r["k"] for r in got] == [4]
+
+
+def test_update_expression_only_spark_parses(qp):
+    """``||`` is no token of the engine's grammar: the SET expression
+    reaches Spark's parser through the ``F.expr`` fallback."""
+    qp.sql("update t set tag = tag || 'y' where k = 0").count()
+    assert _rows(qp)[0] == (0, "xy")
+
+
+def test_explain_dml_executes_nothing(qp):
+    path, before = qp.catalog.path("t"), _rows(qp)
+    row = qp.sql(
+        "/* plan only */ explain update t set tag = 'a where b' where k = 1"
+    ).collect()[0]
+    assert (row["statement"], row["table_name"], row["predicate"]) == (
+        "UPDATE", "t", "k = 1")
+    row = qp.sql("explain delete from t where tag = 'x, where' -- why").collect()[0]
+    assert (row["statement"], row["predicate"]) == ("DELETE", "tag = 'x, where'")
+    assert qp.catalog.path("t") == path and _rows(qp) == before

@@ -3,9 +3,12 @@ join + per-column CASE, copy-on-write + re-register."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from datafusion_dolomite_spark import QueryPlanner
+from datafusion_dolomite_spark.sources import dml
 from datafusion_dolomite_spark.sources.catalog import Catalog
 
 
@@ -94,3 +97,28 @@ def test_insert_star_names_missing_source_columns(qp, spark, tmp_path):
     )
     rows = {r["k"]: (r["v"], r["n"]) for r in out.collect()}
     assert rows == {1: (100, 0), 2: (5, 0), 3: (300, 0)}
+
+
+def test_disjunctive_on_carries_no_file(qp, spark, tmp_path):
+    """Source-range file pruning is sound only when ON's equality is a
+    necessary condition.  Under ``t.k = s.k OR t.v = s.v`` the k=50
+    file lies outside the source's k range [2, 3] yet holds a row
+    matched through ``v``: no file may be carried forward."""
+    qp.sql("insert into target values (50, 777, 7)").count()  # 2nd file
+    spark.createDataFrame(
+        [(2, 999, 0), (3, 777, 0)], "k bigint, v bigint, n bigint"
+    ).coalesce(1).write.parquet(str(tmp_path / "src2"))
+    qp.catalog.register("src2", str(tmp_path / "src2"))
+
+    def inodes():
+        return {os.stat(f).st_ino
+                for f in dml.data_files(qp.catalog.path("target"))}
+
+    before = inodes()
+    assert len(before) == 2
+    out = qp.sql(
+        "merge into target t using src2 s on t.k = s.k or t.v = s.v "
+        "when matched then update set n = s.k"
+    )
+    assert {r["k"]: r["n"] for r in out.collect()} == {1: 0, 2: 2, 3: 3, 50: 3}
+    assert not inodes() & before
