@@ -174,6 +174,15 @@ class PhysicalPropertySet:
     dist: DistributionSpec = field(default_factory=DistributionSpec.random)
     order: OrderSpec = field(default_factory=OrderSpec)
 
+    # the Cascades search keys winners and scheduled tasks by property
+    # set; hashing the nested specs on every lookup was a tenth of its
+    # time, so the hash is computed once
+    def __post_init__(self):
+        object.__setattr__(self, "_hash", hash((self.dist, self.order)))
+
+    def __hash__(self) -> int:
+        return self._hash
+
     def satisfies(self, required: "PhysicalPropertySet") -> bool:
         return self.dist.satisfies(required.dist) and self.order.satisfies(
             required.order

@@ -41,13 +41,22 @@ __all__ = ["GroupExpr", "Group", "Memo", "Winner"]
 class GroupExpr:
     """Operator + input group ids (ref ``memo.rs`` GroupExpr)."""
 
-    __slots__ = ("operator", "inputs", "group_id", "applied_rules")
+    __slots__ = (
+        "operator", "inputs", "group_id", "applied_rules", "rules", "costing",
+    )
 
     def __init__(self, operator: Operator, inputs: Tuple[int, ...], group_id: int = -1):
         self.operator = operator
         self.inputs = inputs
         self.group_id = group_id
         self.applied_rules: set[str] = set()
+        #: the rules whose pattern root matches ``operator``, in the task
+        #: runner's order (filled by the first OptimizeExpression task)
+        self.rules: Optional[list] = None
+        #: a physical expr's (own cost, output property): neither depends
+        #: on the property it is optimized for, so OptimizeInputs computes
+        #: them once (cost None: the cost model refused the expr)
+        self.costing: Optional[tuple] = None
 
     def key(self) -> Tuple[Operator, Tuple[int, ...]]:
         return (self.operator, self.inputs)
@@ -108,8 +117,13 @@ class Group:
 
 
 class Memo:
-    def __init__(self, ctx=None, enable_group_merge: bool = False):
+    def __init__(
+        self, ctx=None, enable_group_merge: bool = False, join_enumeration=None
+    ):
         self.ctx = ctx
+        #: a ``join_order.JoinEnumeration``: inner-join trees are ingested
+        #: as every connected relation set instead of as written
+        self.join_enumeration = join_enumeration
         self.groups: Dict[int, Group] = {}
         self._next_gid = 0
         #: GroupExprKey → group id (dedup map, ref memo.rs:713-719)
@@ -127,12 +141,22 @@ class Memo:
 
     # -- construction ---------------------------------------------------
     @classmethod
-    def from_plan(cls, plan: Plan, ctx=None, enable_group_merge: bool = False) -> "Memo":
-        memo = cls(ctx, enable_group_merge=enable_group_merge)
+    def from_plan(
+        cls,
+        plan: Plan,
+        ctx=None,
+        enable_group_merge: bool = False,
+        join_enumeration=None,
+    ) -> "Memo":
+        memo = cls(ctx, enable_group_merge, join_enumeration)
         memo.root_group_id = memo._ingest(plan.root)
         return memo
 
     def _ingest(self, node: PlanNode) -> int:
+        if self.join_enumeration is not None:
+            gid = self.join_enumeration.ingest(self, node)
+            if gid is not None:
+                return gid
         input_gids = tuple(self._ingest(c) for c in node.inputs)
         expr, _created = self.insert_expr(node.operator, input_gids, target_group=None)
         return expr.group_id

@@ -15,6 +15,7 @@ from ...operators.properties import PhysicalPropertySet
 from ...plans.plan import Plan
 from ..rule import OptimizerContext, Rule
 from .cost import CostModel, SimpleCostModel
+from .join_order import JoinEnumeration
 from .memo import Memo
 from .tasks import TaskRunner
 
@@ -30,7 +31,14 @@ class CascadesOptimizer:
         required: Optional[PhysicalPropertySet] = None,
         enable_group_merge: bool = True,
     ):
-        self.rules: List[Rule] = list(rules)
+        self.rules: List[Rule] = [
+            r for r in rules if not isinstance(r, JoinEnumeration)
+        ]
+        #: join order comes from the enumerator when the rule list
+        #: carries one (``join_order.py``), else joins stay as written
+        self.join_enumeration = next(
+            (r for r in rules if isinstance(r, JoinEnumeration)), None
+        )
         self.ctx = ctx or OptimizerContext()
         self.cost_model = cost_model or SimpleCostModel()
         self.required = required or PhysicalPropertySet()
@@ -57,7 +65,7 @@ class CascadesOptimizer:
         stats0 = getattr(catalog, "stats_seconds", 0.0)
         t0 = _time.perf_counter()
         self.memo = Memo.from_plan(
-            plan, self.ctx, enable_group_merge=self.enable_group_merge
+            plan, self.ctx, self.enable_group_merge, self.join_enumeration
         )
         runner = TaskRunner(self.memo, self.rules, self.cost_model, self.ctx)
         runner.run(self.required)

@@ -49,19 +49,12 @@ class Task:
 class TaskRunner:
     """Owns the stack + memo + rules + cost model."""
 
-    #: max NEW logical exprs transformation rules may add per optimize run.
-    #: Join enumeration (commute+associate+exchange) is exponential in the
-    #: join-graph size; past this budget exploration stops and the best
-    #: order found so far is implemented.  200 exprs plans the 6-table
-    #: TPC-H comma join in ~0.2 s choosing the same plan a 10x budget
-    #: finds, while fully enumerating graphs of ≤4 tables.
-    EXPLORATION_BUDGET = 200
-
-    #: safety valve on memo growth (VERDICT r6 "Cascades exploration has
-    #: no safety valve"): past either cap, TRANSFORMATION rules stop
-    #: firing (implementation rules continue, so every group still gets
-    #: a physical plan).  TPC-H arity stays far below these; a
-    #: 10+-relation graph's enumeration is bounded instead of unbounded.
+    #: safety valve on memo growth: past either cap, TRANSFORMATION
+    #: rules stop firing (implementation rules continue, so every group
+    #: still gets a physical plan).  Join order is enumerated before the
+    #: search starts (``join_order.py``, itself bounded by
+    #: ``MAX_EXACT_PAIRS``), so only commutation, eager aggregation and
+    #: the materialized-view rewrite grow the memo here.
     MAX_MEMO_GROUPS = 5_000
     MAX_MEMO_EXPRS = 20_000
 
@@ -141,10 +134,14 @@ class OptimizeExpressionTask(Task):
         # rules by promise, skipping already-applied (ref task.rs:167-207);
         # r.rules is sorted promise-desc, the stack pops in reverse, so
         # iterate reversed → highest-promise rule actually applies first
-        for rule in reversed(r.rules):
-            if rule.rule_id() in self.expr.applied_rules:
-                continue
-            if r.pattern(rule).matches_operator(self.expr.operator):
+        if self.expr.rules is None:
+            op = self.expr.operator
+            self.expr.rules = [
+                rule for rule in reversed(r.rules)
+                if r.pattern(rule).matches_operator(op)
+            ]
+        for rule in self.expr.rules:
+            if rule.rule_id() not in self.expr.applied_rules:
                 r.push(ApplyRuleTask(self.expr, rule, self.required))
         for gid in self.expr.inputs:
             r.push(ExploreGroupTask(gid, self.required))
@@ -174,11 +171,10 @@ class ApplyRuleTask(Task):
         if self.rule.rule_id() in self.expr.applied_rules:
             return
         if self.rule.transformation and (
-            r.transformations_created >= r.EXPLORATION_BUDGET
-            or len(r.memo.groups) >= r.MAX_MEMO_GROUPS
+            len(r.memo.groups) >= r.MAX_MEMO_GROUPS
             or r.memo.n_exprs >= r.MAX_MEMO_EXPRS
         ):
-            return  # budget spent — leave the rule re-appliable, skip now
+            return  # memo full — leave the rule re-appliable, skip now
         self.expr.applied_rules.add(self.rule.rule_id())
         for binding in _bindings(r.memo, r.pattern(self.rule), self.expr):
             result = RuleResult()
@@ -246,28 +242,28 @@ class OptimizeInputsTask(Task):
             upper_bound = max(upper_bound, def_bound)
 
         child_costs = 0.0
-        achieved_child_props: List[PhysicalPropertySet] = []
-        input_stats = []
         for gid, req in zip(self.expr.inputs, self.input_reqs):
-            cgroup = r.group(gid)
-            w = cgroup.winner(req)
+            w = r.group(gid).winner(req)
             if w is None:
                 return  # child has no plan for required prop → expr fails
             child_costs += w.cost
             if child_costs >= upper_bound:
                 return  # branch-and-bound prune (ref task.rs:417-420)
-            achieved_child_props.append(req)
-            input_stats.append(cgroup.stats)
 
-        try:
-            self_cost = r.cost_model.estimate_cost(
-                self.expr.operator, input_stats, r.ctx
-            )
-        except ValueError:
+        # every child achieves exactly what it was required to
+        if self.expr.costing is None:
+            input_stats = [r.group(gid).stats for gid in self.expr.inputs]
+            try:
+                self_cost = r.cost_model.estimate_cost(
+                    self.expr.operator, input_stats, r.ctx
+                )
+                _, out_prop = self.expr.operator.derive_properties(self.input_reqs)
+            except ValueError:
+                self_cost = out_prop = None
+            self.expr.costing = (self_cost, out_prop)
+        self_cost, out_prop = self.expr.costing
+        if self_cost is None:
             return
-        _, out_prop = self.expr.operator.derive_properties(
-            tuple(achieved_child_props)
-        )
         total = self_cost + child_costs
 
         if out_prop.satisfies(self.required):
@@ -295,10 +291,6 @@ def _bindings(memo: Memo, pattern: Pattern, expr: GroupExpr) -> List[OptExprNode
     product across child groups (ref ``cascades/binding.rs:72-122``)."""
     if not pattern.matches_operator(expr.operator):
         return []
-    # operator nodes carry their group's logical prop so multi-level
-    # rules (associate/exchange) can resolve column ownership even when
-    # a sub-pattern bound an operator rather than a handle
-    own_prop = memo.group(expr.group_id).logical_prop
     if pattern.children is None:
         return [
             OptExprNode(
@@ -307,7 +299,6 @@ def _bindings(memo: Memo, pattern: Pattern, expr: GroupExpr) -> List[OptExprNode
                     OptExprNode(handle=gid, prop=memo.group(gid).logical_prop)
                     for gid in expr.inputs
                 ],
-                prop=own_prop,
             )
         ]
     if len(pattern.children) != len(expr.inputs):
@@ -321,6 +312,6 @@ def _bindings(memo: Memo, pattern: Pattern, expr: GroupExpr) -> List[OptExprNode
             return []
         per_child.append(cands)
     return [
-        OptExprNode(operator=expr.operator, inputs=list(combo), prop=own_prop)
+        OptExprNode(operator=expr.operator, inputs=list(combo))
         for combo in itertools.product(*per_child)
     ]

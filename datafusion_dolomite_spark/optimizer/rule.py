@@ -125,10 +125,8 @@ class Rule:
     name: str = "Rule"
 
     #: True for pure exploration (transformation) rules — logical→logical
-    #: alternatives like join commutation.  The cascades TaskRunner
-    #: budget-limits these on large join graphs (the reference has no
-    #: budget because its only transformation, CommutateJoin, can't blow
-    #: up; bushy enumeration via associate/exchange can).
+    #: alternatives like join commutation.  The cascades TaskRunner stops
+    #: firing these once the memo reaches its size caps.
     transformation: bool = False
 
     def pattern(self) -> Pattern:

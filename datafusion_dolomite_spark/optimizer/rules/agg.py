@@ -36,8 +36,11 @@ single aggregate's own shuffle, never below a join), so this is an
 optimization our engine contributes on top of Spark.
 
 The reference's rule set stops at join commutation
-(``dolomite/src/rules/join.rs:28-69``); this extends the exploration
-space the same way ``AssociateJoinRule``/``ExchangeJoinRule`` do.
+(``dolomite/src/rules/join.rs:28-69``); this is one of the two rules
+that still transform in the Cascades phase (the other is the
+materialized-view rewrite).  Join order itself is enumerated into the
+memo by ``cascades/join_order.py``, so this rule sees every join order
+of the aggregate's input.
 """
 
 from __future__ import annotations

@@ -2,8 +2,11 @@
 
 * ``CommutateJoinRule`` (exploration) — swap inputs of an INNER join
   (ref ``dolomite/src/rules/join.rs:28-69``; inner-only check at
-  ``join.rs:36-42``).  The one rule that exercises multi-expression memo
-  groups in cascades.
+  ``join.rs:36-42``).  The only join transformation rule, as in the
+  reference.  Join ORDER is not a rule: ``cascades/join_order.py``
+  enumerates every connected relation set of an inner-join tree into
+  the memo (DPccp) while the memo is built, and this rule adds each of
+  those joins' mirror image.
 * ``Join2HashJoinRule`` (implementation) — ``LogicalJoin →
   PhysicalHashJoin`` (ref ``join.rs:71-114``).
 * ``Join2BroadcastHashJoinRule`` / ``Join2SortMergeJoinRule`` — our
@@ -16,22 +19,18 @@
 
 from __future__ import annotations
 
-from typing import Optional
-
-from ...expr import BinOp, Col
+from ...expr import BinOp
 from ...operators.logical import JoinType, LogicalJoin
 from ...operators.physical import (
     PhysicalBroadcastHashJoin,
     PhysicalHashJoin,
     PhysicalSortMergeJoin,
 )
-from ..pattern import Pattern, any_pattern, pattern_of
+from ..pattern import Pattern, pattern_of
 from ..rule import OptExpression, OptimizerContext, Rule, RulePromise, RuleResult
 
 __all__ = [
-    "AssociateJoinRule",
     "CommutateJoinRule",
-    "ExchangeJoinRule",
     "Join2HashJoinRule",
     "Join2BroadcastHashJoinRule",
     "Join2SaltedReplicateJoinRule",
@@ -67,147 +66,6 @@ class CommutateJoinRule(Rule):
         left, right = input.root.inputs
         swapped = LogicalJoin(op.join_type, _swap_condition(op.condition))
         result.add(OptExpression.op(swapped, right, left))
-
-
-class AssociateJoinRule(Rule):
-    """Exploration: ``(x ⋈ y) ⋈ z → x ⋈ (y ⋈ z)`` with condition
-    conjuncts redistributed by column ownership.  Beyond the reference
-    (which only commutes, ``rules/join.rs:28-69``); together with
-    CommutateJoinRule the memo enumerates bushy join orders and the cost
-    model picks — real cost-based join reordering.
-
-    Relies on group logical properties (schemas) carried on binding
-    handles; bails when schemas are unavailable or column names are
-    ambiguous across inputs."""
-
-    name = "AssociateJoinRule"
-    transformation = True
-
-    def pattern(self) -> Pattern:
-        return pattern_of(
-            LogicalJoin, children=(pattern_of(LogicalJoin), any_pattern())
-        )
-
-    def promise(self) -> RulePromise:
-        return RulePromise.LOW
-
-    def apply(self, input: OptExpression, ctx: OptimizerContext, result: RuleResult) -> None:
-        from ...expr import BinOp
-
-        outer: LogicalJoin = input.root.operator
-        inner_node = input.root.inputs[0]
-        z_node = input.root.inputs[1]
-        inner: LogicalJoin = inner_node.operator
-        if outer.join_type is not JoinType.INNER or inner.join_type is not JoinType.INNER:
-            return
-        x_node, y_node = inner_node.inputs
-        props = [getattr(n, "prop", None) for n in (x_node, y_node, z_node)]
-        if any(p is None for p in props):
-            return
-        xc, yc, zc = (set(p.schema.names()) for p in props)
-        if xc & yc or yc & zc or xc & zc:
-            return  # ambiguous column names — ownership undecidable
-        conjs = []
-        for cond in (outer.condition, inner.condition):
-            conjs.extend(
-                cond.conjuncts() if isinstance(cond, BinOp) else (cond,)
-            )
-        lower, upper = [], []
-        yz = yc | zc
-        universe = xc | yc | zc
-        for c in conjs:
-            refs = set(c.columns())
-            if not refs or not refs <= universe:
-                return
-            (lower if refs <= yz else upper).append(c)
-        # both new joins need real conditions; the lower one must actually
-        # connect y and z (not just filter one side)
-        if not upper or not any(
-            set(c.columns()) & yc and set(c.columns()) & zc for c in lower
-        ):
-            return
-        lower_cond = _and_chain(lower)
-        upper_cond = _and_chain(upper)
-        new_inner = OptExpression.op(
-            LogicalJoin(JoinType.INNER, lower_cond), y_node, z_node
-        )
-        result.add(
-            OptExpression.op(
-                LogicalJoin(JoinType.INNER, upper_cond), x_node, new_inner
-            )
-        )
-
-
-class ExchangeJoinRule(Rule):
-    """Exploration: ``(x ⋈ y) ⋈ z → (x ⋈ z) ⋈ y`` (inner joins only),
-    redistributing condition conjuncts by column ownership.  This is the
-    transform associate+commutate can NOT express on a star schema —
-    there every join condition references the fact table, so pure
-    rotation never changes which dimension joins first.  With per-column
-    ndv statistics (stat.rs:6-21, never populated in the reference) the
-    cost model uses this to join the most selective dimension first."""
-
-    name = "ExchangeJoinRule"
-    transformation = True
-
-    def pattern(self) -> Pattern:
-        return pattern_of(
-            LogicalJoin, children=(pattern_of(LogicalJoin), any_pattern())
-        )
-
-    def promise(self) -> RulePromise:
-        return RulePromise.LOW
-
-    def apply(self, input: OptExpression, ctx: OptimizerContext, result: RuleResult) -> None:
-        outer: LogicalJoin = input.root.operator
-        inner_node = input.root.inputs[0]
-        z_node = input.root.inputs[1]
-        inner: LogicalJoin = inner_node.operator
-        if outer.join_type is not JoinType.INNER or inner.join_type is not JoinType.INNER:
-            return
-        x_node, y_node = inner_node.inputs
-        props = [getattr(n, "prop", None) for n in (x_node, y_node, z_node)]
-        if any(p is None for p in props):
-            return
-        xc, yc, zc = (set(p.schema.names()) for p in props)
-        if xc & yc or yc & zc or xc & zc:
-            return  # ambiguous column names — ownership undecidable
-        conjs = []
-        for cond in (outer.condition, inner.condition):
-            conjs.extend(
-                cond.conjuncts() if isinstance(cond, BinOp) else (cond,)
-            )
-        xz = xc | zc
-        universe = xc | yc | zc
-        lower, upper = [], []
-        for c in conjs:
-            refs = set(c.columns())
-            if not refs or not refs <= universe:
-                return
-            (lower if refs <= xz else upper).append(c)
-        # the new lower join must genuinely connect x and z, and the new
-        # upper join needs a condition touching y
-        if not upper or not any(
-            set(c.columns()) & xc and set(c.columns()) & zc for c in lower
-        ):
-            return
-        new_inner = OptExpression.op(
-            LogicalJoin(JoinType.INNER, _and_chain(lower)), x_node, z_node
-        )
-        result.add(
-            OptExpression.op(
-                LogicalJoin(JoinType.INNER, _and_chain(upper)), new_inner, y_node
-            )
-        )
-
-
-def _and_chain(parts):
-    from ...expr import BinOp
-
-    out = None
-    for p in parts:
-        out = p if out is None else BinOp("and", out, p)
-    return out
 
 
 def _keys(op: LogicalJoin, input=None):

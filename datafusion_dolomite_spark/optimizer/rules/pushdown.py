@@ -43,7 +43,6 @@ __all__ = [
     "CombineFiltersRule",
     "PushFilterToScanRule",
     "PushFilterThroughJoinRule",
-    "ReorderJoinGraphRule",
     "PruneScanColumnsRule",
     "PushFilterThroughAggregateRule",
     "PushFilterThroughWindowRule",
@@ -235,14 +234,11 @@ def _subtree_stats(node, ctx):
     ndv-based join selectivity above them.
 
     A ``LogicalFilter`` directly over a ``LogicalScan`` derives as the
-    FUSED scan (r9, VERDICT item 8): the scan-cardinality path is the
-    one that consults the catalog's adaptive selectivity corrections
-    (EXPLAIN ANALYZE feedback), while the plain filter path only knows
-    System-R selectivity — so a DP enumeration that ran before filter
-    fusion was blind to the corrections and kept a join order the
-    feedback had already disproved.  Deriving the fused form here is
-    also simply more faithful: it is the estimate the final plan (with
-    the filter fused into the scan) will carry."""
+    FUSED scan: the scan-cardinality path is the one that consults the
+    catalog's adaptive selectivity corrections (EXPLAIN ANALYZE
+    feedback), while the plain filter path only knows System-R
+    selectivity, and the fused form is the estimate the final plan
+    (with the filter fused into the scan) will carry."""
     from ...operators import logical as L
     from ..cascades.cost import derive_stats
 
@@ -263,402 +259,6 @@ def _subtree_stats(node, ctx):
     return derive_stats(
         op, [_subtree_stats(c, ctx) for c in node.inputs], ctx
     )
-
-
-def _dp_join_step_cost(s_left, s_right, model) -> float:
-    """Modeled cost of one join step, mirroring SparkCostModel's
-    strategy race in 'row touches': a broadcastable side makes it a
-    broadcast hash join (ship build + probe in place, no key shuffle);
-    otherwise both sides shuffle and the smaller side builds."""
-    r1 = max(s_left.row_count, 1.0)
-    r2 = max(s_right.row_count, 1.0)
-    if not model._too_big_to_broadcast(r2, s_right):
-        return 2.0 * r2 + r1
-    if not model._too_big_to_broadcast(r1, s_left):
-        return 2.0 * r1 + r2
-    build = min(r1, r2)
-    probe = max(r1, r2)
-    return 3.0 * (r1 + r2) + 1.5 * (probe + 2.0 * build)
-
-
-class _DpStats:
-    """Minimal stats record for the DP join-enumeration hot loop.  Only
-    the three fields the enumeration actually reads survive:
-    ``row_count`` and ``avg_row_bytes`` (consumed by
-    ``_dp_join_step_cost`` / ``_too_big_to_broadcast``, which duck-type
-    on exactly those) and per-column ndv floats (consumed by the
-    selectivity mirror in ``_dp_join_stats``).  min/max/top_count never
-    influence the DP choice, so carrying full ``ColumnStatistics``
-    objects per candidate — ~250k object constructions on an 8-way
-    join — was pure waste."""
-
-    __slots__ = ("row_count", "avg_row_bytes", "ndvs")
-
-    def __init__(self, row_count, avg_row_bytes, ndvs):
-        self.row_count = row_count
-        self.avg_row_bytes = avg_row_bytes
-        self.ndvs = ndvs  # dict: column name → ndv (already capped)
-
-
-def _dp_stats_of(st) -> _DpStats:
-    """Project a full ``Statistics`` down to the DP record."""
-    return _DpStats(
-        st.row_count,
-        st.avg_row_bytes,
-        {name: cs.ndv for name, cs in st.columns},
-    )
-
-
-def _dp_join_stats(ls: _DpStats, rs: _DpStats, pairs) -> _DpStats:
-    """Numerically identical fast path of ``derive_stats(
-    LogicalJoin(AND of the pairs' equi conjuncts), [ls, rs])``: same
-    System-R ndv selectivity (cost.py ``_equi_key_ndv_selectivity``),
-    same left-preferred column merge with the ndv ≤ row_count cap
-    (``_propagate_columns``), same summed width (``_propagate_width``
-    join branch) — minus the per-candidate expression rebuild and
-    per-column object construction.  ``pairs`` holds (col_a, col_b)
-    tuples for equi conjuncts, None for anything else.  Pinned
-    equivalent to the slow path by ``tests/test_join_order.py``'s
-    differential case."""
-    lcols, rcols = ls.ndvs, rs.ndvs
-    sel = None
-    if lcols or rcols:
-        for pair in pairs:
-            if pair is None:
-                continue
-            a, b = pair
-            if a in lcols and b in rcols and a not in rcols and b not in lcols:
-                lk, rk = a, b
-            elif b in lcols and a in rcols and b not in rcols and a not in lcols:
-                lk, rk = b, a
-            else:
-                continue
-            ndv = max(lcols[lk], rcols[rk])
-            if ndv <= 0:
-                continue
-            sel = (sel if sel is not None else 1.0) / ndv
-    lr, rr = ls.row_count, rs.row_count
-    if sel is not None:
-        out = max(1.0, lr * rr * sel)
-    else:
-        out = max(lr, 1.0)  # no usable ndv: FK→PK, ≈ probe side
-    merged = {name: ndv if ndv <= out else out for name, ndv in lcols.items()}
-    for name, ndv in rcols.items():
-        if name not in merged:
-            merged[name] = ndv if ndv <= out else out
-    return _DpStats(out, ls.avg_row_bytes + rs.avg_row_bytes, merged)
-
-
-def _dp_join_order(leaves, schemas, conjuncts, crefs, n_cross, ctx):
-    """Exact bushy join enumeration: DP over CONNECTED subgraphs
-    (DPsub): for every leaf subset, the cheapest way to join a partition
-    of it, preferring partitions connected by at least one cross-side
-    conjunct (cartesians only when the subgraph is genuinely
-    disconnected).  Cardinalities come from ``derive_stats`` (catalog
-    row counts + System-R ndv selectivity) — the statistics the
-    reference's memo declares but never fills (``memo.rs:781``).
-
-    Returns the rebuilt OptExpression, or None to fall back to greedy
-    (no catalog stats, or DP couldn't reduce the cartesian count)."""
-    import math as _math
-
-    from ...expr import BinOp, Col, Lit
-    from ..cascades.cost import SparkCostModel
-
-    if ctx is None or getattr(ctx, "catalog", None) is None:
-        return None
-    model = getattr(ctx, "cost_model", None)
-    if model is None or not hasattr(model, "_too_big_to_broadcast"):
-        model = SparkCostModel()
-    try:
-        leaf_stats = [_subtree_stats(n, ctx) for n in leaves]
-    except Exception:
-        return None
-
-    # equi conjuncts pre-parsed once: index → (col_a, col_b) for
-    # ``a = b`` column pairs (None = not an equi conjunct).  The hot
-    # loop below evaluates O(3^n) candidate partitions; re-deriving
-    # this from the expression tree per candidate (what derive_stats
-    # does) was ~35% of q8's total planning time.
-    equi_pairs: list = []
-    for c in conjuncts:
-        if (
-            isinstance(c, BinOp)
-            and c.op == "="
-            and isinstance(c.left, Col)
-            and isinstance(c.right, Col)
-        ):
-            equi_pairs.append((c.left.name, c.right.name))
-        else:
-            equi_pairs.append(None)
-
-    def _fast_join_stats(ls, rs, conds):
-        return _dp_join_stats(ls, rs, [equi_pairs[i] for i in conds])
-
-    n = len(leaves)
-    full = (1 << n) - 1
-    cols = {}
-    for i in range(n):
-        cols[1 << i] = frozenset(schemas[i])
-
-    def mask_cols(mask: int) -> frozenset:
-        got = cols.get(mask)
-        if got is None:
-            low = mask & -mask
-            got = cols[low] | mask_cols(mask ^ low)
-            cols[mask] = got
-        return got
-
-    def cross_conds(sub: int, other: int) -> list:
-        both = mask_cols(sub | other)
-        cs, co = mask_cols(sub), mask_cols(other)
-        return [
-            i
-            for i in range(len(conjuncts))
-            if crefs[i]
-            and crefs[i] <= both
-            and crefs[i] & cs
-            and crefs[i] & co
-        ]
-
-    # best[mask] = (cost, stats, n_cross, repr); repr = leaf index or
-    # (sub, other) partition
-    best: dict = {}
-    for i in range(n):
-        best[1 << i] = (0.0, _dp_stats_of(leaf_stats[i]), 0, i)
-    masks = sorted(
-        (m for m in range(3, full + 1) if m & (m - 1)),
-        key=lambda m: bin(m).count("1"),
-    )
-    for mask in masks:
-        chosen = None
-        sub = (mask - 1) & mask
-        while sub:
-            other = mask ^ sub
-            if sub > other:  # cost step is symmetric — halve the space
-                conds = cross_conds(sub, other)
-                bs, bo = best.get(sub), best.get(other)
-                if bs is not None and bo is not None:
-                    st = _fast_join_stats(bs[1], bo[1], conds)
-                    cost = (
-                        bs[0] + bo[0] + _dp_join_step_cost(bs[1], bo[1], model)
-                    )
-                    crosses = bs[2] + bo[2] + (0 if conds else 1)
-                    cand = (cost, st, crosses, (sub, other))
-                    # fewest cartesians first, then modeled cost — a
-                    # cheap cartesian is still fatal at 100 TB
-                    if chosen is None or (cand[2], cand[0]) < (
-                        chosen[2],
-                        chosen[0],
-                    ):
-                        chosen = cand
-            sub = (sub - 1) & mask
-        if chosen is None:
-            return None
-        best[mask] = chosen
-    if not _math.isfinite(best[full][0]) or best[full][2] >= n_cross:
-        return None  # DP could not reduce the cartesian count — greedy's guard
-
-    taken: set = set()
-
-    def build(mask: int):
-        from ...expr import Lit
-
-        rep = best[mask][3]
-        if isinstance(rep, int):
-            return OptExpression.handle(leaves[rep])
-        sub, other = rep
-        # bigger side left (probe), smaller right (build/broadcast) —
-        # the orientation every downstream strategy rule assumes
-        if best[sub][1].row_count < best[other][1].row_count:
-            sub, other = other, sub
-        lexpr = build(sub)
-        rexpr = build(other)
-        conds = [i for i in cross_conds(sub, other) if i not in taken]
-        taken.update(conds)
-        cond = _and_all([conjuncts[i] for i in conds])
-        return OptExpression.op(
-            LogicalJoin(JoinType.INNER, cond if cond is not None else Lit(True)),
-            lexpr,
-            rexpr,
-        )
-
-    expr = build(full)
-    # anything unplaced (single-sided residue the pushdown fixpoint will
-    # sink on the next pass) rides on top as a filter
-    rest = [conjuncts[i] for i in range(len(conjuncts)) if i not in taken]
-    if rest:
-        expr = OptExpression.op(LogicalFilter(_and_all(rest)), expr)
-    return expr
-
-
-class ReorderJoinGraphRule(Rule):
-    """Cross-join elimination: flatten a chain of INNER joins into
-    (leaves, conjuncts) and greedily rebuild left-deep so every join
-    attaches a leaf CONNECTED by at least one conjunct to the tables
-    accumulated so far.  A textbook comma-join (``FROM a, b, c WHERE
-    a.x = c.x AND b.y = c.y``) merges into a left-deep chain whose
-    FIRST join is a cartesian product (a and b share no predicate);
-    at 100 TB that cartesian is fatal — N·M rows materialized before
-    the connecting table arrives.  Fires only when it strictly reduces
-    the number of cross joins (idempotent under the HEP fixed point).
-
-    The reference has no join-graph logic at all (its join conversion is
-    commented out, ``conversion/logical.rs:119-135``); Catalyst has the
-    equivalent in ``ReorderJoin``/``CostBasedJoinReorder``."""
-
-    name = "ReorderJoinGraphRule"
-
-    #: DP join enumeration is O(3^n) over leaf subsets — exact to 8
-    #: relations (≤6561 partitions), greedy beyond (VERDICT r6 item 2)
-    MAX_DP_LEAVES = 8
-
-    def __init__(self, use_dp: bool = True):
-        self.use_dp = use_dp
-
-    def pattern(self) -> Pattern:
-        return pattern_of(LogicalJoin)
-
-    def promise(self) -> RulePromise:
-        return RulePromise.MEDIUM
-
-    def apply(self, input, ctx, result: RuleResult) -> None:
-        from ...expr import Lit
-
-        top: LogicalJoin = input.root.operator
-        if top.join_type is not JoinType.INNER:
-            return
-        leaves: list = []
-        conjuncts: list = []
-        n_cross = 0
-
-        def is_true(c) -> bool:
-            return isinstance(c, Lit) and c.value is True
-
-        def flatten(node) -> None:
-            op = node.operator
-            if (
-                op.operator_name() == "Join"
-                and op.join_type is JoinType.INNER
-            ):
-                nonlocal n_cross
-                flatten(node.inputs[0])
-                flatten(node.inputs[1])
-                if is_true(op.condition):
-                    n_cross += 1
-                else:
-                    conjuncts.extend(_conjuncts(op.condition))
-            else:
-                leaves.append(node)
-
-        lh, rh = input.root.inputs
-        if lh.handle is None or rh.handle is None:
-            return
-        flatten(lh.handle)
-        flatten(rh.handle)
-        if is_true(top.condition):
-            n_cross += 1
-        else:
-            conjuncts.extend(_conjuncts(top.condition))
-        if len(leaves) < 3 or n_cross == 0:
-            return
-
-        schemas = []
-        for n in leaves:
-            lp = getattr(n, "logical_prop", None)
-            if lp is None:
-                return
-            schemas.append(set(lp.schema.names()))
-        # duplicate names across leaves → attribution is ambiguous; the
-        # SQL layer renames self-joins, so this only guards builder plans
-        seen: set = set()
-        for s in schemas:
-            if s & seen:
-                return
-            seen |= s
-
-        crefs = [set(c.columns()) for c in conjuncts]
-
-        # ≤MAX_DP_LEAVES relations: exact DP over connected subgraphs
-        # (bushy, Selinger-style) replaces the greedy left-deep rebuild
-        # (VERDICT r6 item 2).  Greedy stays as the >8-relation fallback
-        # and the no-stats fallback — DP with fabricated cardinalities
-        # would be noise.
-        if self.use_dp and 3 <= len(leaves) <= self.MAX_DP_LEAVES:
-            dp = _dp_join_order(
-                leaves, schemas, conjuncts, crefs, n_cross, ctx
-            )
-            if dp is not None:
-                result.add(dp)
-                return
-
-        placed = [False] * len(conjuncts)
-        used = [False] * len(leaves)
-        used[0] = True
-        acc = set(schemas[0])
-        order: list = [(0, [])]
-        new_cross = 0
-        for _ in range(len(leaves) - 1):
-            pick = None
-            pick_conds: list = []
-            for j in range(len(leaves)):
-                if used[j]:
-                    continue
-                both = acc | schemas[j]
-                conds = [
-                    i
-                    for i in range(len(conjuncts))
-                    if not placed[i]
-                    and crefs[i]
-                    and crefs[i] <= both
-                    and crefs[i] & schemas[j]
-                    and crefs[i] & acc
-                ]
-                if conds:
-                    pick, pick_conds = j, conds
-                    break
-            if pick is None:
-                pick = next(j for j in range(len(leaves)) if not used[j])
-                new_cross += 1
-            used[pick] = True
-            acc |= schemas[pick]
-            order.append((pick, pick_conds))
-            for i in pick_conds:
-                placed[i] = True
-        if new_cross >= n_cross:
-            return
-        # single-leaf conjuncts (and anything else unplaced): attach at
-        # the earliest join where every referenced column is in scope
-        cum: set = set(schemas[order[0][0]])
-        cums = [set(cum)]
-        for idx, _c in order[1:]:
-            cum = cum | schemas[idx]
-            cums.append(set(cum))
-        for i in range(len(conjuncts)):
-            if placed[i]:
-                continue
-            refs = crefs[i]
-            for k in range(1, len(order)):
-                if refs <= cums[k]:
-                    order[k][1].append(i)
-                    placed[i] = True
-                    break
-            if not placed[i]:
-                return  # unresolvable reference — keep the original plan
-
-        expr = OptExpression.handle(leaves[order[0][0]])
-        for idx, conds in order[1:]:
-            cond = _and_all([conjuncts[i] for i in conds])
-            from ...expr import Lit as _Lit
-
-            expr = OptExpression.op(
-                LogicalJoin(
-                    JoinType.INNER, cond if cond is not None else _Lit(True)
-                ),
-                expr,
-                OptExpression.handle(leaves[idx]),
-            )
-        result.add(expr)
 
 
 class PruneScanColumnsRule(Rule):
@@ -1180,7 +780,6 @@ PUSHDOWN_RULES = [
     ConstantFoldingRule(),
     CombineFiltersRule(),
     MergeFilterIntoJoinRule(),
-    ReorderJoinGraphRule(),
     PushFilterToScanRule(),
     PushFilterThroughJoinRule(),
     InferJoinKeyPredicateRule(),

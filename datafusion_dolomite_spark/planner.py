@@ -20,14 +20,13 @@ from typing import Optional, Sequence
 
 from .execute import to_spark
 from .optimizer.cascades.cost import CostModel, SparkCostModel
+from .optimizer.cascades.join_order import JoinEnumeration
 from .optimizer.cascades.optimizer import CascadesOptimizer
 from .optimizer.heuristic import HepOptimizer, MatchOrder
 from .optimizer.rule import OptimizerContext, Rule
 from .optimizer.rules.impl_rules import IMPLEMENTATION_RULES
 from .optimizer.rules.join import (
-    AssociateJoinRule,
     CommutateJoinRule,
-    ExchangeJoinRule,
     Join2BroadcastHashJoinRule,
     Join2HashJoinRule,
     Join2SaltedReplicateJoinRule,
@@ -86,16 +85,17 @@ def default_rewrite_rules() -> list[Rule]:
 
 def default_cascades_rules(enable_join_exploration: bool = True) -> list[Rule]:
     """Cascades phase: implementation rules for every operator + join
-    strategy alternatives + (optional) join commutation exploration."""
+    strategy alternatives + (optional) exploration: join order
+    enumeration, join commutation, eager aggregation and the
+    materialized-view rewrite."""
     rules: list[Rule] = [*IMPLEMENTATION_RULES, *EXTENSION_RULES,
                          Join2HashJoinRule(),
                          Join2BroadcastHashJoinRule(), Join2SortMergeJoinRule(),
                          Join2SaltedReplicateJoinRule(),
                          Agg2SaltedHashAggregateRule()]
     if enable_join_exploration:
+        rules.append(JoinEnumeration())
         rules.append(CommutateJoinRule())
-        rules.append(AssociateJoinRule())
-        rules.append(ExchangeJoinRule())
         rules.append(EagerAggregationRule())
         rules.append(RewriteAggOnMaterializedViewRule())
     return rules
@@ -136,9 +136,6 @@ class QueryPlanner:
         self.catalog = catalog
         self.ctx = OptimizerContext(catalog)
         self.cost_model = cost_model or SparkCostModel()
-        # hep-phase rules that make cost decisions (DP join enumeration)
-        # consult the same model/thresholds cascades will use
-        self.ctx.cost_model = self.cost_model
         self.rewrite_rules = list(rewrite_rules or default_rewrite_rules())
         self.cascades_rules = list(cascades_rules or default_cascades_rules())
         #: CREATE FUNCTION macros: name → (params, body expr)
@@ -1244,7 +1241,7 @@ class QueryPlanner:
         rules = self.cascades_rules
         if hints and any(hints.values()):
             # a hint pins the user's TEXTUAL join shape; shape-changing
-            # exploration (eager aggregation, association/exchange)
+            # exploration (eager aggregation, join order enumeration)
             # would move the hinted relation out of its side and unbind
             # the pin — standard hint semantics: the user's word
             # suspends the rewrites that would second-guess it.
@@ -1254,7 +1251,7 @@ class QueryPlanner:
             rules = [
                 r
                 for r in rules
-                if not isinstance(r, (_EA, AssociateJoinRule, ExchangeJoinRule))
+                if not isinstance(r, (_EA, JoinEnumeration))
             ]
         try:
             cascades = CascadesOptimizer(
@@ -1681,20 +1678,24 @@ class QueryPlanner:
         never taken for syntax.  ``FROM/JOIN t VERSION AS OF n`` inside
         any statement other than the whole-statement ``SELECT * FROM t
         VERSION AS OF n`` is spliced to a registration of that version
-        first (``_splice_time_travel``)."""
+        first (``_splice_time_travel``).  A query is parsed from the
+        statement's tokens, not lexed a second time."""
         from .sql import parse_statement
 
         st = parse_statement(query)
         if st.versions and st.kind != "select_as_of":
             st = parse_statement(self._splice_time_travel(query, st.versions))
-        return getattr(self, self._STATEMENT_HANDLERS[st.kind])(**st.args)
+        handler = getattr(self, self._STATEMENT_HANDLERS[st.kind])
+        if st.kind == "query":
+            return handler(**st.args, lexed=st.lexed)
+        return handler(**st.args)
 
-    def _query(self, query: str):
+    def _query(self, query: str, lexed=None):
         from .operators.extensions import LogicalSink
         from .sql import parse_sql
 
         plan = parse_sql(query, self.catalog, macros=self._sql_macros,
-                         views=self._sql_views)
+                         views=self._sql_views, lexed=lexed)
         # re-CREATE of a MATERIALIZED VIEW: drop the old metadata BEFORE
         # optimizing, or the rewrite rule could answer the definition
         # query from the very table the sink is about to overwrite

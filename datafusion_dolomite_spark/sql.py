@@ -27,7 +27,7 @@ DDL, DML and utility statements match a table of statement forms
 from __future__ import annotations
 
 import re
-from typing import List, NamedTuple, Optional
+from typing import List, NamedTuple, Optional, Tuple
 
 from .expr import Alias, BinOp, Cast, Col, Expr, Func, Lit, SortKey
 from .operators.logical import JoinType, LogicalFilter, WindowExprDef
@@ -301,20 +301,22 @@ class _Tok:
         return f"{self.kind}:{self.value}"
 
 
-def _tokenize(sql: str, hints: Optional[dict] = None) -> List[_Tok]:
-    """The engine's one SQL lexer.  Comments are dropped; the join
-    strategy hints of a ``/*+ ... */`` comment (the Spark hint surface:
-    ``BROADCAST(t)``, ``MERGE(t)`` / ``SHUFFLEMERGE(t)``,
-    ``SHUFFLE_HASH(t)``) are added to ``hints`` when it is given.  A
+def _tokenize(sql: str) -> Tuple[List[_Tok], dict]:
+    """The engine's one SQL lexer: the tokens of ``sql`` and its join
+    strategy hints.  Comments are dropped; the hints of a ``/*+ ... */``
+    comment (the Spark hint surface: ``BROADCAST(t)``, ``MERGE(t)`` /
+    ``SHUFFLEMERGE(t)``, ``SHUFFLE_HASH(t)``) are collected.  A
     quote inside a comment, or a comment marker inside a literal, is
-    never syntax: each is part of one token."""
+    never syntax: each is part of one token.  One trailing ``;`` ends
+    the statement and is dropped."""
     out: List[_Tok] = []
+    hints = {"broadcast": set(), "merge": set(), "shuffle_hash": set()}
     for m in _TOKEN_RE.finditer(sql):
         kind, v = m.lastgroup, m.group()
         if kind == "ws":
             continue
         if kind == "comment":
-            if hints is not None and v.startswith("/*+"):
+            if v.startswith("/*+"):
                 for hm in re.finditer(
                     r"(broadcast|shufflemerge|merge|shuffle_hash)\s*\(([^)]*)\)",
                     v,
@@ -330,15 +332,16 @@ def _tokenize(sql: str, hints: Optional[dict] = None) -> List[_Tok]:
             out.append(_Tok("kw", v.lower(), m.start()))
         else:
             out.append(_Tok(kind, v, m.start()))
+    if out and out[-1].kind == "other" and out[-1].value == ";":
+        out.pop()
     out.append(_Tok("eof", "", len(sql)))
-    return out
+    return out, hints
 
 
 class _Parser:
     def __init__(self, sql: str, catalog=None, macros=None, views=None,
-                 view_depth=0):
-        self.hints = {"broadcast": set(), "merge": set(), "shuffle_hash": set()}
-        self.toks = _tokenize(sql, self.hints)
+                 view_depth=0, lexed=None):
+        self.toks, self.hints = lexed if lexed is not None else _tokenize(sql)
         self.i = 0
         self.catalog = catalog
         self.ctes: dict[str, Plan] = {}
@@ -5156,14 +5159,16 @@ def _substitute_params(e, mapping: dict):
     return _rewrite_cols(e, lambda c: mapping.get(c.name.lower(), c))
 
 
-def parse_sql(sql: str, catalog=None, macros=None, views=None) -> Plan:
+def parse_sql(sql: str, catalog=None, macros=None, views=None,
+              lexed=None) -> Plan:
     """Parse a SQL query into an (unoptimized) logical Plan.  Join
     strategy hints (``/*+ BROADCAST(t) */`` etc.) ride on the returned
     plan as ``plan.hints`` and steer the cascades race.  ``macros`` is
     the planner's CREATE FUNCTION registry (name → (params, body
     Expr)), expanded at each call site inside the parser; ``views`` is
     its CREATE VIEW registry (lowercase name → SQL text), expanded late
-    at each relation reference."""
+    at each relation reference.  ``lexed`` is ``sql``'s tokens and hints
+    when the caller already has them (``Statement.lexed``)."""
     # Internal gensym'd names (scalar-subquery aliases, IN/EXISTS flag
     # keys, null-aware branch tags, LATERAL row ids) only need
     # uniqueness WITHIN one top-level parse: nested view/CTE expansion
@@ -5177,7 +5182,7 @@ def parse_sql(sql: str, catalog=None, macros=None, views=None) -> Plan:
     _na_counter[0] = 0
     _lat_rid_counter[0] = 0
     _in_key_counter[0] = 0
-    p = _Parser(sql, catalog, macros=macros, views=views)
+    p = _Parser(sql, catalog, macros=macros, views=views, lexed=lexed)
     plan = p.parse()
     plan.hints = p.hints
     return plan
@@ -5192,11 +5197,14 @@ class Statement(NamedTuple):
     expressions, queries) are spans of the source cut at token
     boundaries.  ``versions`` lists each ``FROM/JOIN t VERSION AS OF n``
     reference as ``(start, end, t, n)``, with the character offsets of
-    ``t VERSION AS OF n``."""
+    ``t VERSION AS OF n``.  ``lexed`` is the statement's tokens and
+    join strategy hints, which ``parse_sql`` takes instead of lexing the
+    text again."""
 
     kind: str
     args: dict
     versions: tuple = ()
+    lexed: Optional[tuple] = None
 
 
 # Statement forms, tried in order: the first that matches the whole token
@@ -5544,7 +5552,7 @@ _REFINE = {
 }
 
 
-def _statement(toks, src, versions=()) -> Statement:
+def _statement(toks, src, versions=(), lexed=None) -> Statement:
     for kind, form in _FORMS:
         caps = _match(form, toks, src, 0, {})
         if caps is None:
@@ -5558,8 +5566,8 @@ def _statement(toks, src, versions=()) -> Statement:
         return Statement(kind, {
             k: _text(toks, src, v) if isinstance(v, slice) else v
             for k, v in caps.items()
-        }, versions)
-    return Statement("query", {"query": src}, versions)
+        }, versions, lexed)
+    return Statement("query", {"query": src}, versions, lexed)
 
 
 def parse_statement(sql: str) -> Statement:
@@ -5567,7 +5575,8 @@ def parse_statement(sql: str) -> Statement:
     fields (see ``_STATEMENT_FORMS``); anything that is not one of those
     statements is ``Statement("query", {"query": sql})``.  One pass of
     the lexer, so literals and comments are never taken for syntax."""
-    toks = _tokenize(sql)
+    lexed = _tokenize(sql)
+    toks = lexed[0]
     versions = tuple(
         (toks[i + 1].pos, toks[i + 5].pos + len(toks[i + 5].value),
          _word(toks[i + 1], sql), int(toks[i + 5].value))
@@ -5577,4 +5586,4 @@ def parse_statement(sql: str) -> Statement:
         and _is(toks[i + 3], "as") and _is(toks[i + 4], "of")
         and toks[i + 5].kind == "number" and toks[i + 5].value.isdigit()
     )
-    return _statement(toks, sql, versions)
+    return _statement(toks, sql, versions, lexed)

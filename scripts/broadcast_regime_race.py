@@ -6,14 +6,15 @@ DEFAULT broadcast regime — where every TPC-H query actually runs at
 sf0.1 — were adopted on modeled cost alone, and the judge measured
 q_sql_q8 ~1.5x SLOWER than the greedy (r6) order it replaced.
 
-This script races the greedy left-deep rebuild (ReorderJoinGraphRule
-with use_dp=False) against the exact DP enumeration (use_dp=True) at
-DEFAULT thresholds on the TPC-H comma-join queries that exercise the
-reorder rule (Q5-shape, Q7, Q8, Q9, Q10), interleaved medians per the
-BENCHNOTES_r06 protocol.  It prints each variant's physical join
-spine so a plan diff accompanies every number.
+This script races the join order enumeration's greedy pass (GOO, forced
+by setting ``join_order.MAX_EXACT_PAIRS`` to 0 while that variant is
+planned) against its exact DPccp enumeration at DEFAULT thresholds on
+the TPC-H comma-join queries that exercise join ordering (Q5-shape, Q7,
+Q8, Q9, Q10), interleaved medians per the BENCHNOTES_r06 protocol.  It
+prints each variant's physical join spine so a plan diff accompanies
+every number.
 
-The acceptance bar (VERDICT): the DP pick wins or ties on every raced
+The acceptance bar (VERDICT): the exact pick wins or ties on every raced
 query — and where it loses, the cost constants get recalibrated so the
 race keeps the incumbent.
 
@@ -66,10 +67,7 @@ def main() -> None:
 
     from datafusion_dolomite_spark import QueryPlanner
     from datafusion_dolomite_spark.execute import to_spark
-    from datafusion_dolomite_spark.optimizer.rules.pushdown import (
-        ReorderJoinGraphRule,
-    )
-    from datafusion_dolomite_spark.planner import default_rewrite_rules
+    from datafusion_dolomite_spark.optimizer.cascades import join_order
     from datafusion_dolomite_spark.session import get_spark
     from datafusion_dolomite_spark.sources.catalog import Catalog
     from datafusion_dolomite_spark.sql import parse_sql
@@ -82,15 +80,16 @@ def main() -> None:
     ):
         cat.register(t, os.path.join(args.sf_dir, f"{t}.parquet"))
 
-    def greedy_rules():
-        return [
-            (ReorderJoinGraphRule(use_dp=False)
-             if isinstance(r, ReorderJoinGraphRule) else r)
-            for r in default_rewrite_rules()
-        ]
+    def greedy_optimize(plan):
+        exact = join_order.MAX_EXACT_PAIRS
+        join_order.MAX_EXACT_PAIRS = 0
+        try:
+            return qp_gr.optimize(plan)
+        finally:
+            join_order.MAX_EXACT_PAIRS = exact
 
     qp_dp = QueryPlanner(spark, cat)
-    qp_gr = QueryPlanner(spark, cat, rewrite_rules=greedy_rules())
+    qp_gr = QueryPlanner(spark, cat)
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
@@ -115,7 +114,7 @@ def main() -> None:
     rows: list = []
     for name, sql in queries.items():
         p_dp = qp_dp.optimize(parse_sql(sql, cat))
-        p_gr = qp_gr.optimize(parse_sql(sql, cat))
+        p_gr = greedy_optimize(parse_sql(sql, cat))
         s_dp, s_gr = join_spine(p_dp), join_spine(p_gr)
         same = s_dp == s_gr
         print(f"{name}: greedy {s_gr}", file=sys.stderr)

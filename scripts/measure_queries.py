@@ -5,11 +5,17 @@ For each named query (default: all), measures separately:
                 (our Python optimizer: builder/SQL -> Hep -> Cascades ->
                 to_spark, plus Spark analysis)
   * exec_sec  — warm noop-sink execution time (min of 2, after 1 warm-up)
+  * static_plan_cost — modeled cost (``static_plan_cost``) of every
+                physical plan Cascades produced while the query was
+                built the first time, summed
+  * cascades  — the Cascades ``planning_stats`` of those same plans,
+                summed: ``groups``, ``exprs`` and ``seconds``
 and optionally dumps ``explain('formatted')`` to ``plans/r13/<q>_<tag>.txt``.
 
 Usage:
     python scripts/measure_queries.py [--plans TAG] [--runs N] [q_name ...]
 
+``--runs 0`` skips execution entirely (planning figures only).
 Prints one JSON line per query so runs can be diffed, plus a summary.
 This script is measurement-only: it never changes what a query computes.
 """
@@ -40,9 +46,28 @@ def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
 
+    from datafusion_dolomite_spark.optimizer.cascades.cost import (
+        static_plan_cost,
+    )
+    from datafusion_dolomite_spark.planner import QueryPlanner
     from datafusion_dolomite_spark.session import get_spark
 
     import __spark_entry__ as entry_mod
+
+    # every physical plan Cascades returns while a query is built: its
+    # modeled cost and the memo's size, summed per query below
+    optimized: list = []
+    optimize_physical = QueryPlanner.optimize_physical
+
+    def recording_optimize_physical(self, plan):
+        out = optimize_physical(self, plan)
+        st = getattr(self, "last_planning_stats", None) or {}
+        optimized.append(
+            (static_plan_cost(out, self.cost_model, self.ctx), st)
+        )
+        return out
+
+    QueryPlanner.optimize_physical = recording_optimize_physical
 
     spark = get_spark("ddspark-measure")
     qs = entry_mod.queries()
@@ -59,10 +84,25 @@ def main() -> None:
     for name in names:
         fn = qs[name]
         spark.sparkContext.setJobDescription(f"measure:{name}")
+        optimized.clear()
         try:
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             plan_sec = time.perf_counter() - t0
+            plan_rec = {
+                "static_plan_cost": sum(c for c, _ in optimized),
+                "cascades": {
+                    k: sum(st.get(k, 0) for _, st in optimized)
+                    for k in ("groups", "exprs", "seconds")
+                },
+            }
+            plan_rec["cascades"]["seconds"] = round(
+                plan_rec["cascades"]["seconds"], 4
+            )
+            if runs == 0:
+                out[name] = {"plan_cold_sec": round(plan_sec, 4), **plan_rec}
+                print(json.dumps({name: out[name]}), flush=True)
+                continue
             if plans_tag:
                 p = df._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -92,6 +132,7 @@ def main() -> None:
                 "plan_warm_sec": round(replan, 4),
                 "exec_sec": round(best, 4),
                 "total_sec": round(replan + best, 4),
+                **plan_rec,
             }
         except Exception as e:
             rec = {"error": f"{type(e).__name__}: {e}"}
@@ -115,13 +156,19 @@ def main() -> None:
                     "n": len(out),
                     "n_err": len(out) - len(ok),
                     "plan_warm_total": round(
-                        sum(r["plan_warm_sec"] for r in ok.values()), 2
+                        sum(r.get("plan_warm_sec", 0.0) for r in ok.values()), 2
                     ),
                     "exec_total": round(
-                        sum(r["exec_sec"] for r in ok.values()), 2
+                        sum(r.get("exec_sec", 0.0) for r in ok.values()), 2
                     ),
                     "total": round(
-                        sum(r["total_sec"] for r in ok.values()), 2
+                        sum(r.get("total_sec", 0.0) for r in ok.values()), 2
+                    ),
+                    "static_plan_cost_total": sum(
+                        r["static_plan_cost"] for r in ok.values()
+                    ),
+                    "cascades_seconds_total": round(
+                        sum(r["cascades"]["seconds"] for r in ok.values()), 2
                     ),
                 }
             }

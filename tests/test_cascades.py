@@ -285,9 +285,9 @@ def test_cascades_implements_ngram_jaccard(ctx):
     assert "NgramJaccard" in names
 
 
-def test_associate_join_enumerates_right_deep(ctx):
-    """AssociateJoinRule puts x ⋈ (y ⋈ z) into the memo alongside the
-    left-deep original — the cost model then picks among real join
+def test_join_enumeration_puts_right_deep_order_in_memo(ctx):
+    """Join order enumeration puts x ⋈ (y ⋈ z) into the memo alongside
+    the left-deep original — the cost model then picks among real join
     orders (beyond the reference, which only commutes)."""
     plan = (
         LogicalPlanBuilder()
@@ -466,8 +466,8 @@ def test_ndv_stats_flip_join_order():
     """System-R equi-key selectivity from per-column ndv drives join
     ordering: the most selective dimension joins the fact table first.
     Flipping which fact column has high ndv flips the chosen order
-    (requires ExchangeJoinRule — associate+commute alone can't reorder
-    a star schema where every condition touches the fact table)."""
+    (the enumeration holds both fact ⋈ da and fact ⋈ db as groups, which
+    a star schema needs: every condition there touches the fact table)."""
     results = {}
     for kndv, jndv in ((1_000_000.0, 100.0), (100.0, 1_000_000.0)):
         ctx = _star_ctx(kndv, jndv)
@@ -480,7 +480,7 @@ def test_ndv_stats_flip_join_order():
     assert results[(100.0, 1_000_000.0)] == "db"
 
 
-def test_exchange_join_rule_enumerates_swapped_dimension():
+def test_join_enumeration_puts_swapped_dimension_in_memo():
     """The memo contains the (fact ⋈ db) ⋈ da variant after exploration."""
     ctx = _star_ctx(100.0, 1_000_000.0)
     opt = CascadesOptimizer(
@@ -496,4 +496,4 @@ def test_exchange_join_rule_enumerates_swapped_dimension():
     assert any("k = dk" in c or "dk = k" in c for c in conds)
     # the swapped lower join (fact, db) exists in some group as a direct
     # join between the fact group and the db group
-    assert len(opt.memo.groups) > 5  # new groups were created by exchange
+    assert len(opt.memo.groups) > 5  # the fact ⋈ db group exists too

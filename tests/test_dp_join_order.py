@@ -1,17 +1,15 @@
-"""Bounded DP join enumeration + cascades memo budget (VERDICT r6 item 2).
+"""Exact join enumeration (DP) versus its greedy pass, and the memo caps.
 
-``ReorderJoinGraphRule`` — the hep-phase cartesian eliminator — now
-rebuilds ≤8-relation join graphs with EXACT bushy DP over connected
-subgraphs (catalog-row-count + ndv-selectivity cardinalities) instead of
-greedily left-deep; greedy remains the >8-relation / no-stats fallback
-(``use_dp=False`` keeps it constructible for comparison).  Separately,
-``TaskRunner`` gains memo group/expression caps (the "no safety valve"
-gap) and ``CascadesOptimizer`` records planning-time stats.
+``cascades/join_order.py`` fills the memo with every connected relation
+set of an inner-join graph (DPccp, the DP of these tests' names); above
+``MAX_EXACT_PAIRS`` csg-cmp pairs it takes one greedy pass instead
+(forced here by setting the bound to 0).  ``TaskRunner`` keeps memo
+group/expression caps as the safety valve and ``CascadesOptimizer``
+records planning-time stats.
 
 The comparison queries use comma joins whose TEXTUAL adjacency is
-disconnected (the only shape where the rule fires: two-sided WHERE
-conjuncts that CAN attach to their pair's join are merged there by
-``MergeFilterIntoJoinRule`` first, leaving no cross join to eliminate).
+disconnected: the written plan keeps a cross join that only the
+enumeration removes.
 """
 
 from __future__ import annotations
@@ -21,21 +19,17 @@ import pytest
 from datafusion_dolomite_spark import QueryPlanner
 from datafusion_dolomite_spark import testdata_catalog as _testdata_catalog
 from datafusion_dolomite_spark.execute import to_spark
+from datafusion_dolomite_spark.expr import Lit
+from datafusion_dolomite_spark.optimizer.cascades import join_order
 from datafusion_dolomite_spark.optimizer.cascades.cost import static_plan_cost
-from datafusion_dolomite_spark.optimizer.rules.pushdown import (
-    ReorderJoinGraphRule,
-)
-from datafusion_dolomite_spark.planner import (
-    default_cascades_rules,
-    default_rewrite_rules,
-)
+from datafusion_dolomite_spark.planner import default_cascades_rules
 from datafusion_dolomite_spark.sql import parse_sql
 
 from .conftest import SF_DIR_ORACLE
 
 #: cyclic join graph (the Q5 customer–supplier nationkey cycle) with a
 #: DISCONNECTED textual adjacency (customer, region share no predicate),
-#: so the reorder rule must fire and place the cycle's three conjuncts
+#: so the enumeration must place the cycle's three conjuncts
 CYCLIC_Q = (
     "select n_name, count(*) as n "
     "from customer, region, supplier, nation "
@@ -45,39 +39,39 @@ CYCLIC_Q = (
 )
 
 
-def _planner(spark, cat, use_dp: bool):
-    rewrites = [
-        ReorderJoinGraphRule(use_dp=use_dp)
-        if isinstance(r, ReorderJoinGraphRule)
-        else r
-        for r in default_rewrite_rules()
-    ]
-    # exploration OFF: the hep-phase reorder must stand on its own, not
-    # be rescued by cascades commutate/associate
-    return QueryPlanner(
+def test_dp_beats_written_order_on_cyclic_graph(
+    spark, monkeypatch
+):
+    """The exact enumeration is cheaper than the written order, and at
+    least as cheap as its own greedy pass (which, cost-aware, finds the
+    same plan on this graph)."""
+    cat = _testdata_catalog(SF_DIR_ORACLE)
+    qp_dp = QueryPlanner(spark, cat)
+    qp_gr = QueryPlanner(spark, cat)
+    qp_wr = QueryPlanner(
         spark,
         cat,
-        rewrite_rules=rewrites,
         cascades_rules=default_cascades_rules(enable_join_exploration=False),
     )
-
-
-def test_dp_beats_greedy_on_cyclic_graph(spark):
-    cat = _testdata_catalog(SF_DIR_ORACLE)
-    qp_dp = _planner(spark, cat, use_dp=True)
-    qp_gr = _planner(spark, cat, use_dp=False)
     p_dp = qp_dp.optimize(parse_sql(CYCLIC_Q, cat))
+    p_wr = qp_wr.optimize(parse_sql(CYCLIC_Q, cat))
+    monkeypatch.setattr(join_order, "MAX_EXACT_PAIRS", 0)
     p_gr = qp_gr.optimize(parse_sql(CYCLIC_Q, cat))
     cm = qp_dp.cost_model
     c_dp = static_plan_cost(p_dp, cm, qp_dp.ctx)
     c_gr = static_plan_cost(p_gr, cm, qp_gr.ctx)
-    assert c_dp < c_gr, (
+    c_wr = static_plan_cost(p_wr, cm, qp_wr.ctx)
+    assert c_dp < c_wr, (
+        f"DP {c_dp} vs written {c_wr}\n{p_dp.explain()}\n{p_wr.explain()}"
+    )
+    assert c_dp <= c_gr, (
         f"DP {c_dp} vs greedy {c_gr}\n{p_dp.explain()}\n{p_gr.explain()}"
     )
-    # same answer either way
+    # same answer every way
     rows_dp = sorted(map(tuple, to_spark(p_dp, spark, cat).collect()))
     rows_gr = sorted(map(tuple, to_spark(p_gr, spark, cat).collect()))
-    assert rows_dp == rows_gr and rows_dp
+    rows_wr = sorted(map(tuple, to_spark(p_wr, spark, cat).collect()))
+    assert rows_dp == rows_gr == rows_wr and rows_dp
 
 
 def test_dp_matches_duckdb_oracle(spark):
@@ -97,17 +91,17 @@ def test_dp_matches_duckdb_oracle(spark):
 
 
 def test_dp_collapses_dims_before_fact(spark):
-    """Disconnected comma join over a dim chain + fact: DP joins
-    region→nation→supplier first and probes lineitem ONCE (greedy's
-    leaf-0-first heuristic starts from the fact instead)."""
+    """Disconnected comma join over a dim chain + fact: the enumerated
+    plan joins region→nation→supplier first and probes lineitem ONCE
+    (the written order starts from the fact instead)."""
     cat = _testdata_catalog(SF_DIR_ORACLE)
-    qp = _planner(spark, cat, use_dp=True)
+    qp = QueryPlanner(spark, cat)
     sql = (
         "select n_name, count(*) as n from lineitem, region, supplier, nation "
         "where l_suppkey = s_suppkey and s_nationkey = n_nationkey "
         "and n_regionkey = r_regionkey group by n_name"
     )
-    lg = qp.optimize_logical(parse_sql(sql, cat))
+    lg = qp.optimize(parse_sql(sql, cat))
 
     def tables(node):
         out = set()
@@ -120,7 +114,7 @@ def test_dp_collapses_dims_before_fact(spark):
     joins = []
 
     def walk(node):
-        if node.operator.operator_name() == "Join":
+        if "Join" in type(node.operator).__name__:
             joins.append((tables(node.inputs[0]), tables(node.inputs[1])))
         for c in node.inputs:
             walk(c)
@@ -133,17 +127,18 @@ def test_dp_collapses_dims_before_fact(spark):
 
 
 def test_dp_is_hep_fixpoint_stable(spark):
-    """Re-optimizing DP's own output must not rewrite again (the rule's
-    n_cross guard): the hep fixed point terminates."""
+    """The Hep phase leaves the written cross join to the DP in Cascades,
+    and re-optimizing its own output must not rewrite again: the hep
+    fixed point terminates."""
     cat = _testdata_catalog(SF_DIR_ORACLE)
-    qp = _planner(spark, cat, use_dp=True)
+    qp = QueryPlanner(spark, cat)
     lg1 = qp.optimize_logical(parse_sql(CYCLIC_Q, cat))
     lg2 = qp.optimize_logical(lg1)
     assert lg1.explain() == lg2.explain()
 
 
 def test_planning_stats_and_memo_budget(spark):
-    """CascadesOptimizer now reports planning time + memo size, and the
+    """CascadesOptimizer reports planning time + memo size, and the
     task runner's memo caps exist as the exploration safety valve."""
     from datafusion_dolomite_spark.optimizer.cascades.tasks import TaskRunner
 
@@ -154,7 +149,8 @@ def test_planning_stats_and_memo_budget(spark):
     assert 0 < st["seconds"] < 30
     assert 0 < st["groups"] < TaskRunner.MAX_MEMO_GROUPS
     assert 0 < st["exprs"] < TaskRunner.MAX_MEMO_EXPRS
-    assert st["transformations"] <= TaskRunner.EXPLORATION_BUDGET
+    # commutation mirrored the enumerated joins
+    assert st["transformations"] > 0
 
 
 def test_memo_cap_halts_exploration_but_still_plans(spark, monkeypatch):
@@ -172,12 +168,11 @@ def test_memo_cap_halts_exploration_but_still_plans(spark, monkeypatch):
     assert rows  # executes correctly without exploration
 
 
-def test_nine_leaves_falls_back_to_greedy(spark, tmp_path):
-    """Above MAX_DP_LEAVES the rule must fall back to the greedy
-    rebuild rather than enumerate 3^n partitions: a 9-relation comma
-    join still plans (cross joins eliminated) with DP declining."""
-    from datafusion_dolomite_spark.optimizer.rules import pushdown as PD
-
+def test_nine_leaves_falls_back_to_greedy(spark, tmp_path, monkeypatch):
+    """Above MAX_EXACT_PAIRS the enumeration must take its greedy pass
+    rather than enumerate every csg-cmp pair: a 9-relation star (1024
+    pairs) still plans, cross joins eliminated, with the exact
+    enumeration declining."""
     cat = _testdata_catalog(SF_DIR_ORACLE)
     # 9 leaves: nation + region + 7 distinct-alias copies via SQL self
     # joins would collide on names; build a synthetic star instead
@@ -201,29 +196,30 @@ def test_nine_leaves_falls_back_to_greedy(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(str(base / "hub"))
     cat2.register("hub", str(base / "hub"))
 
-    calls = {"dp": 0}
-    orig = PD._dp_join_order
+    calls = {"greedy": 0}
+    orig = join_order._JoinGraph._greedy
 
-    def spy(leaves, *a, **k):
-        if len(leaves) > PD.ReorderJoinGraphRule.MAX_DP_LEAVES:
-            calls["dp"] += 1  # would be a bug: rule must not call DP here
-        return orig(leaves, *a, **k)
+    def spy(self, comp):
+        calls["greedy"] += 1
+        return orig(self, comp)
 
-    PD._dp_join_order = spy
-    try:
-        qp = _planner(spark, cat2, use_dp=True)
-        # hub first, then a disconnected dim (d7 shares nothing with the
-        # preceding tables until its conjunct), forcing the reorder rule
-        sql = (
-            "select count(*) as n from hub, d7, d0, d1, d2, d3, d4, d5, d6 "
-            "where " + " and ".join(f"h{i} = k{i}" for i in range(8))
-        )
-        from datafusion_dolomite_spark.sql import parse_sql
-
-        lg = qp.optimize_logical(parse_sql(sql, cat2))
-        assert "Join" in lg.explain()
-        rows = to_spark(qp.optimize_physical(lg), spark, cat2).collect()
-        assert rows[0]["n"] == 20  # hub keys 0..19 match every dim once
-    finally:
-        PD._dp_join_order = orig
-    assert calls["dp"] == 0  # 9 leaves: DP was never invoked above the cap
+    monkeypatch.setattr(join_order._JoinGraph, "_greedy", spy)
+    qp = QueryPlanner(spark, cat2)
+    # hub first, then a disconnected dim (d7 shares nothing with the
+    # preceding tables until its conjunct): the written plan has cross
+    # joins the greedy pass must remove
+    sql = (
+        "select count(*) as n from hub, d7, d0, d1, d2, d3, d4, d5, d6 "
+        "where " + " and ".join(f"h{i} = k{i}" for i in range(8))
+    )
+    lg = qp.optimize_logical(parse_sql(sql, cat2))
+    assert "Join" in lg.explain()
+    phys = qp.optimize_physical(lg)
+    assert all(
+        getattr(n.operator, "condition", None) != Lit(True)
+        for n in phys.bfs_iterator()
+    )
+    rows = to_spark(phys, spark, cat2).collect()
+    assert rows[0]["n"] == 20  # hub keys 0..19 match every dim once
+    # 9 leaves, 1024 pairs: the exact enumeration declined
+    assert calls["greedy"] == 1

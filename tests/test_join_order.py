@@ -1,7 +1,8 @@
 """Stats-driven multi-join ORDER search (VERDICT r5 item 1).
 
-The memo has had CommutateJoinRule + AssociateJoinRule + ExchangeJoinRule
-since r3 and real ndv/selectivity statistics since r5; these tests prove
+The memo holds every join order of an inner-join graph (the DPccp
+enumeration in ``cascades/join_order.py``, plus CommutateJoinRule) and
+real ndv/selectivity statistics since r5; these tests prove
 the COMPOSITION: on multi-join TPC-H shapes cascades picks a join order
 that DIFFERS from the textual order exactly where the stats say it
 should — smallest intermediates first, broadcast leaves pinned — and the
@@ -228,70 +229,3 @@ def test_chain_timing_noise_bound(spark):
         df_e.collect()
         es.append(time.time() - t0)
     assert min(es) <= min(ts) * 1.5, (min(es), min(ts))
-
-
-def test_dp_fast_stats_match_derive_stats():
-    """Differential pin (r8): the DP hot loop's lightweight join-stats
-    record (`_dp_join_stats`, pushdown.py) must reproduce
-    `derive_stats(LogicalJoin(...))` exactly — row count, summed width,
-    and every surviving column's ndv (with the ndv <= row_count cap) —
-    over randomized stats and conjunct shapes.  The fast path replaced
-    per-candidate derive_stats calls that were ~35% of an 8-way join's
-    planning time; this test is what keeps the two implementations the
-    same model."""
-    import random
-
-    from datafusion_dolomite_spark.expr import BinOp, Col, Lit
-    from datafusion_dolomite_spark.operators.logical import JoinType, LogicalJoin
-    from datafusion_dolomite_spark.operators.properties import (
-        ColumnStatistics,
-        Statistics,
-    )
-    from datafusion_dolomite_spark.optimizer.cascades.cost import derive_stats
-    from datafusion_dolomite_spark.optimizer.rules.pushdown import (
-        _dp_join_stats,
-        _dp_stats_of,
-    )
-
-    rng = random.Random(1234)
-    names = [f"c{i}" for i in range(8)]
-    for _ in range(300):
-        lnames = rng.sample(names, rng.randint(0, 4))
-        rnames = rng.sample(names, rng.randint(0, 4))
-
-        def stats(cols):
-            return Statistics(
-                row_count=float(rng.choice([0, 1, 10, 1000, 10**6])),
-                columns=tuple(
-                    (
-                        n,
-                        ColumnStatistics(
-                            ndv=float(rng.choice([0, 1, 5, 100, 10**7])),
-                            top_count=float(rng.randint(0, 50)),
-                        ),
-                    )
-                    for n in cols
-                ),
-                avg_row_bytes=float(rng.choice([0.0, 8.0, 120.0])),
-            )
-
-        ls, rs = stats(lnames), stats(rnames)
-        # 0-3 conjuncts: equi col pairs (possibly ambiguous/self-join
-        # names, possibly missing from either side) + one non-equi
-        pairs, conds = [], []
-        for _ in range(rng.randint(0, 3)):
-            a, b = rng.choice(names), rng.choice(names)
-            pairs.append((a, b))
-            conds.append(BinOp("=", Col(a), Col(b)))
-        if rng.random() < 0.3:
-            pairs.append(None)
-            conds.append(BinOp(">", Col(rng.choice(names)), Lit(5)))
-        cond = None
-        for c in conds:
-            cond = c if cond is None else BinOp("and", cond, c)
-        join = LogicalJoin(JoinType.INNER, cond if cond is not None else Lit(True))
-        slow = derive_stats(join, [ls, rs], None)
-        fast = _dp_join_stats(_dp_stats_of(ls), _dp_stats_of(rs), pairs)
-        assert fast.row_count == slow.row_count, (pairs, ls, rs)
-        assert fast.avg_row_bytes == slow.avg_row_bytes
-        assert fast.ndvs == {n: cs.ndv for n, cs in slow.columns}

@@ -476,8 +476,8 @@ class Gen:
         """Comma joins over a random connected 3-4 table subgraph with
         the TEXTUAL order scrambled — when scrambling leaves adjacent
         tables unconnected, the cross join survives the WHERE-merge and
-        ``ReorderJoinGraphRule``'s DP enumeration (r7) rebuilds the
-        graph; when it doesn't, the merge path handles it.  Either way
+        the Cascades join order enumeration rebuilds the graph; when it
+        doesn't, the merge path handles it.  Either way
         DuckDB executes the identical SQL natively — differential proof
         over the reorder machinery's whole surface."""
         r = self.rng

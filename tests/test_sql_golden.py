@@ -812,42 +812,51 @@ def test_having_scalar_subquery(planner):
     assert rows == want and len(rows) > 0
 
 
-def test_reorder_join_graph_eliminates_cross_join(catalog):
-    """FROM a, b, c with predicates connecting each to c: the left-deep
-    merge makes a×b a cartesian; ReorderJoinGraphRule rebuilds the chain
-    connected (a⋈c first), leaving zero True-condition joins."""
-    from datafusion_dolomite_spark.optimizer.rule import OptimizerContext
-    from datafusion_dolomite_spark.planner import default_rewrite_rules
+def _hep_then_cascades(catalog, sql):
+    from datafusion_dolomite_spark.optimizer.cascades.cost import SparkCostModel
+    from datafusion_dolomite_spark.optimizer.cascades.optimizer import (
+        CascadesOptimizer,
+    )
     from datafusion_dolomite_spark.optimizer.heuristic import HepOptimizer
+    from datafusion_dolomite_spark.optimizer.rule import OptimizerContext
+    from datafusion_dolomite_spark.planner import (
+        default_cascades_rules,
+        default_rewrite_rules,
+    )
 
     ctx = OptimizerContext(catalog)
-    plan = parse_sql(
+    logical = HepOptimizer(default_rewrite_rules(), ctx).find_best_plan(
+        parse_sql(sql, catalog)
+    )
+    return CascadesOptimizer(
+        default_cascades_rules(), ctx, cost_model=SparkCostModel()
+    ).find_best_plan(logical)
+
+
+def test_reorder_join_graph_eliminates_cross_join(catalog):
+    """FROM a, b, c with predicates connecting each to c: the left-deep
+    merge makes a×b a cartesian; the Cascades join order enumeration
+    joins only connected sets, leaving zero True-condition joins."""
+    text = _hep_then_cascades(
+        catalog,
         "select n_name, r_name, c_name from customer, region, nation "
         "where n_regionkey = r_regionkey and c_nationkey = n_nationkey",
-        catalog,
-    )
-    opt = HepOptimizer(default_rewrite_rules(), ctx).find_best_plan(plan)
-    text = opt.explain()
+    ).explain()
     assert "expr: True" not in text  # no cartesian survives
-    # the connected order joins customer→nation first, then region
+    assert text.count("Join") == 2
+    # nation sits between its two partners: customer⋈(nation⋈region)
     assert text.index('"customer"') < text.index('"nation"') < text.index('"region"')
 
 
 def test_reorder_join_graph_keeps_genuine_cross(planner, catalog):
     """A genuinely unconnected table stays a cross join (no predicate
     can link it) and results remain correct."""
-    from datafusion_dolomite_spark.optimizer.rule import OptimizerContext
-    from datafusion_dolomite_spark.planner import default_rewrite_rules
-    from datafusion_dolomite_spark.optimizer.heuristic import HepOptimizer
-
-    ctx = OptimizerContext(catalog)
-    plan = parse_sql(
+    text = _hep_then_cascades(
+        catalog,
         "select r_name, n_name, c_name from region, nation, customer "
         "where c_nationkey = n_nationkey",
-        catalog,
-    )
-    opt = HepOptimizer(default_rewrite_rules(), ctx).find_best_plan(plan)
-    assert opt.explain().count("expr: True") == 1
+    ).explain()
+    assert text.count("expr: True") == 1
     rows = [
         tuple(r)
         for r in planner.sql(

@@ -11,7 +11,7 @@ import os
 import pytest
 
 import datafusion_dolomite_spark
-from datafusion_dolomite_spark.sql import SqlError, parse_statement
+from datafusion_dolomite_spark.sql import SqlError, parse_sql, parse_statement
 
 MERGE = (
     "merge into orders as t using stg0 s on t.o_orderkey = s.o_orderkey "
@@ -64,6 +64,10 @@ CASES = [
     ("/* c */ delete from t where k = 1", "delete",
      {"table": "t", "where": "k = 1"}),
     ("delete from t", "delete", {"table": "t"}),
+    ("delete from t where k = 1;", "delete",
+     {"table": "t", "where": "k = 1"}),
+    ("update t set v = 1;", "update", {"table": "t", "sets": {"v": "1"}}),
+    ("show tables ;", "show_tables", {}),
     ("update t set tag = 'a where b', v = (v + 1) where k in (1, 2) -- end",
      "update",
      {"table": "t", "sets": {"tag": "'a where b'", "v": "(v + 1)"},
@@ -143,6 +147,31 @@ def test_statement_record(text, kind, fields):
         assert st.args.get(name) == want, name
     if kind == "query":
         assert st.args == {"query": text}
+
+
+@pytest.mark.parametrize("text", [
+    "select 1;",
+    "select k from t where tag = ';' ;",
+    "select /*+ BROADCAST(t) */ k from t;",
+])
+def test_query_with_trailing_semicolon_parses(text):
+    """One trailing ``;`` ends a query too; a ``;`` inside a literal is
+    text."""
+    plan = parse_sql(text)
+    assert plan.explain() == parse_sql(text.rstrip(" ;")).explain()
+
+
+def test_statement_tokens_parse_the_query():
+    """``parse_sql`` takes the tokens and hints ``parse_statement`` made
+    (the planner's path), with the plan and hints of a fresh parse."""
+    text = "select /*+ BROADCAST(t) */ k from t where tag = 'x;'"
+    st = parse_statement(text)
+    assert st.kind == "query"
+    plan = parse_sql(st.args["query"], lexed=st.lexed)
+    fresh = parse_sql(text)
+    assert plan.explain() == fresh.explain()
+    assert plan.hints == fresh.hints == {
+        "broadcast": {"t"}, "merge": set(), "shuffle_hash": set()}
 
 
 def test_time_travel_references():
