@@ -6051,7 +6051,7 @@ def q_sql_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: CORRELATED scalar min subquery whose inner FROM is
     itself a 4-table join — decorrelated into a per-key aggregate
     (group keys aliased __ck* so they never collide with outer columns,
-    sql.py _try_decorrelate_scalar).  lineitem plays partsupp; beyond
+    sql.py _decorrelate_scalar).  lineitem plays partsupp; beyond
     the reference's SQL surface (conversion/logical.rs:119-135 converts
     no subqueries at all)."""
     return _planner(spark, sf_dir).sql(_SQL_Q2)
@@ -6121,7 +6121,7 @@ def q_sql_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 (waiting suppliers): EXISTS + NOT EXISTS both correlated
     through a lineitem SELF-join with a non-equi conjunct
     (l2.l_suppkey <> l1.l_suppkey) — the @outer qualifier marking plus
-    __sub_* inner renames (sql.py _decorrelate_exists) produce a semi
+    __sub_* inner renames (sql.py _decorrelate) produce a semi
     and an anti join with mixed equi/non-equi conditions."""
     return _planner(spark, sf_dir).sql(_SQL_Q21)
 
@@ -7592,16 +7592,15 @@ def q_sql_rollup_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_sql_any_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantified comparisons: ``x op ANY/ALL/SOME (subquery)`` —
-    three-valued on EVERY path (r13).  UNCORRELATED quantifiers (the
-    ``<= ALL``) lower to a broadcast 1-row
-    ``struct(min, max, count(*), count(y))`` stats aggregate + CASE
-    (``sql.py::_QuantSubquery``) — an aggregate instead of a join at
-    100 TB.  CORRELATED quantifiers (the ``< ANY``) lower to a CASE
-    over three EXISTS flags — witness/violation (a min/max grouped
-    hash join via the single-inequality path), group-nonempty, and
-    NULL-row-in-group — so a NULL probe or a NULL subquery row yields
-    NULL exactly as the standard prescribes; ``= ANY`` under OR takes
-    the null-aware membership-flag path like IN.  No per-outer-row
+    three-valued on EVERY path (r13).  Quantifiers over no or
+    equality-only correlation (the ``<= ALL``, the ``< ANY``) lower to
+    one stats aggregate ``(count(*), count(y), min/max(y))`` — global
+    and broadcast when uncorrelated, grouped by the correlation keys
+    and hash-joined otherwise — and the one three-valued CASE
+    (``sql.py::_lower_membership``): an aggregate instead of a join
+    against the subquery at 100 TB, and a NULL probe or a NULL
+    subquery row yields NULL exactly as the standard prescribes;
+    ``= ANY`` under OR takes the null-aware membership path like IN.  No per-outer-row
     re-execution anywhere.  Same string runs natively on DuckDB."""
     return _planner(spark, sf_dir).sql(_SQL_ANY_ALL)
 
@@ -7609,7 +7608,7 @@ def q_sql_any_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sql_corr_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CORRELATED IN subqueries (r12): outer-referencing WHERE
     conjuncts lift into the semi/anti join condition exactly like
-    EXISTS decorrelation (``sql.py::_decorrelate_in``), with the
+    EXISTS decorrelation (``sql.py::_decorrelate``), with the
     subquery's output expression re-projected as the join key — one
     hash join per membership test, zero per-outer-row re-execution.
     Covers both polarities: a correlated IN (semi) AND a correlated
@@ -7646,7 +7645,7 @@ def q_sql_notin_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL in the subquery output poisons every row) and
     ``miss_probe_null``/``not_compound`` MUST exclude the NULL-probe
     rows — a two-valued anti join gets all three wrong.  Lowering
-    (``sql.py::_in_stats_join``): the anti/flag join is unchanged;
+    (``sql.py::_lower_membership``): the anti/flag join is unchanged;
     ONE broadcast 1-row aggregate ``(count(*), count(y))`` decides
     empty/NULL-bearing — the 100 TB cost is a partial+final count, no
     extra data movement.  Same string runs natively on DuckDB."""
@@ -7674,12 +7673,12 @@ def q_sql_exists_or_ineq(spark: SparkSession, sf_dir: str) -> DataFrame:
     * single ordering comparison (``ex_or``, ``ni_ineq``): the min/max
       trick — ``EXISTS(ie > oe)`` over a group ⟺ ``max(ie) > oe`` —
       turns the whole frame into GROUPED aggregates of the subquery
-      side + hash LEFT joins (``sql.py::_ineq_exists_flag`` /
-      ``_ineq_in_flag``); ≤1 row per outer row by grouping, no rowid
+      side + hash LEFT joins (``sql.py::_lower_membership`` shape
+      (b)); ≤1 row per outer row by grouping, no rowid
       shuffle, no nested loop.  For IN, two aggregates (stats by eq
       keys; hit by eq keys + membership key) give the full 3VL frame.
     * anything else (``not_ex``, two inequalities): rowid aggregation
-      (``_agg_exists_flag`` / ``_agg_in_flag``) —
+      (``_lower_membership`` shape (c)) —
       ``monotonically_increasing_id`` → LEFT join on the full lifted
       condition → re-aggregate per rowid; one extra outer shuffle,
       only on this shape.  A keyless version BNLJs with the stream
@@ -7736,8 +7735,8 @@ def q_sql_try_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sql_quant_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THREE-VALUED quantified comparisons (r13): uncorrelated
     ``x op ANY/ALL (sub)`` lowers to ONE broadcast stats row
-    ``struct(min(y), max(y), count(*), count(y))`` and a pure CASE
-    (``sql.py::_QuantSubquery``): the bound decides the witness (ANY)
+    ``(count(*), count(y), min/max(y))`` and a pure CASE
+    (``sql.py::_lower_membership``): the bound decides the witness (ANY)
     or violation (ALL) among non-null rows; count(*)=0 decides the
     vacuous frame; a NULL probe or leftover NULL row yields NULL.
     Replaces the r12 EXISTS semi/anti rewrite for the uncorrelated
@@ -9725,7 +9724,7 @@ def q_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sql_corr_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CORRELATED scalar aggregate subquery (TPC-H Q2/Q17 pattern),
     decorrelated into a per-key aggregate + equi-join
-    (sql._try_decorrelate_scalar) — customers above 1.5x their nation's
+    (sql._decorrelate_scalar) — customers above 1.5x their nation's
     average supplier balance."""
     return _planner(spark, sf_dir).sql(
         "select c_custkey, c_name from customer "

@@ -48,7 +48,7 @@ _TOKEN_RE = re.compile(
     r"""
     (?P<ws>\s+)
   | (?P<comment>--[^\n]*|/\*.*?\*/)
-  | (?P<number>\d+(?:\.\d+)?)
+  | (?P<number>\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
   | (?P<string>'(?:[^']|'')*')
   | (?P<ident>[A-Za-z_][A-Za-z_0-9]*)
   | (?P<op><=>|<=|>=|<>|!=|::|=|<|>|\(|\)|,|\.|\*|\+|-|/|%)
@@ -56,6 +56,13 @@ _TOKEN_RE = re.compile(
     """,
     re.VERBOSE | re.DOTALL,
 )
+
+
+def _number(text: str):
+    """A number token's value: an int, or a double when it has a
+    fraction or an exponent (``1.5``, ``1e5``)."""
+    return int(text) if text.isdigit() else float(text)
+
 
 _KEYWORDS = {
     "select", "distinct", "from", "join", "inner", "left", "right", "full",
@@ -69,78 +76,38 @@ _KEYWORDS = {
 }
 
 
-class _InSubquery:
-    """Parser-internal marker: ``expr [NOT] IN (<select>)``.  Never enters
-    the plan — ``_select`` rewrites it into a LEFT SEMI/ANTI join (the
-    decorrelation the reference never implemented; subquery must be
-    uncorrelated and single-column)."""
+class _Subquery:
+    """Parser-internal marker for a membership test over a subquery:
+    ``[NOT] EXISTS (S)`` has no probe; ``x IN (S)`` is ``x = ANY (S)``;
+    ``x NOT IN (S)`` is ``x != ALL (S)``; ``x op ANY|ALL (S)``.  Never
+    enters the plan: ``_lower_membership`` decorrelates S and replaces
+    the marker by joins and its (three-valued) value."""
 
-    __slots__ = ("expr", "subplan", "negated")
+    __slots__ = ("probe", "op", "quant", "subplan", "negated")
 
-    def __init__(self, expr, subplan, negated):
-        self.expr = expr
+    def __init__(self, probe, op, quant, subplan, negated=False):
+        self.probe = probe
+        self.op = op
+        self.quant = quant
         self.subplan = subplan
         self.negated = negated
+
+    def negate(self) -> "_Subquery":
+        return _Subquery(
+            self.probe, self.op, self.quant, self.subplan, not self.negated
+        )
 
 
 class _ScalarSubquery:
     """Parser-internal marker: ``(<select>)`` used as a VALUE (e.g.
-    ``x > (select avg(...) ...)``).  Uncorrelated only; ``_select``
-    rewrites it into an INNER join against the 1-row aggregate (Spark
-    broadcasts it) and replaces the node with a column reference."""
+    ``x > (select avg(...) ...)``).  ``_join_scalars`` joins the
+    subquery (a 1-row aggregate, or in WHERE a correlated aggregate per
+    key) and the node becomes a column reference."""
 
     __slots__ = ("subplan",)
 
     def __init__(self, subplan):
         self.subplan = subplan
-
-
-class _ExistsSubquery:
-    """Parser-internal marker: ``[NOT] EXISTS (<select>)``.  ``_select``
-    DECORRELATES it: conjuncts in the subquery's WHERE that reference
-    outer columns are lifted into a LEFT SEMI/ANTI join condition; the
-    subquery's select list is discarded (EXISTS ignores it)."""
-
-    __slots__ = ("subplan", "negated")
-
-    def __init__(self, subplan, negated):
-        self.subplan = subplan
-        self.negated = negated
-
-
-class _QuantSubquery:
-    """Parser-internal marker: ``x op ANY|ALL (<select>)`` over an
-    UNCORRELATED subquery (r13).  Standard quantified comparisons are
-    three-valued (a NULL ``x`` or a NULL subquery row can only yield
-    NULL, never TRUE), so instead of the EXISTS rewrite — whose
-    semi/anti filter silently drops the NULL rows and goes two-valued —
-    the subquery reduces to ONE global aggregate row
-    ``struct(min(y), max(y), count(*), count(y))``, cross-joined like a
-    scalar subquery (1-row broadcast), and the comparison becomes a
-    pure three-valued CASE over those four numbers:
-
-      ``x < ALL(S)``  ≡  x < min(S)   (violation check via the bound)
-      ``x < ANY(S)``  ≡  x < max(S)   (witness check via the bound)
-      ``x = ALL(S)``  ≡  min = max = x;  ``x != ANY(S)`` ≡ min != x OR
-      max != x — with cnt=0 / x IS NULL / count(y) < count(*) deciding
-      the TRUE/FALSE/NULL frame exactly as the standard prescribes.
-
-    This is also the 100 TB shape: one partial+final aggregate over the
-    subquery instead of a join against it.  ``_extract_scalars``
-    expands the marker (the CASE itself is a plain Expr; the marker
-    exists only because a bare subplan cannot ride inside ``Func``
-    args).  CORRELATED quantifiers (r13) go three-valued through a
-    CASE over three EXISTS flags instead — see the quantifier branch
-    in ``_cmp``."""
-
-    __slots__ = ("expr", "op", "quant", "subplan", "negated")
-
-    def __init__(self, expr, op, quant, subplan, negated=False):
-        self.expr = expr
-        self.op = op
-        self.quant = quant
-        self.subplan = subplan  # stats plan: 1 row, 1 struct column
-        self.negated = negated
 
 
 class _IntervalLit:
@@ -835,119 +802,34 @@ class _Parser:
             new_items = []
             for e in items:
                 ne, sc = _extract_scalars(e)
-                if _contains_insub(ne):
-                    # r13: IN/EXISTS markers as select-list VALUES
-                    # (``x IN (...) AS flag``) — the same three-valued
-                    # membership-flag lowering as markers under OR/NOT
+                if _contains_membership(ne):
+                    # IN/EXISTS/ANY/ALL as select-list VALUES
+                    # (``x IN (...) AS flag``): the same three-valued
+                    # lowering as markers under OR/NOT
                     builder, ne = _lower_embedded_subqueries(
                         ne, builder, self.catalog
                     )
                 new_items.append(ne)
                 sel_scalars.extend(sc)
             items = new_items
-        for alias, sub in sel_scalars:
-            _require_one_row_subplan(sub)
-            cur = _single_output_col(sub)
-            renamed = LogicalPlanBuilder(sub.root).projection(
-                [Alias(Col(cur), alias)]
-            )
-            builder = builder.join(renamed, JoinType.INNER, Lit(True))
+        builder = _join_scalars(builder, sel_scalars)
 
         if self.accept("kw", "where"):
             pred = self._resolve(self._expr())
             pred, scalars = _extract_scalars(pred)
-            for alias, sub in scalars:
-                dec = _try_decorrelate_scalar(sub, self.catalog, alias)
-                if dec is not None:
-                    subb, cond = dec
-                    builder = builder.join(subb, JoinType.INNER, cond)
-                    continue
-                _require_one_row_subplan(sub)
-                cur = _single_output_col(sub)
-                renamed = LogicalPlanBuilder(sub.root).projection(
-                    [Alias(Col(cur), alias)]
-                )
-                builder = builder.join(renamed, JoinType.INNER, Lit(True))
+            builder = _join_scalars(builder, scalars, self.catalog)
             plain, subs, embedded = _split_in_conjuncts(pred)
             if plain is not None:
                 builder = builder.filter(plain)
             for s in subs:
-                jt = JoinType.LEFT_ANTI if s.negated else JoinType.LEFT_SEMI
-                if isinstance(s, _ExistsSubquery):
-                    subplan, cond = _decorrelate_exists(s.subplan, self.catalog)
-                    builder = builder.join(LogicalPlanBuilder(subplan.root), jt, cond)
-                else:
-                    db, iconds, key = _decorrelate_in(
-                        s.subplan, self.catalog
-                    )
-                    if (
-                        s.negated
-                        and db is not None
-                        and not all(_eq_inner_outer(c) for c in iconds)
-                    ):
-                        # r13: non-equality-correlated NOT IN — the
-                        # anti join is two-valued; the rowid
-                        # aggregation path gives the standard 3VL
-                        builder, val = _lower_embedded_subqueries(
-                            s, builder, self.catalog
-                        )
-                        builder = builder.filter(val)
-                        continue
-                    cnt = nn = None
-                    if s.negated:
-                        # r13 (VERDICT r12 item 1): NOT IN goes three-
-                        # valued — the anti join still removes the
-                        # matches, and the null-aware counts decide
-                        # the rows the anti join wrongly KEEPS under
-                        # standard semantics (NULL probe, or a NULL
-                        # subquery row) in a post-filter
-                        builder, cnt, nn = _in_stats_join(
-                            builder, s.subplan, db, iconds, key
-                        )
-                    if db is not None:
-                        # correlated IN (r12): lifted conjuncts join
-                        # alongside the key equality — the same
-                        # semi/anti lowering as EXISTS
-                        builder = builder.join(
-                            db,
-                            jt,
-                            _and_all(
-                                [BinOp("=", s.expr, Col(key))] + iconds
-                            ),
-                        )
-                    else:
-                        builder = builder.join(
-                            LogicalPlanBuilder(s.subplan.root),
-                            jt,
-                            BinOp(
-                                "=",
-                                s.expr,
-                                Col(_single_output_col(s.subplan)),
-                            ),
-                        )
-                    if cnt is not None:
-                        # keep a survivor iff the subquery was empty
-                        # for it (correlated miss reads NULL cnt) or
-                        # it is a genuine non-NULL miss of a NULL-free
-                        # subquery
-                        builder = builder.filter(
-                            BinOp(
-                                "or",
-                                BinOp(
-                                    "=",
-                                    Func("coalesce", (cnt, Lit(0))),
-                                    Lit(0),
-                                ),
-                                BinOp(
-                                    "and",
-                                    Func("isnotnull", (s.expr,)),
-                                    BinOp("=", nn, cnt),
-                                ),
-                            )
-                        )
+                builder, val = _lower_membership(
+                    builder, s, self.catalog, top=True
+                )
+                if val is not None:
+                    builder = builder.filter(val)
             for conj in embedded:
-                # markers under OR/NOT: LEFT membership-flag joins +
-                # the full conjunct over isnotnull(probe) (r12)
+                # markers under OR/NOT: their joins, then the full
+                # conjunct over their values
                 builder, new_conj = _lower_embedded_subqueries(
                     conj, builder, self.catalog
                 )
@@ -1433,17 +1315,16 @@ class _Parser:
                 # HAVING over the aggregate's OUTPUT — a plain filter
                 # above the agg.  Uncorrelated scalar subqueries (TPC-H
                 # Q11's threshold) become a 1-row broadcast cross join
-                # below the filter.
+                # below the filter, membership markers their joins.
                 hpred, hscalars = _extract_scalars(hpred)
-                for alias, sub in hscalars:
-                    _require_one_row_subplan(sub)
-                    cur = _single_output_col(sub)
-                    renamed = LogicalPlanBuilder(sub.root).projection(
-                        [Alias(Col(cur), alias)]
+                builder = _join_scalars(builder, hscalars)
+                has_marker = _contains_membership(hpred)
+                if has_marker:
+                    builder, hpred = _lower_embedded_subqueries(
+                        hpred, builder, self.catalog
                     )
-                    builder = builder.join(renamed, JoinType.INNER, Lit(True))
                 builder = builder.filter(hpred)
-                if hscalars or hidden:
+                if hscalars or hidden or has_marker:
                     # drop the _scalar_* / _h* helper columns
                     from .operators.logical import output_name as _hname
 
@@ -1993,7 +1874,7 @@ class _Parser:
             neg = bool(self.accept("op", "-"))
             tok = self.next()
             if tok.kind == "number":
-                v = float(tok.value) if "." in tok.value else int(tok.value)
+                v = _number(tok.value)
                 return -v if neg else v
             if neg:
                 raise SqlError("'-' in VALUES must prefix a number")
@@ -2358,7 +2239,7 @@ class _Parser:
             count_cols,
             force_left,
             post_distinct,
-        ) = _decorrelate_lateral(sub, self.catalog, outer_names)
+        ) = _decorrelate_lateral(sub, self.catalog)
         clash = sorted(set(out_names) & set(outer_names))
         if clash:
             raise SqlError(
@@ -2376,8 +2257,7 @@ class _Parser:
             # the visible output columns — a rowid names each outer
             # row so two outer rows with identical values keep their
             # own DISTINCT sets
-            _lat_rid_counter[0] += 1
-            rid = f"__lat{_lat_rid_counter[0]}_rid"
+            rid = f"__lat{_next_gensym()}_rid"
             builder = builder.projection(
                 [Col(n) for n in outer_names]
                 + [Alias(Func("monotonically_increasing_id"), rid)]
@@ -2441,11 +2321,9 @@ class _Parser:
                 e.frame,
                 ref=e.ref,
             )
-        if isinstance(e, _InSubquery):
-            return _InSubquery(self._resolve(e.expr), e.subplan, e.negated)
-        if isinstance(e, _QuantSubquery):
-            return _QuantSubquery(
-                self._resolve(e.expr), e.op, e.quant, e.subplan, e.negated
+        if isinstance(e, _Subquery) and e.probe is not None:
+            return _Subquery(
+                self._resolve(e.probe), e.op, e.quant, e.subplan, e.negated
             )
         from .expr import CaseWhen
 
@@ -2528,20 +2406,8 @@ class _Parser:
             # a BARE subquery marker is not an Expr (Func would wrap it
             # in a Lit and lose it) — flip its negation instead, which
             # also keeps the top-conjunct anti-join fast path
-            if isinstance(inner, _ExistsSubquery):
-                return _ExistsSubquery(inner.subplan, not inner.negated)
-            if isinstance(inner, _InSubquery):
-                return _InSubquery(
-                    inner.expr, inner.subplan, not inner.negated
-                )
-            if isinstance(inner, _QuantSubquery):
-                return _QuantSubquery(
-                    inner.expr,
-                    inner.op,
-                    inner.quant,
-                    inner.subplan,
-                    not inner.negated,
-                )
+            if isinstance(inner, _Subquery):
+                return inner.negate()
             return Func("not", (inner,))
         return self._cmp(allow_interval)
 
@@ -2575,7 +2441,9 @@ class _Parser:
             if self.peek().kind == "kw" and self.peek().value in ("select", "with"):
                 sub = self._query()
                 self.expect("op", ")")
-                return _InSubquery(e, sub, negate)
+                if negate:
+                    return _Subquery(e, "!=", "all", sub)
+                return _Subquery(e, "=", "any", sub)
             vals = [self._expr()]
             while self.accept("op", ","):
                 vals.append(self._expr())
@@ -2635,14 +2503,8 @@ class _Parser:
                 and nq.kind == "op"
                 and nq.value == "("
             ):
-                # QUANTIFIED comparison (r12): ``x op ANY (SELECT y)``
-                # rewrites to the EXISTS machinery — the injected
-                # conjunct references BOTH the subquery's output name
-                # (inner-available) and the outer expression, so the
-                # standard lift puts ``x op y`` on the semi/anti join
-                # condition.  ALL ≡ NOT EXISTS(NOT(x op y)) — the
-                # two-valued lowering (NULL rows on either side follow
-                # the engine's documented NOT IN convention).
+                # QUANTIFIED comparison ``x op ANY|SOME|ALL (S)``:
+                # one membership marker, lowered three-valued like IN
                 quant = self.next().value.lower()
                 self.expect("op", "(")
                 if not (
@@ -2654,151 +2516,9 @@ class _Parser:
                     )
                 sub = self._query()
                 self.expect("op", ")")
-                from .plans.plan import PlanNode
-
-                # strip a Distinct/Projection root (quantifiers ignore
-                # duplicates and select lists — the same rule EXISTS
-                # decorrelation applies) so the injected conjunct binds
-                # the pre-projection expression and other inner columns
-                # stay reachable for correlation lifting
-                root = sub.root
-                if root.operator.operator_name() == "Distinct":
-                    root = root.inputs[0]
-                if root.operator.operator_name() == "Projection":
-                    exprs = root.operator.exprs
-                    if len(exprs) != 1:
-                        raise SqlError(
-                            f"{quant.upper()} subquery must produce "
-                            "exactly one column"
-                        )
-                    y = (
-                        exprs[0].expr
-                        if isinstance(exprs[0], Alias)
-                        else exprs[0]
-                    )
-                    below = root.inputs[0]
-                else:
-                    y = Col(_single_output_col(sub))
-                    below = root
-                if self.catalog is not None and not _subquery_correlated(
-                    sub, self.catalog
-                ):
-                    # r13: uncorrelated quantifiers go three-valued via
-                    # a single stats row (see _QuantSubquery).  The
-                    # equality forms ARE the IN forms — route them to
-                    # the (now null-aware) IN machinery.
-                    if quant in ("any", "some") and op == "=":
-                        return _InSubquery(e, sub, False)
-                    if quant == "all" and op == "!=":
-                        return _InSubquery(e, sub, True)
-                    stats = (
-                        LogicalPlanBuilder(below)
-                        .aggregate(
-                            [],
-                            [
-                                Alias(Func("min", (y,)), "_q_mn"),
-                                Alias(Func("max", (y,)), "_q_mx"),
-                                Alias(Func("count"), "_q_cnt"),
-                                Alias(Func("count", (y,)), "_q_nn"),
-                            ],
-                        )
-                        .projection(
-                            [
-                                Alias(
-                                    Func(
-                                        "named_struct",
-                                        (
-                                            Lit("mn"), Col("_q_mn"),
-                                            Lit("mx"), Col("_q_mx"),
-                                            Lit("cnt"), Col("_q_cnt"),
-                                            Lit("nn"), Col("_q_nn"),
-                                        ),
-                                    ),
-                                    "_q",
-                                )
-                            ]
-                        )
-                        .build()
-                    )
-                    return _QuantSubquery(
-                        e,
-                        op,
-                        "all" if quant == "all" else "any",
-                        stats,
-                    )
-                if self.catalog is not None:
-                    # r13: CORRELATED quantifiers go three-valued too —
-                    # a CASE over three EXISTS flags (each a hash flag
-                    # join through the r12/r13 machinery; the x-op-y
-                    # flag takes the min/max grouped-aggregate path):
-                    #   A: ∃ row deciding the answer (witness for ANY,
-                    #      violation for ALL) — both operands non-null
-                    #   B: group nonempty (a NULL x can only matter
-                    #      when there is something to compare against)
-                    #   C: ∃ NULL row in the group
-                    # ALL: A→FALSE; x NULL & B→NULL; C→NULL; else TRUE
-                    # ANY: A→TRUE;  x NULL & B→NULL; C→NULL; else FALSE
-                    from .expr import CaseWhen
-
-                    if quant == "all":
-                        # the violation test: NOT(x op y) as a FILTER
-                        # keeps rows where x op y is FALSE — exactly
-                        # the complement comparison (NULL comparisons
-                        # drop under both spellings), and the plain
-                        # BinOp form lets the min/max single-inequality
-                        # path take it (one grouped hash join)
-                        comp = {
-                            "<": ">=", "<=": ">", ">": "<=", ">=": "<",
-                            "=": "!=", "!=": "=",
-                        }
-                        sat = BinOp(comp[op], e, y)
-                    else:
-                        sat = BinOp(op, e, y)
-                    a_m = _ExistsSubquery(
-                        Plan(
-                            PlanNode(
-                                LogicalFilter(sat),
-                                [_clone_subtree(below)],
-                            )
-                        ),
-                        False,
-                    )
-                    b_m = _ExistsSubquery(
-                        Plan(_clone_subtree(below)), False
-                    )
-                    c_m = _ExistsSubquery(
-                        Plan(
-                            PlanNode(
-                                LogicalFilter(Func("isnull", (y,))),
-                                [_clone_subtree(below)],
-                            )
-                        ),
-                        False,
-                    )
-                    null_b = Cast(Lit(None), "boolean")
-                    decided = Lit(quant != "all")
-                    return CaseWhen(
-                        (
-                            (a_m, decided),
-                            (
-                                BinOp(
-                                    "and",
-                                    Func("isnull", (e,)),
-                                    b_m,
-                                ),
-                                null_b,
-                            ),
-                            (c_m, null_b),
-                        ),
-                        Lit(quant == "all"),
-                    )
-                # catalog-less parse (shape-only unit tests): keep the
-                # two-valued EXISTS rewrite
-                pred = BinOp(op, e, y)
-                if quant == "all":
-                    pred = Func("not", (pred,))
-                filt = PlanNode(LogicalFilter(pred), [below])
-                return _ExistsSubquery(Plan(filt), quant == "all")
+                return _Subquery(
+                    e, op, "all" if quant == "all" else "any", sub
+                )
             return BinOp(op, e, self._add())
         return e
 
@@ -2895,7 +2615,7 @@ class _Parser:
             self.expect("op", "(")
             sub = self._query()
             self.expect("op", ")")
-            return _ExistsSubquery(sub, False)
+            return _Subquery(None, None, "any", sub)
         if (
             t0.kind == "kw"
             and t0.value == "not"
@@ -2907,7 +2627,7 @@ class _Parser:
             self.expect("op", "(")
             sub = self._query()
             self.expect("op", ")")
-            return _ExistsSubquery(sub, True)
+            return _Subquery(None, None, "any", sub, True)
         if self.accept("op", "("):
             if self.peek().kind == "kw" and self.peek().value in ("select", "with"):
                 sub = self._query()
@@ -2924,7 +2644,7 @@ class _Parser:
         t = self.peek()
         if t.kind == "number":
             self.next()
-            return Lit(float(t.value) if "." in t.value else int(t.value))
+            return Lit(_number(t.value))
         if t.kind == "string":
             self.next()
             return Lit(t.value[1:-1].replace("''", "'"))
@@ -3359,15 +3079,12 @@ class _Parser:
 
 def _split_in_conjuncts(pred):
     """Split a WHERE tree into (plain predicate | None, [top-conjunct
-    subquery markers...], [conjuncts with EMBEDDED markers...]).  A
-    bare top-level AND conjunct marker lowers to a semi/anti join (the
-    fast path — right side never widens the row).  A marker embedded
-    under OR/NOT (r12, VERDICT r11 item 2) lowers via the LEFT
-    membership-flag join instead: join once against the deduplicated
-    subquery keys, keep a null-flagged probe column, and evaluate the
-    FULL predicate over ``isnotnull(probe)`` — the standard
-    decorrelation for disjunctive membership tests."""
-    if isinstance(pred, (_InSubquery, _ExistsSubquery)):
+    membership markers...], [conjuncts with EMBEDDED markers...]).  A
+    bare top-level AND conjunct marker may lower to a semi/anti join
+    (``_lower_membership(top=True)``); a marker embedded under OR/NOT
+    lowers to joins plus its three-valued value inside the full
+    conjunct."""
+    if isinstance(pred, _Subquery):
         return None, [pred], []
     if isinstance(pred, BinOp) and pred.op == "and":
         lp, ls, le = _split_in_conjuncts(pred.left)
@@ -3379,117 +3096,40 @@ def _split_in_conjuncts(pred):
         else:
             plain = BinOp("and", lp, rp)
         return plain, ls + rs, le + re_
-    if _contains_insub(pred):
+    if _contains_membership(pred):
         return None, [], [pred]
     return pred, [], []
 
 
-_insub_counter = [0]
-_na_counter = [0]
-_lat_rid_counter = [0]
+#: per-parse counter behind every generated helper name (``__in3_key``,
+#: ``__na3_cnt``, ``__m3_k``, ``_scalar_3``, ``__lat3_rid``)
+_gensym = [0]
 
 
-def _in_stats_join(builder, subplan, db, iconds, ikey):
-    """Attach the null-aware statistics row(s) for a (NOT) IN subquery
-    (r13, VERDICT r12 item 1).  Standard SQL's NOT IN is three-valued:
-    ``x NOT IN (SELECT y …)`` is TRUE only when the subquery neither
-    matches x nor contains a NULL, FALSE on a match, and NULL — row-
-    dropping in WHERE — when x IS NULL or any subquery row is NULL.
-    The two facts an anti/flag join cannot observe — "is the subquery
-    empty" and "does it contain a NULL" — are counts:
-
-      uncorrelated (``db is None``): ONE global aggregate row
-        ``(count(*), count(y))`` cross-joined exactly like a scalar
-        subquery (1-row broadcast — the 100 TB shape is a partial+
-        final count, no data movement);
-      equality-correlated: the same counts grouped by the correlated
-        inner expressions, LEFT-joined on the correlation equalities —
-        an outer row with no matching group reads NULL counts, i.e.
-        "empty subquery for this row".
-
-    Returns ``(builder, cnt_col, nn_col)``, or ``(builder, None,
-    None)`` when a correlated conjunct is not a pure equality —
-    callers route that shape to the rowid-aggregation lowering
-    (``_agg_in_flag``, r13) BEFORE calling here, so the None return is
-    defensive."""
-    _na_counter[0] += 1
-    n = _na_counter[0]
-    cnt_name, nn_name = f"__na{n}_cnt", f"__na{n}_nn"
-    if db is None:
-        key = _single_output_col(subplan)
-        stats = LogicalPlanBuilder(subplan.root).aggregate(
-            [],
-            [
-                Alias(Func("count"), cnt_name),
-                Alias(Func("count", (Col(key),)), nn_name),
-            ],
-        )
-        return (
-            builder.join(stats, JoinType.INNER, Lit(True)),
-            Col(cnt_name),
-            Col(nn_name),
-        )
-    # correlated: every lifted conjunct must be inner_expr = outer_expr
-    group_exprs: list = []   # (inner_expr, group_name)
-    join_conds: list = []
-    for c in iconds:
-        if not (isinstance(c, BinOp) and c.op == "="):
-            return builder, None, None
-        sides = []
-        for x in (c.left, c.right):
-            has_sub = any(
-                col.name.startswith("__sub_") for col in _cols_of(x)
-            )
-            sides.append((x, has_sub))
-        inner = [x for x, h in sides if h]
-        outer = [x for x, h in sides if not h]
-        if len(inner) != 1 or len(outer) != 1:
-            return builder, None, None
-        gname = None
-        for ie, gn in group_exprs:
-            if ie == inner[0]:
-                gname = gn
-                break
-        if gname is None:
-            gname = f"__na{n}_g{len(group_exprs)}"
-            group_exprs.append((inner[0], gname))
-        join_conds.append(
-            BinOp("=", Col(gname), _strip_outer(outer[0]))
-        )
-    stats = db.aggregate(
-        [Alias(ie, gn) for ie, gn in group_exprs],
-        [
-            Alias(Func("count"), cnt_name),
-            Alias(Func("count", (Col(ikey),)), nn_name),
-        ],
-    )
-    return (
-        builder.join(stats, JoinType.LEFT, _and_all(join_conds)),
-        Col(cnt_name),
-        Col(nn_name),
-    )
+def _next_gensym() -> int:
+    _gensym[0] += 1
+    return _gensym[0]
 
 
-def _in_3vl(flag, cnt, nn, x):
-    """Three-valued value of ``x IN (subquery)`` given the membership
-    flag and the null-aware counts: TRUE on a match; FALSE when the
-    subquery is empty (or, correlated, has no group for this row);
-    NULL when x IS NULL or a NULL subquery row exists; else FALSE."""
+#: ``a op b`` ⟺ ``b _FLIP_CMP[op] a``
+_FLIP_CMP = {"<": ">", "<=": ">=", ">": "<", ">=": "<=", "=": "=", "!=": "!="}
+#: ``NOT (a op b)`` ⟺ ``a _NOT_CMP[op] b``, NULL staying NULL
+_NOT_CMP = {"<": ">=", "<=": ">", ">": "<=", ">=": "<", "=": "!=", "!=": "="}
+
+
+def _three_valued(witness, empty, has_null, probe):
+    """The standard value of ``probe op ANY (S)`` from three facts about
+    the (correlated) group of S: TRUE when a row witnesses the
+    comparison; FALSE when the group is empty; NULL when the probe is
+    NULL or the group holds a NULL; FALSE otherwise."""
     from .expr import CaseWhen
 
     return CaseWhen(
         (
-            (flag, Lit(True)),
+            (witness, Lit(True)),
+            (empty, Lit(False)),
             (
-                BinOp("=", Func("coalesce", (cnt, Lit(0))), Lit(0)),
-                Lit(False),
-            ),
-            (
-                BinOp(
-                    "or",
-                    Func("isnull", (x,)),
-                    BinOp("<", nn, cnt),
-                ),
+                BinOp("or", Func("isnull", (probe,)), has_null),
                 Cast(Lit(None), "boolean"),
             ),
         ),
@@ -3497,186 +3137,52 @@ def _in_3vl(flag, cnt, nn, x):
     )
 
 
-def _eq_inner_outer(c) -> bool:
-    """Is ``c`` an ``inner_col = outer_expr`` equality (exactly one side
-    a bare ``__sub_``-renamed inner Col)?  The pure-equality shape the
-    dedup-based flag join requires; anything else routes to the rowid
-    aggregation path (``_agg_exists_flag`` / ``_agg_in_flag``)."""
+def _eq_inner_outer(c, inner) -> bool:
+    """Is ``c`` an ``inner_col = outer_expr`` equality: exactly one side a
+    bare Col named in ``inner`` and no ``inner`` name on the other?"""
     if not (isinstance(c, BinOp) and c.op == "="):
         return False
-    inner = [
-        x
-        for x in (c.left, c.right)
-        if isinstance(x, Col) and x.name.startswith("__sub_")
-    ]
-    if len(inner) != 1:
+    sides = [x for x in (c.left, c.right) if isinstance(x, Col) and x.name in inner]
+    if len(sides) != 1:
         return False
-    other = c.right if inner[0] is c.left else c.left
-    return not any(x.name.startswith("__sub_") for x in _cols_of(other))
+    other = c.right if sides[0] is c.left else c.left
+    return not any(x.name in inner for x in _cols_of(other))
 
 
-_FLIP_CMP = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}
+def _inner_first(c, inner):
+    """An ``_eq_inner_outer`` equality written inner column first."""
+    if isinstance(c.left, Col) and c.left.name in inner:
+        return c
+    return BinOp("=", c.right, c.left)
 
 
-def _split_single_ineq(conjs):
-    """Split correlated conjuncts into ``(eqs, inner_expr, cmp,
-    outer_expr)`` when the non-equality part is EXACTLY ONE ordering
-    comparison with all inner refs on one side and all outer refs on
-    the other — the shape the min/max aggregation trick can lower
-    hash-only (``EXISTS(ie > oe)`` over a group ⟺ ``max(ie) > oe``).
-    Returns None otherwise (multiple inequalities, ``<>``, or mixed
-    sides — those take the rowid-aggregation path)."""
-    eqs, ineqs = [], []
-    for c in conjs:
-        (eqs if _eq_inner_outer(c) else ineqs).append(c)
-    if len(ineqs) != 1:
+def _ordering(c, inner):
+    """``(inner_expr, cmp, outer_expr)`` when ``c`` is an ordering
+    comparison with every ``inner`` name on one side and none on the
+    other — the shape a min/max aggregate decides hash-only
+    (``EXISTS(ie > oe)`` over a group ⟺ ``max(ie) > oe``).  None
+    otherwise."""
+    if not (isinstance(c, BinOp) and c.op in ("<", "<=", ">", ">=")):
         return None
-    c = ineqs[0]
-    if not (isinstance(c, BinOp) and c.op in _FLIP_CMP):
-        return None
-    l_in = any(x.name.startswith("__sub_") for x in _cols_of(c.left))
-    r_in = any(x.name.startswith("__sub_") for x in _cols_of(c.right))
+    l_in = any(x.name in inner for x in _cols_of(c.left))
+    r_in = any(x.name in inner for x in _cols_of(c.right))
     if l_in and not r_in:
-        return eqs, c.left, c.op, c.right
+        return c.left, c.op, c.right
     if r_in and not l_in:
-        return eqs, c.right, _FLIP_CMP[c.op], c.left
+        return c.right, _FLIP_CMP[c.op], c.left
     return None
 
 
 def _eq_join_legs(eqs, prefix):
-    """For pure-equality conjuncts (``_eq_inner_outer`` verified):
-    deduplicated ``[(inner_col_name, group_name)]`` plus the join
+    """For ``_eq_inner_outer`` equalities written inner column first:
+    deduplicated ``[Alias(inner_col, group_name)]`` plus the join
     conjuncts ``group_name = outer_expr``."""
-    groups: list = []
+    groups: dict = {}
     conds: list = []
     for c in eqs:
-        inner = next(
-            x
-            for x in (c.left, c.right)
-            if isinstance(x, Col) and x.name.startswith("__sub_")
-        )
-        outer = c.right if inner is c.left else c.left
-        gname = None
-        for icol, gn in groups:
-            if icol == inner.name:
-                gname = gn
-                break
-        if gname is None:
-            gname = f"{prefix}g{len(groups)}"
-            groups.append((inner.name, gname))
-        conds.append(BinOp("=", Col(gname), _strip_outer(outer)))
-    return groups, conds
-
-
-def _ineq_exists_flag(b, subplan, split, n):
-    """Correlated EXISTS whose lifted conjuncts are equalities plus ONE
-    ordering comparison (r13): ``EXISTS(… WHERE eq-keys match AND
-    ie cmp oe)`` ⟺ ``agg(ie) cmp oe`` over the eq-key group, agg = max
-    for >/>=, min for </<= — so the lowering is one GROUPED aggregate
-    of the subquery side + one hash LEFT join (≤1 row per outer row by
-    grouping), no rowid shuffle and no nested loop.  With no equality
-    conjuncts the side is a GLOBAL 1-row aggregate (broadcast).
-    EXISTS stays two-valued: the flag coalesces to FALSE (an all-NULL
-    or empty group can never witness)."""
-    eqs, ie, cmp_, oe = split
-    aggf = "max" if cmp_ in (">", ">=") else "min"
-    groups, join_conds = _eq_join_legs(eqs, f"__m{n}_")
-    m = f"__m{n}_m"
-    side = LogicalPlanBuilder(subplan.root).aggregate(
-        [Alias(Col(icol), gn) for icol, gn in groups],
-        [Alias(Func(aggf, (ie,)), m)],
-    )
-    b = b.join(
-        side,
-        JoinType.LEFT,
-        _and_all(join_conds) if join_conds else Lit(True),
-    )
-    flag = Func(
-        "coalesce",
-        (BinOp(cmp_, Col(m), _strip_outer(oe)), Lit(False)),
-    )
-    return b, flag
-
-
-def _ineq_in_flag(b, s, db, split, ikey, n):
-    """Correlated IN/NOT IN whose lifted conjuncts are equalities plus
-    ONE ordering comparison (r13): the full three-valued frame from
-    TWO grouped aggregates of the subquery side, both hash-joined —
-
-      stats (by eq keys):  m_all = agg(ie)            group nonempty?
-                           m_nil = agg(ie | key NULL) NULL key in it?
-      hit (by eq keys + key): m_k = agg(ie)           membership
-
-    ``nonempty = m_all cmp oe``, ``has_null = m_nil cmp oe``,
-    ``hit = m_k cmp oe`` after joining ``key = x`` — then the standard
-    CASE: hit → TRUE; ¬nonempty → FALSE; x NULL or has_null → NULL;
-    else FALSE.  ≤1 row per outer row per join by grouping; no rowid
-    shuffle, no nested loop — this is the preferred lowering, the
-    rowid aggregation only takes the shapes this can't express."""
-    from .expr import CaseWhen
-
-    eqs, ie, cmp_, oe = split
-    aggf = "max" if cmp_ in (">", ">=") else "min"
-    oe = _strip_outer(oe)
-    m_all, m_nil, m_k = f"__m{n}_all", f"__m{n}_nil", f"__m{n}_mk"
-    kname = f"__m{n}_k"
-    sgroups, sconds = _eq_join_legs(eqs, f"__m{n}s_")
-    hgroups, hconds = _eq_join_legs(eqs, f"__m{n}h_")
-    stats = db.aggregate(
-        [Alias(Col(icol), gn) for icol, gn in sgroups],
-        [
-            Alias(Func(aggf, (ie,)), m_all),
-            Alias(
-                Func(
-                    aggf,
-                    (
-                        CaseWhen(
-                            ((Func("isnull", (Col(ikey),)), ie),),
-                            None,
-                        ),
-                    ),
-                ),
-                m_nil,
-            ),
-        ],
-    )
-    hit_side = db.aggregate(
-        [Alias(Col(ikey), kname)]
-        + [Alias(Col(icol), gn) for icol, gn in hgroups],
-        [Alias(Func(aggf, (ie,)), m_k)],
-    )
-    b = b.join(
-        stats,
-        JoinType.LEFT,
-        _and_all(sconds) if sconds else Lit(True),
-    ).join(
-        hit_side,
-        JoinType.LEFT,
-        _and_all([BinOp("=", Col(kname), s.expr)] + hconds),
-    )
-    hit = Func(
-        "coalesce", (BinOp(cmp_, Col(m_k), oe), Lit(False))
-    )
-    nonempty = Func(
-        "coalesce", (BinOp(cmp_, Col(m_all), oe), Lit(False))
-    )
-    has_null = Func(
-        "coalesce", (BinOp(cmp_, Col(m_nil), oe), Lit(False))
-    )
-    val = CaseWhen(
-        (
-            (hit, Lit(True)),
-            (Func("not", (nonempty,)), Lit(False)),
-            (
-                BinOp(
-                    "or", Func("isnull", (s.expr,)), has_null
-                ),
-                Cast(Lit(None), "boolean"),
-            ),
-        ),
-        Lit(False),
-    )
-    return b, Func("not", (val,)) if s.negated else val
+        gname = groups.setdefault(c.left.name, f"{prefix}g{len(groups)}")
+        conds.append(BinOp("=", Col(gname), c.right))
+    return [Alias(Col(ic), gn) for ic, gn in groups.items()], conds
 
 
 def _rowid_outer(builder, catalog, rid):
@@ -3695,325 +3201,229 @@ def _rowid_outer(builder, catalog, rid):
     )
 
 
-def _agg_exists_flag(b, subplan, cond, catalog, n):
-    """Correlated EXISTS with NON-EQUALITY correlated conjuncts under
-    OR/NOT (r13, VERDICT r12 item 2): dedup over the inner key columns
-    cannot guarantee ≤1 match per outer row, so instead of a flag join
-    the lowering is rowid → LEFT join on the FULL lifted condition →
-    re-aggregate ``count(match_marker) > 0`` grouped by rowid (plus the
-    passthrough outer columns — functionally determined by the rowid,
-    so group cardinality is unchanged).  At most one row per outer row
-    by construction; EXISTS stays two-valued (count is never NULL).
+def _membership_side(s: "_Subquery", catalog, op):
+    """Decorrelate a membership marker's subquery.  Returns ``(side, y,
+    conds, inner)``: the subquery side as a builder; the expression
+    over it compared with the probe (None for EXISTS); the lifted
+    correlation conjuncts (empty when uncorrelated); and the side's
+    ``__sub_*`` columns those conjuncts read, in first-use order.
 
-    Scale note: this path costs one extra shuffle of the outer table
-    (the rowid re-group, with map-side partial counts); the
-    pure-equality dedup path remains the fast path and is unchanged."""
-    inner_cols = sorted(
-        {
-            x.name
-            for x in _cols_of(cond)
-            if x.name.startswith("__sub_")
-        }
+    EXISTS ignores the select list.  A correlated IN/ANY/ALL needs a
+    plain ``SELECT <expr>`` root (a DISTINCT over it is kept), whose
+    expression becomes the key column ``__in<n>_key``.  Uncorrelated,
+    an IN (``op`` ``=``) over a named output column uses the subquery
+    as written; any other comparison reads the select-list expression
+    straight off the projection's input."""
+    root = s.subplan.root
+    distinct = s.probe is not None and root.operator.operator_name() == "Distinct"
+    if distinct:
+        root = root.inputs[0]
+    proj = None
+    if root.operator.operator_name() == "Projection":
+        proj = root.operator.exprs
+    below, conds, renames = _decorrelate(
+        s.subplan, catalog, root.inputs[0] if proj is not None else root
     )
-    ren = {c: f"__m{n}{c[5:]}" for c in inner_cols}
-    one = f"__m{n}_one"
-    side = LogicalPlanBuilder(subplan.root).projection(
-        [Alias(Col(c), ren[c]) for c in inner_cols]
-        + [Alias(Lit(1), one)]
-    )
-    cond = _rewrite_cols(
-        cond, lambda x: Col(ren[x.name]) if x.name in ren else x
-    )
-    rid = f"__m{n}_rid"
-    b, outer_names = _rowid_outer(b, catalog, rid)
-    cname = f"__m{n}_c"
-    has_eq = any(
-        isinstance(c, BinOp) and c.op == "=" for c in _conjuncts(cond)
-    )
-    b = b.join(
-        side,
-        JoinType.LEFT,
-        cond,
-        # pure-inequality condition → BNLJ: spread the quadratic work
-        # over the rowid hash (see LogicalJoin.stream_repartition)
-        stream_repartition="" if has_eq else rid,
-    ).aggregate(
-        [Col(rid)] + [Col(c) for c in outer_names],
-        [Alias(Func("count", (Col(one),)), cname)],
-    )
-    return b, BinOp(">", Col(cname), Lit(0))
+    whole = LogicalPlanBuilder(s.subplan.root)
+    cols = [Alias(Col(c), r) for c, r in renames.items()]
+    y = None
+    if s.probe is not None:
+        if proj is None or len(proj) != 1:
+            if not conds:
+                return whole, Col(_single_output_col(s.subplan)), [], []
+            if proj is None:
+                raise SqlError(
+                    "correlated IN supports a plain SELECT <expr> subquery "
+                    "(no aggregation) — rewrite as EXISTS"
+                )
+            raise SqlError("IN subquery must produce exactly one column")
+        y = proj[0].expr if isinstance(proj[0], Alias) else proj[0]
+        if not conds:
+            if op == "=" and isinstance(proj[0], (Alias, Col)):
+                return whole, Col(_single_output_col(s.subplan)), [], []
+            return LogicalPlanBuilder(below), y, [], []
+        if any(x.qualifier == "@outer" for x in _cols_of(y)):
+            raise SqlError(
+                "IN subquery select list cannot reference the outer query"
+            )
+        key = f"__in{_next_gensym()}_key"
+        cols.insert(0, Alias(y, key))
+        y = Col(key)
+    elif not conds:
+        return whole, None, [], []
+    side = LogicalPlanBuilder(below)
+    if cols:
+        side = side.projection(cols)
+    return side.distinct() if distinct else side, y, conds, list(renames.values())
 
 
-def _agg_in_flag(b, s, db, iconds, ikey, catalog, n):
-    """Correlated IN/NOT IN with NON-EQUALITY correlated conjuncts
-    (r13, VERDICT r12 items 1+2): the rowid aggregation gives the full
-    three-valued frame per outer row in one pass —
+def _lower_membership(b, s: "_Subquery", catalog, top: bool = False):
+    """Lower one membership marker against the outer builder ``b``.
+    Returns ``(builder, value)``: the builder with the subquery joined
+    in, and the marker's value over the joined columns — TRUE, FALSE or
+    NULL for IN/ANY/ALL (``_three_valued``), TRUE or FALSE for EXISTS.
+    ``x op ALL (S)`` lowers as ``NOT (x op' ANY (S))`` with ``op'`` the
+    complement, so NOT IN is ``NOT (x = ANY (S))``.
 
-      cnt = count(match_marker)      rows satisfying the correlation,
-      nn  = count(key)               …of which have a non-NULL key,
-      hit = max(CASE key = x THEN 1) did any key equal the probe —
+    ``top`` says the marker is a top-level WHERE conjunct.  Correlated
+    EXISTS and positive IN then become a LEFT SEMI/ANTI join on the
+    lifted conjuncts, and the value is None (nothing left to filter).
+    NOT IN over shape (a) becomes an anti join plus a null-aware
+    post-filter.
 
-    then ``_in_3vl(hit, cnt, nn, x)`` is the standard NOT-IN-capable
-    value (NULL-key equality is NULL → ignored by max, exactly the
-    membership semantics).  This closes the last documented two-valued
-    residual: non-equality-correlated NOT IN now matches the standard
-    with NULLs present.  Same one-extra-shuffle cost note as
-    ``_agg_exists_flag``."""
+    The physical shape follows the lifted conjuncts:
+
+    (a) none, or ``inner_col = outer`` equalities only: a null-aware
+        stats row ``count(*)``, ``count(key)`` (and ``min``/``max`` of
+        the key for an ordering ANY) grouped by the correlation keys —
+        one global row when uncorrelated — plus, for IN and correlated
+        EXISTS, a LEFT join against the deduplicated key and correlation
+        columns whose non-NULL probe column is the witness;
+    (b) equalities plus one ordering comparison ``ie cmp oe`` (EXISTS
+        and IN): ``agg(ie) cmp oe`` over aggregates grouped by the
+        equalities' keys, agg = max for >/>=, min for </<= (IN adds an
+        aggregate grouped by the key too);
+    (c) anything else: a row id on the outer side, a LEFT join on the
+        full condition, and a re-aggregation per row id that counts the
+        matching rows and their non-NULL keys and finds a witness.
+
+    Every join keeps at most one right row per outer row, so the value
+    composes under the surrounding OR/NOT/CASE."""
     from .expr import CaseWhen
 
-    sub_cols = sorted(
-        {
-            x.name
-            for c in iconds
-            for x in _cols_of(c)
-            if x.name.startswith("__sub_")
-        }
-    )
-    ren = {c: f"__m{n}{c[5:]}" for c in sub_cols}
-    one, kname = f"__m{n}_one", f"__m{n}_k"
-    side = db.projection(
-        [Alias(Col(ikey), kname)]
-        + [Alias(Col(c), ren[c]) for c in sub_cols]
-        + [Alias(Lit(1), one)]
-    )
-    iconds = [
-        _rewrite_cols(
-            _strip_outer(c),
-            lambda x: Col(ren[x.name]) if x.name in ren else x,
+    op, neg = (s.op, s.negated) if s.quant == "any" else (_NOT_CMP[s.op], not s.negated)
+    x = s.probe
+    side, y, conds, inner = _membership_side(s, catalog, op)
+    match = [BinOp("=", x, y)] if op == "=" else []
+    if top and (match and not neg if x is not None else conds):
+        # a semi/anti join keeps exactly the rows whose value is TRUE
+        jt = JoinType.LEFT_ANTI if neg else JoinType.LEFT_SEMI
+        return b.join(side, jt, _and_all(match + conds)), None
+    n = _next_gensym()
+    eqs = [_inner_first(c, inner) for c in conds if _eq_inner_outer(c, inner)]
+    rest = [c for c in conds if not _eq_inner_outer(c, inner)]
+    ineq = _ordering(rest[0], inner) if len(rest) == 1 and op in (None, "=") else None
+    if not rest and (x is not None or not conds):
+        # (a) the null-aware stats row
+        cnt, nn = Col(f"__na{n}_cnt"), Col(f"__na{n}_nn")
+        mn, mx = Col(f"__na{n}_mn"), Col(f"__na{n}_mx")
+        stats = [Alias(Func("count"), cnt.name)]
+        if x is not None:
+            stats.append(Alias(Func("count", (y,)), nn.name))
+        if op in ("<", "<=", "!="):
+            stats.append(Alias(Func("max", (y,)), mx.name))
+        if op in (">", ">=", "!="):
+            stats.append(Alias(Func("min", (y,)), mn.name))
+        groups, legs = _eq_join_legs(eqs, f"__na{n}_")
+        b = b.join(
+            side.aggregate(groups, stats),
+            JoinType.LEFT if legs else JoinType.INNER,
+            _and_all(legs) or Lit(True),
         )
-        for c in iconds
-    ]
-    rid = f"__m{n}_rid"
-    b, outer_names = _rowid_outer(b, catalog, rid)
-    cnt, nn, hit = f"__m{n}_cnt", f"__m{n}_nn", f"__m{n}_hit"
-    has_eq = any(
-        isinstance(c, BinOp) and c.op == "=" for c in iconds
-    )
-    b = b.join(
-        side,
-        JoinType.LEFT,
-        _and_all(iconds),
-        # pure-inequality condition → BNLJ: spread the quadratic work
-        # over the rowid hash (see LogicalJoin.stream_repartition)
-        stream_repartition="" if has_eq else rid,
-    ).aggregate(
-        [Col(rid)] + [Col(c) for c in outer_names],
-        [
-            Alias(Func("count", (Col(one),)), cnt),
-            Alias(Func("count", (Col(kname),)), nn),
-            Alias(
-                Func(
-                    "max",
-                    (
-                        CaseWhen(
-                            (
-                                (
-                                    BinOp("=", Col(kname), s.expr),
-                                    Lit(1),
-                                ),
-                            ),
-                            None,
-                        ),
-                    ),
-                ),
-                hit,
-            ),
-        ],
-    )
-    val = _in_3vl(
-        Func("isnotnull", (Col(hit),)), Col(cnt), Col(nn), s.expr
-    )
-    return b, Func("not", (val,)) if s.negated else val
+        empty = BinOp("=", Func("coalesce", (cnt, Lit(0))), Lit(0))
+        has_null = BinOp("<", nn, cnt)
+        if top and match:
+            # NOT IN: the anti join removes the matches; a survivor is
+            # TRUE when its group is empty, or when the probe is
+            # non-NULL and the group holds no NULL
+            b = b.join(side, JoinType.LEFT_ANTI, _and_all(match + conds))
+            keep = BinOp("and", Func("isnotnull", (x,)), BinOp("=", nn, cnt))
+            return b.filter(BinOp("or", empty, keep)), None
+        if x is None:
+            witness = BinOp(">", cnt, Lit(0))
+        elif op == "!=":
+            witness = BinOp("or", BinOp("!=", x, mn), BinOp("!=", x, mx))
+        elif op != "=":
+            witness = BinOp(op, x, mx if op in ("<", "<=") else mn)
+    if not rest and (match or conds and x is None):
+        # (a) the witness: a LEFT join against the deduplicated key and
+        # correlation columns, renamed per marker so that two markers
+        # over the same inner column cannot collide
+        ren = {c: f"__m{n}{c[5:]}" for c in inner}
+        cols = [Alias(Col(c), r) for c, r in ren.items()]
+        on = [_rewrite_cols(c, lambda c: Col(ren.get(c.name, c.name))) for c in conds]
+        if match:
+            cols.insert(0, Alias(y, f"__m{n}_k"))
+            on.insert(0, BinOp("=", x, Col(f"__m{n}_k")))
+        b = b.join(side.projection(cols).distinct(), JoinType.LEFT, _and_all(on))
+        witness = Func("isnotnull", (Col(cols[0].name),))
+    elif ineq is not None:
+        # (b) min/max aggregates grouped by the equalities' keys
+        ie, cmp_, oe = ineq
+        aggf = "max" if cmp_ in (">", ">=") else "min"
 
+        def holds(m):
+            return Func("coalesce", (BinOp(cmp_, Col(m), oe), Lit(False)))
 
-def _lower_embedded_subqueries(conj, builder, catalog):
-    """Lower a predicate with IN/EXISTS markers embedded under OR/NOT
-    (r12): each marker becomes a LEFT join against the DEDUPLICATED
-    subquery keys and an ``isnotnull(probe)`` membership flag in the
-    rewritten predicate.  Dedup guarantees at most one match per outer
-    row, so the LEFT join can never multiply rows; non-equality
-    correlated conjuncts therefore route to the rowid-aggregation
-    lowering instead (r13 — ``_agg_exists_flag``/``_agg_in_flag``).
-    Returns (new_builder, rewritten_conjunct).
-
-    NULL semantics note: like the top-conjunct anti-join path,
-    ``NOT IN`` lowers to the two-valued ``NOT isnotnull(probe)`` — the
-    three-valued NULL case (a NULL probe value or NULL in the subquery
-    output) diverges from the standard, consistently with the
-    engine's existing NOT IN lowering."""
-
-    def flag_join(b, s):
-        _insub_counter[0] += 1
-        n = _insub_counter[0]
-        if isinstance(s, _ExistsSubquery):
-            subplan, cond = _decorrelate_exists(s.subplan, catalog)
-            conjs = list(_conjuncts(cond))
-            if any(
-                x.name.startswith("__sub_") for x in _cols_of(cond)
-            ) and not all(_eq_inner_outer(c) for c in conjs):
-                # r13 (VERDICT r12 item 2): non-equality correlation —
-                # min/max grouped-aggregate hash join for the single-
-                # inequality shape, rowid aggregation for the rest
-                split = _split_single_ineq(conjs)
-                if split is not None:
-                    b, flag = _ineq_exists_flag(b, subplan, split, n)
-                else:
-                    b, flag = _agg_exists_flag(
-                        b, subplan, cond, catalog, n
-                    )
-                return b, Func("not", (flag,)) if s.negated else flag
-            inner_cols = []
-            for c in conjs:
-                inner = (
-                    [
-                        x
-                        for x in (c.left, c.right)
-                        if isinstance(x, Col)
-                        and x.name.startswith("__sub_")
-                    ]
-                    if isinstance(c, BinOp) and c.op == "="
-                    else []
-                )
-                if len(inner) != 1:
-                    raise SqlError(
-                        "EXISTS inside OR/NOT supports only "
-                        "inner_col = outer_col correlation; got "
-                        f"{c.pretty()}"
-                    )
-                if inner[0].name not in inner_cols:
-                    inner_cols.append(inner[0].name)
-            renames = {c: f"__m{n}{c[5:]}" for c in inner_cols}
-            side = (
-                LogicalPlanBuilder(subplan.root)
-                .projection(
-                    [Alias(Col(c), renames[c]) for c in inner_cols]
-                )
-                .distinct()
-            )
-            cond = _rewrite_cols(
-                cond,
-                lambda x: Col(renames[x.name])
-                if x.name in renames
-                else x,
-            )
-            probe = Col(renames[inner_cols[0]])
-        else:
-            db, iconds, ikey = _decorrelate_in(s.subplan, catalog)
-            if db is not None and not all(
-                _eq_inner_outer(c) for c in iconds
-            ):
-                # r13 (VERDICT r12 item 2): non-equality correlation —
-                # min/max grouped-aggregate hash joins for the single-
-                # inequality shape, rowid aggregation for the rest
-                split = _split_single_ineq(iconds)
-                if split is not None:
-                    return _ineq_in_flag(b, s, db, split, ikey, n)
-                return _agg_in_flag(b, s, db, iconds, ikey, catalog, n)
-            # r13: embedded IN/NOT IN markers evaluate as genuine
-            # three-valued booleans (VERDICT r12 item 1) — the null-
-            # aware counts join BEFORE the membership join so the CASE
-            # can distinguish FALSE (empty subquery) from NULL (NULL
-            # probe or NULL subquery row), and the surrounding OR/NOT
-            # then composes under Spark's native 3VL
-            b, cnt, nn = _in_stats_join(b, s.subplan, db, iconds, ikey)
-            if db is not None:
-                # correlated IN under OR/NOT (r12): every lifted
-                # conjunct is an equality (checked above), so dedup
-                # over the projected key + inner columns guarantees at
-                # most one match per outer row — the flag join cannot
-                # multiply
-                # uniquify the __sub_* passthroughs: unlike the
-                # semi/anti path, the LEFT join KEEPS the right side's
-                # columns in the row, so two markers touching the same
-                # inner column name would collide
-                sub_cols = sorted(
-                    {
-                        x.name
-                        for c in iconds
-                        for x in _cols_of(c)
-                        if x.name.startswith("__sub_")
-                    }
-                )
-                ren = {c: f"__m{n}{c[5:]}" for c in sub_cols}
-                side = db.projection(
-                    [Col(ikey)]
-                    + [Alias(Col(c), ren[c]) for c in sub_cols]
-                ).distinct()
-                iconds = [
-                    _rewrite_cols(
-                        c,
-                        lambda x: Col(ren[x.name])
-                        if x.name in ren
-                        else x,
-                    )
-                    for c in iconds
-                ]
-                probe = Col(ikey)
-                cond = _and_all(
-                    [BinOp("=", s.expr, probe)]
-                    + [_strip_outer(c) for c in iconds]
-                )
-                val = _in_3vl(
-                    Func("isnotnull", (probe,)), cnt, nn, s.expr
-                )
-                return (
-                    b.join(side, JoinType.LEFT, cond),
-                    Func("not", (val,)) if s.negated else val,
-                )
-            key = _single_output_col(s.subplan)
-            probe = Col(f"__m{n}_k")
-            side = (
-                LogicalPlanBuilder(s.subplan.root)
-                .projection([Alias(Col(key), probe.name)])
-                .distinct()
-            )
-            cond = BinOp("=", s.expr, probe)
-        flag = Func("isnotnull", (probe,))
-        val = (
-            _in_3vl(flag, cnt, nn, s.expr)
-            if isinstance(s, _InSubquery)
-            else flag  # EXISTS is always TRUE/FALSE — no NULL frame
+        groups, legs = _eq_join_legs(eqs, f"__m{n}s_")
+        aggs = [Alias(Func(aggf, (ie,)), f"__m{n}_all")]
+        if y is not None:
+            nil = CaseWhen(((Func("isnull", (y,)), ie),), None)
+            aggs.append(Alias(Func(aggf, (nil,)), f"__m{n}_nil"))
+        b = b.join(
+            side.aggregate(groups, aggs),
+            JoinType.LEFT,
+            _and_all(legs) or Lit(True),
         )
-        return (
-            b.join(side, JoinType.LEFT, cond),
-            Func("not", (val,)) if s.negated else val,
-        )
+        witness = holds(f"__m{n}_all")
+        if y is not None:
+            hgroups, hlegs = _eq_join_legs(eqs, f"__m{n}h_")
+            hit = side.aggregate(
+                [Alias(y, f"__m{n}_k")] + hgroups,
+                [Alias(Func(aggf, (ie,)), f"__m{n}_mk")],
+            )
+            on = _and_all([BinOp("=", Col(f"__m{n}_k"), x)] + hlegs)
+            b = b.join(hit, JoinType.LEFT, on)
+            empty = Func("not", (witness,))
+            has_null = holds(f"__m{n}_nil")
+            witness = holds(f"__m{n}_mk")
+    elif rest:
+        # (c) row id, LEFT join on the full condition, re-aggregation
+        ren = {c: f"__m{n}{c[5:]}" for c in inner}
+        one, k, cnt, nn = (Col(f"__m{n}_{t}") for t in ("one", "k", "cnt", "nn"))
+        cols = [Alias(Col(c), r) for c, r in ren.items()] + [Alias(Lit(1), one.name)]
+        aggs = [Alias(Func("count", (one,)), cnt.name)]
+        if y is not None:
+            cols.insert(0, Alias(y, k.name))
+            hit = CaseWhen(((BinOp(_FLIP_CMP[op], k, x), Lit(1)),), None)
+            aggs += [
+                Alias(Func("count", (k,)), nn.name),
+                Alias(Func("max", (hit,)), f"__m{n}_hit"),
+            ]
+        rid = f"__m{n}_rid"
+        b, outer_names = _rowid_outer(b, catalog, rid)
+        on = [_rewrite_cols(c, lambda c: Col(ren.get(c.name, c.name))) for c in conds]
+        has_eq = any(isinstance(c, BinOp) and c.op == "=" for c in conds)
+        b = b.join(
+            side.projection(cols),
+            JoinType.LEFT,
+            _and_all(on),
+            # pure-inequality condition → BNLJ: spread the quadratic work
+            # over the rowid hash (see LogicalJoin.stream_repartition)
+            stream_repartition="" if has_eq else rid,
+        ).aggregate([Col(rid)] + [Col(c) for c in outer_names], aggs)
+        witness = BinOp(">", cnt, Lit(0))
+        if y is not None:
+            empty = BinOp("=", Func("coalesce", (cnt, Lit(0))), Lit(0))
+            has_null = BinOp("<", nn, cnt)
+            witness = Func("isnotnull", (Col(f"__m{n}_hit"),))
+    val = witness if x is None else _three_valued(witness, empty, has_null, x)
+    return b, Func("not", (val,)) if neg else val
 
-    def walk(x, b):
-        if isinstance(x, (_InSubquery, _ExistsSubquery)):
-            return flag_join(b, x)
-        if isinstance(x, BinOp):
-            b, lft = walk(x.left, b)
-            b, rgt = walk(x.right, b)
-            return b, BinOp(x.op, lft, rgt)
-        if isinstance(x, Alias):
-            b, e = walk(x.expr, b)
-            return b, Alias(e, x.name)
-        if isinstance(x, Cast):
-            b, e = walk(x.expr, b)
-            return b, Cast(e, x.to_type, x.safe)
-        if isinstance(x, Func):
-            args = []
-            for a in x.args:
-                b, e = walk(a, b)
-                args.append(e)
-            return b, Func(x.name, tuple(args))
-        if isinstance(x, CaseWhen):
-            branches = []
-            for c, v in x.branches:
-                b, c2 = walk(c, b)
-                b, v2 = walk(v, b)
-                branches.append((c2, v2))
-            oth = x.otherwise
-            if oth is not None:
-                b, oth = walk(oth, b)
-            return b, CaseWhen(tuple(branches), oth)
-        return b, x
 
-    from .expr import CaseWhen
+def _lower_embedded_subqueries(e, builder, catalog):
+    """Lower every membership marker inside ``e`` (under OR/NOT/CASE, in
+    a select item or HAVING) left to right: each joins its subquery into
+    ``builder`` and is replaced by its value.  Returns (new_builder,
+    rewritten expression)."""
+    out = [builder]
 
-    builder, new_conj = walk(conj, builder)
-    return builder, new_conj
+    def lower(s):
+        out[0], val = _lower_membership(out[0], s, catalog)
+        return val
+
+    e = _rewrite_cols(e, lower, _Subquery)
+    return out[0], e
 
 
 def _contains_window(e) -> bool:
@@ -4028,131 +3438,46 @@ def _contains_window(e) -> bool:
     return False
 
 
-def _contains_insub(e) -> bool:
-    from .expr import CaseWhen
-
-    if isinstance(e, (_InSubquery, _ExistsSubquery)):
-        return True
-    if isinstance(e, BinOp):
-        return _contains_insub(e.left) or _contains_insub(e.right)
-    if isinstance(e, Alias):
-        return _contains_insub(e.expr)
-    if isinstance(e, Cast):
-        return _contains_insub(e.expr)
-    if isinstance(e, Func):
-        return any(_contains_insub(a) for a in e.args)
-    if isinstance(e, CaseWhen):
-        return any(
-            _contains_insub(c) or _contains_insub(v)
-            for c, v in e.branches
-        ) or (e.otherwise is not None and _contains_insub(e.otherwise))
-    return False
-
-
-_scalar_counter = [0]
-
-
-def _quant_3vl(x, op, quant, stats_col):
-    """The three-valued CASE for an uncorrelated quantified comparison
-    (r13): ``stats_col`` is the joined 1-row
-    ``struct(mn, mx, cnt, nn)`` aggregate of the subquery.  TRUE /
-    FALSE / NULL exactly as standard SQL prescribes: an empty subquery
-    decides immediately, a NULL ``x`` yields NULL, the min/max bound
-    decides the witness (ANY) or violation (ALL) among the NON-NULL
-    rows, and a leftover NULL row (``nn < cnt``) yields NULL."""
-    from .expr import CaseWhen
-
-    mn = Func("getfield", (stats_col, Lit("mn")))
-    mx = Func("getfield", (stats_col, Lit("mx")))
-    cnt = Func("getfield", (stats_col, Lit("cnt")))
-    nn = Func("getfield", (stats_col, Lit("nn")))
-    null_b = Cast(Lit(None), "boolean")
-    if quant == "all":
-        if op in ("<", "<="):
-            sat = BinOp(op, x, mn)
-        elif op in (">", ">="):
-            sat = BinOp(op, x, mx)
-        else:  # "=" ALL: every non-null row equals x
-            sat = BinOp(
-                "and", BinOp("=", x, mn), BinOp("=", x, mx)
-            )
-        return CaseWhen(
-            (
-                (BinOp("=", cnt, Lit(0)), Lit(True)),
-                (Func("isnull", (x,)), null_b),
-                (Func("not", (sat,)), Lit(False)),
-                (BinOp("<", nn, cnt), null_b),
-            ),
-            Lit(True),
-        )
-    if op in ("<", "<="):
-        sat = BinOp(op, x, mx)
-    elif op in (">", ">="):
-        sat = BinOp(op, x, mn)
-    else:  # "!=" ANY: some non-null row differs from x
-        sat = BinOp(
-            "or", BinOp("!=", x, mn), BinOp("!=", x, mx)
-        )
-    return CaseWhen(
-        (
-            (BinOp("=", cnt, Lit(0)), Lit(False)),
-            (Func("isnull", (x,)), null_b),
-            (sat, Lit(True)),
-            (BinOp("<", nn, cnt), null_b),
-        ),
-        Lit(False),
-    )
+def _contains_membership(e) -> bool:
+    """Does ``e`` hold a membership marker (IN/EXISTS/ANY/ALL)?"""
+    return any(isinstance(x, _Subquery) for x in _walk_exprs(e))
 
 
 def _extract_scalars(e):
     """Replace every ``_ScalarSubquery`` in the expression tree with a
-    fresh column reference — and every ``_QuantSubquery`` (r13) with
-    its three-valued CASE over the joined stats row; return
-    (new expr, [(alias, subplan)...]).  Markers are deduplicated by
-    identity so an expression referencing the same marker object
-    twice joins its subquery once."""
+    fresh column reference; return (new expr, [(alias, subplan)...]).
+    Markers are deduplicated by identity so an expression referencing
+    the same marker object twice joins its subquery once."""
     found: list = []
     seen: dict = {}
 
-    def walk(x):
-        if isinstance(x, _ScalarSubquery):
-            if id(x) in seen:
-                return Col(seen[id(x)])
-            _scalar_counter[0] += 1
-            alias = f"_scalar_{_scalar_counter[0]}"
-            seen[id(x)] = alias
-            found.append((alias, x.subplan))
-            return Col(alias)
-        if isinstance(x, _QuantSubquery):
-            if id(x) in seen:
-                alias = seen[id(x)]
-            else:
-                _scalar_counter[0] += 1
-                alias = f"_scalar_{_scalar_counter[0]}"
-                seen[id(x)] = alias
-                found.append((alias, x.subplan))
-            case = _quant_3vl(
-                walk(x.expr), x.op, x.quant, Col(alias)
-            )
-            return Func("not", (case,)) if x.negated else case
-        if isinstance(x, BinOp):
-            return BinOp(x.op, walk(x.left), walk(x.right))
-        if isinstance(x, Alias):
-            return Alias(walk(x.expr), x.name)
-        if isinstance(x, Cast):
-            return Cast(walk(x.expr), x.to_type, x.safe)
-        if isinstance(x, Func):
-            return Func(x.name, tuple(walk(a) for a in x.args))
-        if isinstance(x, CaseWhen):
-            return CaseWhen(
-                tuple((walk(c), walk(v)) for c, v in x.branches),
-                walk(x.otherwise) if x.otherwise is not None else None,
-            )
-        return x
+    def alias(x):
+        if id(x) not in seen:
+            seen[id(x)] = f"_scalar_{_next_gensym()}"
+            found.append((seen[id(x)], x.subplan))
+        return Col(seen[id(x)])
 
-    from .expr import CaseWhen
+    return _rewrite_cols(e, alias, _ScalarSubquery), found
 
-    return walk(e), found
+
+def _join_scalars(builder, scalars, catalog=None):
+    """Join each ``(alias, subplan)`` of ``_extract_scalars`` so that
+    ``alias`` names its value: a single-row subquery as an INNER join on
+    TRUE (Spark broadcasts the row), and — only with ``catalog``, i.e.
+    in WHERE, where an empty group's NULL drops the row anyway — a
+    correlated aggregate as its per-key aggregate joined on the
+    correlation keys (``_decorrelate_scalar``)."""
+    for alias, sub in scalars:
+        dec = _decorrelate_scalar(sub, catalog, alias) if catalog is not None else None
+        if dec is not None:
+            builder = builder.join(dec[0], JoinType.INNER, dec[1])
+            continue
+        _require_one_row_subplan(sub)
+        renamed = LogicalPlanBuilder(sub.root).projection(
+            [Alias(Col(_single_output_col(sub)), alias)]
+        )
+        builder = builder.join(renamed, JoinType.INNER, Lit(True))
+    return builder
 
 
 def _clone_subtree(node):
@@ -4219,16 +3544,12 @@ def _cols_of(e):
     return []
 
 
-_in_key_counter = [0]
-
-
 def _inner_avail(sub: Plan, catalog) -> set:
     """Names available INSIDE a subquery: scan schemas plus every
-    derived output name (projections/aggregates/windows) — a conjunct
-    over a derived alias must NOT read as outer correlation (the rule
-    ``_decorrelate_lateral`` and ``_decorrelate_in`` share; r13
-    factors it out so the quantified-comparison path can ask the same
-    question at parse time)."""
+    derived output name (projections/aggregates/windows/values) — a
+    conjunct over a derived alias must NOT read as outer correlation."""
+    from .operators.logical import output_name
+
     avail: set = set()
     for n in sub.nodes_bottom_up():
         op_n = n.operator
@@ -4240,140 +3561,22 @@ def _inner_avail(sub: Plan, catalog) -> set:
                 raise SqlError(
                     f"unknown table {op_n.table_name!r} in subquery"
                 )
-        elif kind_n in ("Projection", "Aggregate", "Window", "Values"):
-            try:
-                from .operators.logical import output_name as _on
-
-                if kind_n == "Projection":
-                    avail |= {_on(e) for e in op_n.exprs}
-                elif kind_n == "Aggregate":
-                    avail |= {_on(g) for g in op_n.group_exprs}
-                    avail |= {a.name for a in op_n.agg_exprs}
-                elif kind_n == "Window":
-                    avail |= {w.name for w in op_n.window_exprs}
-                else:
-                    avail |= set(op_n.names)
-            except Exception:
-                pass
+        elif kind_n == "Projection":
+            avail |= {output_name(e) for e in op_n.exprs}
+        elif kind_n == "Aggregate":
+            avail |= {output_name(g) for g in op_n.group_exprs}
+            avail |= {a.name for a in op_n.agg_exprs}
+        elif kind_n == "Window":
+            avail |= {w.name for w in op_n.window_exprs}
+        elif kind_n == "Values":
+            avail |= set(op_n.names)
     return avail
-
-
-def _subquery_correlated(sub: Plan, catalog) -> bool:
-    """True when any Filter conjunct in ``sub`` references the outer
-    query (an ``@outer`` qualified ref or a name no inner source
-    provides)."""
-    avail = _inner_avail(sub, catalog)
-    return any(
-        _is_lifted(c, avail)
-        for n in sub.nodes_bottom_up()
-        if n.operator.operator_name() == "Filter"
-        for c in _conjuncts(n.operator.predicate)
-    )
-
-
-def _decorrelate_in(sub: Plan, catalog):
-    """Rewrite a (possibly CORRELATED) IN subquery into
-    ``(subplan_root, cond_conjuncts, key_name)`` (r12): outer-
-    referencing WHERE conjuncts lift into the join condition exactly
-    like ``_decorrelate_exists``, and the subquery's single output
-    expression is re-projected as a uniquely-named key column the
-    caller equates with the probe expression.  Touched inner columns
-    rename to ``__sub_<c>`` (the exists convention) so self-join
-    correlation compiles unambiguously.  Returns ``(None, None, None)``
-    when the subquery is UNCORRELATED — the caller keeps the plain
-    single-column join path (plan shape unchanged for every existing
-    query).
-
-    Supported roots: Projection, Distinct(Projection) (dedup is
-    harmless under a semi/anti join).  A correlated aggregate-root IN
-    raises cleanly."""
-    from .plans.plan import PlanNode
-
-    if catalog is None:
-        # catalog-less parse (shape-only unit tests): correlation can't
-        # be resolved — keep the plain single-column path, exactly the
-        # pre-r12 behavior
-        return None, None, None
-    # inner-available names: a HAVING conjunct over an aggregate alias
-    # (TPC-H Q20's ``qty > ...``) must NOT read as outer correlation
-    avail = _inner_avail(sub, catalog)
-    correlated = any(
-        _is_lifted(c, avail)
-        for n in sub.nodes_bottom_up()
-        if n.operator.operator_name() == "Filter"
-        for c in _conjuncts(n.operator.predicate)
-    )
-    if not correlated:
-        return None, None, None
-
-    lifted: list = []
-
-    def rebuild(node):
-        op = node.operator
-        if op.operator_name() == "Filter":
-            keep, lift = [], []
-            for c in _conjuncts(op.predicate):
-                (lift if _is_lifted(c, avail) else keep).append(c)
-            lifted.extend(lift)
-            child = rebuild(node.inputs[0])
-            if keep:
-                return PlanNode(
-                    LogicalFilter(_and_all(keep), op.projected_columns),
-                    [child],
-                )
-            return child
-        if node.inputs:
-            return PlanNode(op, [rebuild(c) for c in node.inputs])
-        return node
-
-    root = sub.root
-    want_distinct = False
-    if root.operator.operator_name() == "Distinct":
-        want_distinct = True
-        root = root.inputs[0]
-    if root.operator.operator_name() != "Projection":
-        raise SqlError(
-            "correlated IN supports a plain SELECT <expr> subquery "
-            "(no aggregation) — rewrite as EXISTS"
-        )
-    exprs = root.operator.exprs
-    if len(exprs) != 1:
-        raise SqlError("IN subquery must produce exactly one column")
-    key_expr = exprs[0].expr if isinstance(exprs[0], Alias) else exprs[0]
-    _no_outer_cols = [
-        x for x in _cols_of(key_expr) if x.qualifier == "@outer"
-    ]
-    if _no_outer_cols:
-        raise SqlError(
-            "IN subquery select list cannot reference the outer query"
-        )
-    new_root = rebuild(root.inputs[0])
-    inner = []
-    for c in lifted:
-        for x in _cols_of(c):
-            if (
-                x.qualifier != "@outer"
-                and x.name in avail
-                and x.name not in inner
-            ):
-                inner.append(x.name)
-    renames = {c: f"__sub_{c}" for c in inner}
-    _in_key_counter[0] += 1
-    key_name = f"__in{_in_key_counter[0]}_key"
-    b = LogicalPlanBuilder(new_root).projection(
-        [Alias(key_expr, key_name)]
-        + [Alias(Col(c), renames[c]) for c in inner]
-    )
-    if want_distinct:
-        b = b.distinct()
-    conds = [_rename_inner(c, renames) for c in lifted]
-    return b, conds, key_name
 
 
 def _is_lifted(c, avail) -> bool:
     """A conjunct lifts out of the subquery when it references the outer
     query: an ``@outer``-marked qualified ref (self-join correlation —
-    the name ALSO exists on the inner scans), or a name no inner scan
+    the name ALSO exists on the inner scans), or a name no inner source
     provides."""
     cols = _cols_of(c)
     if any(x.qualifier == "@outer" for x in cols):
@@ -4381,117 +3584,35 @@ def _is_lifted(c, avail) -> bool:
     return not set(x.name for x in cols) <= avail
 
 
-def _strip_outer(e):
-    """Rewrite ``Col(c, "@outer")`` → ``Col(c)`` (after lifting, the
-    condition lives at the join where both sides are in scope)."""
-    from .expr import CaseWhen
+def _decorrelate(sub: Plan, catalog, below=None, name: str = "__sub_{c}"):
+    """The one dependent-join elimination every subquery form shares.
 
-    if isinstance(e, Col):
-        return Col(e.name) if e.qualifier == "@outer" else e
-    if isinstance(e, BinOp):
-        return BinOp(e.op, _strip_outer(e.left), _strip_outer(e.right))
-    if isinstance(e, Alias):
-        return Alias(_strip_outer(e.expr), e.name)
-    if isinstance(e, Cast):
-        return Cast(_strip_outer(e.expr), e.to_type, e.safe)
-    if isinstance(e, Func):
-        return Func(e.name, tuple(_strip_outer(a) for a in e.args))
-    if isinstance(e, CaseWhen):
-        return CaseWhen(
-            tuple((_strip_outer(c), _strip_outer(v)) for c, v in e.branches),
-            None if e.otherwise is None else _strip_outer(e.otherwise),
-        )
-    return e
-
-
-def _rename_inner(e, renames):
-    """Rewrite inner (non-@outer) Col refs per ``renames``; strip @outer
-    markers on the rest."""
-    if isinstance(e, Col):
-        if e.qualifier == "@outer":
-            return Col(e.name)
-        return Col(renames.get(e.name, e.name))
-    if isinstance(e, BinOp):
-        return BinOp(e.op, _rename_inner(e.left, renames), _rename_inner(e.right, renames))
-    if isinstance(e, Alias):
-        return Alias(_rename_inner(e.expr, renames), e.name)
-    if isinstance(e, Cast):
-        return Cast(_rename_inner(e.expr, renames), e.to_type, e.safe)
-    if isinstance(e, Func):
-        return Func(e.name, tuple(_rename_inner(a, renames) for a in e.args))
-    from .expr import CaseWhen
-
-    if isinstance(e, CaseWhen):
-        return CaseWhen(
-            tuple(
-                (_rename_inner(c, renames), _rename_inner(v, renames))
-                for c, v in e.branches
-            ),
-            None
-            if e.otherwise is None
-            else _rename_inner(e.otherwise, renames),
-        )
-    return e
-
-
-def _decorrelate_exists(sub: Plan, catalog):
-    """Rewrite a correlated EXISTS subquery into (subplan, join_cond).
-
-    Conjuncts in the subquery's filters that reference the outer query
-    (see ``_is_lifted``) lift into the semi/anti join condition.  The
-    inner columns those conjuncts touch are renamed ``__sub_<c>`` via a
-    projection on the subquery root, so a self-join correlation (TPC-H
-    Q21: ``l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <>
-    l1.l_suppkey``) yields globally-unique names — the join condition
-    compiles to unambiguous unqualified references, and the semi/anti
-    join's output (left side only) never sees the helper columns.  The
-    subquery's root projection is discarded (EXISTS ignores the select
-    list, and keeping it would hide the join keys from the right side)."""
+    Lifts each filter conjunct of ``below`` (a node of ``sub``, default
+    its root) that references the outer query (``_is_lifted`` against
+    ``_inner_avail(sub)``) out of the subquery.  Returns ``(node,
+    conds, renames)``: ``below`` without those conjuncts; the lifted
+    conjuncts, with outer refs unmarked and every inner column they read
+    renamed per ``name`` (formatted with the column ``c`` and its
+    first-use index ``i``), so that a self-join correlation (TPC-H Q21:
+    ``l2.l_orderkey = l1.l_orderkey``) compiles to unambiguous names;
+    and ``{inner_col: new_name}`` in first-use order, which the caller
+    projects or groups by.  Uncorrelated (or without a catalog to
+    resolve names against), ``below`` comes back as is with no
+    conjuncts."""
     from .plans.plan import PlanNode
 
+    below = sub.root if below is None else below
     if catalog is None:
-        raise SqlError("EXISTS requires a catalog to resolve correlation")
-    # scan schemas PLUS derived output names — an aggregate/projection
-    # alias inside the subquery must not read as outer correlation
-    # (r12; the same rule _decorrelate_in/_decorrelate_lateral apply)
-    avail: set = set()
-    for n in sub.nodes_bottom_up():
-        op_n = n.operator
-        kind_n = op_n.operator_name()
-        if kind_n == "Scan":
-            try:
-                avail |= set(catalog.schema(op_n.table_name).names())
-            except KeyError:
-                raise SqlError(
-                    f"unknown table {op_n.table_name!r} in EXISTS subquery"
-                )
-        elif kind_n in ("Projection", "Aggregate", "Window", "Values"):
-            try:
-                from .operators.logical import output_name as _on
-
-                if kind_n == "Projection":
-                    avail |= {_on(e) for e in op_n.exprs}
-                elif kind_n == "Aggregate":
-                    avail |= {_on(g) for g in op_n.group_exprs}
-                    avail |= {a.name for a in op_n.agg_exprs}
-                elif kind_n == "Window":
-                    avail |= {w.name for w in op_n.window_exprs}
-                else:
-                    avail |= set(op_n.names)
-            except Exception:
-                pass
+        return below, [], {}
+    avail = _inner_avail(sub, catalog)
     lifted: list = []
 
     def rebuild(node):
         op = node.operator
         if op.operator_name() == "Filter":
-            keep, lift = [], []
+            keep = []
             for c in _conjuncts(op.predicate):
-                if _is_lifted(c, avail):
-                    lift.append(c)
-                else:
-                    keep.append(c)
-            lifted.extend(lift)
+                (lifted if _is_lifted(c, avail) else keep).append(c)
             child = rebuild(node.inputs[0])
             if keep:
                 return PlanNode(
@@ -4502,32 +3623,24 @@ def _decorrelate_exists(sub: Plan, catalog):
             return PlanNode(op, [rebuild(c) for c in node.inputs])
         return node
 
-    root = sub.root
-    if root.operator.operator_name() == "Projection":
-        root = root.inputs[0]  # EXISTS ignores the select list
-    new_root = rebuild(root)
+    new = rebuild(below)
     if not lifted:
-        raise SqlError(
-            "EXISTS subquery must be correlated (reference an outer column); "
-            "uncorrelated EXISTS is a constant"
-        )
-    inner = []
+        return below, [], {}
+    renames: dict = {}
     for c in lifted:
         for x in _cols_of(c):
-            if x.qualifier != "@outer" and x.name in avail and x.name not in inner:
-                inner.append(x.name)
-    renames = {c: f"__sub_{c}" for c in inner}
-    if renames:
-        new_root = (
-            LogicalPlanBuilder(new_root)
-            .projection([Alias(Col(c), renames[c]) for c in inner])
-            ._require_root()
-        )
-    cond = _and_all([_rename_inner(c, renames) for c in lifted])
-    return Plan(new_root), cond
+            if x.qualifier != "@outer" and x.name in avail and x.name not in renames:
+                renames[x.name] = name.format(i=len(renames), c=x.name)
+
+    def fix(x):
+        if x.qualifier == "@outer":
+            return Col(x.name)
+        return Col(renames.get(x.name, x.name))
+
+    return new, [_rewrite_cols(c, fix) for c in lifted], renames
 
 
-def _try_decorrelate_scalar(sub: Plan, catalog, alias: str):
+def _decorrelate_scalar(sub: Plan, catalog, alias: str):
     """Decorrelate a correlated scalar aggregate subquery
     (``x > (SELECT agg(...) FROM t WHERE t.k = outer.k)``) into
     (aggregate-per-key subplan builder, equi-join condition) — the
@@ -4535,109 +3648,61 @@ def _try_decorrelate_scalar(sub: Plan, catalog, alias: str):
     empty, SURVEY §2.4).  Returns None when the subquery is
     uncorrelated (caller keeps the 1-row broadcast-join path).
 
-    Same correlation detection as ``_decorrelate_exists``: conjuncts
-    whose columns don't all resolve against the subquery's own scans
-    lift out.  Each lifted conjunct must be ``inner_col = outer_col``;
-    inner cols become group keys.  NULL-for-empty scalar semantics
-    (row filtered out) == inner-join-drops-missing-keys; COUNT(*)-over-
-    empty (which yields 0, not NULL) is rejected.
-    """
+    Each lifted conjunct must be ``inner_col = outer_expr``; the inner
+    columns, renamed ``__ck<i>`` so the per-key aggregate never collides
+    with an outer column of the same name (TPC-H Q17), become the group
+    keys.  NULL-for-empty scalar semantics (row filtered out) ==
+    inner-join-drops-missing-keys; COUNT(*)-over-empty (which yields 0,
+    not NULL) is rejected."""
     from .operators.logical import LogicalAggregate
     from .plans.plan import PlanNode
-
-    if catalog is None:
-        return None
-    avail: set = set()
-    for n in sub.nodes_bottom_up():
-        if n.operator.operator_name() == "Scan":
-            try:
-                avail |= set(catalog.schema(n.operator.table_name).names())
-            except KeyError:
-                return None
-    lifted: list = []
-
-    def rebuild(node):
-        op = node.operator
-        if op.operator_name() == "Filter":
-            keep, lift = [], []
-            for c in _conjuncts(op.predicate):
-                if _is_lifted(c, avail):
-                    lift.append(c)
-                else:
-                    keep.append(c)
-            lifted.extend(lift)
-            child = rebuild(node.inputs[0])
-            if keep:
-                return PlanNode(
-                    LogicalFilter(_and_all(keep), op.projected_columns), [child]
-                )
-            return child
-        if node.inputs:
-            return PlanNode(op, [rebuild(c) for c in node.inputs])
-        return node
 
     root = sub.root
     agg = root.operator
     if agg.operator_name() != "Aggregate" or agg.group_exprs or len(agg.agg_exprs) != 1:
         return None
-    new_child = rebuild(root.inputs[0])
-    if not lifted:
+    child, conds, keys = _decorrelate(sub, catalog, root.inputs[0], "__ck{i}")
+    if not conds:
         return None
     if "count" in agg.agg_exprs[0].pretty().lower().split("(")[0]:
         raise SqlError(
             "correlated COUNT subquery is not decorrelatable by inner join "
             "(COUNT over empty is 0, not NULL)"
         )
-    # inner correlation keys group the aggregate; alias them __ck{i} so
-    # the per-key aggregate NEVER collides with an outer column of the
-    # same name (outer and inner may scan the same table — TPC-H Q17)
-    inner_keys: list = []
-    conds: list = []
-    for c in lifted:
-        ok = (
-            isinstance(c, BinOp)
-            and c.op == "="
-            and isinstance(c.left, Col)
-            and isinstance(c.right, Col)
-        )
-        if not ok:
+    inner = set(keys.values())
+    for c in conds:
+        if not _eq_inner_outer(c, inner):
             raise SqlError(
                 f"correlated scalar subquery conjunct {c.pretty()} must be "
                 "inner_col = outer_col"
             )
-        lc, rc = c.left, c.right
-        if rc.qualifier != "@outer" and (lc.qualifier == "@outer" or lc.name not in avail):
-            lc, rc = rc, lc  # orient inner = outer
-        if lc.qualifier == "@outer" or lc.name not in avail:
-            raise SqlError(f"cannot resolve correlation in {c.pretty()}")
-        key = f"__ck{len(inner_keys)}"
-        inner_keys.append(Alias(Col(lc.name), key))
-        conds.append(BinOp("=", Col(key), Col(rc.name)))
     grouped = PlanNode(
         LogicalAggregate(
-            tuple(inner_keys),
+            tuple(Alias(Col(c), k) for c, k in keys.items()),
             # re-alias the aggregate to the scalar's marker name directly
             # (the auto-pretty name can contain dots, which F.col parses
             # as struct access)
-            (Alias(_strip_outer(agg.agg_exprs[0].expr), alias),),
+            (Alias(agg.agg_exprs[0].expr, alias),),
             "groupby",
         ),
-        [new_child],
+        [child],
     )
-    return LogicalPlanBuilder(grouped), _and_all(conds)
+    cond = _and_all([_inner_first(c, inner) for c in conds])
+    return LogicalPlanBuilder(grouped), cond
 
 
-def _decorrelate_lateral(sub: Plan, catalog, outer_names):
+def _decorrelate_lateral(sub: Plan, catalog):
     """Rewrite a LATERAL derived table into a join-able subplan.
 
-    Returns ``(builder, join_conds, out_names, count_cols, force_left)``:
-    the decorrelated right side (correlation keys surfaced as hidden
-    ``__lk{i}`` columns), the equi-join conjuncts binding them to the
-    outer columns, the subquery's visible output names, the output
-    names that are COUNT aggregates (coalesced to 0 after a LEFT
-    join — SQL's count-over-empty-is-0), and whether the join must be
-    LEFT regardless of spelling (global-aggregate subqueries return
-    exactly one row per outer row, never zero).
+    Returns ``(builder, join_conds, out_names, count_cols, force_left,
+    post_distinct)``: the decorrelated right side (the inner columns of
+    the correlation surfaced as hidden ``__lk{i}`` columns), the join
+    conjuncts binding them to the outer columns, the subquery's visible
+    output names, the output names that are COUNT aggregates (coalesced
+    to 0 after a LEFT join — SQL's count-over-empty-is-0), whether the
+    join must be LEFT regardless of spelling (global-aggregate
+    subqueries return exactly one row per outer row, never zero), and
+    whether the caller must dedup after the join.
 
     Supported shapes (each chosen for a shuffle-minimal lowering):
 
@@ -4661,37 +3726,6 @@ def _decorrelate_lateral(sub: Plan, catalog, outer_names):
 
     if catalog is None:
         raise SqlError("LATERAL requires a catalog to resolve correlation")
-    # inner-available names: scan schemas PLUS every derived output name
-    # in the subtree (projections/aggregates/windows) — correlation may
-    # run through a CTE's or derived table's OUTPUT column, which no
-    # base scan carries (r11: outer-CTE-in-LATERAL fix)
-    avail: set = set()
-    for n in sub.nodes_bottom_up():
-        op_n = n.operator
-        kind_n = op_n.operator_name()
-        if kind_n == "Scan":
-            try:
-                avail |= set(catalog.schema(op_n.table_name).names())
-            except KeyError:
-                raise SqlError(
-                    f"unknown table {op_n.table_name!r} in LATERAL "
-                    "subquery"
-                )
-        elif kind_n in ("Projection", "Aggregate", "Window", "Values"):
-            try:
-                from .operators.logical import output_name as _on
-
-                if kind_n == "Projection":
-                    avail |= {_on(e) for e in op_n.exprs}
-                elif kind_n == "Aggregate":
-                    avail |= {_on(g) for g in op_n.group_exprs}
-                    avail |= {a.name for a in op_n.agg_exprs}
-                elif kind_n == "Window":
-                    avail |= {w.name for w in op_n.window_exprs}
-                else:
-                    avail |= set(op_n.names)
-            except Exception:
-                pass
 
     def _no_outer(exprs, where):
         for e in exprs:
@@ -4741,79 +3775,27 @@ def _decorrelate_lateral(sub: Plan, catalog, outer_names):
         node = node.inputs[0]
     is_agg = node.operator.operator_name() == "Aggregate"
 
-    lifted: list = []
-
-    def rebuild(pn):
-        op = pn.operator
-        if op.operator_name() == "Filter":
-            keep, lift = [], []
-            for c in _conjuncts(op.predicate):
-                if _is_lifted(c, avail):
-                    lift.append(c)
-                else:
-                    keep.append(c)
-            lifted.extend(lift)
-            child = rebuild(pn.inputs[0])
-            if keep:
-                return PlanNode(
-                    LogicalFilter(_and_all(keep), op.projected_columns), [child]
-                )
-            return child
-        if pn.inputs:
-            return PlanNode(op, [rebuild(c) for c in pn.inputs])
-        return pn
-
-    child = rebuild(node.inputs[0] if is_agg else node)
-
-    # split lifted conjuncts: inner=outer equalities become join KEYS;
-    # anything else rides the join condition (plain path only — with a
-    # window or an aggregate the conjunct must run BEFORE ranking/
-    # grouping, which a join-side predicate cannot)
-    eqs: list = []  # (inner_col_name, outer_col_name)
-    extras: list = []
-    for c in lifted:
-        lc, rc = (
-            (c.left, c.right)
-            if isinstance(c, BinOp) and c.op == "="
-            else (None, None)
-        )
-        if isinstance(lc, Col) and isinstance(rc, Col):
-            if rc.qualifier != "@outer" and (
-                lc.qualifier == "@outer" or lc.name not in avail
-            ):
-                lc, rc = rc, lc  # orient inner = outer
-            inner_ok = lc.qualifier != "@outer" and lc.name in avail
-            outer_ok = rc.qualifier == "@outer" or rc.name not in avail
-            if inner_ok and outer_ok:
-                eqs.append((lc.name, rc.name))
-                continue
-        extras.append(c)
+    child, lifted, renames = _decorrelate(
+        sub, catalog, node.inputs[0] if is_agg else node, "__lk{i}"
+    )
+    # inner = outer equalities become join KEYS; anything else rides the
+    # join condition (plain path only — with a window or an aggregate
+    # the conjunct must run BEFORE ranking/grouping, which a join-side
+    # predicate cannot)
+    inner = set(renames.values())
+    eqs = [_inner_first(c, inner) for c in lifted if _eq_inner_outer(c, inner)]
+    extras = [c for c in lifted if not _eq_inner_outer(c, inner)]
     if extras and (is_agg or limit is not None):
         raise SqlError(
             "LATERAL with ORDER BY/LIMIT or aggregation supports only "
             "inner_col = outer_col correlation; got "
             + ", ".join(c.pretty() for c in extras)
         )
-    for c in extras:
-        bad = sorted(
-            {
-                x.name
-                for x in _cols_of(c)
-                if x.qualifier != "@outer"
-                and x.name in avail
-                and x.name in set(outer_names)
-            }
-        )
-        if bad:
-            raise SqlError(
-                f"LATERAL correlated conjunct {c.pretty()} references "
-                f"inner columns shadowed by outer names {bad} — alias "
-                "the subquery columns"
-            )
-    key_aliases = [Alias(Col(ik), f"__lk{i}") for i, (ik, _) in enumerate(eqs)]
-    conds = [
-        BinOp("=", Col(f"__lk{i}"), Col(ok)) for i, (_, ok) in enumerate(eqs)
-    ] + [_strip_outer(c) for c in extras]
+    key_names = list(dict.fromkeys(c.left.name for c in eqs))
+    key_cols = tuple(Col(k) for k in key_names)
+    # every inner column the correlation reads, under its __lk name
+    hidden = tuple(Alias(Col(c), k) for c, k in renames.items())
+    conds = eqs + extras
     # ORDER BY binds select-list aliases first (DuckDB rules); the
     # aliased exprs compute from the pre-projection schema, so they
     # substitute directly into the window sort keys
@@ -4863,7 +3845,7 @@ def _decorrelate_lateral(sub: Plan, catalog, outer_names):
             )
         _no_outer(agg_op.group_exprs, "GROUP BY")
         _no_outer(agg_op.agg_exprs, "aggregate list")
-        groups = tuple(agg_op.group_exprs) + tuple(key_aliases)
+        groups = tuple(agg_op.group_exprs) + hidden
         b = LogicalPlanBuilder(
             PlanNode(
                 LogicalAggregate(groups, agg_op.agg_exprs, "groupby"), [child]
@@ -4872,7 +3854,7 @@ def _decorrelate_lateral(sub: Plan, catalog, outer_names):
         if having is not None:
             b = b.filter(having)
         if limit is not None:
-            b = _topn(b, [Col(f"__lk{i}") for i in range(len(eqs))])
+            b = _topn(b, key_cols)
         agg_out = [output_name(g) for g in agg_op.group_exprs] + [
             a.name for a in agg_op.agg_exprs
         ]
@@ -4882,23 +3864,20 @@ def _decorrelate_lateral(sub: Plan, catalog, outer_names):
             ):
                 count_cols.add(a.name)
         if p_exprs is not None:
-            renames = {}
+            proj_renames = {}
             for e in p_exprs:
                 if isinstance(e, Alias) and isinstance(e.expr, Col):
-                    renames[e.name] = e.expr.name
+                    proj_renames[e.name] = e.expr.name
                 elif not isinstance(e, Col):
                     raise SqlError(
                         "LATERAL aggregate select list must be plain "
                         "column refs / aliases (compute in the outer "
                         f"select instead): {e.pretty()}"
                     )
-            b = b.projection(
-                tuple(p_exprs)
-                + tuple(Col(f"__lk{i}") for i in range(len(eqs)))
-            )
+            b = b.projection(tuple(p_exprs) + key_cols)
             out_names = [output_name(e) for e in p_exprs]
             count_cols = {
-                n for n in out_names if renames.get(n, n) in count_cols
+                n for n in out_names if proj_renames.get(n, n) in count_cols
             }
         else:
             out_names = agg_out
@@ -4908,29 +3887,18 @@ def _decorrelate_lateral(sub: Plan, catalog, outer_names):
         if p_exprs is None:
             p_exprs = tuple(Col(n) for n in _plan_schema_names(child, catalog))
         out_names = [output_name(e) for e in p_exprs]
-        # non-equality correlated conjuncts reference inner columns that
-        # the projection may drop — surface them as hidden pass-through
-        # columns (names verified non-shadowed above)
-        inner_extra_cols = sorted(
-            {
-                x.name
-                for c in extras
-                for x in _cols_of(c)
-                if x.qualifier != "@outer" and x.name in avail
-            }
-        )
-        hidden_extras = [nm for nm in inner_extra_cols if nm not in out_names]
-        # a hidden extra that mirrors a visible bare-column output (e.g.
-        # SELECT DISTINCT c_acctbal AS bal ... WHERE c_acctbal > @outer)
-        # is functionally determined by the visible tuple, so including
-        # it in the dedup cannot split groups
+        # a hidden inner column that mirrors a visible bare-column output
+        # (e.g. SELECT DISTINCT c_acctbal AS bal ... WHERE c_acctbal >
+        # @outer) is functionally determined by the visible tuple, so
+        # including it in the dedup cannot split groups
         visible_bare_cols = {
             e.expr.name
             for e in p_exprs
             if isinstance(e, Alias) and isinstance(e.expr, Col)
         } | {e.name for e in p_exprs if isinstance(e, Col)}
         unsound_extras = [
-            nm for nm in hidden_extras if nm not in visible_bare_cols
+            c for c, k in renames.items()
+            if k not in key_names and c not in visible_bare_cols
         ]
         post_distinct = False
         if want_distinct and unsound_extras:
@@ -4938,8 +3906,7 @@ def _decorrelate_lateral(sub: Plan, catalog, outer_names):
             # carries hidden pass-through columns would re-emit one
             # copy of each visible tuple PER distinct hidden value
             # passing the join predicate — no sound PRE-join dedup
-            # exists.  r13 (VERDICT r12 item 3, formerly a clean
-            # reject): dedup AFTER the join instead, over outer-row
+            # exists: dedup AFTER the join instead, over outer-row
             # identity + the visible output columns — the caller adds
             # a rowid to the outer side and a post-join distinct
             if limit is not None:
@@ -4952,12 +3919,7 @@ def _decorrelate_lateral(sub: Plan, catalog, outer_names):
             post_distinct = True
             want_distinct = False
         if want_distinct:
-            b = b.projection(
-                tuple(p_exprs)
-                + tuple(key_aliases)
-                + tuple(Alias(Col(nm), nm) for nm in hidden_extras)
-            )
-            b = b.distinct()
+            b = b.projection(tuple(p_exprs) + hidden).distinct()
             if limit is not None:
                 # ranking runs over the deduped output: sort keys must
                 # bind to select-list columns (standard SELECT DISTINCT
@@ -4970,25 +3932,16 @@ def _decorrelate_lateral(sub: Plan, catalog, outer_names):
                                 f"select-list columns; {c.name!r} is "
                                 "not in the output"
                             )
-                b = _topn(
-                    b,
-                    [Col(f"__lk{i}") for i in range(len(eqs))],
-                    subst=False,
-                )
-                b = b.projection(
-                    tuple(Col(n) for n in out_names)
-                    + tuple(Col(f"__lk{i}") for i in range(len(eqs)))
-                )
+                b = _topn(b, key_cols, subst=False)
+                b = b.projection(tuple(Col(n) for n in out_names) + key_cols)
         else:
             if limit is not None:
                 # partition directly by the INNER key columns (present
                 # in the pre-projection schema); ranking runs before the
                 # projection so sort keys may be non-output columns too
-                b = _topn(b, [Col(ik) for ik, _ in eqs])
-            hidden = list(key_aliases)
-            for nm in hidden_extras:
-                hidden.append(Alias(Col(nm), nm))
-            b = b.projection(tuple(p_exprs) + tuple(hidden))
+                orig = {k: c for c, k in renames.items()}
+                b = _topn(b, [Col(orig[k]) for k in key_names])
+            b = b.projection(tuple(p_exprs) + hidden)
         return b, conds, out_names, count_cols, force_left, post_distinct
     if want_distinct:
         b = b.distinct()
@@ -5113,9 +4066,10 @@ def _contains_aggregate(e: Expr) -> bool:
     return False
 
 
-def _rewrite_cols(e, fn):
+def _rewrite_cols(e, fn, kind=None):
     """Structural bottom-up rebuild of an expression, replacing every
-    ``Col`` with ``fn(col)`` (return the col unchanged to keep it).
+    ``Col`` (or every node of type ``kind``) with ``fn(node)`` (return
+    the node unchanged to keep it).
     Works over any Expr dataclass (BinOp/Func/Cast/Alias/CaseWhen/...),
     SortKey, and the parser-internal ``_WindowExpr``.  Unchanged
     subtrees are returned as-is (no needless copies)."""
@@ -5124,13 +4078,13 @@ def _rewrite_cols(e, fn):
     from .expr import Col
 
     def sub(v):
-        if isinstance(v, Col):
+        if isinstance(v, kind or Col):
             return fn(v)
         if isinstance(v, _WindowExpr):
             return _WindowExpr(
                 sub(v.func),
-                [sub(x) for x in v.partition_by],
-                [sub(x) for x in v.order_by],
+                type(v.partition_by)(sub(x) for x in v.partition_by),
+                type(v.order_by)(sub(x) for x in v.order_by),
                 v.frame,
                 ref=v.ref,
             )
@@ -5177,11 +4131,7 @@ def parse_sql(sql: str, catalog=None, macros=None, views=None,
     # while making repeated parses of the same text produce IDENTICAL
     # plans — without this, every subquery-bearing query misses the
     # prepared-plan and prepared-DataFrame caches (r14, guide §4).
-    _scalar_counter[0] = 0
-    _insub_counter[0] = 0
-    _na_counter[0] = 0
-    _lat_rid_counter[0] = 0
-    _in_key_counter[0] = 0
+    _gensym[0] = 0
     p = _Parser(sql, catalog, macros=macros, views=views, lexed=lexed)
     plan = p.parse()
     plan.hints = p.hints

@@ -10,22 +10,53 @@ For each named query (default: all), measures separately:
                 built the first time, summed
   * cascades  — the Cascades ``planning_stats`` of those same plans,
                 summed: ``groups``, ``exprs`` and ``seconds``
+  * plan_digest — a hash of those plans' ``explain()`` text, with the
+                numbers in generated helper names (``__in3_key``,
+                ``_scalar_2``) normalized away, so two trees can be
+                compared plan by plan
 and optionally dumps ``explain('formatted')`` to ``plans/r13/<q>_<tag>.txt``.
 
 Usage:
     python scripts/measure_queries.py [--plans TAG] [--runs N] [q_name ...]
 
-``--runs 0`` skips execution entirely (planning figures only).
+``--runs 0`` skips execution entirely (planning figures only).  Each
+query gets a fresh planner (the registry otherwise shares one per
+session and data directory), so its figures do not depend on which
+queries ran before it.
 Prints one JSON line per query so runs can be diffed, plus a summary.
 This script is measurement-only: it never changes what a query computes.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
 import sys
 import time
+
+#: an identifier starting with ``_`` (a parser-generated helper column
+#: such as ``__na2_cnt`` or ``_scalar_1``): its digits are a counter
+#: whose value depends on parse order, not on the plan
+_HELPER = re.compile(r"\b_\w+")
+
+#: the checkout root: plans that name a file under it (an ANN index in
+#: the warehouse) name the same file in any checkout
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def plan_digest(plans) -> str:
+    """Hash of the ``explain()`` text of ``plans``, in order, with the
+    numbers inside generated helper names replaced by ``#`` and the
+    checkout root by ``<repo>``."""
+    h = hashlib.sha256()
+    for p in plans:
+        text = p.explain().replace(_REPO, "<repo>")
+        text = _HELPER.sub(lambda m: re.sub(r"\d+", "#", m.group()), text)
+        h.update(text.encode())
+        h.update(b"\0")
+    return h.hexdigest()[:16]
 
 
 def main() -> None:
@@ -43,8 +74,7 @@ def main() -> None:
             raise SystemExit(f"unknown flag {args[0]}")
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, repo)
+    sys.path.insert(0, _REPO)
 
     from datafusion_dolomite_spark.optimizer.cascades.cost import (
         static_plan_cost,
@@ -63,7 +93,7 @@ def main() -> None:
         out = optimize_physical(self, plan)
         st = getattr(self, "last_planning_stats", None) or {}
         optimized.append(
-            (static_plan_cost(out, self.cost_model, self.ctx), st)
+            (static_plan_cost(out, self.cost_model, self.ctx), st, out)
         )
         return out
 
@@ -76,7 +106,7 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
-    plans_dir = os.path.join(repo, "plans", os.environ.get("PLANS_ROUND", "r14"))
+    plans_dir = os.path.join(_REPO, "plans", os.environ.get("PLANS_ROUND", "r14"))
     if plans_tag:
         os.makedirs(plans_dir, exist_ok=True)
 
@@ -85,14 +115,16 @@ def main() -> None:
         fn = qs[name]
         spark.sparkContext.setJobDescription(f"measure:{name}")
         optimized.clear()
+        entry_mod._PLANNERS.clear()
         try:
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             plan_sec = time.perf_counter() - t0
             plan_rec = {
-                "static_plan_cost": sum(c for c, _ in optimized),
+                "static_plan_cost": sum(c for c, _, _ in optimized),
+                "plan_digest": plan_digest(p for _, _, p in optimized),
                 "cascades": {
-                    k: sum(st.get(k, 0) for _, st in optimized)
+                    k: sum(st.get(k, 0) for _, st, _ in optimized)
                     for k in ("groups", "exprs", "seconds")
                 },
             }

@@ -179,11 +179,13 @@ def test_parse_exists_decorrelates():
     # ...and the local conjunct stayed below as a filter
     explains = plan.explain()
     assert "o_totalprice > 10" in explains
-    with pytest.raises(SqlError):
-        parse_sql(
-            "select c_custkey from customer where exists (select 1 from orders)",
-            cat,
-        )
+    # an uncorrelated EXISTS is one global count(*) row joined on TRUE
+    plan = parse_sql(
+        "select c_custkey from customer where exists (select 1 from orders)",
+        cat,
+    )
+    assert "count() as __na1_cnt" in plan.explain()
+    assert "(__na1_cnt > 0)" in plan.explain()
 
 
 def test_parse_cte_inlines_fresh_subtrees():

@@ -161,6 +161,22 @@ def test_query_with_trailing_semicolon_parses(text):
     assert plan.explain() == parse_sql(text.rstrip(" ;")).explain()
 
 
+@pytest.mark.parametrize("text, value", [
+    ("1e3", 1000.0), ("2.5E-2", 0.025), ("1e+2", 100.0), ("7", 7), ("1.5", 1.5),
+])
+def test_number_literal(text, value):
+    """An exponent lexes into the number, and makes it a double."""
+    item = parse_sql(f"select {text} as v from region").root.operator.exprs[0]
+    assert item.name == "v"
+    assert item.expr.value == value and type(item.expr.value) is type(value)
+
+
+def test_exponent_in_a_predicate():
+    plan = parse_sql("select o_orderkey from orders where o_totalprice > 1e5")
+    assert "(o_totalprice > 100000.0)" in plan.explain()
+    assert parse_statement("delete from t where v < 2e-3").args["where"] == "v < 2e-3"
+
+
 def test_statement_tokens_parse_the_query():
     """``parse_sql`` takes the tokens and hints ``parse_statement`` made
     (the planner's path), with the plan and hints of a fresh parse."""
