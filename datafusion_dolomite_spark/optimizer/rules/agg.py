@@ -49,6 +49,7 @@ from ...expr import Alias, BinOp, Col, Func
 from ...operators.logical import JoinType, LogicalAggregate, LogicalJoin
 from ..pattern import Pattern, pattern_of
 from ..rule import OptExpression, OptimizerContext, Rule, RulePromise, RuleResult
+from .join import _keys
 
 __all__ = ["Agg2SaltedHashAggregateRule", "EagerAggregationRule"]
 
@@ -85,8 +86,11 @@ class EagerAggregationRule(Rule):
             return  # rollup/cube subtotals don't commute with the join
         if join.join_type is not JoinType.INNER:
             return  # outer joins inject non-matching rows below the agg
-        pairs = join.equi_keys()
-        if not pairs:
+        # keys oriented by input membership: the condition may name the
+        # right input first (``c_custkey = o_custkey`` over
+        # ``(orders ⋈ lineitem, customer)``)
+        lkeys, rkeys = _keys(join, join_node.inputs)
+        if not lkeys:
             return  # pure equi-join only
         left_h, right_h = join_node.inputs
         lp = getattr(left_h, "prop", None)
@@ -110,17 +114,14 @@ class EagerAggregationRule(Rule):
         if any(c.startswith(_PARTIAL) for c in referenced):
             return
 
-        for side, side_cols, keys in (
-            (0, lcols, tuple(p[0] for p in pairs)),
-            (1, rcols, tuple(p[1] for p in pairs)),
-        ):
+        for side, side_cols, keys in ((0, lcols, lkeys), (1, rcols, rkeys)):
             alt = self._push_side(agg, join, join_node.inputs, side, side_cols, keys)
             if alt is not None:
                 result.add(alt)
 
     def _push_side(self, agg, join, join_inputs, side, side_cols, join_keys):
         if not set(join_keys) <= side_cols:
-            return None  # equi pair oriented the other way / malformed
+            return None  # both columns of an equi pair on one input
         from ...expr import Cast
 
         partials, finals = [], []

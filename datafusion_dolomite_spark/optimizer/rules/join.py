@@ -68,9 +68,9 @@ class CommutateJoinRule(Rule):
         result.add(OptExpression.op(swapped, right, left))
 
 
-def _keys(op: LogicalJoin, input=None):
+def _keys(op: LogicalJoin, inputs=()):
     """Equi keys as (left_keys, right_keys), ORIENTED to the actual
-    child schemas when the binding's input handles are given: a
+    child schemas when the join's two input handles are given: a
     condition written right-side-first (``l_orderkey = o_orderkey``
     under ``(customer ⋈ orders) ⋈ lineitem``) must not make the hash
     join require ``Hashed(l_orderkey)`` of the LEFT child — the
@@ -81,9 +81,9 @@ def _keys(op: LogicalJoin, input=None):
     pairs = op.equi_keys()
     if not pairs:
         return None, None
-    if input is not None and len(input.root.inputs) == 2:
-        lp = getattr(input.root.inputs[0], "prop", None)
-        rp = getattr(input.root.inputs[1], "prop", None)
+    if len(inputs) == 2:
+        lp = getattr(inputs[0], "prop", None)
+        rp = getattr(inputs[1], "prop", None)
         if lp is not None and rp is not None:
             lcols = set(lp.schema.names())
             rcols = set(rp.schema.names())
@@ -160,7 +160,7 @@ class Join2HashJoinRule(Rule):
         pin = _pinned_strategy(ctx, input, op)
         if pin not in (None, "shuffle_hash"):
             return  # another strategy is hint-pinned for this join
-        lk, rk = _keys(op, input)
+        lk, rk = _keys(op, input.root.inputs)
         phys = PhysicalHashJoin(
             op.join_type, op.condition, lk or (), rk or (),
             forced=pin == "shuffle_hash",
@@ -212,7 +212,7 @@ class Join2SortMergeJoinRule(Rule):
 
     def apply(self, input: OptExpression, ctx: OptimizerContext, result: RuleResult) -> None:
         op: LogicalJoin = input.root.operator
-        lk, rk = _keys(op, input)
+        lk, rk = _keys(op, input.root.inputs)
         if not lk:
             return  # SMJ needs equi keys
         pin = _pinned_strategy(ctx, input, op)
@@ -248,7 +248,7 @@ class Join2SaltedReplicateJoinRule(Rule):
         op: LogicalJoin = input.root.operator
         if op.join_type is not JoinType.INNER:
             return
-        lk, rk = _keys(op, input)
+        lk, rk = _keys(op, input.root.inputs)
         if not lk:
             return
         if _pinned_strategy(ctx, input, op) is not None:

@@ -254,3 +254,53 @@ def test_global_count_over_empty_join_is_zero(spark, catalog):
         ),  # shuffle regime: eager aggregation fires whenever legal
     )
     assert qp.dataframe(plan).collect() == [(0,)]
+
+
+def test_right_first_equality_gets_eager_alternative(ctx):
+    """A join condition naming the right input first (``c_custkey =
+    o_custkey`` over ``(orders ⋈ lineitem, customer)``) still offers the
+    partial aggregate below the join: the rule orients the equi pairs
+    by input membership.  Without commutation or join enumeration the
+    written orientation is the only one in the memo."""
+    from datafusion_dolomite_spark.operators.logical import LogicalAggregate
+    from datafusion_dolomite_spark.optimizer.cascades.optimizer import (
+        CascadesOptimizer,
+    )
+    from datafusion_dolomite_spark.optimizer.rules.agg import (
+        EagerAggregationRule,
+    )
+    from datafusion_dolomite_spark.planner import default_cascades_rules
+
+    plan = (
+        LogicalPlanBuilder()
+        .scan("orders")
+        .join(
+            LogicalPlanBuilder().scan("lineitem"),
+            JoinType.INNER,
+            col("o_orderkey").eq(col("l_orderkey")),
+        )
+        .join(
+            LogicalPlanBuilder().scan("customer"),
+            JoinType.INNER,
+            col("c_custkey").eq(col("o_custkey")),
+        )
+        .aggregate(
+            [Col("c_nationkey")],
+            [Alias(Func("sum", (Col("l_quantity"),)), "qty")],
+        )
+        .build()
+    )
+    opt = CascadesOptimizer(
+        default_cascades_rules(enable_join_exploration=False)
+        + [EagerAggregationRule()],
+        ctx,
+    )
+    opt.find_best_plan(plan)
+    partial_groups = {
+        tuple(g.name for g in e.operator.group_exprs)
+        for grp in opt.memo.groups.values()
+        for e in grp.logical_exprs
+        if isinstance(e.operator, LogicalAggregate)
+        and any(a.name.startswith("__ea") for a in e.operator.agg_exprs)
+    }
+    assert ("o_custkey",) in partial_groups
