@@ -23,6 +23,18 @@ Scale notes, per operator:
   ``TakeOrderedAndProject`` (per-partition top-k + driver merge, no global
   sort shuffle).
 * Exchange → ``.repartition(cols)`` (Spark elides redundant exchanges).
+
+Single-stage mode (``SparkExecutor(single_stage=True)``, chosen per
+statement by ``QueryPlanner.dataframe`` for small inputs and run on the
+companion session of ``session.single_stage_session``): the whole
+statement is ONE Spark stage of one task.  Scans and values are
+coalesced to one partition (below any limit, so a LIMIT stays a
+``CollectLimit``), every join and set operation's output is coalesced
+to one partition, hashed exchanges and ``stream_repartition`` are
+skipped, and equi-joins chosen as broadcasts are built in-task
+(``shuffle_hash``); joins without equi-keys keep their broadcast.  A
+single-partition child satisfies every distribution an aggregate,
+sort or window requires, so Spark inserts no exchange.
 """
 
 from __future__ import annotations
@@ -194,12 +206,14 @@ _JOIN_HOW = {
 
 
 class SparkExecutor:
-    def __init__(self, spark, catalog: Catalog):
+    def __init__(self, spark, catalog: Catalog, single_stage: bool = False):
         from .session import configure_session
 
         configure_session(spark)
         self.spark = spark
         self.catalog = catalog
+        #: lower the whole plan into one Spark stage (module docstring)
+        self.single_stage = single_stage
         #: name → current-iteration frontier DataFrame for recursive
         #: CTEs (set by _recursive_cte while lowering its step subtree)
         self._cte_frames: dict = {}
@@ -226,6 +240,7 @@ class SparkExecutor:
             df = df.filter(cached_column(f))
         if op.columns is not None:
             df = df.select(*op.columns)
+        df = self._one_partition(df)
         if op.limit is not None:
             df = df.limit(op.limit)
         return df
@@ -237,9 +252,15 @@ class SparkExecutor:
 
         op = node.operator
         ddl = ", ".join(f"{n} {t}" for n, t in zip(op.names, op.dtypes))
-        return self.spark.createDataFrame(
-            [tuple(r) for r in op.rows], StructType.fromDDL(ddl)
+        return self._one_partition(
+            self.spark.createDataFrame(
+                [tuple(r) for r in op.rows], StructType.fromDDL(ddl)
+            )
         )
+
+    def _one_partition(self, df):
+        """In single-stage mode, ``df`` coalesced to one partition."""
+        return df.coalesce(1) if self.single_stage else df
 
     def _base_scan(self, table_name: str, fmt: str):
         """The unpruned source DataFrame, cached per (session, table
@@ -313,7 +334,7 @@ class SparkExecutor:
         ):
             return self._node(node)
         child = self._node(node.inputs[0])
-        if set(op.dist.columns) <= _join_side_key_names(
+        if self.single_stage or set(op.dist.columns) <= _join_side_key_names(
             keys, set(child.columns)
         ):
             return child
@@ -505,6 +526,8 @@ class SparkExecutor:
         op = node.operator
         df = self._node(node.inputs[0])
         if op.dist.kind is DistributionKind.HASHED:
+            if self.single_stage:
+                return df
             return df.repartition(*op.dist.columns)
         if op.dist.kind is DistributionKind.SINGLETON:
             return df.coalesce(1)
@@ -516,6 +539,9 @@ class SparkExecutor:
 
         op = node.operator
         lin, rin = node.inputs
+        if self.single_stage and broadcast and _has_equality(op.condition):
+            # built in-task: a broadcast is a job of its own
+            broadcast, hint = False, "shuffle_hash"
         if hint in ("shuffle_hash", "merge"):
             # a child Exchange hashed on this side's join keys is
             # REDUNDANT under a keyed shuffle join (EnsureRequirements
@@ -536,7 +562,7 @@ class SparkExecutor:
         else:
             left, right = self._node(lin), self._node(rin)
         srp = getattr(op, "stream_repartition", "")
-        if srp and srp in left.columns:
+        if srp and srp in left.columns and not self.single_stage:
             # non-equi correlation join (rowid-agg lowering): Spark
             # sizes the BNLJ stream side by bytes and AQE coalesces a
             # small outer to ONE task while the compute is
@@ -555,7 +581,9 @@ class SparkExecutor:
         elif hint:
             right = right.hint(hint)
         cond = _join_condition(op, left, right)
-        return left.join(right, on=cond, how=_JOIN_HOW[op.join_type])
+        return self._one_partition(
+            left.join(right, on=cond, how=_JOIN_HOW[op.join_type])
+        )
 
     def _hash_join(self, node: PlanNode):
         return self._join(node, hint="shuffle_hash")
@@ -633,20 +661,20 @@ class SparkExecutor:
                 if by_name
                 else out.unionAll(d)
             )
-        return out
+        return self._one_partition(out)
 
     def _intersect(self, node: PlanNode):
         left, right = (self._node(c) for c in node.inputs)
         if getattr(node.operator, "all", False):
-            return left.intersectAll(right)
-        return left.intersect(right)
+            return self._one_partition(left.intersectAll(right))
+        return self._one_partition(left.intersect(right))
 
     def _except(self, node: PlanNode):
         left, right = (self._node(c) for c in node.inputs)
         if getattr(node.operator, "all", False):
-            return left.exceptAll(right)
+            return self._one_partition(left.exceptAll(right))
         # EXCEPT DISTINCT (SQL set semantics) — Spark's subtract()
-        return left.subtract(right)
+        return self._one_partition(left.subtract(right))
 
     # -- LLM-pipeline extension operators -------------------------------
     def _exact_dedup(self, node: PlanNode):
@@ -1360,6 +1388,21 @@ def _join_side_key_names(keys, side_cols):
     return {k for pair in keys for k in pair if k in side_cols}
 
 
+def _has_equality(cond) -> bool:
+    """Does the join condition hold a ``column = column`` conjunct, i.e.
+    an equi-key Spark can hash on?"""
+    from .expr import BinOp, Col
+
+    conjs = cond.conjuncts() if isinstance(cond, BinOp) else (cond,)
+    return any(
+        isinstance(c, BinOp)
+        and c.op == "="
+        and isinstance(c.left, Col)
+        and isinstance(c.right, Col)
+        for c in conjs
+    )
+
+
 def _join_condition(op, left_df, right_df):
     """Build the join condition resolving each side's columns against the
     correct DataFrame (needed when both sides share column names)."""
@@ -1482,6 +1525,7 @@ _HANDLERS = {
 }
 
 
-def to_spark(plan: Plan, spark, catalog: Catalog):
-    """Execute a (physical or logical) plan, returning a DataFrame."""
-    return SparkExecutor(spark, catalog).execute(plan)
+def to_spark(plan: Plan, spark, catalog: Catalog, single_stage: bool = False):
+    """Execute a (physical or logical) plan, returning a DataFrame;
+    ``single_stage`` lowers it into one Spark stage (module docstring)."""
+    return SparkExecutor(spark, catalog, single_stage).execute(plan)

@@ -59,6 +59,16 @@ class SimpleCostModel(CostModel):
 #: the budget even though its row count passes.
 BROADCAST_ROW_THRESHOLD = 1_000_000
 
+#: catalog input rows (summed over a statement's scanned table
+#: references) at or below which a statement runs as ONE Spark stage with
+#: interpreted expressions (``QueryPlanner.dataframe``).  Below it,
+#: Spark's fixed cost per exchange and per Janino compile outweighs the
+#: parallelism an exchange buys; above it, interpreted single-task
+#: execution loses.  Calibrated by ``scripts/single_stage_regime.py``
+#: (``SINGLE_STAGE_REGIME.json``): the smallest TPC-H input where one
+#: stage lost on a 4-core host was q13 at sf0.1, 165,000 rows.
+SINGLE_STAGE_INPUT_ROWS = 150_000
+
 #: uncompressed bytes above which a build side must not be broadcast
 #: (matches the session's spark.sql.autoBroadcastJoinThreshold budget).
 BROADCAST_BYTES_THRESHOLD = 64 * 1024 * 1024

@@ -1392,6 +1392,70 @@ class QueryPlanner:
             )
         return cls._PURE_SPARK_LOWERING
 
+    #: (core relational operators a single-stage statement may hold,
+    #: the subset Spark would shuffle for); built lazily
+    _SINGLE_STAGE_TYPES = None
+
+    @classmethod
+    def _single_stage_types(cls):
+        if cls._SINGLE_STAGE_TYPES is None:
+            from .operators import physical as P
+
+            shuffling = frozenset(
+                {
+                    P.PhysicalHashAggregate,
+                    P.PhysicalSort,
+                    P.PhysicalDistinct,
+                    P.PhysicalHashJoin,
+                    P.PhysicalBroadcastHashJoin,
+                    P.PhysicalSortMergeJoin,
+                    P.PhysicalWindow,
+                    P.PhysicalUnion,
+                    P.PhysicalIntersect,
+                    P.PhysicalExcept,
+                }
+            )
+            core = shuffling | {
+                P.PhysicalTableScan,
+                P.PhysicalValues,
+                P.PhysicalFilter,
+                P.PhysicalProjection,
+                P.PhysicalLimit,
+                P.PhysicalTopK,
+                P.Exchange,
+            }
+            cls._SINGLE_STAGE_TYPES = (core, shuffling)
+        return cls._SINGLE_STAGE_TYPES
+
+    def _execution_regime(self, phys: Plan):
+        """How ``dataframe`` runs ``phys``: ``("single_stage", rows)``
+        when the plan is made of core relational operators, holds one
+        Spark would shuffle for, and the catalog row counts of its
+        scanned table references sum to at most
+        ``SINGLE_STAGE_INPUT_ROWS``; otherwise ``("multi_stage", rows)``.
+        ``rows`` is that sum, or None when it was not needed or a table
+        has no statistics (which keeps the multi-stage lowering)."""
+        from .operators.physical import PhysicalTableScan
+        from .optimizer.cascades import cost
+
+        core, shuffling = self._single_stage_types()
+        types, tables = set(), []
+        for n in phys.bfs_iterator():
+            types.add(type(n.operator))
+            if isinstance(n.operator, PhysicalTableScan):
+                tables.append(n.operator.table_name)
+        if not types <= core or not types & shuffling:
+            return "multi_stage", None
+        try:
+            rows = sum(
+                float(self.catalog.statistics(t).row_count) for t in tables
+            )
+        except Exception:
+            return "multi_stage", None
+        if rows <= cost.SINGLE_STAGE_INPUT_ROWS:
+            return "single_stage", rows
+        return "multi_stage", rows
+
     def dataframe(self, plan: Plan):
         """Full pipeline: optimize then hand to Spark — through a
         PREPARED-DATAFRAME CACHE (r14, guide §4 — the Python boundary).
@@ -1417,19 +1481,39 @@ class QueryPlanner:
           ``table_stamp`` — root and data files' ns-mtime and size, so a
           data file rewritten in place misses too (the same stamp as
           ``execute._base_scan``'s scan cache);
-        * entries are per-SparkSession (a restarted session misses).
+        * entries are per-SparkSession (a restarted session misses);
+        * the key carries the execution regime.
+
+        The regime is chosen per statement (``_execution_regime``): a
+        small statement is lowered into one Spark stage with interpreted
+        expressions and runs on the caller's single-stage companion
+        session (``session.single_stage_session``), which removes the
+        per-exchange and per-compile fixed costs that dominate small
+        inputs.  ``last_planning_stats`` reports the regime and the row
+        sum that decided it.
         """
+        from .session import single_stage_session
+
         phys = self.optimize(plan)
+        regime, rows = self._execution_regime(phys)
+        self.last_planning_stats = {
+            **(getattr(self, "last_planning_stats", None) or {}),
+            "regime": regime,
+            "regime_input_rows": rows,
+        }
+        single = regime == "single_stage"
+        spark = single_stage_session(self.spark) if single else self.spark
         pure = self._pure_lowering_types()
         tables = []
         for n in phys.bfs_iterator():
             op = n.operator
-            if type(op) not in pure:
+            if type(op) not in pure:  # never single-stage: core ⊂ pure
                 return to_spark(phys, self.spark, self.catalog)
             if type(op).__name__ == "PhysicalTableScan":
                 tables.append(op.table_name)
         try:
             key = (
+                regime,
                 self._catalog_fingerprint(),
                 tuple(
                     (t, self.catalog.format(t),
@@ -1441,12 +1525,12 @@ class QueryPlanner:
             )
             hash(key)
         except Exception:
-            return to_spark(phys, self.spark, self.catalog)
+            return to_spark(phys, spark, self.catalog, single_stage=single)
         cache = self.__dict__.setdefault("_prepared_dfs", {})
         hit = cache.get(key)
         if hit is not None and hit[0] is self.spark:
             return hit[1]
-        df = to_spark(phys, self.spark, self.catalog)
+        df = to_spark(phys, spark, self.catalog, single_stage=single)
         if len(cache) >= self._PLAN_CACHE_MAX:
             cache.clear()
         cache[key] = (self.spark, df)
@@ -3137,9 +3221,14 @@ class QueryPlanner:
     def explain(self, plan: Plan) -> str:
         logical = self.optimize_logical(plan)
         physical = self.optimize_physical(logical)
+        regime, rows = self._execution_regime(physical)
+        if rows is not None:
+            regime += f" (input rows {rows:.0f})"
         return (
             "== Optimized Logical Plan ==\n"
             + logical.explain()
             + "\n== Physical Plan ==\n"
             + physical.explain()
+            + "\n== Execution ==\n"
+            + regime
         )

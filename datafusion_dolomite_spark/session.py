@@ -4,13 +4,28 @@ Single place where execution tuning lives.  Local testing runs
 ``local[N]``; on a real cluster the same settings apply (AQE re-plans at
 runtime, skew joins get split, shuffle partitions coalesce) — the configs
 below are the ones that matter at 100 TB, not local-only toys.
+
+Small statements run elsewhere: ``single_stage_session`` gives each
+caller session one companion (``spark.newSession()``, same SparkContext)
+that carries a copy of the caller's SQL conf plus interpreted
+expressions and no size-triggered re-shuffles.  ``QueryPlanner.dataframe``
+sends a statement there when its catalog input rows are at most
+``SINGLE_STAGE_INPUT_ROWS``; the caller's own conf is never written
+for it.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
-__all__ = ["get_spark", "stop_spark", "configure_session"]
+__all__ = [
+    "get_spark",
+    "stop_spark",
+    "configure_session",
+    "single_stage_session",
+]
 
 # Runtime-settable SQL confs the engine depends on regardless of which
 # SparkSession it is handed.  The driver (and any embedding application)
@@ -47,10 +62,12 @@ _EXCLUDED_OPTIMIZER_RULES = (
 )
 
 
-def _merge_excluded_rules(existing: str | None) -> str:
-    """Append our exclusions to whatever the session already excludes."""
+def _merge_excluded_rules(
+    existing: str | None, rules: str = _EXCLUDED_OPTIMIZER_RULES
+) -> str:
+    """Append ``rules`` to whatever the session already excludes."""
     have = [r.strip() for r in (existing or "").split(",") if r.strip()]
-    for r in _EXCLUDED_OPTIMIZER_RULES.split(","):
+    for r in rules.split(","):
         if r not in have:
             have.append(r)
     return ",".join(have)
@@ -59,7 +76,9 @@ def _merge_excluded_rules(existing: str | None) -> str:
 def configure_session(spark) -> None:
     """Pin the runtime SQL confs the engine requires on an arbitrary,
     possibly externally-built SparkSession.  Idempotent and cheap; all
-    keys are runtime-settable (no session restart needed)."""
+    keys are runtime-settable (no session restart needed).  Static confs
+    ``get_spark`` sets, such as ``spark.sql.codegen.cache.maxEntries``,
+    cannot be applied here: a session built elsewhere keeps its own."""
     for key, value in _REQUIRED_RUNTIME_CONFS.items():
         try:
             if spark.conf.get(key, None) != value:
@@ -95,6 +114,102 @@ def configure_session(spark) -> None:
         _eu._enable_debugging_cache = False
     except Exception:
         pass
+
+
+#: confs the single-stage companion session adds to the caller's copy.
+#: * Interpreted expressions: a small statement compiles no Java class
+#:   (whole-stage codegen off, expression factories interpreted).
+#: * No size-triggered shuffle: ``EnsureRequirements`` re-shuffles two
+#:   single-partition join inputs whose LOGICAL size estimate exceeds
+#:   ``maxSinglePartitionBytes``.  Without CBO a join's estimate is the
+#:   product of its inputs' sizes, which passes even the maximum bound
+#:   over four or five scans (TPC-H q2, q8), so file scans are also
+#:   estimated at a millionth of their bytes.
+#: * No size-based broadcast: with those estimates every table would
+#:   look broadcastable, and a broadcast is a job of its own.  Explicit
+#:   broadcasts (joins without equi-keys, deletion vectors) still run.
+_SINGLE_STAGE_CONFS = {
+    "spark.sql.codegen.wholeStage": "false",
+    "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+    "spark.sql.maxSinglePartitionBytes": str(2**63 - 1),
+    "spark.sql.sources.fileCompressionFactor": "0.000001",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+#: optimizer rules the companion excludes on top of the caller's:
+#: pushing a semi/anti join below the one-partition coalesce of its left
+#: input leaves that input with an unknown partitioning, and Spark
+#: shuffles both sides of the join again.
+_SINGLE_STAGE_EXCLUDED_RULES = (
+    "org.apache.spark.sql.catalyst.optimizer.PushDownLeftSemiAntiJoin"
+)
+
+
+class _Companion:
+    """The single-stage session of one caller session, and the snapshot
+    of the caller's SQL conf its copy was taken from."""
+
+    __slots__ = ("session", "caller_settings", "snapshot")
+
+    def __init__(self, caller):
+        self.session = caller.newSession()
+        #: the caller's live ``SQLConf.settings`` map (a JVM handle)
+        self.caller_settings = (
+            caller._jsparkSession.sessionState().conf().settings()
+        )
+        self.snapshot = None
+
+    def sync(self, caller) -> None:
+        """Refresh the companion's copy when the caller's SQL conf
+        differs from the last copy: one JVM map comparison.  The caller
+        already carries the engine's required confs
+        (``single_stage_session``), so the copy does too."""
+        if self.snapshot is not None and self.caller_settings.equals(
+            self.snapshot
+        ):
+            return
+        jvm = caller.sparkContext._jvm
+        self.snapshot = jvm.java.util.HashMap(self.caller_settings)
+        want = dict(caller.conf.getAll)
+        want.update(_SINGLE_STAGE_CONFS)
+        rules = "spark.sql.optimizer.excludedRules"
+        want[rules] = _merge_excluded_rules(
+            want.get(rules), _SINGLE_STAGE_EXCLUDED_RULES
+        )
+        conf = self.session.conf
+        have = conf.getAll
+        for key, value in want.items():
+            if have.get(key) != value:
+                try:
+                    conf.set(key, value)
+                except Exception:
+                    pass  # a static or core conf: the same on both sides
+        for key in have.keys() - want.keys():
+            try:
+                conf.unset(key)
+            except Exception:
+                pass
+
+
+_COMPANIONS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_COMPANIONS_LOCK = threading.Lock()
+
+
+def single_stage_session(spark):
+    """The companion session small statements run on: one per caller
+    session, created under a lock, sharing the caller's SparkContext and
+    cached data.  Its SQL conf is the caller's, refreshed whenever the
+    caller's differs from the last copy, plus ``_SINGLE_STAGE_CONFS``.
+    The single-stage confs are never written to the caller; like every
+    entry point, this re-pins the engine's required confs there
+    (``configure_session``) before copying."""
+    configure_session(spark)
+    with _COMPANIONS_LOCK:
+        comp = _COMPANIONS.get(spark)
+        if comp is None:
+            comp = _COMPANIONS[spark] = _Companion(spark)
+        comp.sync(spark)
+        return comp.session
 
 
 def get_spark(app_name: str = "datafusion-dolomite-spark", cpus: int | None = None):
@@ -137,6 +252,12 @@ def get_spark(app_name: str = "datafusion-dolomite-spark", cpus: int | None = No
         # read as bigint (nanoseconds since epoch) and convert explicitly
         # in queries that need event time.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Spark's codegen cache is JVM-wide and holds 100 classes by
+        # default; the 22 TPC-H shapes alone need about 290, so every
+        # statement recompiled (13 Janino compiles per statement).  A
+        # STATIC conf: ``configure_session`` cannot set it on a session
+        # built elsewhere, which keeps the default.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     return builder.getOrCreate()
 

@@ -737,6 +737,29 @@ class _Parser:
                 continue
             self.expect("kw", "on")
             cond = self._resolve(self._expr())
+            if _contains_membership(cond):
+                # an inner join's ON conjuncts filter the joined rows
+                # exactly as WHERE conjuncts would; an outer join's
+                # would change which rows are NULL-extended
+                if jt is not JoinType.INNER:
+                    raise SqlError(
+                        "IN/EXISTS/ANY/ALL subqueries in a JOIN ... ON "
+                        f"condition are supported for INNER joins only "
+                        f"(got {jt.name}); move the test into WHERE or "
+                        "a derived table"
+                    )
+                plain, _, _ = _split_in_conjuncts(cond)
+                builder = _filter_lowering_markers(
+                    builder.join(
+                        right, jt, plain if plain is not None else Lit(True)
+                    ),
+                    _and_all(
+                        c for c in _conjuncts(cond)
+                        if _contains_membership(c)
+                    ),
+                    self.catalog,
+                )
+                continue
             builder = builder.join(right, jt, cond)
 
         # -- COLUMNS('regex') star expressions (DuckDB, r11) ------------
@@ -818,22 +841,7 @@ class _Parser:
             pred = self._resolve(self._expr())
             pred, scalars = _extract_scalars(pred)
             builder = _join_scalars(builder, scalars, self.catalog)
-            plain, subs, embedded = _split_in_conjuncts(pred)
-            if plain is not None:
-                builder = builder.filter(plain)
-            for s in subs:
-                builder, val = _lower_membership(
-                    builder, s, self.catalog, top=True
-                )
-                if val is not None:
-                    builder = builder.filter(val)
-            for conj in embedded:
-                # markers under OR/NOT: their joins, then the full
-                # conjunct over their values
-                builder, new_conj = _lower_embedded_subqueries(
-                    conj, builder, self.catalog
-                )
-                builder = builder.filter(new_conj)
+            builder = _filter_lowering_markers(builder, pred, self.catalog)
 
         group_exprs: List[Expr] = []
         group_mode = "groupby"
@@ -3101,6 +3109,24 @@ def _split_in_conjuncts(pred):
     return pred, [], []
 
 
+def _filter_lowering_markers(builder, pred, catalog):
+    """``builder`` filtered by ``pred``, whose membership markers are
+    lowered: a bare top-level conjunct marker may become a semi/anti
+    join, a marker under OR/NOT joins its subquery and the full
+    conjunct filters over its value."""
+    plain, subs, embedded = _split_in_conjuncts(pred)
+    if plain is not None:
+        builder = builder.filter(plain)
+    for s in subs:
+        builder, val = _lower_membership(builder, s, catalog, top=True)
+        if val is not None:
+            builder = builder.filter(val)
+    for conj in embedded:
+        builder, new_conj = _lower_embedded_subqueries(conj, builder, catalog)
+        builder = builder.filter(new_conj)
+    return builder
+
+
 #: per-parse counter behind every generated helper name (``__in3_key``,
 #: ``__na3_cnt``, ``__m3_k``, ``_scalar_3``, ``__lat3_rid``)
 _gensym = [0]
@@ -3505,6 +3531,9 @@ def _walk_exprs(e):
             yield from _walk_exprs(v)
         if e.otherwise is not None:
             yield from _walk_exprs(e.otherwise)
+    elif isinstance(e, Lit) and isinstance(e.value, _Subquery):
+        # a marker passed as a function argument (``Func`` wraps it)
+        yield from _walk_exprs(e.value)
     elif isinstance(e, _WindowExpr):
         yield from _walk_exprs(e.func)
         for p in e.partition_by:
@@ -4080,6 +4109,10 @@ def _rewrite_cols(e, fn, kind=None):
     def sub(v):
         if isinstance(v, kind or Col):
             return fn(v)
+        if isinstance(v, Lit) and isinstance(v.value, kind or Col):
+            # a parse-time marker passed as a function argument, which
+            # ``Func`` wrapped as a literal: the marker IS the argument
+            return fn(v.value)
         if isinstance(v, _WindowExpr):
             return _WindowExpr(
                 sub(v.func),

@@ -16,6 +16,8 @@ from __future__ import annotations
 import contextlib
 import io
 
+from datafusion_dolomite_spark.optimizer.cascades import cost
+
 from .conftest import SF_DIR
 
 
@@ -53,7 +55,7 @@ def test_bucketed_join_shuffle_free_under_aqe(spark):
     )
 
 
-def test_cost_chosen_broadcast_survives_aqe(spark, catalog):
+def test_cost_chosen_broadcast_survives_aqe(spark, catalog, monkeypatch):
     from datafusion_dolomite_spark import (
         JoinType,
         LogicalPlanBuilder,
@@ -62,6 +64,8 @@ def test_cost_chosen_broadcast_survives_aqe(spark, catalog):
     )
 
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    # pins the multi-stage lowering: force it at this input size
+    monkeypatch.setattr(cost, "SINGLE_STAGE_INPUT_ROWS", -1)
     qp = QueryPlanner(spark, catalog)
     plan = (
         LogicalPlanBuilder()

@@ -13,6 +13,7 @@ import pytest
 
 from datafusion_dolomite_spark import JoinType, LogicalPlanBuilder, col, lit
 from datafusion_dolomite_spark.expr import SortKey
+from datafusion_dolomite_spark.optimizer.cascades import cost
 
 
 def _spark_plan(df) -> str:
@@ -108,7 +109,9 @@ def test_write_csv_json(planner, spark, tmp_path):
     assert spark.read.json(json_path).count() == 5
 
 
-def test_small_dim_join_is_broadcast_in_spark_plan(planner):
+def test_small_dim_join_is_broadcast_in_spark_plan(planner, monkeypatch):
+    # pins the multi-stage lowering: force it at this input size
+    monkeypatch.setattr(cost, "SINGLE_STAGE_INPUT_ROWS", -1)
     plan = (
         LogicalPlanBuilder()
         .scan("customer")

@@ -12,6 +12,7 @@ import yaml
 
 from datafusion_dolomite_spark import Catalog, JoinType, col
 from datafusion_dolomite_spark.operators.properties import Field, Schema
+from datafusion_dolomite_spark.optimizer.cascades import cost
 from datafusion_dolomite_spark.optimizer.heuristic import HepOptimizer
 from datafusion_dolomite_spark.optimizer.rule import OptimizerContext
 from datafusion_dolomite_spark.optimizer.rules.limit import (
@@ -957,9 +958,11 @@ def test_values_inline_relation(planner):
         parse_sql("select * from (values (n_name)) t(a)", planner.catalog)
 
 
-def test_values_join_broadcasts(planner):
+def test_values_join_broadcasts(planner, monkeypatch):
     """A VALUES dim joined to a catalog table must take the broadcast
     side — never shuffle the real table against a 5-row literal."""
+    # pins the multi-stage lowering: force it at this input size
+    monkeypatch.setattr(cost, "SINGLE_STAGE_INPUT_ROWS", -1)
     df = planner.sql(
         "select tier, count(*) as n from nation "
         "join (values (0, 'americas'), (1, 'emea')) as t(rk, tier) "

@@ -131,6 +131,43 @@ def test_exponent_literal(planner, duck):
     assert rows and rows[0][1] == 1000.0
 
 
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT c_custkey, coalesce(c_custkey IN (SELECT o_custkey FROM orders), "
+        "false) AS f FROM customer ORDER BY c_custkey",
+        "SELECT c_custkey, coalesce(c_custkey NOT IN (SELECT o_custkey FROM orders "
+        "WHERE o_totalprice > 100000), true) AS f FROM customer ORDER BY c_custkey",
+        "SELECT c_custkey, greatest((SELECT max(o_custkey) FROM orders), c_custkey)"
+        " AS g FROM customer ORDER BY c_custkey",
+    ],
+    ids=["in", "not-in", "scalar"],
+)
+def test_subquery_as_function_argument(planner, duck, sql):
+    assert _check(planner, duck, sql)
+
+
+def test_exists_in_inner_join_on(planner, duck):
+    assert _check(
+        planner,
+        duck,
+        "SELECT c_custkey, o_orderkey FROM customer JOIN orders "
+        "ON o_custkey = c_custkey AND EXISTS (SELECT 1 FROM nation "
+        "WHERE n_nationkey = c_nationkey AND n_regionkey = 1) "
+        "ORDER BY c_custkey, o_orderkey",
+    )
+
+
+def test_exists_in_outer_join_on_is_an_error(catalog):
+    with pytest.raises(datafusion_dolomite_spark.sql.SqlError, match="INNER"):
+        parse_sql(
+            "SELECT c_custkey, o_orderkey FROM customer LEFT JOIN orders "
+            "ON o_custkey = c_custkey AND EXISTS (SELECT 1 FROM nation "
+            "WHERE n_nationkey = c_nationkey)",
+            catalog,
+        )
+
+
 def test_uncorrelated_exists_is_one_count_row(catalog):
     plan = parse_sql(f"SELECT c_custkey FROM customer WHERE EXISTS {BIG}", catalog)
     joins = [
