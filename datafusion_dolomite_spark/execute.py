@@ -16,7 +16,8 @@ Scale notes, per operator:
   Every parquet read passes an explicit schema (``sources.parquet_read``:
   the one Spark would infer, read from the footer in this process), so
   building a scan starts no schema-inference job; the unpruned scan is
-  kept per session and table stamp, which saves the file-index listing.
+  kept in the process-wide table store (``parquet_read.TABLE_STORE``)
+  per table stamp and session, which saves the file-index listing.
 * BroadcastHashJoin → ``F.broadcast`` (no shuffle of the probe side).
 * HashJoin → ``shuffle_hash`` hint; SortMergeJoin → ``merge`` hint.
 * TopK → ``.orderBy().limit()`` which Spark executes as
@@ -34,7 +35,12 @@ to one partition, hashed exchanges and ``stream_repartition`` are
 skipped, and equi-joins chosen as broadcasts are built in-task
 (``shuffle_hash``); joins without equi-keys keep their broadcast.  A
 single-partition child satisfies every distribution an aggregate,
-sort or window requires, so Spark inserts no exchange.
+sort or window requires, so Spark inserts no exchange.  The join output
+coalesce is needed: without it, one inner, left, right, semi or anti
+``shuffle_hash`` join of two one-partition inputs keeps one partition,
+but an aggregate above a full outer join, and a chain of four inner
+joins, get an ``Exchange`` (sf0.01; a full outer join's output does not
+report a single partition).
 """
 
 from __future__ import annotations
@@ -47,13 +53,7 @@ from .operators import physical as P
 from .operators.logical import JoinType
 from .plans.plan import Plan, PlanNode
 from .sources.catalog import Catalog
-from .sources.parquet_read import read_parquet, table_stamp
-
-#: (session id, fmt, table stamp, schema override) → (session, base
-#: DataFrame); see Executor._base_scan.  Bounded; cleared wholesale when
-#: it outgrows any realistic catalog (the entries are tiny plan handles,
-#: the bound exists only to keep dead sessions from pinning the gateway).
-_SCAN_CACHE: dict = {}
+from .sources.parquet_read import TABLE_STORE, read_parquet, table_stamp
 
 
 def dv_row_key():
@@ -263,26 +263,25 @@ class SparkExecutor:
         return df.coalesce(1) if self.single_stage else df
 
     def _base_scan(self, table_name: str, fmt: str):
-        """The unpruned source DataFrame, cached per (session, table
-        stamp, schema override): ``spark.read`` still builds a JVM file
-        index per call (~50 ms locally), pure constant overhead when the
-        same tables are scanned by every query in a run.  DataFrames are
-        immutable so reuse is safe; the stamp (``table_stamp``: root and
-        data files' ns-mtime and size) invalidates the entry when any
-        backing file is rewritten.  Parquet reads carry the schema Spark
-        would infer, derived from the footer in this process
-        (``sources.parquet_read``), so building a scan starts no Spark
-        job."""
+        """The unpruned source DataFrame, kept in ``TABLE_STORE`` per
+        (table stamp, session, format, schema override): ``spark.read``
+        still builds a JVM file index per call (~50 ms locally), pure
+        constant overhead when the same tables are scanned by every
+        query in a run.  DataFrames are immutable so reuse is safe; the
+        stamp (``table_stamp``: root and data files' ns-mtime and size)
+        misses when any backing file is rewritten.  Parquet reads carry
+        the schema Spark would infer, derived from the footer in this
+        process (``sources.parquet_read``), so building a scan starts no
+        Spark job."""
         path = self.catalog.path(table_name)
-        override = (
-            self.catalog.schema_override(table_name)
-            if hasattr(self.catalog, "schema_override")
-            else None
+        override = self.catalog.schema_override(table_name)
+        stamp = table_stamp(path, "." + fmt)
+        key = (stamp, "scan", self.spark, fmt, override)
+        return TABLE_STORE.get_or_put(
+            key, lambda: self._read_table(table_name, fmt, path, override)
         )
-        key = (id(self.spark), fmt, table_stamp(path), override)
-        hit = _SCAN_CACHE.get(key)
-        if hit is not None and hit[0] is self.spark:
-            return hit[1]
+
+    def _read_table(self, table_name, fmt, path, override):
         if fmt == "parquet":
             from .sources.dml import has_dv
 
@@ -295,22 +294,16 @@ class SparkExecutor:
                 # marked rows filter out via a broadcast anti-join on
                 # the physical row identity, CONFINED to the files the
                 # sidecar names; clean files scan plainly (dv_scan)
-                df = dv_scan(self.spark, path, schema=schema)
-            else:
-                df = read_parquet(self.spark, path, schema=schema)
-        else:
-            # explicit schema (sniffed at registration) — no Spark
-            # inference pass, no type drift vs the oracle engine
-            df = (
-                self.spark.read.format(fmt)
-                .schema(self.catalog.schema(table_name).to_struct_type())
-                .options(**self.catalog.read_options(table_name))
-                .load(path)
-            )
-        if len(_SCAN_CACHE) > 256:
-            _SCAN_CACHE.clear()
-        _SCAN_CACHE[key] = (self.spark, df)
-        return df
+                return dv_scan(self.spark, path, schema=schema)
+            return read_parquet(self.spark, path, schema=schema)
+        # explicit schema (sniffed at registration) — no Spark
+        # inference pass, no type drift vs the oracle engine
+        return (
+            self.spark.read.format(fmt)
+            .schema(self.catalog.schema(table_name).to_struct_type())
+            .options(**self.catalog.read_options(table_name))
+            .load(path)
+        )
 
     def _side_df_skipping_redundant_exchange(self, node: PlanNode, keys):
         """Build one join side's DataFrame, unwrapping a child Exchange

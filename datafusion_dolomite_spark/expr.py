@@ -21,6 +21,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Tuple
 
+from .lru import LruCache
+
 __all__ = [
     "Expr",
     "Col",
@@ -46,9 +48,11 @@ __all__ = [
 #: True == 1 and -0.0 == 0.0 would alias literals with different Spark
 #: types/values).  Trees containing field types outside the known-safe
 #: set (e.g. embedded subquery plans) BYPASS the memo — their repr is
-#: address-based and a freed address could collide.  Cleared when the
-#: py4j gateway changes (new JVM ⇒ stale handles).
-_COLUMN_MEMO: dict = {}
+#: address-based and a freed address could collide.  Bounded, as each
+#: Column pins a JVM object and fresh literals keep adding keys.
+#: Cleared when the py4j gateway changes (new JVM ⇒ stale handles).
+COLUMN_STORE_ENTRIES = 4096
+COLUMN_STORE = LruCache(COLUMN_STORE_ENTRIES)
 _MEMO_GATEWAY = [None]
 _MEMO_SAFE_TYPES = (str, int, float, bool, bytes, type(None))
 
@@ -87,7 +91,7 @@ def _memo_key(e):
 
 
 def cached_column(e: "Expr"):
-    """``e.to_column()`` through the process-wide memo (see above)."""
+    """``e.to_column()`` through the process-wide ``COLUMN_STORE``."""
     try:
         from pyspark import SparkContext
 
@@ -97,16 +101,12 @@ def cached_column(e: "Expr"):
     if gw is None:
         return e.to_column()
     if _MEMO_GATEWAY[0] is not gw:
-        _COLUMN_MEMO.clear()
+        COLUMN_STORE.clear()
         _MEMO_GATEWAY[0] = gw
     k = _memo_key(e)
     if k is None:
         return e.to_column()
-    c = _COLUMN_MEMO.get(k)
-    if c is None:
-        c = e.to_column()
-        _COLUMN_MEMO[k] = c
-    return c
+    return COLUMN_STORE.get_or_put(k, e.to_column)
 
 
 class Expr:

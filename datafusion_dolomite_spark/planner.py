@@ -19,6 +19,7 @@ from __future__ import annotations
 from typing import Optional, Sequence
 
 from .execute import to_spark
+from .lru import LruCache
 from .optimizer.cascades.cost import CostModel, SparkCostModel
 from .optimizer.cascades.join_order import JoinEnumeration
 from .optimizer.cascades.optimizer import CascadesOptimizer
@@ -120,6 +121,10 @@ def _with_options(what: str, given: Optional[dict], defaults: dict) -> dict:
     return opts
 
 
+#: prepared statements one planner keeps
+PREPARED_ENTRIES = 512
+
+
 class QueryPlanner:
     def __init__(
         self,
@@ -170,6 +175,8 @@ class QueryPlanner:
         #: table → {key: value}; ``delete_mode='merge-on-read'`` turns
         #: DELETE/UPDATE into deletion-vector writes
         self._table_props: dict = {}
+        #: prepared statements (``optimize``, ``dataframe``)
+        self._prepared = LruCache(PREPARED_ENTRIES)
         self._load_version_log()
         self._load_views()
 
@@ -1268,8 +1275,8 @@ class QueryPlanner:
         optimization decision can read (registrations, formats, schema
         overrides, declared keys, ANN/BPE/MV registries, adaptive
         selectivity corrections).  Computed per optimize() call — O(a
-        few dozen dict items) — so the prepared-plan cache can never
-        serve a plan across a catalog change; a fingerprint beats
+        few dozen dict items) — so the prepared-statement store can
+        never serve a plan across a catalog change; a fingerprint beats
         instrumenting every mutator because a forgotten mutator is a
         correctness bug, a changed fingerprint is just a cache miss."""
         c = self.catalog
@@ -1297,25 +1304,21 @@ class QueryPlanner:
             tuple(sorted(getattr(c, "_sel_corrections", {}).items())),
         )
 
-    #: prepared-plan cache size bound — entries are small IR trees, the
-    #: bound only guards a pathological generated-query storm
-    _PLAN_CACHE_MAX = 512
-
     def optimize(self, plan: Plan) -> Plan:
-        """Optimize with a PREPARED-PLAN CACHE (r13 optimization): the
-        (logical plan, catalog state) → physical plan mapping is pure,
-        so re-optimizing a structurally identical plan (every warm
-        bench run; any repeated application query) returns the cached
-        physical plan instead of re-running Hep + Cascades (30-350 ms
-        on multi-join shapes).  This caches PLANS, never data or
-        results — execution below the plan always recomputes from the
-        inputs, and `to_spark` re-resolves table paths through the
+        """Optimize through the planner's PREPARED-STATEMENT STORE (r13
+        optimization): the (logical plan, catalog state) → physical plan
+        mapping is pure, so re-optimizing a structurally identical plan
+        (every warm bench run; any repeated application query) returns
+        the stored physical plan instead of re-running Hep + Cascades
+        (30-350 ms on multi-join shapes).  This keeps PLANS, never data
+        or results — execution below the plan always recomputes from
+        the inputs, and `to_spark` re-resolves table paths through the
         catalog at conversion time.  Keyed on (catalog fingerprint,
         per-node operator tuple, deterministic explain text): operators
         hash structurally (the cascades-memo contract) and the explain
         text disambiguates literal type/sign edge cases (True vs 1,
         -0.0 vs 0.0) that Python equality folds.  Hinted plans bypass
-        the cache (hints ride on the plan OBJECT, not its structure)."""
+        the store (hints ride on the plan OBJECT, not its structure)."""
         hints = getattr(plan, "hints", None)
         if hints and any(hints.values()):  # ACTIVE hints pin the plan
             return self.optimize_physical(self.optimize_logical(plan))
@@ -1328,21 +1331,15 @@ class QueryPlanner:
             hash(key)
         except Exception:
             return self.optimize_physical(self.optimize_logical(plan))
-        cache = self.__dict__.setdefault("_prepared_plans", {})
-        hit = cache.get(key)
-        if hit is not None:
-            return hit
-        out = self.optimize_physical(self.optimize_logical(plan))
-        if len(cache) >= self._PLAN_CACHE_MAX:
-            cache.clear()
-        cache[key] = out
-        return out
+        return self._prepared.get_or_put(
+            key, lambda: self.optimize_physical(self.optimize_logical(plan))
+        )
 
     #: physical operator types whose ``to_spark`` lowering is a PURE
     #: DataFrame build — no jobs, no writes, no ``cache()``/``persist``
     #: marks, no driver collects, no executor state (``execute.py``
     #: handlers that only compose DataFrame expressions).  Plans made of
-    #: these are safe to serve from the prepared-DataFrame cache below;
+    #: these may keep their DataFrame with the prepared plan (below);
     #: anything else (sinks, recursive CTEs, model-fitting kNN/BPE
     #: chains, index probes, the cache-marking dedup family) bypasses.
     _PURE_SPARK_LOWERING = None  # built lazily (avoids import at load)
@@ -1457,8 +1454,9 @@ class QueryPlanner:
         return "multi_stage", rows
 
     def dataframe(self, plan: Plan):
-        """Full pipeline: optimize then hand to Spark — through a
-        PREPARED-DATAFRAME CACHE (r14, guide §4 — the Python boundary).
+        """Full pipeline: optimize then hand to Spark, reusing the
+        DataFrame kept with the prepared statement (r14, guide §4 — the
+        Python boundary).
 
         ``to_spark`` costs ~30-40 py4j round-trips + one Spark analysis
         pass per DataFrame operation, every time the same query is
@@ -1468,21 +1466,18 @@ class QueryPlanner:
         plan, and a second action re-runs that plan — stages whose
         shuffle files still exist are skipped and broadcast relations
         are reused.  Reuse is therefore only as fresh as the inputs
-        those shuffle files were built from, and freshness rests on the
-        key's table stamp: any change to a scanned table's files misses
-        the cache and builds a new handle.  Guards:
-
-        * only plans made ENTIRELY of pure-lowering operators are
-          cached (``_pure_lowering_types``) — any operator whose
-          lowering runs jobs, writes, collects model state, or marks
-          ``cache()`` bypasses, so eager work is never skipped;
-        * the key carries the catalog fingerprint (every registration /
-          DDL / correction mutation misses) AND each scanned table's
-          ``table_stamp`` — root and data files' ns-mtime and size, so a
-          data file rewritten in place misses too (the same stamp as
-          ``execute._base_scan``'s scan cache);
-        * entries are per-SparkSession (a restarted session misses);
-        * the key carries the execution regime.
+        those shuffle files were built from.  The physical plan that
+        ``optimize`` returns from the prepared-statement store (keyed on
+        the catalog fingerprint: every registration / DDL / correction
+        mutation misses) keeps the DataFrame last lowered from it, keyed
+        on the execution regime, the SparkSession (a restarted session
+        misses) and each PHYSICAL scan's ``table_stamp`` (an MV rewrite
+        can change which tables are scanned), so a data file rewritten
+        in place misses too.  Only plans made ENTIRELY of pure-lowering
+        operators keep a DataFrame (``_pure_lowering_types``): any
+        operator whose lowering runs jobs, writes, collects model state,
+        or marks ``cache()`` bypasses, so eager work is never skipped.
+        A hinted plan is optimized afresh, so its DataFrame is not kept.
 
         The regime is chosen per statement (``_execution_regime``): a
         small statement is lowered into one Spark stage with interpreted
@@ -1503,37 +1498,21 @@ class QueryPlanner:
         }
         single = regime == "single_stage"
         spark = single_stage_session(self.spark) if single else self.spark
-        pure = self._pure_lowering_types()
-        tables = []
-        for n in phys.bfs_iterator():
-            op = n.operator
-            if type(op) not in pure:  # never single-stage: core ⊂ pure
-                return to_spark(phys, self.spark, self.catalog)
-            if type(op).__name__ == "PhysicalTableScan":
-                tables.append(op.table_name)
-        try:
-            key = (
-                regime,
-                self._catalog_fingerprint(),
-                tuple(
-                    (t, self.catalog.format(t),
-                     table_stamp(self.catalog.path(t)))
-                    for t in tables
-                ),
-                tuple(n.operator for n in phys.bfs_iterator()),
-                phys.explain(),
-            )
-            hash(key)
-        except Exception:
-            return to_spark(phys, spark, self.catalog, single_stage=single)
-        cache = self.__dict__.setdefault("_prepared_dfs", {})
-        hit = cache.get(key)
-        if hit is not None and hit[0] is self.spark:
-            return hit[1]
+        ops = [n.operator for n in phys.bfs_iterator()]
+        # an impure plan is never single-stage: core ⊂ pure
+        if not {type(op) for op in ops} <= self._pure_lowering_types():
+            return to_spark(phys, self.spark, self.catalog)
+        c = self.catalog
+        stamps = tuple(
+            table_stamp(c.path(op.table_name), "." + c.format(op.table_name))
+            for op in ops if type(op).__name__ == "PhysicalTableScan"
+        )
+        key = (regime, self.spark, stamps)
+        lowered = getattr(phys, "lowered", None)
+        if lowered is not None and lowered[0] == key:
+            return lowered[1]
         df = to_spark(phys, spark, self.catalog, single_stage=single)
-        if len(cache) >= self._PLAN_CACHE_MAX:
-            cache.clear()
-        cache[key] = (self.spark, df)
+        phys.lowered = (key, df)
         return df
 
     def _version_path(self, table: str, ver: int) -> str:

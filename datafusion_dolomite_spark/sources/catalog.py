@@ -28,14 +28,10 @@ from ..operators.properties import (
     Statistics,
 )
 from .dml import data_files
-from .parquet_read import footer_schema, spark_schema, spark_type, table_stamp
+from .parquet_read import (TABLE_STORE, footer_schema, spark_schema,
+                           spark_type, table_stamp)
 
 __all__ = ["Catalog", "testdata_catalog", "TESTDATA_TABLES"]
-
-#: process-wide per-column statistics cache, keyed on ``table_stamp`` —
-#: testdata_catalog() builds a fresh Catalog per query, but a table
-#: version's files (and so their statistics) don't change.
-_NDV_CACHE: Dict[tuple, tuple] = {}
 
 #: equi-height histogram bins per numeric column (B+1 quantile edges);
 #: 32 bins resolve a selectivity to ~3% granularity, plenty for the
@@ -128,12 +124,11 @@ class Catalog:
         self._paths: Dict[str, str] = dict(tables or {})
         self._formats: Dict[str, str] = {}
         self._options: Dict[str, Dict[str, str]] = {}
+        #: schemas and statistics ``register_schema`` injects; a
+        #: file-backed table's live in ``TABLE_STORE`` per table version
         self._schemas: Dict[str, Schema] = {}
-        #: table → table_stamp its footer-derived parquet schema was
-        #: read under; a data file rewritten in place re-derives it
-        self._schema_stamps: Dict[str, tuple] = {}
         self._stats: Dict[str, Statistics] = {}
-        #: wall seconds spent filling ``_stats`` (cold statistics);
+        #: wall seconds of cold statistics (table store misses);
         #: Cascades reports its share as ``catalog_stats_seconds``
         self.stats_seconds = 0.0
         self._warehouse = warehouse
@@ -232,18 +227,14 @@ class Catalog:
 
     def analyze(self, name: str) -> Statistics:
         """ANALYZE TABLE: force-recompute this table's statistics (row
-        count, per-column ndv/min/max/top_count, row width), bypassing
-        both the per-catalog cache and the process-wide ndv cache.  The
-        process-wide cache is keyed on ``table_stamp`` (ns-mtime and size
-        of the root and its data files), so this matters when a catalog
-        instance holds statistics from before an in-place rewrite, or
-        when the user wants stats refreshed on demand — the same
-        contract as Spark's ``ANALYZE TABLE … COMPUTE STATISTICS``
+        count, per-column ndv/min/max/top_count, row width) by dropping
+        the table store's entry for the current ``table_stamp`` — for a
+        rewrite that kept every stamp field, or a refresh on demand, the
+        contract of Spark's ``ANALYZE TABLE … COMPUTE STATISTICS``
         against a metastore.  Also clears this table's adaptive
         selectivity corrections: fresh statistics supersede learned
         patches."""
-        self._stats.pop(name, None)
-        _NDV_CACHE.pop(table_stamp(self.path(name)), None)
+        TABLE_STORE.pop(self._stats_key(name))
         self._load_corrections_once()
         stale = [k for k in self._sel_corrections if k[0] == name]
         for k in stale:
@@ -370,7 +361,6 @@ class Catalog:
         elif options:
             self._options[name] = dict(options)
         self._schemas.pop(name, None)
-        self._schema_stamps.pop(name, None)
         self._stats.pop(name, None)
         if not keep_schema_override:
             # a FRESH registration replaces the table wholesale; only
@@ -380,7 +370,6 @@ class Catalog:
 
     def set_schema_override(self, name: str, schema: Schema) -> None:
         self._schema_overrides[name] = schema
-        self._schemas.pop(name, None)
 
     def schema_override(self, name: str) -> Optional[Schema]:
         return self._schema_overrides.get(name)
@@ -405,7 +394,6 @@ class Catalog:
         injects per-column ``ColumnStatistics`` (ndv), and
         ``avg_row_bytes`` a row width, for cost-model tests."""
         self._schemas[name] = schema
-        self._schema_stamps.pop(name, None)
         self._stats[name] = Statistics(
             row_count=row_count,
             columns=tuple(columns),
@@ -425,27 +413,26 @@ class Catalog:
         override = self._schema_overrides.get(name)
         if override is not None:
             return override
-        stamp = self._schema_stamps.get(name)
-        if stamp is not None and stamp != table_stamp(self.path(name)):
-            self._schemas.pop(name, None)
-        if name not in self._schemas:
-            fmt = self.format(name)
-            if fmt == "parquet":
-                self._schema_stamps[name] = table_stamp(self.path(name))
-                self._schemas[name] = self._parquet_schema(name)
-            elif fmt == "orc":
-                import pyarrow.orc as po
+        if name in self._schemas:
+            return self._schemas[name]
+        key = (self._stamp(name), "schema", self.format(name), name)
+        return TABLE_STORE.get_or_put(key, lambda: self._read_schema(name))
 
-                arrow = po.ORCFile(self._first_file(name)).schema
-                self._schemas[name] = Schema(
-                    tuple(
-                        Field(f.name, _arrow_to_ddl(f.type), f.nullable, qualifier=name)
-                        for f in arrow
-                    )
+    def _read_schema(self, name: str) -> Schema:
+        fmt = self.format(name)
+        if fmt == "parquet":
+            return self._parquet_schema(name)
+        if fmt == "orc":
+            import pyarrow.orc as po
+
+            arrow = po.ORCFile(self._first_file(name)).schema
+            return Schema(
+                tuple(
+                    Field(f.name, _arrow_to_ddl(f.type), f.nullable, qualifier=name)
+                    for f in arrow
                 )
-            else:
-                self._schemas[name] = self._sniff_schema(name, fmt)
-        return self._schemas[name]
+            )
+        return self._sniff_schema(name, fmt)
 
     def _parquet_schema(self, name: str) -> Schema:
         """The schema Spark reads the table with: the footer-derived
@@ -501,70 +488,83 @@ class Catalog:
     def logical_prop(self, name: str) -> LogicalProperty:
         return LogicalProperty(self.schema(name))
 
+    def _stamp(self, name: str) -> tuple:
+        return table_stamp(self.path(name), "." + self.format(name))
+
+    def _stats_key(self, name: str) -> tuple:
+        return (self._stamp(name), "statistics", self.format(name))
+
     def statistics(self, name: str) -> Statistics:
         """Exact row count — parquet footers (no data read) or a DuckDB
-        count for csv/json (cheap at catalog scale, cached).  A parquet
-        table's footers are read once and shared with ``_column_ndv``.
-        The time spent filling this per-instance cache accumulates in
-        ``stats_seconds``."""
-        if name not in self._stats:
-            t0 = time.perf_counter()
-            fmt = self.format(name)
-            files = self._files(name)
-            raw_bytes = 0.0
-            columns = ()
-            if fmt == "parquet":
-                import pyarrow.parquet as pq
+        count for csv/json — plus row width and parquet column
+        statistics, kept process-wide per table version (``TABLE_STORE``
+        under the ``table_stamp``).  A parquet table's footers are read
+        once and shared with ``_column_ndv``.  The time spent on the
+        store's misses accumulates in ``stats_seconds``."""
+        injected = self._stats.get(name)
+        if injected is not None:
+            return injected
+        return TABLE_STORE.get_or_put(
+            self._stats_key(name), lambda: self._read_statistics(name)
+        )
 
-                footers = [pq.read_metadata(f) for f in files]
-                rows = sum(md.num_rows for md in footers)
-                # uncompressed in-memory size from the footer — what a
-                # broadcast of this table would actually cost
-                raw_bytes = float(
-                    sum(
-                        md.row_group(rg).total_byte_size
-                        for md in footers
-                        for rg in range(md.num_row_groups)
-                    )
+    def _read_statistics(self, name: str) -> Statistics:
+        t0 = time.perf_counter()
+        fmt = self.format(name)
+        files = self._files(name)
+        raw_bytes = 0.0
+        columns = ()
+        if fmt == "parquet":
+            import pyarrow.parquet as pq
+
+            footers = [pq.read_metadata(f) for f in files]
+            rows = sum(md.num_rows for md in footers)
+            # uncompressed in-memory size from the footer — what a
+            # broadcast of this table would actually cost
+            raw_bytes = float(
+                sum(
+                    md.row_group(rg).total_byte_size
+                    for md in footers
+                    for rg in range(md.num_row_groups)
                 )
-                columns = self._column_ndv(name, footers, files)
-            elif fmt == "orc":
-                import pyarrow.orc as po
-
-                rows = sum(po.ORCFile(f).nrows for f in files)
-            else:
-                import duckdb
-
-                reader = "read_csv_auto" if fmt == "csv" else "read_json_auto"
-                rows = sum(
-                    duckdb.sql(f"select count(*) from {reader}('{f}')").fetchone()[0]
-                    for f in files
-                )
-            if not raw_bytes:
-                # csv/json/orc: file size on disk approximates row width
-                try:
-                    raw_bytes = float(
-                        sum(os.path.getsize(f) for f in files)
-                    )
-                except OSError:
-                    raw_bytes = 0.0
-            self._stats[name] = Statistics(
-                row_count=float(rows),
-                columns=columns,
-                avg_row_bytes=(raw_bytes / rows) if rows else 0.0,
             )
-            self.stats_seconds += time.perf_counter() - t0
-        return self._stats[name]
+            columns = self._column_ndv(footers, files)
+        elif fmt == "orc":
+            import pyarrow.orc as po
 
-    def _column_ndv(self, name: str, footers=None, files=None):
+            rows = sum(po.ORCFile(f).nrows for f in files)
+        else:
+            import duckdb
+
+            reader = "read_csv_auto" if fmt == "csv" else "read_json_auto"
+            rows = sum(
+                duckdb.sql(f"select count(*) from {reader}('{f}')").fetchone()[0]
+                for f in files
+            )
+        if not raw_bytes:
+            # csv/json/orc: file size on disk approximates row width
+            try:
+                raw_bytes = float(
+                    sum(os.path.getsize(f) for f in files)
+                )
+            except OSError:
+                raw_bytes = 0.0
+        out = Statistics(
+            row_count=float(rows),
+            columns=columns,
+            avg_row_bytes=(raw_bytes / rows) if rows else 0.0,
+        )
+        self.stats_seconds += time.perf_counter() - t0
+        return out
+
+    def _column_ndv(self, footers, files):
         """Per-column statistics of a parquet table's scalar columns
         (ndv, numeric min/max, top_count, equi-height histogram) from one
         read of the table version:
 
         * the footers (``footers`` of ``files``, as ``statistics`` read
-          them, else read here) give numeric min/max over the first 64 files and
-          the first file's ``distinct_count`` where the writer recorded
-          it;
+          them) give numeric min/max over the first 64 files and the
+          first file's ``distinct_count`` where the writer recorded it;
         * one DuckDB ``approx_count_distinct`` query fills the ndv of
           every other column;
         * each column is then read alone through ``pyarrow.dataset``, so
@@ -572,28 +572,14 @@ class Catalog:
           its ``top_count`` and histogram edges, any other takes
           ``top_count`` from ``value_counts``.
 
-        Cached process-wide under the table's ``table_stamp`` — on a
-        cluster these numbers come from ANALYZE/metastore, the interface
-        is identical."""
-        if self.format(name) != "parquet":
+        Kept with the rest of the table's ``statistics`` — on a cluster
+        these numbers come from ANALYZE/metastore, the interface is
+        identical."""
+        if not files:
             return ()
-        try:
-            if files is None:
-                files = self._files(name)
-            if not files or not os.path.isfile(files[0]):
-                return ()
-        except OSError:
-            return ()
-        key = table_stamp(self.path(name))
-        cached = _NDV_CACHE.get(key)
-        if cached is not None:
-            return cached
 
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        if footers is None:
-            footers = [pq.read_metadata(f) for f in files[:64]]
         arrow_schema = footers[0].schema.to_arrow_schema()
 
         def _scalar(t):
@@ -679,7 +665,7 @@ class Catalog:
                         hists[c] = _equi_height_edges(values)
             except Exception:
                 pass
-        out = tuple(
+        return tuple(
             (
                 c,
                 ColumnStatistics(
@@ -693,8 +679,6 @@ class Catalog:
             for c in scalar_cols
             if c in ndv
         )
-        _NDV_CACHE[key] = out
-        return out
 
     def _files(self, name: str):
         """The table's data files (``dml.data_files``: hidden paths such

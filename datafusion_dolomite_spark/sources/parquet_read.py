@@ -35,31 +35,37 @@ import json
 import os
 from typing import Optional
 
+from ..lru import LruCache
 from .dml import data_files
 
-__all__ = ["SPARK_ROW_METADATA", "footer_schema", "read_parquet",
-           "spark_schema", "spark_type", "table_stamp"]
+__all__ = ["SPARK_ROW_METADATA", "TABLE_STORE", "footer_schema",
+           "read_parquet", "spark_schema", "spark_type", "table_stamp"]
 
 #: footer key under which Spark stores the writing DataFrame's schema
 SPARK_ROW_METADATA = "org.apache.spark.sql.parquet.row.metadata"
 
-#: (base, per-path stamps) → StructType | None; see spark_schema
-_SCHEMA_CACHE: dict = {}
+#: what each table version yields, keyed by its ``table_stamp`` first:
+#: the footer-derived ``StructType`` (``spark_schema``), the catalog's
+#: ``Schema`` and ``Statistics`` and each session's base scan
+TABLE_STORE_ENTRIES = 1024
+TABLE_STORE = LruCache(TABLE_STORE_ENTRIES)
 
 
-def table_stamp(path: str) -> tuple:
+def table_stamp(path: str, suffix: str = ".parquet") -> tuple:
     """The one staleness stamp of a table (version) path: the root's
     ns-mtime and size, plus the data files' count, newest ns-mtime and
-    total size (``dml.data_files``).  A file rewritten in place inside
-    a directory changes only its own mtime/size, never the root's, so
-    the root alone cannot see it.  The scan cache, the prepared-DataFrame
-    cache and the footer-schema cache all key on this."""
+    total size (``dml.data_files`` with ``suffix``, the format's file
+    extension).  A file rewritten in place inside a directory changes
+    only its own mtime/size, never the root's, so the root alone cannot
+    see it.  Every ``TABLE_STORE`` entry keys on this, and so do the
+    DataFrames a planner's prepared statements keep
+    (``QueryPlanner.dataframe``)."""
     try:
         st = os.stat(path)
     except OSError:
         return (path, -1, -1, 0, -1, -1)
     newest = total = 0
-    files = data_files(path)
+    files = data_files(path, suffix)
     for f in files:
         try:
             fst = os.stat(f)
@@ -91,21 +97,18 @@ def spark_schema(*paths: str, base: Optional[str] = None):
     cached under the paths' ``table_stamp``.  None when Spark's own
     inference must decide: partitioned or nested directories, summary
     files, no data files, or a type the mapping cannot name."""
-    key = (base, tuple(table_stamp(p) for p in paths))
-    if key in _SCHEMA_CACHE:
-        return _SCHEMA_CACHE[key]
+    key = (tuple(table_stamp(p) for p in paths), "struct", base)
+    return TABLE_STORE.get_or_put(key, lambda: _inferred(paths, base))
+
+
+def _inferred(paths, base):
     files = _listed_files(paths, base)
-    out = None
-    if files:
-        first = min(files, key=os.path.abspath)
-        try:
-            out = footer_schema(first)
-        except Exception:  # unnamed type, unreadable footer: Spark decides
-            out = None
-    if len(_SCHEMA_CACHE) > 1024:
-        _SCHEMA_CACHE.clear()
-    _SCHEMA_CACHE[key] = out
-    return out
+    if not files:
+        return None
+    try:
+        return footer_schema(min(files, key=os.path.abspath))
+    except Exception:  # unnamed type, unreadable footer: Spark decides
+        return None
 
 
 def _hidden(name: str) -> bool:

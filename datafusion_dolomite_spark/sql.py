@@ -4163,7 +4163,7 @@ def parse_sql(sql: str, catalog=None, macros=None, views=None,
     # resetting at this entry keeps every name in one plan distinct
     # while making repeated parses of the same text produce IDENTICAL
     # plans — without this, every subquery-bearing query misses the
-    # prepared-plan and prepared-DataFrame caches (r14, guide §4).
+    # planner's prepared statements (r14, guide §4).
     _gensym[0] = 0
     p = _Parser(sql, catalog, macros=macros, views=views, lexed=lexed)
     plan = p.parse()

@@ -1,10 +1,10 @@
 """Cold table-statistics bench: what ``Catalog.statistics`` costs per table
-when neither the catalog nor the process-wide column cache holds it.
+when the process-wide table store does not hold it.
 
 For each testdata table at each scale it times the median of ``trials``
-cold calls (a new catalog and an empty column-statistics cache each
-time) and prints milliseconds, rows per second and the DuckDB queries
-one call makes.  Rows dominate at sf0.1, where the per-row cost shows.
+cold calls (a new catalog and an empty table store each time) and
+prints milliseconds, rows per second and the DuckDB queries one call
+makes.  Rows dominate at sf0.1, where the per-row cost shows.
 
 Run: python scripts/stats_bench.py TESTDATA_ROOT [trials] [sf ...]
      (TESTDATA_ROOT holds sf0.001/, sf0.01/, sf0.1/)
@@ -26,7 +26,7 @@ from datafusion_dolomite_spark.sources import catalog as catalog_mod  # noqa: E4
 
 def _cold(sf_dir: str, table: str):
     """One cold ``statistics`` call: (seconds, rows, DuckDB queries)."""
-    catalog_mod._NDV_CACHE.clear()
+    catalog_mod.TABLE_STORE.clear()
     cat = catalog_mod.testdata_catalog(sf_dir)
     queries = 0
     real = duckdb.sql

@@ -1,11 +1,11 @@
 """ANALYZE TABLE (r7): on-demand statistics refresh.
 
 The catalog derives statistics automatically (footer row counts,
-ndv/min/max/top_count) and caches them per instance; ``analyze()`` is
-the user-facing refresh — recompute past both caches, clear the table's
-adaptive selectivity corrections, and surface the numbers through the
-SQL front door the way Spark's ``ANALYZE TABLE … COMPUTE STATISTICS``
-does."""
+ndv/min/max/top_count) and keeps them per table version; ``analyze()``
+is the user-facing refresh — recompute past the table store, clear the
+table's adaptive selectivity corrections, and surface the numbers
+through the SQL front door the way Spark's ``ANALYZE TABLE … COMPUTE
+STATISTICS`` does."""
 
 from __future__ import annotations
 
@@ -28,8 +28,8 @@ def test_analyze_refreshes_stale_cached_stats(spark, tmp_path):
     cat.register("t", path)
     assert cat.statistics("t").row_count == 100
     _write(spark, path, 250)
-    # per-instance cache serves the stale count until ANALYZE
-    assert cat.statistics("t").row_count == 100
+    # the rewrite changed the table stamp: statistics follow it
+    assert cat.statistics("t").row_count == 250
     st = cat.analyze("t")
     assert st.row_count == 250
     assert cat.statistics("t").row_count == 250

@@ -22,6 +22,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from datafusion_dolomite_spark.lru import LruCache
 from datafusion_dolomite_spark.operators.properties import ColumnStatistics
 from datafusion_dolomite_spark.sources import catalog as catalog_mod
 from datafusion_dolomite_spark.sources.catalog import (
@@ -98,9 +99,16 @@ def _oracle(files):
     return tuple(out)
 
 
+def _cold_store(monkeypatch):
+    """An empty table store for the catalog, for the test's duration."""
+    monkeypatch.setattr(
+        catalog_mod, "TABLE_STORE", LruCache(catalog_mod.TABLE_STORE.bound)
+    )
+
+
 def _fresh_stats(monkeypatch, path):
     """Cold per-column statistics of the table at ``path``."""
-    monkeypatch.setattr(catalog_mod, "_NDV_CACHE", {})
+    _cold_store(monkeypatch)
     cat = Catalog({"t": path})
     return cat.statistics("t").columns
 
@@ -245,14 +253,14 @@ def _count_duckdb_queries(monkeypatch):
 
 
 def test_cold_column_stats_make_one_duckdb_query(monkeypatch):
-    monkeypatch.setattr(catalog_mod, "_NDV_CACHE", {})
+    _cold_store(monkeypatch)
     cat = _testdata_catalog(SF_DIR)
     calls = _count_duckdb_queries(monkeypatch)
-    columns = cat._column_ndv("lineitem")
+    columns = cat.statistics("lineitem").columns
     assert len(columns) == 11
     assert len(calls) == 1 and "approx_count_distinct" in calls[0]
-    # warm: served from the process-wide cache, no query at all
-    _testdata_catalog(SF_DIR)._column_ndv("lineitem")
+    # warm: served from the process-wide table store, no query at all
+    _testdata_catalog(SF_DIR).statistics("lineitem")
     assert len(calls) == 1
 
 
@@ -269,9 +277,9 @@ def test_footer_distinct_counts_need_no_duckdb_query(monkeypatch, tmp_path):
         md.row_group(0).column(i).statistics.has_distinct_count
         for i in range(md.num_columns)
     )
-    monkeypatch.setattr(catalog_mod, "_NDV_CACHE", {})
+    _cold_store(monkeypatch)
     calls = _count_duckdb_queries(monkeypatch)
-    cols = dict(Catalog({"t": path})._column_ndv("t"))
+    cols = dict(Catalog({"t": path}).statistics("t").columns)
     assert calls == []
     assert (cols["a"].ndv, cols["a"].top_count) == (3.0, 34.0)
     assert (cols["b"].ndv, cols["b"].top_count) == (5.0, 20.0)
@@ -318,7 +326,35 @@ def test_new_catalog_sees_in_place_rewrite(tmp_path):
     assert dict(fresh.columns)["g"].top_count == 320
 
 
-def test_cascades_reports_cold_catalog_stats_seconds():
+def test_statistics_follow_in_place_rewrite(tmp_path):
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": np.arange(100, dtype=np.int64)}), path)
+    cat = Catalog({"t": path})
+    assert cat.statistics("t").row_count == 100
+    pq.write_table(pa.table({"k": np.arange(250, dtype=np.int64),
+                             "v": np.arange(250, dtype=np.float64)}), path)
+    assert [f.name for f in cat.schema("t").fields] == ["k", "v"]
+    st = cat.statistics("t")
+    assert st.row_count == 250
+    assert dict(st.columns)["v"].ndv > 0
+    # ANALYZE still recomputes: a cold fill, not the stored entry
+    before = cat.stats_seconds
+    assert cat.analyze("t").row_count == 250
+    assert cat.stats_seconds > before
+
+
+def test_csv_directory_statistics_follow_in_place_rewrite(tmp_path):
+    d = tmp_path / "t"
+    d.mkdir()
+    (d / "a.csv").write_text("k\n" + "".join(f"{i}\n" for i in range(100)))
+    cat = Catalog()
+    cat.register("t", str(d), format="csv")
+    assert cat.statistics("t").row_count == 100
+    (d / "a.csv").write_text("k\n" + "".join(f"{i}\n" for i in range(250)))
+    assert cat.statistics("t").row_count == 250
+
+
+def test_cascades_reports_cold_catalog_stats_seconds(monkeypatch):
     from datafusion_dolomite_spark.optimizer.cascades.optimizer import (
         CascadesOptimizer,
     )
@@ -326,6 +362,7 @@ def test_cascades_reports_cold_catalog_stats_seconds():
     from datafusion_dolomite_spark.planner import default_cascades_rules
     from datafusion_dolomite_spark.sql import parse_sql
 
+    _cold_store(monkeypatch)
     cat = _testdata_catalog(SF_DIR)
     plan = parse_sql(
         "select n_name, count(*) from customer join nation "
